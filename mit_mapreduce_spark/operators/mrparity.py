@@ -3,15 +3,15 @@
 These queries exercise the full compatibility surface: whole-file
 text inputs (F1), Python Map/Reduce closures translated line-for-line
 from the Go plugins (A1 `mrapps/wc.go`, A2 `mrapps/indexer.go`,
-A3 `mrapps/crash.go`/`nocrash.go` payload), FNV-32a hash partitioning
-(F3), grouped reduce (F7). Input files are materialized from the
-`documents` fixture (one file per `source`, texts joined by newline
-in doc_id order) so the DuckDB oracle can recompute the expected
-output relationally.
+A3 `mrapps/crash.go`/`nocrash.go` payload), grouped reduce (F7).
+Input files are materialized from the `documents` fixture (one file
+per `source`, texts joined by newline in doc_id order) so the DuckDB
+oracle can recompute the expected output relationally.
 
-The facade path is Python-per-pair by design (it IS the compat shim);
-the DataFrame operators in operators/text.py are the scale path for
-the same logical queries.
+Each query is one Catalyst plan (whole-file scan → Map kernel → one
+grouping Exchange → Reduce kernel; see ``mapreduce``): only the
+closures run in Python, per Arrow batch. The DataFrame operators in
+operators/text.py are the all-JVM path for the same logical queries.
 """
 
 from __future__ import annotations
@@ -67,9 +67,12 @@ def _materialize_inputs(spark: SparkSession, sf_dir: str) -> str:
     key), contents = texts in doc_id order joined by newline —
     the pg-*.txt corpus shape the reference apps consume.
 
-    The corpus is deterministic per scale factor, so the staging is
-    cached: a marker records the doc count and the rewrite is skipped
-    when it matches (three facade queries share one materialization).
+    The staging is cached (three facade queries share one
+    materialization): a marker stamps it with the documents parquet's
+    ``(mtime_ns, size)`` — the key ``catalog._cached_schema`` uses —
+    plus a layout version, so a cache hit costs one ``stat`` and no
+    Spark job, and a rewritten table restages even at the same row
+    count.
 
     The write is DISTRIBUTED (VERDICT r2 #3): rows repartition by
     source — every source lands wholly in one task — and a
@@ -83,11 +86,11 @@ def _materialize_inputs(spark: SparkSession, sf_dir: str) -> str:
     out_dir = os.path.join(_SCRATCH, f"mrinput_{tag}")
     files_dir = os.path.join(out_dir, "files")
     marker = os.path.join(out_dir, ".complete")
-    n_docs = load_table(spark, sf_dir, "documents").count()
+    st = os.stat(os.path.join(sf_dir, "documents.parquet"))
     # v2 = distributed text-sink staging (trailing-newline files); the
     # version tag invalidates any cache left by the older driver-side
     # writer, whose files lacked the terminator.
-    stamp = f"{n_docs}:v2"
+    stamp = f"{st.st_mtime_ns}:{st.st_size}:v2"
     if os.path.exists(marker):
         with open(marker, encoding="utf-8") as f:
             if f.read().strip() == stamp:

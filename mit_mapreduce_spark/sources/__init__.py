@@ -29,17 +29,23 @@ def whole_text_files(spark: SparkSession, path_glob: str,
     """(path, content) — one row per file, whole contents as one value.
 
     The reference feeds Map one whole file per task
-    (`mr/worker.go:118-130`); ``wholeTextFiles`` is the Spark
-    primitive with the same granularity (one partition per file by
-    default, exactly like the reference's one-map-task-per-file
-    seeding, `mr/master.go:289-296`)."""
-    rdd = spark.sparkContext.wholeTextFiles(
-        path_glob, minPartitions=min_partitions)
-    schema = T.StructType([
-        T.StructField("path", T.StringType(), False),
-        T.StructField("content", T.StringType(), False),
-    ])
-    return spark.createDataFrame(rdd, schema)
+    (`mr/worker.go:118-130`); Hadoop's ``wholeTextFiles`` is the Spark
+    primitive with the same granularity. Its RDD is lifted to a Dataset
+    on the JVM, so the rows reach Catalyst without a Python
+    conversion stage; ``mapreduce.run_job`` reads through here, the
+    repo's one whole-file scan for Hadoop paths.
+
+    Not ``spark.read.text(wholetext=True)`` or ``binaryFile``: both
+    silently drop zero-length files, and their file-name metadata
+    percent-encodes names like ``sp ace.txt``. ``path`` here is the
+    Hadoop path string, unencoded (``file:/dir/sp ace.txt``)."""
+    sc = spark.sparkContext
+    encoders = spark._jvm.org.apache.spark.sql.Encoders
+    rdd = sc._jsc.wholeTextFiles(
+        path_glob, min_partitions or sc.defaultMinPartitions).rdd()
+    jdf = spark._jsparkSession.createDataset(
+        rdd, encoders.tuple(encoders.STRING(), encoders.STRING())).toDF()
+    return DataFrame(jdf, spark).toDF("path", "content")
 
 
 def read_text_lines(spark: SparkSession, path_glob: str) -> DataFrame:
@@ -63,9 +69,11 @@ def write_kv_text(df: DataFrame, out_dir: str, n_partitions: int = 10,
     DataFrame ``repartition`` would use Spark's Murmur3 and scatter
     keys differently. Keys are sorted within each output partition, as
     the reference's reduce loop emits them post-sort
-    (`mr/worker.go:181`). RDD-based like the facade itself (this is
-    the byte-faithful compat sink, not a scale data path). Returns the
-    written file paths."""
+    (`mr/worker.go:181`). This is where the facade's nReduce lives:
+    ``run_job`` returns an unpartitioned DataFrame and the sink routes
+    it. RDD-based, because a custom partition function is an RDD
+    feature (this is the byte-faithful compat sink, not a scale data
+    path). Returns the written file paths."""
     import shutil
 
     from mit_mapreduce_spark.mapreduce import fnv32a

@@ -3,9 +3,10 @@
 The reference's F1 input contract — Map receives (filename, whole
 contents), one task per file (`mr/worker.go:116-130`,
 `mr/master.go:289-296`) — implemented twice in this repo:
-``sources.whole_text_files`` wraps the RDD ``wholeTextFiles``
-primitive; this module is the DataFrame-native form on the Python
-Data Source API (new in Spark 4): a declarative source with one
+``sources.whole_text_files`` lifts Hadoop's ``wholeTextFiles`` into
+a JVM Dataset (the scan ``mapreduce.run_job`` uses); this module is
+the same contract on the Python Data Source API (new in Spark 4),
+for local paths: a declarative source with one
 ``InputPartition`` per file, so Catalyst sees a real relation (column
 pruning applies; each file still maps to exactly one task, the
 reference's scheduling granularity).
@@ -21,8 +22,8 @@ RESTRICTION — local/shared POSIX paths only: listing uses
 executors must see the same mounted filesystem (local[*], NFS, a
 shared volume). Object-store/HDFS URIs (``s3://``, ``hdfs://``) are
 rejected up front rather than silently listing nothing; routing
-through the Hadoop FS API (or ``sources.whole_text_files``, whose RDD
-primitive already speaks Hadoop paths) is the extension point for
+through the Hadoop FS API (or ``sources.whole_text_files``, whose
+Hadoop scan already speaks those paths) is the extension point for
 those. This matches the reference's own deployment shape — its
 coordinator hands out plain local paths (`mr/master.go:289-296`).
 """

@@ -25,7 +25,6 @@ def test_run_job_wordcount_tiny(spark, tmp_path):
         lambda fn, c: [(w, "1") for w in c.split()],
         lambda k, vs: str(len(vs)),
         str(tmp_path / "*.txt"),
-        n_reduce=3,
     )
     got = {r.key: r.value for r in df.collect()}
     assert got == {"a": "3", "b": "2", "c": "1"}
@@ -38,9 +37,58 @@ def test_run_job_reduce_sees_all_values_of_key(spark, tmp_path):
         lambda fn, c: [("k", v) for v in ("3", "1", "2")],
         lambda k, vs: " ".join(sorted(vs)),
         str(tmp_path / "x.txt"),
-        n_reduce=2,
     )
     assert df.collect()[0].value == "1 2 3"
+
+
+def test_run_job_rejects_non_string_pairs(spark, tmp_path):
+    """A Map pair that is not (str, str) — the reference's KeyValue —
+    fails with a TypeError naming the pair, not a deep Arrow error."""
+    import pytest
+
+    (tmp_path / "x.txt").write_text("a")
+    df = run_job(spark, lambda fn, c: [(fn, 1)], lambda k, vs: "",
+                 str(tmp_path / "x.txt"))
+    with pytest.raises(Exception, match=r"TypeError: Map must emit "
+                       r"\(str, str\) pairs.*\('x\.txt', 1\)"):
+        df.collect()
+
+
+def test_materialize_inputs_restages_rewritten_table(spark, tmp_path):
+    """The facade's staged corpus is keyed on the documents file's
+    metadata: rewriting the table with the same row count (and byte
+    length) but different text must restage, not reuse stale files."""
+    import glob
+    import shutil
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from mit_mapreduce_spark.operators.mrparity import _materialize_inputs
+
+    sf = tmp_path / f"sf_restage_{os.getpid()}"
+    sf.mkdir()
+
+    def write_docs(texts):
+        pq.write_table(pa.table({"doc_id": [1, 2], "source": ["s1", "s2"],
+                                 "text": texts}),
+                       str(sf / "documents.parquet"))
+
+    def staged(pattern):
+        return {os.path.basename(p): open(p, encoding="utf-8").read()
+                for p in glob.glob(pattern)}
+
+    write_docs(["old one", "old two"])
+    pattern = _materialize_inputs(spark, str(sf))
+    try:
+        assert staged(pattern) == {"s1": "old one\n", "s2": "old two\n"}
+        assert _materialize_inputs(spark, str(sf)) == pattern  # cache hit
+        write_docs(["new one", "new TWO"])
+        assert _materialize_inputs(spark, str(sf)) == pattern
+        assert staged(pattern) == {"s1": "new one\n", "s2": "new TWO\n"}
+    finally:
+        shutil.rmtree(os.path.dirname(os.path.dirname(pattern)),
+                      ignore_errors=True)
 
 
 def test_write_kv_text_mr_out_contract(spark, tmp_path):

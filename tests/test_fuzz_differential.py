@@ -579,6 +579,8 @@ def test_fuzz_facade_adversarial_files(spark, tmp_path):
     glob threw InvalidInputException from deep inside Hadoop."""
     import random as _random
 
+    import pytest as _pytest
+
     from mit_mapreduce_spark.mapreduce import run_job
 
     rng = _random.Random(2026)
@@ -600,31 +602,65 @@ def test_fuzz_facade_adversarial_files(spark, tmp_path):
             text = "" if name == "empty.txt" else rng.choice(contents_pool)
             (td / name).write_text(text)
             files[name] = text
+        # Hadoop-hidden names (a Spark output dir's _SUCCESS, .crc
+        # files): the glob form must skip them, not crash the scan
+        hidden = ["_under.txt", ".hidden.txt"]
+        for name in hidden:
+            (td / name).write_text("hidden words")
         for map_fn, red_fn in ((wc_map, wc_red), (idx_map, idx_red)):
             want = _seq_mapreduce(files, map_fn, red_fn)
             # literal-list addressing (reference os.Args semantics)
             got_df = run_job(spark, map_fn, red_fn,
-                             [str(td / n) for n in files], n_reduce=3)
+                             [str(td / n) for n in files])
             got = {r.key: r.value for r in got_df.collect()}
             assert got == want, f"trial {trial} list-form diff"
             # glob addressing
             got2 = {r.key: r.value for r in run_job(
-                spark, map_fn, red_fn, str(td / "*.txt"),
-                n_reduce=2).collect()}
+                spark, map_fn, red_fn, str(td / "*.txt")).collect()}
             assert got2 == want, f"trial {trial} glob-form diff"
+        assert run_job(spark, wc_map, wc_red, str(td / ".*")).count() == 0
+        # ...and a literal list naming one is a clear error
+        for name in hidden:
+            with _pytest.raises(ValueError, match="hidden"):
+                run_job(spark, wc_map, wc_red,
+                        [str(td / n) for n in files] + [str(td / name)])
 
     # zero-match glob and empty dir -> empty job, not an exception
     empty = tmp_path / "emptydir"
     empty.mkdir()
-    assert run_job(spark, wc_map, wc_red,
-                   str(empty / "*.txt"), n_reduce=2).count() == 0
-    assert run_job(spark, wc_map, wc_red, [], n_reduce=2).count() == 0
+    assert run_job(spark, wc_map, wc_red, str(empty / "*.txt")).count() == 0
+    assert run_job(spark, wc_map, wc_red, []).count() == 0
     # missing literal file -> the reference's "cannot open" crash,
     # as a clear FileNotFoundError (not a deep Hadoop stack)
-    import pytest as _pytest
-
     with _pytest.raises(FileNotFoundError):
         run_job(spark, wc_map, wc_red, [str(empty / "nope.txt")])
+
+
+def test_facade_map_sees_every_file_exactly(spark, tmp_path):
+    """Map must see every input file with its exact basename and
+    contents: a zero-length file and names a DataFrame file source
+    percent-encodes (space, '%20', brackets). Guards the scan choice —
+    ``spark.read.text(wholetext=True)`` and ``binaryFile`` drop the
+    empty file and encode the names."""
+    from mit_mapreduce_spark.mapreduce import run_job
+
+    files = {"empty.txt": "", "sp ace.txt": "a b\n", "pct%20x.txt": "pct",
+             "[b].txt": "brackets\r\nhere"}
+    for name, text in files.items():
+        (tmp_path / name).write_bytes(text.encode("utf-8"))
+
+    # crash.go's payload shape: the file's name and content length
+    def crash_map(fn, c):
+        return [("a", fn), ("c", f"{fn}={len(c)}"), ("t", f"{fn}={c!r}")]
+
+    def crash_red(k, vs):
+        return " | ".join(sorted(vs))
+
+    want = _seq_mapreduce(files, crash_map, crash_red)
+    for inputs in (str(tmp_path / "*"), [str(tmp_path / n) for n in files]):
+        got = {r.key: r.value for r in run_job(
+            spark, crash_map, crash_red, inputs).collect()}
+        assert got == want, inputs
 
 
 # --- round-6 fuzz: sources round-trips ------------------------------------

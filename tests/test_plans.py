@@ -662,3 +662,15 @@ def test_minhash_screen_over_no_cartesian(spark, sf_dir):
     df = minhash_screen_over(inc, sh_c, sigs_c.select("doc_id", "n"),
                              _band_hashes(sigs_c))
     assert "CartesianProduct" not in plans.formatted_plan(df)
+
+
+def test_mapreduce_facade_is_one_catalyst_plan(spark, sf_dir):
+    """run_job is one visible plan: whole-file scan lifted to a JVM
+    Dataset, Map and Reduce as Arrow kernels, and a single grouping
+    Exchange that AQE sizes. An opaque ``Scan ExistingRDD`` (a Python
+    RDD converted by createDataFrame) would hide the facade from
+    Catalyst and the SQL metrics."""
+    plan = plan_of(spark, sf_dir, "mr_wordcount")
+    assert len(re.findall(r"\(\d+\) Exchange", plan)) == 1, plan
+    assert len(re.findall(r"\(\d+\) MapInArrow", plan)) == 2, plan
+    assert "Scan ExistingRDD" not in plan, plan
