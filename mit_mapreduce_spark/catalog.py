@@ -9,6 +9,7 @@ free on every operator built on top.
 from __future__ import annotations
 
 import os
+import stat
 
 from pyspark.sql import DataFrame, SparkSession
 
@@ -38,9 +39,14 @@ _SCHEMA_CACHE: dict[tuple, object] = {}
 
 def _cached_schema(spark: SparkSession, path: str):
     """StructType of a parquet file, inferred once per (path, mtime,
-    size)."""
+    size). Only a single regular file qualifies: a parquet DIRECTORY's
+    stat does not change when a part file inside it is rewritten, so
+    its schema would be served stale — raise instead."""
     tune(spark)  # idempotent; inference depends on the pinned confs
     st = os.stat(path)
+    if not stat.S_ISREG(st.st_mode):
+        raise ValueError(
+            f"_cached_schema needs a single parquet file, not {path!r}")
     key = (path, st.st_mtime_ns, st.st_size)
     schema = _SCHEMA_CACHE.get(key)
     if schema is None:
@@ -57,7 +63,10 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
         raise KeyError(f"unknown fixture table {name!r}; known: {TABLES}")
     tune(spark)
     path = os.path.join(sf_dir, f"{name}.parquet")
-    df = spark.read.schema(_cached_schema(spark, path)).parquet(path)
+    reader = spark.read
+    if os.path.isfile(path):  # a table directory re-infers every scan
+        reader = reader.schema(_cached_schema(spark, path))
+    df = reader.parquet(path)
     if name == "events":
         df = _normalize_event_ts(df)
     return df

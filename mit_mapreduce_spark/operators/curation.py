@@ -1805,16 +1805,15 @@ def retrieval_pruning_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     # r14 (guide §1.2): the two legs' CONSTRUCTION (each builds two
     # retrieval variants with lazy-checkpointed staging — Catalyst
     # analysis + physical planning + codegen compilation) ran
-    # serially on one driver core; build them on two threads like
-    # the admission pools. Same frames, same single final action.
+    # serially on one driver core; build them as two parallel legs
+    # like the admission's. Same frames, same single final action.
     # r15 (guide §2.3/§1.2): each leg's exact+pruned variants now
     # come from ONE candidate pass (_bm25_topk_pair/_rag_topk_pair —
     # the truncation verdict rides the posting rows as a flag and the
     # aggregation sums both ways), halving the two expensive
     # candidate joins and (q, d) aggregations this audit paid per leg.
-    from concurrent.futures import ThreadPoolExecutor
-
     from mit_mapreduce_spark.operators.textstats import _bm25_topk_pair
+    from mit_mapreduce_spark.session import parallel_legs
 
     def _bm_leg():
         tf = _doc_tf(spark, sf_dir)
@@ -1829,8 +1828,5 @@ def retrieval_pruning_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
                            RAG_Q_TOP_DIMS, corpus),
             RAG_TOP_K, "rag")
 
-    with ThreadPoolExecutor(max_workers=2) as pool:
-        bm_f = pool.submit(_bm_leg)
-        rag_f = pool.submit(_rag_leg)
-        bm, rag = bm_f.result(), rag_f.result()
+    bm, rag = parallel_legs(_bm_leg, _rag_leg)
     return bm.unionByName(rag)

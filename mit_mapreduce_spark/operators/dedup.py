@@ -445,35 +445,49 @@ def min_label_components(pairs: DataFrame, a: str, b: str,
     # own shuffle.partitions so a big graph keeps full parallelism —
     # at production volumes the cap always wins and nothing changes.
     # The count materializes the checkpoint the first round needs
-    # anyway. Conf is set/restored around the (construction-time)
-    # loop only; callers run it serially.
-    spark = pairs.sparkSession
+    # anyway. The size is applied by explicit repartition(n_loop, key)
+    # on the loop's own frames, never through the session conf, so
+    # any number of loops (the manifest build runs four at once) and
+    # unrelated queries can share one session. The floor is 2: a
+    # 1-partition repartition plans as SinglePartition, which the join
+    # planner re-sizes to the session's shuffle partitions.
     n_edges = edges.count()
-    before = spark.conf.get("spark.sql.shuffle.partitions")
-    n_loop = min(int(before),
-                 max(1, -(-n_edges * 64 // (4 * 1024 * 1024))))
-    spark.conf.set("spark.sql.shuffle.partitions", str(n_loop))
-    try:
-        return _min_label_loop(edges, max_iters)
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", before)
+    cap = int(pairs.sparkSession.conf.get("spark.sql.shuffle.partitions"))
+    n_loop = min(cap, max(2, -(-n_edges * 64 // (4 * 1024 * 1024))))
+    return _min_label_loop(edges, n_loop, max_iters)
 
 
-def _min_label_loop(edges: DataFrame, max_iters: int) -> DataFrame:
-    """The propagation loop proper (see min_label_components)."""
+def _min_label_loop(edges: DataFrame, n_loop: int,
+                    max_iters: int) -> DataFrame:
+    """The propagation loop proper (see min_label_components). Every
+    shuffle of a round is an explicit hash repartition into ``n_loop``
+    parts on its join / grouping key. When BOTH sides of a join are
+    fresh Exchanges, the planner (EnsureRequirements) re-sizes them to
+    the session's shuffle partitions, so one side of each join is an
+    aggregate over its Exchange: the edge side's distinct (a pair
+    listed both ways is one directed edge) and, in the second join,
+    the neighbour-min groupBy. The edge side is rebuilt every round: a
+    checkpoint of it does not keep its hash partitioning, and a cache
+    filled up front does, but its exact size turns each round's join
+    into a broadcast of the edges, which measured slower at sf0.1.
+    """
+    by_dst = edges.repartition(n_loop, "dst").distinct()
     # symmetrized edges ⇒ every component member appears as src
     labels = (
-        edges.select(F.col("src").alias("vertex")).distinct()
+        edges.select(F.col("src").alias("vertex"))
+        .repartition(n_loop, "vertex").distinct()
         .select("vertex", F.col("vertex").alias("cluster_id"))
         .localCheckpoint(eager=False)
     )
     changed = -1
     for _ in range(max_iters):
+        lab = labels.repartition(n_loop, "vertex")
         nbr_min = (
-            edges.join(labels, edges.dst == labels.vertex)
+            by_dst.join(lab, by_dst.dst == lab.vertex)
+            .repartition(n_loop, "src")
             .groupBy("src").agg(F.min("cluster_id").alias("_nbr_min"))
         )
-        joined = labels.join(nbr_min, labels.vertex == nbr_min.src, "left")
+        joined = lab.join(nbr_min, lab.vertex == nbr_min.src, "left")
         # Carry the changed flag out of the SAME join that computes the
         # new label — the convergence check then reads the checkpointed
         # result instead of re-joining new labels against old (which

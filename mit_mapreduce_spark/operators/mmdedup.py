@@ -54,6 +54,7 @@ from __future__ import annotations
 
 import threading
 from collections.abc import Iterator
+from functools import partial
 
 import pandas as pd
 
@@ -75,6 +76,7 @@ from mit_mapreduce_spark.operators.multimodal import (
     PH_BAND_BITS, PH_BANDS, PH_GROUP, PH_HAM_MAX, _PHASH_SCHEMA,
 )
 from mit_mapreduce_spark.operators.registry import query
+from mit_mapreduce_spark.session import parallel_legs
 
 # --- shared fingerprint geometry (identical to the image tier's) ----------
 FP_BANDS = PH_BANDS                 # 8 bands...
@@ -762,7 +764,7 @@ def _manifest_build(spark: SparkSession, sf_dir: str) -> DataFrame:
     # time), and the three quality screens (eager-checkpointed here)
     # — each underutilize the executor pool (sub-second Arrow jobs
     # over small signature/stat tables), so they are submitted
-    # CONCURRENTLY from a thread pool: seven drivers' worth of small
+    # CONCURRENTLY as parallel_legs: seven drivers' worth of small
     # jobs overlap instead of serializing, cutting the composed
     # query's wall time without touching any leg's plan. Spark job
     # submission is thread-safe; each leg lands in its own
@@ -787,39 +789,30 @@ def _manifest_build(spark: SparkSession, sf_dir: str) -> DataFrame:
                     F.col("passes").alias(col)) \
             .localCheckpoint(eager=True)
 
-    from concurrent.futures import ThreadPoolExecutor
-
-    with ThreadPoolExecutor(max_workers=10) as pool:
-        # r14: the three per-doc quality frames build on the pool too —
-        # construction is driver-side analysis/planning that overlaps
-        # with the CC loops' jobs and the screens' planning
-        g_f = pool.submit(lambda: gopher_quality_rules(spark, sf_dir)
-                          .select("doc_id", F.col("passes").alias("_g")))
-        r_f = pool.submit(lambda: quality_repetition(spark, sf_dir)
-                          .select("doc_id", F.col("passes").alias("_r")))
-        lm_f = pool.submit(lambda: quality_lm_bigram(spark, sf_dir)
-                           .select("doc_id", "novelty"))
-        tc_f = pool.submit(_tc_leg)
-        media_f = [
-            pool.submit(_cluster_leg, col, fixture_from, kernel,
-                        absent, geom)
-            for col, fixture_from, kernel, absent, geom in (
-                ("_icl", _phash_image_assets_from, _phash_batch,
-                 MM_IMAGE_ABSENT, (PH_BANDS, PH_BAND_BITS, PH_HAM_MAX)),
-                ("_acl", _fingerprint_audio_assets_from, _afp_batch,
-                 MM_AUDIO_ABSENT, (FP_BANDS, FP_BAND_BITS, FP_HAM_MAX)),
-                ("_vcl", _fingerprint_video_assets_from, _vfp_batch,
-                 MM_VIDEO_ABSENT, (FP_BANDS, FP_BAND_BITS, FP_HAM_MAX)))
-        ] + [
-            pool.submit(_quality_leg, col, screen_from, absent)
-            for col, screen_from, absent in (
-                ("_iqp", _image_screen_from, MM_IMAGE_ABSENT),
-                ("_aqp", _audio_screen_from, MM_AUDIO_ABSENT),
-                ("_vqp", _video_screen_from, MM_VIDEO_ABSENT))
-        ]
-        g, r, lm = g_f.result(), r_f.result(), lm_f.result()
-        tc = tc_f.result()
-        media = [f.result() for f in media_f]
+    # r14: the three per-doc quality frames build as legs too —
+    # construction is driver-side analysis/planning that overlaps
+    # with the CC loops' jobs and the screens' planning
+    g, r, lm, tc, *media = parallel_legs(
+        lambda: gopher_quality_rules(spark, sf_dir)
+        .select("doc_id", F.col("passes").alias("_g")),
+        lambda: quality_repetition(spark, sf_dir)
+        .select("doc_id", F.col("passes").alias("_r")),
+        lambda: quality_lm_bigram(spark, sf_dir)
+        .select("doc_id", "novelty"),
+        _tc_leg,
+        *(partial(_cluster_leg, col, fixture_from, kernel, absent, geom)
+          for col, fixture_from, kernel, absent, geom in (
+              ("_icl", _phash_image_assets_from, _phash_batch,
+               MM_IMAGE_ABSENT, (PH_BANDS, PH_BAND_BITS, PH_HAM_MAX)),
+              ("_acl", _fingerprint_audio_assets_from, _afp_batch,
+               MM_AUDIO_ABSENT, (FP_BANDS, FP_BAND_BITS, FP_HAM_MAX)),
+              ("_vcl", _fingerprint_video_assets_from, _vfp_batch,
+               MM_VIDEO_ABSENT, (FP_BANDS, FP_BAND_BITS, FP_HAM_MAX)))),
+        *(partial(_quality_leg, col, screen_from, absent)
+          for col, screen_from, absent in (
+              ("_iqp", _image_screen_from, MM_IMAGE_ABSENT),
+              ("_aqp", _audio_screen_from, MM_AUDIO_ABSENT),
+              ("_vqp", _video_screen_from, MM_VIDEO_ABSENT))))
     m = (docs.join(tc, "doc_id").join(g, "doc_id").join(r, "doc_id")
          .join(lm, "doc_id", "left"))
     for leg in media:
@@ -1332,7 +1325,7 @@ def pipeline_ingest_admission(spark: SparkSession,
     SHARD only, the PII count is a pure projection, and the
     contamination probe is a broadcast gram join (benchmark suites
     are tiny next to the corpus) — the retained corpus is never
-    re-decoded. The nine eager legs overlap on a thread pool like the
+    re-decoded. The nine eager legs overlap as parallel legs like the
     manifest's, and the composed frame is memoized per session so the
     report rollup reuses it. Oracle: one composition of the funnel
     CTEs, IN-subqueries for the text/clean gates, and seven
@@ -1454,45 +1447,30 @@ def _admission_build(spark: SparkSession, sf_dir: str) -> DataFrame:
                 .agg(F.countDistinct("gram").alias("_nsh"))
                 .localCheckpoint(eager=True))
 
-    from concurrent.futures import ThreadPoolExecutor
-
-    with ThreadPoolExecutor(max_workers=10) as pool:
-        # the three per-doc quality frames build on the pool too
-        # (r14): their construction is driver-side analysis work that
-        # overlaps with the heavy legs' planning like everything else
-        g_f = pool.submit(lambda: gopher_quality_rules(spark, sf_dir)
-                          .select("doc_id", F.col("passes").alias("_g")))
-        r_f = pool.submit(lambda: quality_repetition(spark, sf_dir)
-                          .select("doc_id", F.col("passes").alias("_r")))
-        lm_f = pool.submit(lambda: quality_lm_bigram(spark, sf_dir)
-                           .select("doc_id", "novelty"))
-        td_f = pool.submit(_text_dup_leg)
-        mh_f = pool.submit(_text_neardup_leg)
-        sem_f = pool.submit(_semantic_leg)
-        ct_f = pool.submit(_contam_leg)
-        legs_f = [
-            pool.submit(_screen_leg, col, fixture_from, kernel, absent,
-                        geom)
-            for col, fixture_from, kernel, absent, geom in (
-                ("_ind", _phash_image_assets_from, _phash_batch,
-                 MM_IMAGE_ABSENT, (PH_BANDS, PH_BAND_BITS, PH_HAM_MAX)),
-                ("_and", _fingerprint_audio_assets_from, _afp_batch,
-                 MM_AUDIO_ABSENT, (FP_BANDS, FP_BAND_BITS, FP_HAM_MAX)),
-                ("_vnd", _fingerprint_video_assets_from, _vfp_batch,
-                 MM_VIDEO_ABSENT, (FP_BANDS, FP_BAND_BITS, FP_HAM_MAX)))
-        ] + [
-            pool.submit(_quality_leg, col, screen_from, absent)
-            for col, screen_from, absent in (
-                ("_iqp", _image_screen_from, MM_IMAGE_ABSENT),
-                ("_aqp", _audio_screen_from, MM_AUDIO_ABSENT),
-                ("_vqp", _video_screen_from, MM_VIDEO_ABSENT))
-        ]
-        g, r, lm = g_f.result(), r_f.result(), lm_f.result()
-        td = td_f.result()
-        mh = mh_f.result()
-        sem = sem_f.result()
-        ct = ct_f.result()
-        legs = [f.result() for f in legs_f]
+    # the three per-doc quality frames build as legs too (r14): their
+    # construction is driver-side analysis work that overlaps with the
+    # heavy legs' planning like everything else
+    g, r, lm, td, mh, sem, ct, *legs = parallel_legs(
+        lambda: gopher_quality_rules(spark, sf_dir)
+        .select("doc_id", F.col("passes").alias("_g")),
+        lambda: quality_repetition(spark, sf_dir)
+        .select("doc_id", F.col("passes").alias("_r")),
+        lambda: quality_lm_bigram(spark, sf_dir)
+        .select("doc_id", "novelty"),
+        _text_dup_leg, _text_neardup_leg, _semantic_leg, _contam_leg,
+        *(partial(_screen_leg, col, fixture_from, kernel, absent, geom)
+          for col, fixture_from, kernel, absent, geom in (
+              ("_ind", _phash_image_assets_from, _phash_batch,
+               MM_IMAGE_ABSENT, (PH_BANDS, PH_BAND_BITS, PH_HAM_MAX)),
+              ("_and", _fingerprint_audio_assets_from, _afp_batch,
+               MM_AUDIO_ABSENT, (FP_BANDS, FP_BAND_BITS, FP_HAM_MAX)),
+              ("_vnd", _fingerprint_video_assets_from, _vfp_batch,
+               MM_VIDEO_ABSENT, (FP_BANDS, FP_BAND_BITS, FP_HAM_MAX)))),
+        *(partial(_quality_leg, col, screen_from, absent)
+          for col, screen_from, absent in (
+              ("_iqp", _image_screen_from, MM_IMAGE_ABSENT),
+              ("_aqp", _audio_screen_from, MM_AUDIO_ABSENT),
+              ("_vqp", _video_screen_from, MM_VIDEO_ABSENT))))
 
     m = (inc_docs.join(td, "doc_id", "left").join(mh, "doc_id", "left")
          .join(sem, "doc_id", "left").join(ct, "doc_id", "left")
@@ -1658,10 +1636,10 @@ def _admission_ctx_build(spark: SparkSession, sf_dir: str) -> dict:
     # the toRdd PHYSICAL planning at construction — measured 8.9 s of
     # pure driver-side work when the ~15 legs built serially (no job
     # runs; the box sat idle on one core of py4j/analyzer work). The
-    # independent legs now build on a thread pool like the batch
+    # independent legs now build as parallel legs like the batch
     # admission's — py4j releases the GIL on JVM calls, so the
     # analyzer/planner work overlaps (measured 8.9 -> ~3 s). Legs
-    # with real dependencies chain INSIDE one future (sh -> sigs ->
+    # with real dependencies chain INSIDE one leg (sh -> sigs ->
     # bands; bk -> sides) so nothing waits on an unrelated leg.
     def _text_legs():
         sh = lazy(shingles_df(corpus))
@@ -1685,71 +1663,64 @@ def _admission_ctx_build(spark: SparkSession, sf_dir: str) -> dict:
         return (nd, qp, _ABSENT_TO_FLAG[absent], fixture_from, kernel,
                 geom, screen_from, idx_sigs)
 
-    from concurrent.futures import ThreadPoolExecutor
-
-    with ThreadPoolExecutor(max_workers=10) as pool:
-        text_f = pool.submit(_text_legs)
-        emb_f = pool.submit(_emb_legs)
-        fps_f = pool.submit(lambda: lazy(
+    ((corpus_sh, corpus_sizes, corpus_bands), (emb_bk, emb_sides),
+     corpus_fps, eval_grams, g, r, lm, manifest, *media) = parallel_legs(
+        _text_legs,
+        _emb_legs,
+        lambda: lazy(
             corpus.where(F.col("text").isNotNull())
-            .select(norm_fp_col().alias("_fp")).distinct()))
-        grams_f = pool.submit(lambda: lazy(
+            .select(norm_fp_col().alias("_fp")).distinct()),
+        lambda: lazy(
             grams_src.select("doc_id", _letter_tokens().alias("_toks"))
             .select(F.explode(F.array_distinct(
                 _ngram_arr(CONTAM_NGRAM))).alias("gram"))
-            .distinct()))
-        g_f = pool.submit(lambda: lazy(
+            .distinct()),
+        lambda: lazy(
             gopher_quality_rules(spark, sf_dir)
-            .select("doc_id", F.col("passes").alias("_g"))))
-        r_f = pool.submit(lambda: lazy(
+            .select("doc_id", F.col("passes").alias("_g"))),
+        lambda: lazy(
             quality_repetition(spark, sf_dir)
-            .select("doc_id", F.col("passes").alias("_r"))))
-        lm_f = pool.submit(lambda: lazy(
+            .select("doc_id", F.col("passes").alias("_r"))),
+        lambda: lazy(
             quality_lm_bigram(spark, sf_dir)
-            .select("doc_id", "novelty")))
-        man_f = pool.submit(lambda: lazy(
-            asset_manifest_media(spark, sf_dir)))
-        media_f = [
-            pool.submit(_media_leg, nd, qp, absent, fixture_from,
-                        kernel, geom, screen_from)
-            for nd, qp, absent, fixture_from, kernel, geom, screen_from
-            in (("_ind", "_iqp", MM_IMAGE_ABSENT,
-                 _phash_image_assets_from, _phash_batch,
-                 (PH_BANDS, PH_BAND_BITS, PH_HAM_MAX),
-                 _image_screen_from),
-                ("_and", "_aqp", MM_AUDIO_ABSENT,
-                 _fingerprint_audio_assets_from, _afp_batch,
-                 (FP_BANDS, FP_BAND_BITS, FP_HAM_MAX),
-                 _audio_screen_from),
-                ("_vnd", "_vqp", MM_VIDEO_ABSENT,
-                 _fingerprint_video_assets_from, _vfp_batch,
-                 (FP_BANDS, FP_BAND_BITS, FP_HAM_MAX),
-                 _video_screen_from))
-        ]
-        corpus_sh, corpus_sizes, corpus_bands = text_f.result()
-        emb_bk, emb_sides = emb_f.result()
-        ctx = {
-            "corpus_fps": fps_f.result(),
-            "corpus_sh": corpus_sh,
-            "corpus_sizes": corpus_sizes,
-            "corpus_bands": corpus_bands,
-            "emb_bk": emb_bk,
-            # the exact-cosine verification table, checkpointed once
-            # per session (r14): per-batch candidate verification
-            # reads persisted blocks instead of re-joining
-            # embeddings x norms
-            "emb_sides": emb_sides,
-            "eval_grams": grams_f.result(),
-            "g": g_f.result(),
-            "r": r_f.result(),
-            "lm": lm_f.result(),
-            "manifest": man_f.result(),
-            # per-modality: (nd col, q col, manifest flag, fixture
-            # builder, fingerprint kernel, geometry, quality screen,
-            # corpus signature index)
-            "media": [f.result() for f in media_f],
-        }
-    return ctx
+            .select("doc_id", "novelty")),
+        lambda: lazy(asset_manifest_media(spark, sf_dir)),
+        *(partial(_media_leg, nd, qp, absent, fixture_from, kernel, geom,
+                  screen_from)
+          for nd, qp, absent, fixture_from, kernel, geom, screen_from
+          in (("_ind", "_iqp", MM_IMAGE_ABSENT,
+               _phash_image_assets_from, _phash_batch,
+               (PH_BANDS, PH_BAND_BITS, PH_HAM_MAX),
+               _image_screen_from),
+              ("_and", "_aqp", MM_AUDIO_ABSENT,
+               _fingerprint_audio_assets_from, _afp_batch,
+               (FP_BANDS, FP_BAND_BITS, FP_HAM_MAX),
+               _audio_screen_from),
+              ("_vnd", "_vqp", MM_VIDEO_ABSENT,
+               _fingerprint_video_assets_from, _vfp_batch,
+               (FP_BANDS, FP_BAND_BITS, FP_HAM_MAX),
+               _video_screen_from))))
+    return {
+        "corpus_fps": corpus_fps,
+        "corpus_sh": corpus_sh,
+        "corpus_sizes": corpus_sizes,
+        "corpus_bands": corpus_bands,
+        "emb_bk": emb_bk,
+        # the exact-cosine verification table, checkpointed once
+        # per session (r14): per-batch candidate verification
+        # reads persisted blocks instead of re-joining
+        # embeddings x norms
+        "emb_sides": emb_sides,
+        "eval_grams": eval_grams,
+        "g": g,
+        "r": r,
+        "lm": lm,
+        "manifest": manifest,
+        # per-modality: (nd col, q col, manifest flag, fixture
+        # builder, fingerprint kernel, geometry, quality screen,
+        # corpus signature index)
+        "media": media,
+    }
 
 
 def admission_batch_frame(spark: SparkSession, sf_dir: str,
@@ -1790,7 +1761,7 @@ def admission_batch_frame(spark: SparkSession, sf_dir: str,
       trees and the single write action executes shallow adaptive
       plans (~4.3 s -> ~1.7 s execution, measured);
     - the leg builds (analysis + the toRdd physical planning the lazy
-      checkpoint forces) run on the thread pool, overlapping py4j
+      checkpoint forces) run as parallel legs, overlapping py4j
       round-trips and JVM analyzer work across legs;
     - the incoming MinHash side uses the stateless expression family
       (minhash_screen_expr_over): shingle sets, sizes, and band
@@ -1800,8 +1771,6 @@ def admission_batch_frame(spark: SparkSession, sf_dir: str,
     The batch tier's _admission_build keeps eager checkpoints: its
     legs materialize corpus-sized intermediates the session reuses —
     a trade that only pays when the inputs are corpus-sized."""
-    from concurrent.futures import ThreadPoolExecutor
-
     from mit_mapreduce_spark.operators.curation import (
         EMAIL_RE, EVAL_MOD, ID_RE, IP_RE, PHONE_RE, pii_payload_col,
     )
@@ -1889,21 +1858,15 @@ def admission_batch_frame(spark: SparkSession, sf_dir: str,
                 .select(F.col("asset_id").alias("doc_id"),
                         F.col("passes").alias(qp)))
 
-    with ThreadPoolExecutor(max_workers=10) as pool:
-        td_f = pool.submit(_td)
-        mh_f = pool.submit(_mh)
-        sem_f = pool.submit(_sem)
-        ct_f = pool.submit(_ct)
-        media_f = [
-            (pool.submit(_scr, nd, flag, fixture_from, kernel, geom,
-                         idx_sigs),
-             pool.submit(_q, qp, flag, screen_from))
-            for nd, qp, flag, fixture_from, kernel, geom, screen_from,
-            idx_sigs in ctx["media"]
-        ]
-        td, mh, sem, ct = (td_f.result(), mh_f.result(), sem_f.result(),
-                           ct_f.result())
-        media = [(s.result(), q.result()) for s, q in media_f]
+    td, mh, sem, ct, *media_legs = parallel_legs(
+        _td, _mh, _sem, _ct,
+        *(partial(_scr, nd, flag, fixture_from, kernel, geom, idx_sigs)
+          for nd, _, flag, fixture_from, kernel, geom, _, idx_sigs
+          in ctx["media"]),
+        *(partial(_q, qp, flag, screen_from)
+          for _, qp, flag, _, _, _, screen_from, _ in ctx["media"]))
+    n_media = len(ctx["media"])
+    media = list(zip(media_legs[:n_media], media_legs[n_media:]))
 
     m = (inc_docs.join(td, "doc_id", "left").join(mh, "doc_id", "left")
          .join(sem, "doc_id", "left").join(ct, "doc_id", "left")

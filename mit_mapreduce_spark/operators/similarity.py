@@ -1605,19 +1605,15 @@ def ann_recall_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     (it already is: the bounded broadcast query set), so recall is
     estimated exactly the way production ANN evals do it."""
     # r14 (guide §1.2): the three component searches' construction
-    # (analysis + planning) overlaps on a thread pool — same frames,
+    # (analysis + planning) overlaps as parallel legs — same frames,
     # same single fused action.
-    from concurrent.futures import ThreadPoolExecutor
+    from mit_mapreduce_spark.session import parallel_legs
 
-    with ThreadPoolExecutor(max_workers=3) as pool:
-        exact_f = pool.submit(
-            lambda: ann_bruteforce_topk(spark, sf_dir).select("qid", "cid"))
-        ivf_f = pool.submit(
-            lambda: ann_ivf_topk(spark, sf_dir).select("qid", "cid"))
-        pq_f = pool.submit(
-            lambda: pq_adc_topk(spark, sf_dir).select("qid", "cid"))
-        exact = exact_f.result()
-        legs = [("ivf", ivf_f.result()), ("pq_adc", pq_f.result())]
+    exact, ivf, pq = parallel_legs(
+        lambda: ann_bruteforce_topk(spark, sf_dir).select("qid", "cid"),
+        lambda: ann_ivf_topk(spark, sf_dir).select("qid", "cid"),
+        lambda: pq_adc_topk(spark, sf_dir).select("qid", "cid"))
+    legs = [("ivf", ivf), ("pq_adc", pq)]
     outs = []
     for name, cand in legs:
         outs.append(

@@ -48,7 +48,7 @@ from mit_mapreduce_spark.operators import multimodal as _multimodal_batch  # noq
 from mit_mapreduce_spark.operators import sketches as _sketches_batch  # noqa: F401
 from mit_mapreduce_spark.operators.events import SESSION_GAP_US
 from mit_mapreduce_spark.operators.registry import ORACLES, query
-from mit_mapreduce_spark.session import tune
+from mit_mapreduce_spark.session import stream_session, tune
 from mit_mapreduce_spark.streaming import events_stream, run_stream_to_table
 
 SESSION_GAP = "4 hours"   # matches operators.events.SESSION_GAP_US
@@ -80,7 +80,7 @@ def stream_tumbling_hourly(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select(F.col("w.start").alias("window_start"), "event_type",
                 "n_events", "sum_value")
     )
-    return spark.table(run_stream_to_table(agg, "complete"))
+    return run_stream_to_table(agg, "complete")
 
 
 @query(
@@ -134,7 +134,7 @@ def stream_sessionize(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("user_id", "n_events", "session_start", "session_end",
                 "sum_value")
     )
-    return spark.table(run_stream_to_table(agg, "complete"))
+    return run_stream_to_table(agg, "complete")
 
 
 # --- custom stateful operator: applyInPandasWithState ---------------------
@@ -215,7 +215,7 @@ def stream_user_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
         outputMode="update",
         timeoutConf=GroupStateTimeout.NoTimeout,
     )
-    return spark.table(run_stream_to_table(out, "update"))
+    return run_stream_to_table(out, "update")
 
 
 @query(
@@ -267,7 +267,7 @@ def stream_interval_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         & (F.col("err_ts") <= F.col("click_ts")),
     ).select("click_id", F.col("c_user").alias("user_id"),
              "click_ts", "err_ts", "err_value")
-    return spark.table(run_stream_to_table(joined, "append"))
+    return run_stream_to_table(joined, "append")
 
 
 @query(
@@ -294,7 +294,7 @@ def stream_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
         .dropDuplicatesWithinWatermark(["user_id", "event_type"])
         .select("user_id", "event_type")
     )
-    return spark.table(run_stream_to_table(ev, "append"))
+    return run_stream_to_table(ev, "append")
 
 
 @query(
@@ -339,7 +339,7 @@ def stream_sliding_windows(spark: SparkSession, sf_dir: str) -> DataFrame:
                 F.col("w.end").alias("window_end"),
                 "event_type", "n_events", "sum_value")
     )
-    return spark.table(run_stream_to_table(agg, "complete"))
+    return run_stream_to_table(agg, "complete")
 
 
 @query(
@@ -374,7 +374,7 @@ def stream_static_enrich(spark: SparkSession, sf_dir: str) -> DataFrame:
         enriched.groupBy("c_nationkey", "c_mktsegment")
         .agg(F.count("*").alias("n_events"), dsum("value", "sum_value"))
     )
-    return spark.table(run_stream_to_table(agg, "complete"))
+    return run_stream_to_table(agg, "complete")
 
 
 # --- streaming heavy hitters (space-saving sketch in GroupState) ----------
@@ -450,7 +450,7 @@ def stream_heavy_hitters(spark: SparkSession, sf_dir: str) -> DataFrame:
         outputMode="update",
         timeoutConf=GroupStateTimeout.NoTimeout,
     )
-    return spark.table(run_stream_to_table(out, "update"))
+    return run_stream_to_table(out, "update")
 
 
 @query("stream_quantile_bins", oracle=ORACLES["sketch_quantile_bins"])
@@ -480,10 +480,9 @@ def stream_quantile_bins(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("event_type", "bin")
         .agg(F.count("*").cast("bigint").alias("cnt"))
     )
-    tbl = run_stream_to_table(counters, "complete")
+    c = run_stream_to_table(counters, "complete")
 
     from pyspark.sql import Window as W
-    c = spark.table(tbl)
     wcum = (W.partitionBy("event_type").orderBy("bin")
             .rowsBetween(W.unboundedPreceding, 0))
     wall = W.partitionBy("event_type")
@@ -536,9 +535,7 @@ def stream_decayed_engagement(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("user_id", "day")
         .agg(F.count("*").cast("bigint").alias("cnt"))
     )
-    tbl = run_stream_to_table(counters, "complete")
-
-    c = spark.table(tbl)
+    c = run_stream_to_table(counters, "complete")
     anchor = c.agg(F.max("day").alias("a"))
     aged = (
         c.crossJoin(F.broadcast(anchor))
@@ -626,13 +623,12 @@ def stream_event_transitions(spark: SparkSession, sf_dir: str) -> DataFrame:
         outputMode="append",
         timeoutConf=GroupStateTimeout.NoTimeout,
     )
-    tbl = run_stream_to_table(inc, "append")
+    drained = run_stream_to_table(inc, "append")
 
     from pyspark.sql import Window as W
 
     cnt = (
-        spark.table(tbl)
-        .groupBy("prev_type", "event_type")
+        drained.groupBy("prev_type", "event_type")
         .agg(F.sum("n").cast("bigint").alias("n_transitions"))
     )
     tot = W.partitionBy("prev_type")
@@ -677,7 +673,7 @@ def stream_multimodal_quarantine(spark: SparkSession,
     tune(spark)
     agg = quarantine_report_agg(
         quarantine_probes(docs_stream(spark, sf_dir)))
-    return spark.table(run_stream_to_table(agg, "complete"))
+    return run_stream_to_table(agg, "complete")
 
 
 @query("stream_audio_fingerprints",
@@ -714,7 +710,7 @@ def stream_audio_fingerprints(spark: SparkSession,
         _fingerprint_audio_assets_from(docs_stream(spark, sf_dir))
         .mapInPandas(_afp_batch, _PHASH_SCHEMA)
     )
-    return spark.table(run_stream_to_table(sigs, "append"))
+    return run_stream_to_table(sigs, "append")
 
 
 def _sql_image_sigs() -> str:
@@ -740,7 +736,7 @@ def stream_image_fingerprints(spark: SparkSession,
     tune(spark)
     sigs = (_phash_image_assets_from(docs_stream(spark, sf_dir))
             .mapInPandas(_phash_batch, _PHASH_SCHEMA))
-    return spark.table(run_stream_to_table(sigs, "append"))
+    return run_stream_to_table(sigs, "append")
 
 
 @query("stream_video_fingerprints",
@@ -761,7 +757,7 @@ def stream_video_fingerprints(spark: SparkSession,
     tune(spark)
     sigs = (_fingerprint_video_assets_from(docs_stream(spark, sf_dir))
             .mapInPandas(_vfp_batch, _PHASH_SCHEMA))
-    return spark.table(run_stream_to_table(sigs, "append"))
+    return run_stream_to_table(sigs, "append")
 
 
 @query("stream_fingerprint_alerts",
@@ -853,7 +849,7 @@ def _alert_drain(spark: SparkSession, sf_dir: str, fixture_from, kernel,
     alerts = _banding.banded_match_scores(
         inc_sigs, idx_sigs, n_bands, band_bits, ham_max
     ).dropDuplicates(["asset_id", "matched_id"])
-    return spark.table(run_stream_to_table(alerts, "append"))
+    return run_stream_to_table(alerts, "append")
 
 
 def _sql_text_fps() -> str:
@@ -886,7 +882,7 @@ def stream_text_fingerprints(spark: SparkSession,
     fps = (docs_stream(spark, sf_dir)
            .where(F.col("text").isNotNull())
            .select("doc_id", norm_fp_col().alias("fingerprint")))
-    return spark.table(run_stream_to_table(fps, "append"))
+    return run_stream_to_table(fps, "append")
 
 
 def _sql_stream_admission() -> str:
@@ -927,21 +923,28 @@ def stream_ingest_admission(spark: SparkSession, sf_dir: str) -> DataFrame:
     from mit_mapreduce_spark.operators.mmdedup import (
         admission_batch_frame, admission_static_ctx, inc_shard_col,
     )
-    from mit_mapreduce_spark.streaming import _SCRATCH, docs_stream
+    from mit_mapreduce_spark.streaming import _SCRATCH, docs_stream, sf_key
 
     tune(spark)
     ctx = admission_static_ctx(spark, sf_dir)
-    inc = docs_stream(spark, sf_dir).where(inc_shard_col("doc_id"))
+    # batch volumes are small next to the session's batch tier: the
+    # stream is built in a child session whose per-batch shuffles are
+    # sized 2, not the state stores' 8 (the r14 cadence surgery
+    # measured ~0.5 s/batch of pure task-scheduling overhead at 8
+    # partitions over ~60-row batches); each batch runs in a clone of
+    # that child, so the verdict frame is built on the batch's session
+    inc = (docs_stream(stream_session(spark, 2), sf_dir)
+           .where(inc_shard_col("doc_id")))
     # per-(session, SF) sink, overwritten per invocation — the
     # applicationId in the path (ADVICE r13) keeps two sessions on
-    # one checkout, or two corpora sharing a basename, from
-    # interleaving the overwrite/append/read cycle; serial reruns in
-    # one session still reuse (and so bound) the scratch dir.
-    # Seeding it with the (empty) verdict schema also makes a
-    # zero-row shard drain to a readable table.
-    tag = os.path.basename(sf_dir.rstrip("/"))
+    # one checkout, and the full-path key two corpora sharing a
+    # basename, from interleaving the overwrite/append/read cycle;
+    # serial reruns in one session still reuse (and so bound) the
+    # scratch dir. Seeding it with the (empty) verdict schema also
+    # makes a zero-row shard drain to a readable table.
     out = os.path.join(
-        _SCRATCH, f"admit_{tag}_{spark.sparkContext.applicationId}")
+        _SCRATCH,
+        f"admit_{sf_key(sf_dir)}_{spark.sparkContext.applicationId}")
     spark.createDataFrame(
         [], "doc_id bigint, lang string, source string, keep_text int,"
             " keep_semantic int, keep_quality int, keep_clean int,"
@@ -949,22 +952,12 @@ def stream_ingest_admission(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).write.mode("overwrite").parquet(out)
 
     def _admit(batch_df: DataFrame, batch_id: int) -> None:
-        admission_batch_frame(spark, sf_dir, batch_df, ctx) \
-            .write.mode("append").parquet(out)
+        admission_batch_frame(batch_df.sparkSession, sf_dir, batch_df,
+                              ctx).write.mode("append").parquet(out)
 
-    # batch volumes are small next to the session's batch tier —
-    # right-size the per-batch shuffles like run_stream_to_table
-    # sizes the state stores (2, not 8: the r14 cadence surgery
-    # measured ~0.5 s/batch of pure task-scheduling overhead at 8
-    # partitions over ~60-row batches)
-    before = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "2")
-    try:
-        q = (inc.writeStream.foreachBatch(_admit)
-             .trigger(availableNow=True).start())
-        q.awaitTermination()
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", before)
+    q = (inc.writeStream.foreachBatch(_admit)
+         .trigger(availableNow=True).start())
+    q.awaitTermination()
     return spark.read.parquet(out)
 
 
@@ -1019,7 +1012,7 @@ def stream_minhash_bands(spark: SparkSession, sf_dir: str) -> DataFrame:
     return drain_via_batch(
         docs_stream(spark, sf_dir),
         lambda b: _band_hashes(_minhash_sigs(shingles_df(b))),
-        name="bands", tag=os.path.basename(sf_dir.rstrip("/")))
+        name="bands", sf_dir=sf_dir)
 
 
 def _sql_doc_shingles() -> str:
@@ -1060,8 +1053,7 @@ def stream_doc_shingles(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     tune(spark)
     return drain_via_batch(docs_stream(spark, sf_dir), shingles_df,
-                           name="shingles",
-                           tag=os.path.basename(sf_dir.rstrip("/")))
+                           name="shingles", sf_dir=sf_dir)
 
 
 def _sql_embed_index() -> str:
@@ -1110,7 +1102,7 @@ def stream_embedding_index(spark: SparkSession, sf_dir: str) -> DataFrame:
         vecs,
         lambda b: _screen_buckets(fan_out(b)).select(
             "vec_id", "band_idx", "bucket", "nsq"),
-        name="embidx", tag=os.path.basename(sf_dir.rstrip("/")))
+        name="embidx", sf_dir=sf_dir)
 
 
 def _sql_image_alerts() -> str:
@@ -1198,7 +1190,7 @@ def stream_audio_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     tune(spark)
     screened = _audio_screen_from(docs_stream(spark, sf_dir))
-    return spark.table(run_stream_to_table(screened, "append"))
+    return run_stream_to_table(screened, "append")
 
 
 @query("stream_gopher_rules", oracle=ORACLES["gopher_quality_rules"])
@@ -1228,8 +1220,8 @@ def stream_gopher_rules(spark: SparkSession, sf_dir: str) -> DataFrame:
     from mit_mapreduce_spark.streaming import docs_stream
 
     tune(spark)
-    return spark.table(run_stream_to_table(
-        gopher_quality_rules_from(docs_stream(spark, sf_dir)), "append"))
+    return run_stream_to_table(
+        gopher_quality_rules_from(docs_stream(spark, sf_dir)), "append")
 
 
 @query("stream_repetition_rules", oracle=ORACLES["quality_repetition"])
@@ -1249,8 +1241,8 @@ def stream_repetition_rules(spark: SparkSession, sf_dir: str) -> DataFrame:
     from mit_mapreduce_spark.streaming import docs_stream
 
     tune(spark)
-    return spark.table(run_stream_to_table(
-        quality_repetition_from(docs_stream(spark, sf_dir)), "append"))
+    return run_stream_to_table(
+        quality_repetition_from(docs_stream(spark, sf_dir)), "append")
 
 
 @query("stream_asset_manifest", oracle=ORACLES["asset_manifest"])
@@ -1284,7 +1276,7 @@ def stream_asset_manifest(spark: SparkSession, sf_dir: str) -> DataFrame:
     manifest = asset_manifest_from(
         asset_manifest_media_from(docs_stream(spark, sf_dir)),
         load_table(spark, sf_dir, "embeddings"))
-    return spark.table(run_stream_to_table(manifest, "append"))
+    return run_stream_to_table(manifest, "append")
 
 
 def _sql_lm_counts() -> str:
@@ -1313,14 +1305,9 @@ def lm_bigram_counts_drain(spark: SparkSession, stream_docs: DataFrame,
          .groupBy("bg").agg(F.count("*").cast("bigint").alias("cnt"))
          .write.mode("append").parquet(out))
 
-    before = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
-    try:
-        q = (stream_docs.writeStream.foreachBatch(_counts)
-             .trigger(availableNow=True).start())
-        q.awaitTermination()
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", before)
+    q = (stream_docs.writeStream.foreachBatch(_counts)
+         .trigger(availableNow=True).start())
+    q.awaitTermination()
     return spark.read.parquet(out)
 
 
@@ -1371,7 +1358,7 @@ def stream_eval_grams(spark: SparkSession, sf_dir: str) -> DataFrame:
              .select("eval_id",
                      F.explode(F.array_distinct(_ngram_arr(CONTAM_NGRAM)))
                      .alias("gram")))
-    return spark.table(run_stream_to_table(grams, "append"))
+    return run_stream_to_table(grams, "append")
 
 
 @query("stream_lm_bigram_counts", oracle=_sql_lm_counts())
@@ -1398,11 +1385,11 @@ def stream_lm_bigram_counts(spark: SparkSession,
     own bigrams; the partial table grows ~|new vocabulary| per batch
     (Heaps-sublinear) and compacts by re-summing; no corpus rescan
     ever."""
-    from mit_mapreduce_spark.streaming import _SCRATCH, docs_stream
+    from mit_mapreduce_spark.streaming import _SCRATCH, docs_stream, sf_key
 
     tune(spark)
-    tag = os.path.basename(sf_dir.rstrip("/"))
     out = os.path.join(
-        _SCRATCH, f"lmcnt_{tag}_{spark.sparkContext.applicationId}")
+        _SCRATCH,
+        f"lmcnt_{sf_key(sf_dir)}_{spark.sparkContext.applicationId}")
     parts = lm_bigram_counts_drain(spark, docs_stream(spark, sf_dir), out)
     return parts.groupBy("bg").agg(F.sum("cnt").cast("bigint").alias("df"))

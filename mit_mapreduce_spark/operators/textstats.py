@@ -1979,21 +1979,18 @@ def hybrid_rrf_retrieval(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import Window as W
 
     # r14 (guide §1.2): the two legs' construction (analysis +
-    # lazy-checkpoint planning) overlaps on two threads — same
+    # lazy-checkpoint planning) overlaps as two parallel legs — same
     # frames, same single fused action (see retrieval_pruning_recall).
-    from concurrent.futures import ThreadPoolExecutor
+    from mit_mapreduce_spark.session import parallel_legs
 
     tf = _doc_tf(spark, sf_dir)
     rrf = lambda rnk: F.expr(f"{RRF_GRID} div ({RRF_K} + {rnk})")  # noqa: E731
-    with ThreadPoolExecutor(max_workers=2) as pool:
-        bm_f = pool.submit(
-            lambda: _bm25_topk_impl(spark, sf_dir, 0, tf=tf)
-            .select("qid", "did", rrf("rnk").alias("rrf")))
-        kn_f = pool.submit(
-            lambda: _hashed_knn_impl(spark, sf_dir, tf=tf)
-            .select("qid", F.col("cid").alias("did"),
-                    rrf("rnk").alias("rrf")))
-        bm, kn = bm_f.result(), kn_f.result()
+    bm, kn = parallel_legs(
+        lambda: _bm25_topk_impl(spark, sf_dir, 0, tf=tf)
+        .select("qid", "did", rrf("rnk").alias("rrf")),
+        lambda: _hashed_knn_impl(spark, sf_dir, tf=tf)
+        .select("qid", F.col("cid").alias("did"),
+                rrf("rnk").alias("rrf")))
     fused = (
         bm.unionByName(kn)
         .groupBy("qid", "did")

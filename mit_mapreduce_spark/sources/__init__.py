@@ -152,8 +152,7 @@ def read_csv(spark: SparkSession, path: str, sep: str = ",",
 
 
 def write_parquet_partitioned(df: DataFrame, out_dir: str,
-                              partition_cols: list[str],
-                              overwrite_dynamic: bool = True) -> None:
+                              partition_cols: list[str]) -> None:
     """Hive-style partitioned parquet sink (``out/col=value/...``).
 
     Partition directories are what turn a 100 TB table into prunable
@@ -161,17 +160,12 @@ def write_parquet_partitioned(df: DataFrame, out_dir: str,
     matching directories (partition pruning, asserted in
     tests/test_partition_pruning.py). Dynamic overwrite mode replaces
     ONLY the partitions present in ``df`` — the idempotent daily-ingest
-    pattern — instead of truncating the whole table."""
-    spark = df.sparkSession
-    before = spark.conf.get("spark.sql.sources.partitionOverwriteMode")
-    if overwrite_dynamic:
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    try:
-        (df.write.mode("overwrite")
-         .partitionBy(*partition_cols)
-         .parquet(out_dir))
-    finally:
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", before)
+    pattern — instead of truncating the whole table. The mode is a
+    writer option, so the session's own setting is never touched."""
+    (df.write.mode("overwrite")
+     .option("partitionOverwriteMode", "dynamic")
+     .partitionBy(*partition_cols)
+     .parquet(out_dir))
 
 
 def write_orc(df: DataFrame, out_dir: str) -> None:

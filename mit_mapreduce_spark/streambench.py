@@ -32,8 +32,10 @@ import time
 from pyspark.sql import functions as F
 
 from mit_mapreduce_spark.functions.numeric import dsum
-from mit_mapreduce_spark.session import get_spark, tune
-from mit_mapreduce_spark.streaming import _SCRATCH, STATE_PARTITIONS
+from mit_mapreduce_spark.session import (
+    get_spark, parallel_legs, stream_session, tune,
+)
+from mit_mapreduce_spark.streaming import _SCRATCH, STATE_PARTITIONS, sf_key
 
 N_SPLITS = 12
 SESSION_GAP = "4 hours"
@@ -42,8 +44,7 @@ SESSION_GAP = "4 hours"
 def _staged_table_splits(spark, sf_dir: str, table: str) -> str:
     """<table>.parquet re-staged as N_SPLITS files (one per trigger);
     one staging helper for every leg (events; documents since r9)."""
-    tag = os.path.basename(sf_dir.rstrip("/"))
-    stage = os.path.join(_SCRATCH, f"streambench_{table}_{tag}")
+    stage = os.path.join(_SCRATCH, f"streambench_{table}_{sf_key(sf_dir)}")
     marker = os.path.join(stage, "_STAGED")
     src = os.path.join(sf_dir, f"{table}.parquet")
     if (not os.path.exists(marker)
@@ -56,19 +57,16 @@ def _staged_table_splits(spark, sf_dir: str, table: str) -> str:
 
 
 def _drive(stream_df, mode: str, name: str) -> dict:
-    """availableNow drain with per-file triggers; returns the figures."""
+    """availableNow drain with per-file triggers; returns the figures.
+    The state stores take their count from the session the stream was
+    built in (``ss``, sized STATE_PARTITIONS, in ``main``)."""
     spark = stream_df.sparkSession
-    before = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", str(STATE_PARTITIONS))
     t0 = time.monotonic()
-    try:
-        q = (stream_df.writeStream.format("memory").queryName(name)
-             .outputMode(mode).trigger(availableNow=True).start())
-        q.awaitTermination()
-        wall = time.monotonic() - t0
-        progress = [json.loads(p.json) for p in q.recentProgress]
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", before)
+    q = (stream_df.writeStream.format("memory").queryName(name)
+         .outputMode(mode).trigger(availableNow=True).start())
+    q.awaitTermination()
+    wall = time.monotonic() - t0
+    progress = [json.loads(p.json) for p in q.recentProgress]
     data = [p for p in progress if p.get("numInputRows", 0) > 0]
     rows = sum(p["numInputRows"] for p in data)
     return {
@@ -85,13 +83,16 @@ def main(sf_dir: str) -> dict:
     spark = get_spark("streambench")
     spark.sparkContext.setLogLevel("ERROR")
     tune(spark)
+    # the state-sized streams below are built in this child (_drive);
+    # the admission leg builds its own 2-partition one
+    ss = stream_session(spark, STATE_PARTITIONS)
     stage = _staged_table_splits(spark, sf_dir, "events")
     from mit_mapreduce_spark.catalog import _normalize_event_ts
 
     schema = spark.read.parquet(stage).schema
 
     def source():
-        raw = (spark.readStream.schema(schema)
+        raw = (ss.readStream.schema(schema)
                .option("maxFilesPerTrigger", 1).parquet(stage))
         return _normalize_event_ts(raw)
 
@@ -151,7 +152,7 @@ def main(sf_dir: str) -> dict:
 
     dstage = _staged_table_splits(spark, sf_dir, "documents")
     dschema = spark.read.parquet(dstage).schema
-    doc_source = (spark.readStream.schema(dschema)
+    doc_source = (ss.readStream.schema(dschema)
                   .option("maxFilesPerTrigger", 1).parquet(dstage))
     mm = quarantine_report_agg(quarantine_probes(doc_source))
     results["multimodal_ingest"] = {
@@ -171,7 +172,7 @@ def main(sf_dir: str) -> dict:
     )
     from mit_mapreduce_spark.operators.multimodal import _PHASH_SCHEMA
 
-    fp_source = (spark.readStream.schema(dschema)
+    fp_source = (ss.readStream.schema(dschema)
                  .option("maxFilesPerTrigger", 1).parquet(dstage))
     sigs = (_fingerprint_audio_assets_from(fp_source)
             .mapInPandas(_afp_batch, _PHASH_SCHEMA))
@@ -215,7 +216,7 @@ def main(sf_dir: str) -> dict:
             .mapInPandas(kernel, _PHASH_SCHEMA)
             .localCheckpoint(eager=False)
         )
-        al_source = (spark.readStream.schema(dschema)
+        al_source = (ss.readStream.schema(dschema)
                      .option("maxFilesPerTrigger", 1).parquet(dstage))
         inc_sigs = (fixture_from(al_source.where(inc_pred))
                     .mapInPandas(kernel, _PHASH_SCHEMA))
@@ -243,7 +244,7 @@ def main(sf_dir: str) -> dict:
 
     estage = _staged_table_splits(spark, sf_dir, "embeddings")
     eschema = spark.read.parquet(estage).schema
-    e_source = (spark.readStream.schema(eschema)
+    e_source = (ss.readStream.schema(eschema)
                 .option("maxFilesPerTrigger", 1).parquet(estage))
     results["embedding_index"] = _drive(
         embedding_index_frame(e_source), "append", "sb_embed_idx")
@@ -254,7 +255,7 @@ def main(sf_dir: str) -> dict:
     # through the full build -> decode -> screen path.
     from mit_mapreduce_spark.operators.mmquality import _audio_screen_from
 
-    q_source = (spark.readStream.schema(dschema)
+    q_source = (ss.readStream.schema(dschema)
                 .option("maxFilesPerTrigger", 1).parquet(dstage))
     results["audio_quality"] = _drive(
         _audio_screen_from(q_source), "append", "sb_audio_q")
@@ -267,8 +268,6 @@ def main(sf_dir: str) -> dict:
     # window; NOTE numInputRows counts every staged manifest doc read
     # (the shard filter runs after the file source), so the record
     # carries shard_docs like the alert legs.
-    from concurrent.futures import ThreadPoolExecutor
-
     from mit_mapreduce_spark.operators.mmdedup import (
         admission_batch_frame, admission_static_ctx, inc_shard_col,
     )
@@ -276,34 +275,29 @@ def main(sf_dir: str) -> dict:
     from pyspark.sql import DataFrame as _DF
 
     ctx = admission_static_ctx(spark, sf_dir)
-    with ThreadPoolExecutor(max_workers=10) as pool:
-        frames = [v for v in ctx.values() if isinstance(v, _DF)]
-        frames += [m[-1] for m in ctx["media"]]
-        list(pool.map(lambda f: f.count(), frames))
-    a_source = (spark.readStream.schema(dschema)
+    frames = [v for v in ctx.values() if isinstance(v, _DF)]
+    frames += [m[-1] for m in ctx["media"]]
+    parallel_legs(*(f.count for f in frames))
+    # match the registered twin's per-batch sizing (r14 surgery): the
+    # batches run in clones of a 2-partition child session
+    a_source = (stream_session(spark, 2).readStream.schema(dschema)
                 .option("maxFilesPerTrigger", 1).parquet(dstage)
                 .where(inc_shard_col("doc_id")))
     out = os.path.join(_SCRATCH, "sb_admit")
     shutil.rmtree(out, ignore_errors=True)
 
     def _admit(batch_df, batch_id):
-        admission_batch_frame(spark, sf_dir, batch_df, ctx) \
-            .write.mode("append").parquet(out)
+        admission_batch_frame(batch_df.sparkSession, sf_dir, batch_df,
+                              ctx).write.mode("append").parquet(out)
 
     shard_docs = spark.read.parquet(dstage) \
         .where(inc_shard_col("doc_id")).count()
-    before = spark.conf.get("spark.sql.shuffle.partitions")
-    # match the registered twin's per-batch sizing (r14 surgery)
-    spark.conf.set("spark.sql.shuffle.partitions", "2")
     t0 = time.monotonic()
-    try:
-        q = (a_source.writeStream.foreachBatch(_admit)
-             .trigger(availableNow=True).start())
-        q.awaitTermination()
-        wall = time.monotonic() - t0
-        progress = [json.loads(p.json) for p in q.recentProgress]
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", before)
+    q = (a_source.writeStream.foreachBatch(_admit)
+         .trigger(availableNow=True).start())
+    q.awaitTermination()
+    wall = time.monotonic() - t0
+    progress = [json.loads(p.json) for p in q.recentProgress]
     data = [p for p in progress if p.get("numInputRows", 0) > 0]
     results["ingest_admission"] = {
         "rows": sum(p["numInputRows"] for p in data),

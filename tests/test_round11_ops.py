@@ -290,8 +290,7 @@ def test_alert_dedup_state_ttl_variant(spark, sf_dir):
         .select("asset_id", "matched_id", "hamming")
     )
     drained = {(r.asset_id, r.matched_id, r.hamming)
-               for r in spark.table(run_stream_to_table(ttl, "append"))
-               .collect()}
+               for r in run_stream_to_table(ttl, "append").collect()}
     registered = {(r.asset_id, r.matched_id, r.hamming)
                   for r in operators.QUERIES["stream_fingerprint_alerts"](
                       spark, sf_dir).collect()}
@@ -415,7 +414,7 @@ def test_alert_body_is_modality_generic(spark, sf_dir):
         inc_stream, idx_sigs, PH_BANDS, PH_BAND_BITS, PH_HAM_MAX
     ).dropDuplicates(["asset_id", "matched_id"])
     drained = {tuple(r) for r in
-               spark.table(run_stream_to_table(alerts, "append")).collect()}
+               run_stream_to_table(alerts, "append").collect()}
 
     inc_batch = (
         _phash_image_assets_from(

@@ -243,9 +243,9 @@ def test_stream_quality_modality_generic_video_leg(spark, sf_dir):
     tune(spark)
     drained = {(r.asset_id, r.n_frames, r.n_black, r.n_frozen_pairs,
                 r.y_total, r.is_black, r.is_static, r.passes)
-               for r in spark.table(run_stream_to_table(
+               for r in run_stream_to_table(
                    _video_screen_from(docs_stream(spark, sf_dir)),
-                   "append")).collect()}
+                   "append").collect()}
     batch = {(r.asset_id, r.n_frames, r.n_black, r.n_frozen_pairs,
               r.y_total, r.is_black, r.is_static, r.passes)
              for r in operators.QUERIES["quality_video_screen"](

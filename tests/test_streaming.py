@@ -303,17 +303,28 @@ def test_stream_foreach_batch_merge_upsert(spark, sf_dir, tmp_path):
     assert got == want
 
 
-def test_stream_tumbling_on_rocksdb_state_store(spark, sf_dir):
+def test_stream_tumbling_on_rocksdb_state_store(spark, sf_dir,
+                                                monkeypatch):
     """The production state-store: RocksDB provider (bundled in Spark
     4) instead of the default in-memory HDFS-backed store — at 100 TB
     streaming state must spill off-heap and checkpoint incrementally.
     Same tumbling aggregation, same exact batch parity, state held in
-    RocksDB."""
+    RocksDB: the drain's own progress reports RocksDB store metrics."""
+    from pyspark.sql.streaming import DataStreamWriter
+
     from mit_mapreduce_spark.operators.events import tumbling_hourly
     from mit_mapreduce_spark.operators.streaming_queries import (
         stream_tumbling_hourly,
     )
 
+    started = []
+    start = DataStreamWriter.start
+
+    def recording_start(self, *args, **kwargs):
+        started.append(start(self, *args, **kwargs))
+        return started[-1]
+
+    monkeypatch.setattr(DataStreamWriter, "start", recording_start)
     provider = ("org.apache.spark.sql.execution.streaming.state."
                 "RocksDBStateStoreProvider")
     old = spark.conf.get("spark.sql.streaming.stateStore.providerClass")
@@ -328,6 +339,10 @@ def test_stream_tumbling_on_rocksdb_state_store(spark, sf_dir):
     want = sorted(map(tuple, tumbling_hourly(spark, sf_dir)
                       .select(*cols).collect()))
     assert got == want
+    [q] = started
+    metrics = [m for op in q.lastProgress["stateOperators"]
+               for m in op["customMetrics"]]
+    assert any(m.startswith("rocksdb") for m in metrics), metrics
 
 
 def test_python_streaming_datasource_counter(spark, tmp_path):
