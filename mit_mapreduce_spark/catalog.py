@@ -28,13 +28,15 @@ DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 # schema from the file footer on EVERY call — measured 85 ms/call vs
 # 14 ms with an explicit schema, x385 load_table calls per full bench
 # pass = ~27 s of pure driver-side overhead. The schema is FILE
-# METADATA, not a query result: it is keyed on (path, mtime, size) so
-# any rewritten fixture re-infers, and the scan itself still reads
-# the parquet fresh on every query — nothing about query evaluation
-# is cached. Keyed per-file only (not per-session): the inferred
-# schema depends on session confs that ``tune`` pins identically on
-# every session this repo touches (nanosAsLong, inferTimestampNTZ).
-_SCHEMA_CACHE: dict[tuple, object] = {}
+# METADATA, not a query result: one entry per path, stamped with the
+# file's (mtime, size) so a rewritten fixture re-infers and REPLACES
+# its entry (the cache holds at most one schema per file ever read),
+# and the scan itself still reads the parquet fresh on every query —
+# nothing about query evaluation is cached. Keyed per-file only (not
+# per-session): the inferred schema depends on session confs that
+# ``tune`` pins identically on every session this repo touches
+# (nanosAsLong, inferTimestampNTZ).
+_SCHEMA_CACHE: dict[str, tuple[int, int, object]] = {}
 
 
 def _cached_schema(spark: SparkSession, path: str):
@@ -47,11 +49,12 @@ def _cached_schema(spark: SparkSession, path: str):
     if not stat.S_ISREG(st.st_mode):
         raise ValueError(
             f"_cached_schema needs a single parquet file, not {path!r}")
-    key = (path, st.st_mtime_ns, st.st_size)
-    schema = _SCHEMA_CACHE.get(key)
-    if schema is None:
-        schema = spark.read.parquet(path).schema
-        _SCHEMA_CACHE[key] = schema
+    stamp = (st.st_mtime_ns, st.st_size)
+    hit = _SCHEMA_CACHE.get(path)
+    if hit is not None and hit[:2] == stamp:
+        return hit[2]
+    schema = spark.read.parquet(path).schema
+    _SCHEMA_CACHE[path] = (*stamp, schema)
     return schema
 
 

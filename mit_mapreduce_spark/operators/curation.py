@@ -1289,8 +1289,8 @@ RAG_POSTING_TOP = 256 # per-dim impact-truncation depth for the PRUNED
                       # (bulk-common-vocabulary neighbors — the
                       # pruning-adversarial case), so the registered
                       # rag_chunk_retrieval serves the EXACT index and
-                      # this constant parameterizes the pruned twin
-                      # that retrieval_pruning_recall keeps honest.
+                      # this depth sets the pruned index that
+                      # retrieval_pruning_recall's audit pass scores.
 
 def _rag_bucket(c):
     """Feature-hash dimension for a token column: pmod(hash60, RAG_DIM).
@@ -1434,12 +1434,12 @@ def rag_chunk_retrieval(spark: SparkSession, sf_dir: str) -> DataFrame:
     exact collapses (3/150 at sf0.1) because top neighbors here share
     bulk common vocabulary — cosine's l2 normalization rewards exactly
     the mass truncation drops, and signed-hash variants are worse
-    (truncation becomes non-monotone). The pruned twin stays available
-    as `_rag_topk_impl(spark, sf_dir, RAG_POSTING_TOP,
-    RAG_Q_TOP_DIMS)`, kept honest by the registered recall harness.
-    Zero-norm chunks/queries are excluded on both engines (the
-    cosine-tier contract)."""
-    return _rag_topk_impl(spark, sf_dir, 0, RAG_Q_TOP_DIMS)
+    (truncation becomes non-monotone). The pruned index is scored by
+    the same pass in audit mode (`_rag_ranked(…, audit=True)`) and
+    kept honest by the registered recall harness. Zero-norm
+    chunks/queries are excluded on both engines (the cosine-tier
+    contract)."""
+    return _rag_ranked(spark, sf_dir, audit=False)
 
 
 def _rag_corpus(spark: SparkSession, sf_dir: str
@@ -1447,12 +1447,9 @@ def _rag_corpus(spark: SparkSession, sf_dir: str
     """Staged RAG corpus index — (nch, cidf, csparse, cnorm): the
     chunk+tokenize+idf-weight+posting-aggregate pipeline that every
     rag run needs before any pruning is applied. cidf/csparse are
-    localCheckpoint'ed, so an audit op running the exact AND pruned
-    variants (`retrieval_pruning_recall`, VERDICT r7 #3) builds the
-    corpus index ONCE and both variants (and their norms) read the
-    checkpointed postings."""
-    from mit_mapreduce_spark.operators.dedup import hash60
-
+    localCheckpoint'ed because each has two readers: cidf weights both
+    the chunk postings and the query side, and csparse feeds both the
+    chunk norms and the dim join."""
     ch = chunk_documents(spark, sf_dir)
     bucket = _rag_bucket
     ctoks = (
@@ -1488,118 +1485,27 @@ def _rag_corpus(spark: SparkSession, sf_dir: str
     return nch, cidf, csparse, cnorm
 
 
-def _rag_topk_impl(spark: SparkSession, sf_dir: str, posting_top: int,
-                   q_top_dims: int,
-                   corpus: tuple[DataFrame, DataFrame, DataFrame,
-                                 DataFrame] | None = None) -> DataFrame:
-    """rag_chunk_retrieval body with the pruning depths as parameters;
-    0 disables that pruning (the exact index, ground truth for
-    retrieval_pruning_recall). ``corpus``: optional staged
-    ``_rag_corpus`` tuple so audit ops build the chunk index once."""
+def _rag_ranked(spark: SparkSession, sf_dir: str,
+                audit: bool) -> DataFrame:
+    """The RAG leg's one scoring pass. Serving (``audit=False``) keeps
+    each query's top-RAG_Q_TOP_DIMS dims (the pruned vector IS the
+    query, so its norm sums only those dims) over the exact posting
+    lists, and returns rag_chunk_retrieval's rows. Audit keeps every
+    query dim and flags both sides with their impact verdicts — query
+    dims by the top-RAG_Q_TOP_DIMS window, chunk postings by the
+    per-dim top-RAG_POSTING_TOP window (|val| desc, id; Anh & Moffat
+    impact ordering) — so one dim join yields the exact index's dot
+    (all dims) and the pruned index's dot (doubly kept matches) and
+    ``_top_k`` ranks both (r15: one 12.7 M-row posting join at sf0.1
+    instead of one per variant). Chunk norms are exact in both
+    indexes; the pruned query norm sums only the kept dims."""
     from pyspark.sql import Window as W
 
-    from mit_mapreduce_spark.operators.dedup import hash60
+    from mit_mapreduce_spark.operators.textstats import _sparse_dot, _top_k
 
-    bucket = _rag_bucket
-    nch, cidf, csparse, cnorm = (corpus if corpus is not None
-                                 else _rag_corpus(spark, sf_dir))
+    nch, cidf, csparse, cnorm = _rag_corpus(spark, sf_dir)
     oov_idf = (F.round(F.log(F.col("n_chunks").cast("double") + 1.0)
                        * RAG_IDF_GRID).cast("bigint") + 1)
-    # impact-sorted posting truncation (see RAG_POSTING_TOP): norms are
-    # exact (computed above, pre-truncation); the dim join sees at most
-    # RAG_POSTING_TOP postings per dim, so candidate volume is bounded
-    # by |Q| x RAG_Q_TOP_DIMS x RAG_POSTING_TOP at any corpus size
-    if posting_top:
-        wc = W.partitionBy("dim").orderBy(F.abs(F.col("val")).desc(),
-                                          "cdoc", "chunk_id")
-        csparse = (csparse.where(F.col("val") != 0)
-                   .withColumn("_r", F.row_number().over(wc))
-                   .where(F.col("_r") <= posting_top).drop("_r"))
-    docs = load_table(spark, sf_dir, "documents")
-    qids = (docs.where(F.col("doc_id") % RAG_QUERY_MOD == 0)
-            .orderBy("doc_id").limit(RAG_N_QUERIES).select("doc_id"))
-    qsparse = (
-        docs.join(F.broadcast(qids), "doc_id")
-        .select(F.col("doc_id").alias("qid"),
-                F.explode(_ws_tokens()).alias("w"))
-        .join(F.broadcast(cidf), "w", "left")
-        .crossJoin(F.broadcast(nch))
-        .select("qid", bucket(F.col("w")).alias("dim"),
-                F.coalesce(F.col("idf_i"), oov_idf).alias("s"))
-        .groupBy("qid", "dim").agg(F.sum("s").cast("bigint").alias("val"))
-        # no checkpoint: the query side is ≤ RAG_N_QUERIES docs, cheap to
-        # recompute, and keeping its lineage visible lets the plan test
-        # assert the GlobalLimit under the broadcast
-    )
-    if q_top_dims:
-        wq = W.partitionBy("qid").orderBy(F.abs(F.col("val")).desc(),
-                                          "dim")
-        qsparse = (qsparse.where(F.col("val") != 0)
-                   .withColumn("_r", F.row_number().over(wq))
-                   .where(F.col("_r") <= q_top_dims).drop("_r"))
-    qnorm = (qsparse.groupBy("qid")
-             .agg(F.sum(F.col("val") * F.col("val")).cast("bigint")
-                  .alias("qn")))
-    dots = (
-        csparse.join(F.broadcast(qsparse.withColumnRenamed("val", "qval")),
-                     "dim")
-        .where(F.col("cdoc") != F.col("qid"))
-        .groupBy("qid", "cdoc", "chunk_id")
-        .agg(F.sum(F.col("val") * F.col("qval")).cast("bigint").alias("dot"))
-    )
-    scored = (
-        dots.join(F.broadcast(qnorm.where(F.col("qn") > 0)), "qid")
-        .join(cnorm.where(F.col("cn") > 0), ["cdoc", "chunk_id"])
-        .select("qid", "cdoc", "chunk_id", "dot",
-                (F.col("dot").cast("double")
-                 / (F.sqrt(F.col("qn").cast("double"))
-                    * F.sqrt(F.col("cn").cast("double")))).alias("cosine"))
-    )
-    w = W.partitionBy("qid").orderBy(F.col("cosine").desc(), "cdoc",
-                                     "chunk_id")
-    return (
-        scored.select("qid", "cdoc", "chunk_id", "dot", "cosine",
-                      F.row_number().over(w).cast("int").alias("rnk"))
-        .where(F.col("rnk") <= RAG_TOP_K)
-    )
-
-
-def _rag_topk_pair(spark: SparkSession, sf_dir: str, posting_top: int,
-                   q_top_dims: int,
-                   corpus: tuple[DataFrame, DataFrame, DataFrame,
-                                 DataFrame]) -> DataFrame:
-    """Exact AND pruned top-k ranks from ONE dim-join pass (r15, guide
-    §2.3/§1.2 — the bm25 pair treatment for the dense leg):
-    retrieval_pruning_recall previously ran `_rag_topk_impl` twice,
-    paying the 12.7 M-row posting equi-join and (qid, cdoc, chunk_id)
-    aggregation once per variant. Impact-truncation verdicts are pure
-    functions of the posting/query tables (the identical row_number
-    windows the pruned variant runs), so one join computes both dot
-    products: dot = Σ val·qval over all matched postings (exact,
-    bit-identical) and dot_p = Σ over matches flagged on BOTH sides,
-    with has_p marking pairs that matched ≥1 doubly-flagged posting —
-    exactly the pruned variant's candidate set and integer sum. Chunk
-    norms are exact (pre-truncation) in both variants by construction;
-    the pruned QUERY norm sums only the kept dims, exactly as
-    `_rag_topk_impl` computes qnorm after truncation. Returns one row
-    per exact candidate with rnk_e / rnk_p / _in_p (see
-    _bm25_topk_pair — pruned candidates are a subset of exact
-    candidates, so overlap stats are one aggregation, no self-join)."""
-    from pyspark.sql import Window as W
-
-    nch, cidf, csparse, cnorm = corpus
-    oov_idf = (F.round(F.log(F.col("n_chunks").cast("double") + 1.0)
-                       * RAG_IDF_GRID).cast("bigint") + 1)
-    wc = W.partitionBy("dim").orderBy(F.abs(F.col("val")).desc(),
-                                      "cdoc", "chunk_id")
-    # rank over the val != 0 rows only, exactly as the pruned variant
-    # filters before ranking (val is a sum of positive idf integers so
-    # the filter is vacuous on this data, but the flag stays faithful)
-    cs = (csparse.withColumn(
-        "_cr", F.when(F.col("val") != 0, F.row_number().over(wc)))
-        .select("cdoc", "chunk_id", "dim", "val",
-                (F.col("_cr").isNotNull()
-                 & (F.col("_cr") <= posting_top)).alias("_cin")))
     docs = load_table(spark, sf_dir, "documents")
     qids = (docs.where(F.col("doc_id") % RAG_QUERY_MOD == 0)
             .orderBy("doc_id").limit(RAG_N_QUERIES).select("doc_id"))
@@ -1611,64 +1517,52 @@ def _rag_topk_pair(spark: SparkSession, sf_dir: str, posting_top: int,
         .crossJoin(F.broadcast(nch))
         .select("qid", _rag_bucket(F.col("w")).alias("dim"),
                 F.coalesce(F.col("idf_i"), oov_idf).alias("s"))
-        .groupBy("qid", "dim").agg(F.sum("s").cast("bigint").alias("val"))
+        .groupBy("qid", "dim").agg(F.sum("s").cast("bigint").alias("qval"))
+        # no checkpoint: the query side is ≤ RAG_N_QUERIES docs, cheap to
+        # recompute, and keeping its lineage visible lets the plan test
+        # assert the GlobalLimit under the broadcast
     )
-    wq = W.partitionBy("qid").orderBy(F.abs(F.col("val")).desc(), "dim")
-    qs = (qsparse.withColumn(
-        "_qr", F.when(F.col("val") != 0, F.row_number().over(wq)))
-        .select("qid", "dim", F.col("val").alias("qval"),
-                (F.col("_qr").isNotNull()
-                 & (F.col("_qr") <= q_top_dims)).alias("_qin")))
-    # the pruned vector IS the query in the pruned variant (SPLADE
-    # discipline): its query norm sums ONLY the kept dims, exactly as
-    # _rag_topk_impl computes qnorm after truncation; the exact
-    # variant's norm sums all dims
-    qnorm = (qs.groupBy("qid")
-             .agg(F.sum(F.col("qval") * F.col("qval")).cast("bigint")
-                  .alias("qn"),
-                  F.sum(F.when(F.col("_qin"),
-                               F.col("qval") * F.col("qval")))
-                  .cast("bigint").alias("qn_p")))
-    dots = (
-        cs.join(F.broadcast(qs), "dim")
-        .where(F.col("cdoc") != F.col("qid"))
-        .groupBy("qid", "cdoc", "chunk_id")
-        .agg(F.sum(F.col("val") * F.col("qval")).cast("bigint")
-             .alias("dot"),
-             F.sum(F.when(F.col("_cin") & F.col("_qin"),
-                          F.col("val") * F.col("qval")))
-             .cast("bigint").alias("_dot_p"),
-             F.max(F.col("_cin") & F.col("_qin")).alias("_has_p"))
-    )
+    # impact rank over the val != 0 rows (they sort last on |val| desc,
+    # so ranking every row gives the nonzero rows the same ranks); val
+    # is a sum of positive idf integers, so the filter is vacuous on
+    # this data, but the verdict stays faithful to the pruned oracle
+    wq = W.partitionBy("qid").orderBy(F.abs(F.col("qval")).desc(), "dim")
+    qs = qsparse.withColumn(
+        "_qkeep", (F.col("qval") != 0)
+        & (F.row_number().over(wq) <= RAG_Q_TOP_DIMS))
+    sq = F.col("qval") * F.col("qval")
+    if audit:
+        wc = W.partitionBy("dim").orderBy(F.abs(F.col("val")).desc(),
+                                          "cdoc", "chunk_id")
+        csparse = csparse.withColumn(
+            "_keep", (F.col("val") != 0)
+            & (F.row_number().over(wc) <= RAG_POSTING_TOP))
+        qnorm = qs.groupBy("qid").agg(
+            F.sum(sq).cast("bigint").alias("qn"),
+            F.sum(F.when(F.col("_qkeep"), sq)).cast("bigint").alias("qn_p"))
+    else:
+        qs = qs.where(F.col("_qkeep")).drop("_qkeep")
+        qnorm = qs.groupBy("qid").agg(F.sum(sq).cast("bigint").alias("qn"))
+    dots = _sparse_dot(csparse, qs, "dim", ["cdoc", "chunk_id"],
+                       F.col("val") * F.col("qval"), "dot")
+
+    def cosine(dot: str, qn: str):
+        return (F.col(dot).cast("double")
+                / (F.sqrt(F.col(qn).cast("double"))
+                   * F.sqrt(F.col("cn").cast("double"))))
+
+    cols = ["qid", "cdoc", "chunk_id", "dot",
+            cosine("dot", "qn").alias("cosine")]
+    if audit:
+        # a _has_p pair implies its query kept >= 1 dim, so qn_p > 0
+        # wherever cosine_p is consumed
+        cols += ["_has_p", cosine("dot_p", "qn_p").alias("cosine_p")]
     scored = (
         dots.join(F.broadcast(qnorm.where(F.col("qn") > 0)), "qid")
         .join(cnorm.where(F.col("cn") > 0), ["cdoc", "chunk_id"])
-        .select("qid", "cdoc", "chunk_id", "dot", "_dot_p", "_has_p",
-                (F.col("dot").cast("double")
-                 / (F.sqrt(F.col("qn").cast("double"))
-                    * F.sqrt(F.col("cn").cast("double")))).alias("cosine"),
-                # a has_p pair implies its query kept >= 1 dim, so
-                # qn_p > 0 wherever _cosine_p is consumed
-                (F.col("_dot_p").cast("double")
-                 / (F.sqrt(F.col("qn_p").cast("double"))
-                    * F.sqrt(F.col("cn").cast("double"))))
-                .alias("_cosine_p"))
-        .localCheckpoint(eager=False)
+        .select(*cols)
     )
-    we = W.partitionBy("qid").orderBy(F.col("cosine").desc(), "cdoc",
-                                      "chunk_id")
-    wpn = W.partitionBy("qid").orderBy(F.col("_has_p").desc(),
-                                       F.col("_cosine_p").desc(), "cdoc",
-                                       "chunk_id")
-    # both ranks ride ONE qid exchange on ONE frame (see
-    # _bm25_topk_pair) — the caller's overlap stats then need no
-    # self-join and no checkpoint
-    return scored.select(
-        "qid", "cdoc", "chunk_id",
-        F.row_number().over(we).cast("int").alias("rnk_e"),
-        (F.col("_has_p")
-         & (F.row_number().over(wpn) <= RAG_TOP_K)).alias("_in_p"),
-        F.row_number().over(wpn).cast("int").alias("rnk_p"))
+    return _top_k(scored, "cosine", ["cdoc", "chunk_id"], RAG_TOP_K, audit)
 
 
 # --- pruning-quality certification: pruned vs exact retrieval ---------------
@@ -1759,17 +1653,17 @@ def retrieval_pruning_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     index finds the exact top-k; NDCG says whether it keeps them in
     the right ORDER.
 
-    Cost shape: runs each leg twice (exact + pruned), but the
-    expensive corpus builds are STAGED (VERDICT r7 #3): the bm25 pair
-    shares one checkpointed (doc, term, tf) frame (`_doc_tf`) and the
-    rag pair shares one checkpointed chunk-posting index
-    (`_rag_corpus`), so the corpus is tokenized/indexed once per leg,
-    not once per variant — only the (cheap) pruning window and scoring
-    joins differ between exact and pruned. Priced for audit runs, not
-    the serving path. At 100 TB both legs ride the constant query
-    budget, so the eval stays a bounded fraction of a corpus scan."""
+    Cost shape: one scoring pass per leg (`_bm25_ranked` /
+    `_rag_ranked` in audit mode): each posting carries its pruning
+    verdict as a flag, so one candidate join and one (query, doc)
+    aggregation yield both the exact and the pruned scores, and both
+    rankings ride one qid exchange. Only the impact windows that set
+    the flags are extra over the serving path. At 100 TB both legs
+    ride the constant query budget, so the eval stays a bounded
+    fraction of a corpus scan."""
     from mit_mapreduce_spark.operators.textstats import (
-        BM25_POSTING_TOP, BM25_TOP_K, _doc_tf)
+        BM25_TOP_K, _bm25_ranked, _doc_tf)
+    from mit_mapreduce_spark.session import parallel_legs
 
     w = _ndcg_weights(max(BM25_TOP_K, RAG_TOP_K))
     cum = [sum(w[:i + 1]) for i in range(len(w))]
@@ -1802,31 +1696,14 @@ def retrieval_pruning_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
                         / F.col("idcg_micro").cast("double"))
         )
 
-    # r14 (guide §1.2): the two legs' CONSTRUCTION (each builds two
-    # retrieval variants with lazy-checkpointed staging — Catalyst
-    # analysis + physical planning + codegen compilation) ran
-    # serially on one driver core; build them as two parallel legs
-    # like the admission's. Same frames, same single final action.
-    # r15 (guide §2.3/§1.2): each leg's exact+pruned variants now
-    # come from ONE candidate pass (_bm25_topk_pair/_rag_topk_pair —
-    # the truncation verdict rides the posting rows as a flag and the
-    # aggregation sums both ways), halving the two expensive
-    # candidate joins and (q, d) aggregations this audit paid per leg.
-    from mit_mapreduce_spark.operators.textstats import _bm25_topk_pair
-    from mit_mapreduce_spark.session import parallel_legs
-
-    def _bm_leg():
-        tf = _doc_tf(spark, sf_dir)
-        return overlap(
-            _bm25_topk_pair(spark, sf_dir, BM25_POSTING_TOP, tf),
-            BM25_TOP_K, "bm25")
-
-    def _rag_leg():
-        corpus = _rag_corpus(spark, sf_dir)
-        return overlap(
-            _rag_topk_pair(spark, sf_dir, RAG_POSTING_TOP,
-                           RAG_Q_TOP_DIMS, corpus),
-            RAG_TOP_K, "rag")
-
-    bm, rag = parallel_legs(_bm_leg, _rag_leg)
+    # r14 (guide §1.2): the two legs' CONSTRUCTION (lazy-checkpointed
+    # staging — Catalyst analysis + physical planning + codegen
+    # compilation) ran serially in one Python thread; build them as two
+    # parallel legs like the admission's. Same frames, same single
+    # final action.
+    bm, rag = parallel_legs(
+        lambda: overlap(_bm25_ranked(spark, sf_dir, _doc_tf(spark, sf_dir),
+                                     audit=True), BM25_TOP_K, "bm25"),
+        lambda: overlap(_rag_ranked(spark, sf_dir, audit=True),
+                        RAG_TOP_K, "rag"))
     return bm.unionByName(rag)

@@ -14,7 +14,7 @@ case-sensitive (functions.text.NON_LETTER, SURVEY.md §2.4.1).
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from mit_mapreduce_spark.catalog import fan_out, load_table
@@ -1314,12 +1314,10 @@ def _sql_fh() -> str:
 def _doc_tf(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Shared (doc_id, w, tf) term-frequency frame — THE staged leg of
     the retrieval tier (VERDICT r7 #3): one tokenize + one map-side-
-    combined aggregation, localCheckpoint'ed so audit ops that run
-    several retrieval pipelines (`retrieval_pruning_recall`,
-    `hybrid_rrf_retrieval`) tokenize the corpus ONCE instead of once
-    per pipeline. Single-pipeline queries build it implicitly (their
-    impls default to tf=None → this helper), so their certified plans
-    are unchanged."""
+    combined aggregation, localCheckpoint'ed so `hybrid_rrf_retrieval`'s
+    bm25 and kNN legs tokenize the corpus ONCE instead of once per leg.
+    The BM25 leg always scores from it; `hashed_knn_search` passes no
+    frame, so ``_fh_vectors`` keeps its own single-aggregation plan."""
     docs = load_table(spark, sf_dir, "documents")
     toks = (fan_out(docs)
             .select("doc_id", F.explode(_spark_tokens()).alias("w")))
@@ -1408,6 +1406,71 @@ def hashed_text_embeddings(spark: SparkSession, sf_dir: str) -> DataFrame:
         "doc_id", F.array_join("vec", ",").alias("vec"), "nnz", "norm_sq")
 
 
+# --- one sparse top-k core for the retrieval family ------------------------
+#
+# bm25_topk, rag_chunk_retrieval and retrieval_pruning_recall all score
+# a sparse Q·Dᵀ over a shared key, then keep a per-query top-k; the
+# two steps below are that computation, written once. hashed_knn_search
+# and hybrid_rrf_retrieval rank through the same top-k step.
+
+def _sparse_dot(postings: DataFrame, queries: DataFrame, key: str,
+                ids: list[str], term: Column, name: str) -> DataFrame:
+    """Σ ``term`` per (qid, *ids) over the posting ⋈ query match on
+    ``key``: the query side (≤ a constant budget of rows) is broadcast,
+    and self-matches (``ids[0] == qid``) are dropped. When a boolean
+    ``_keep`` (posting side) and/or ``_qkeep`` (query side) column rides
+    along — the impact-pruning verdict of that row — the same pass also
+    sums ``term`` over the matches every flag keeps (``{name}_p``) and
+    marks the pairs with at least one such match (``_has_p``): exactly
+    the pruned index's candidate set and integer sum, since integer
+    sums are order-independent."""
+    flags = [F.col(c) for c, side in (("_keep", postings),
+                                      ("_qkeep", queries))
+             if c in side.columns]
+    aggs = [F.sum(term).cast("bigint").alias(name)]
+    if flags:
+        keep = flags[0] if len(flags) == 1 else flags[0] & flags[1]
+        aggs += [F.sum(F.when(keep, term)).cast("bigint").alias(f"{name}_p"),
+                 F.max(keep).alias("_has_p")]
+    return (postings.join(F.broadcast(queries), key)
+            .where(F.col(ids[0]) != F.col("qid"))
+            .groupBy("qid", *ids).agg(*aggs))
+
+
+def _top_k(scored: DataFrame, score: str, ids: list[str], k: int,
+           audit: bool = False) -> DataFrame:
+    """Per-query top-``k`` by ``score`` desc, ties broken by ``ids``.
+
+    Serving: every column of ``scored`` plus ``rnk``, rows ``rnk <= k``.
+
+    Audit (``scored`` carries ``_has_p`` and ``{score}_p`` from a
+    flagged ``_sparse_dot``): one row per exact candidate with
+    ``rnk_e`` (exact rank), ``rnk_p`` (rank among the pruned
+    candidates, valid where ``_has_p``) and ``_in_p`` (in the pruned
+    top-k). Pruned rows sort first on ``_has_p`` desc, so row_number
+    over the whole partition is the rank within the pruned candidate
+    set, and both ranks ride ONE qid exchange on ONE frame. Every
+    pruned candidate is an exact candidate, so a caller's
+    exact∩pruned overlap is one aggregation over this frame, no
+    self-join."""
+    from pyspark.sql import Window as W
+
+    we = W.partitionBy("qid").orderBy(F.col(score).desc(), *ids)
+    if not audit:
+        return (scored.select("*", F.row_number().over(we).cast("int")
+                              .alias("rnk"))
+                .where(F.col("rnk") <= k))
+    scored = scored.localCheckpoint(eager=False)
+    rnk_p = F.row_number().over(
+        W.partitionBy("qid").orderBy(F.col("_has_p").desc(),
+                                     F.col(f"{score}_p").desc(), *ids))
+    return scored.select(
+        "qid", *ids,
+        F.row_number().over(we).cast("int").alias("rnk_e"),
+        (F.col("_has_p") & (rnk_p <= k)).alias("_in_p"),
+        rnk_p.cast("int").alias("rnk_p"))
+
+
 # --- text search over hashed embeddings -----------------------------------
 
 FH_QUERY_MOD = 100   # doc_id % MOD == 0 pre-filters query candidates
@@ -1478,6 +1541,9 @@ def _hashed_knn_impl(spark: SparkSession, sf_dir: str,
     c = (fh.where(F.col("norm_sq") > 0)
          .select(F.col("doc_id").alias("cid"), F.col("vec").alias("cv"),
                  F.col("norm_sq").alias("cn")))
+    # dense, not `_sparse_dot` over (dim, val) postings: a sparse join
+    # drops the pairs with no shared dim, and under signed hashing their
+    # cosine of 0 outranks every negative one, so they can be top-k
     dots = (
         c.crossJoin(F.broadcast(q))
         .where(F.col("cid") != F.col("qid"))
@@ -1492,13 +1558,7 @@ def _hashed_knn_impl(spark: SparkSession, sf_dir: str,
         (F.col("dot").cast("double")
          / (F.sqrt(F.col("qn").cast("double"))
             * F.sqrt(F.col("cn").cast("double")))).alias("cosine"))
-    from pyspark.sql import Window as W
-    w = W.partitionBy("qid").orderBy(F.col("cosine").desc(), "cid")
-    return (
-        scored.select("qid", "cid", "dot", "cosine",
-                      F.row_number().over(w).cast("int").alias("rnk"))
-        .where(F.col("rnk") <= FH_TOP_K)
-    )
+    return _top_k(scored, "cosine", ["cid"], FH_TOP_K)
 
 
 # --- URL extraction + per-domain rollup (web-corpus curation) --------------
@@ -1653,8 +1713,8 @@ BM25_POSTING_TOP = 1024  # impact-sorted static index pruning depth for
                          # accumulated common-term score — exactly the
                          # mass truncation removes. The registered
                          # bm25_topk therefore serves the EXACT index;
-                         # this constant parameterizes the pruned twin
-                         # that the recall harness keeps honest.
+                         # this depth sets the pruned index that the
+                         # recall harness's audit pass scores.
 
 
 def _sql_bm25(posting_top: int | None = None) -> str:
@@ -1754,27 +1814,29 @@ def bm25_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     this corpus — recall@5 vs exact of 13% at sf0.1 and 1.6% at the
     10× corpus, because this synthetic vocabulary is flat enough that
     rankings are decided by accumulated common-term score, exactly the
-    mass truncation removes. The pruned variant stays available as
-    `_bm25_topk_impl(spark, sf_dir, BM25_POSTING_TOP)` and is kept
-    honest by the registered recall harness — the production pattern
+    mass truncation removes. The pruned index is scored by the same
+    pass in audit mode (`_bm25_ranked(…, audit=True)`) and kept honest
+    by the registered recall harness — the production pattern
     (never ship static pruning without a recall eval on YOUR corpus;
     on Zipf-natural corpora the same pruning is near-lossless, see
     SCALE.md round-7)."""
-    return _bm25_topk_impl(spark, sf_dir, 0)
+    return _bm25_ranked(spark, sf_dir, _doc_tf(spark, sf_dir), audit=False)
 
 
-def _bm25_topk_impl(spark: SparkSession, sf_dir: str, posting_top: int,
-                    tf: DataFrame | None = None) -> DataFrame:
-    """bm25_topk body with the truncation depth as a parameter;
-    ``posting_top=0`` disables pruning (the exact index, ground truth
-    for retrieval_pruning_recall). ``tf``: optional staged term-
-    frequency frame (``_doc_tf``) so audit ops running several
-    pipelines tokenize the corpus once (VERDICT r7 #3)."""
+def _bm25_ranked(spark: SparkSession, sf_dir: str, tf: DataFrame,
+                 audit: bool) -> DataFrame:
+    """The BM25 leg's one scoring pass over the staged (doc_id, w, tf)
+    frame ``tf`` (``_doc_tf``; shared with the kNN leg by hybrid
+    retrieval). Serving (``audit=False``) scores the exact index and
+    returns bm25_topk's rows. Audit flags each posting with its impact
+    verdict — top-BM25_POSTING_TOP per term by tf desc, doc_id, the
+    pruned index's window — and returns ``_top_k``'s exact and pruned
+    ranks from the same candidate pass (r15: one 4.5 M-row candidate
+    join at sf0.1 instead of one per variant); df/dl/idf stay exact in
+    both indexes."""
     from pyspark.sql import Window as W
 
     docs = load_table(spark, sf_dir, "documents")
-    if tf is None:
-        tf = _doc_tf(spark, sf_dir)
     dl = tf.groupBy("doc_id").agg(F.sum("tf").cast("bigint").alias("dl"))
     stats = (
         docs.agg(F.count("*").cast("bigint").alias("n_docs"))
@@ -1798,19 +1860,16 @@ def _bm25_topk_impl(spark: SparkSession, sf_dir: str, posting_top: int,
             .orderBy("doc_id").limit(BM25_N_QUERIES).select("doc_id"))
     q = (tf.join(F.broadcast(qids), "doc_id")
          .select(F.col("doc_id").alias("qid"), "w"))
-    # impact-sorted static pruning (see BM25_POSTING_TOP): the term
-    # join sees at most M postings per term; df/dl/idf above stay exact
-    if posting_top:
-        wp = W.partitionBy("w").orderBy(F.col("tf").desc(), "doc_id")
-        postings = (tf.withColumn("_r", F.row_number().over(wp))
-                    .where(F.col("_r") <= posting_top).drop("_r"))
-    else:
-        postings = tf
     term_score = F.round(
         F.col("idf_micro")
         * ((F.col("tf") * (BM25_K1 + 1.0))
            / (F.col("tf") + BM25_K1 * ((1.0 - BM25_B)
               + BM25_B * (F.col("dl") / F.col("avgdl")))))).cast("bigint")
+    postings, keep = tf, []
+    if audit:
+        wp = W.partitionBy("w").orderBy(F.col("tf").desc(), "doc_id")
+        postings = tf.withColumn("_r", F.row_number().over(wp))
+        keep = [(F.col("_r") <= BM25_POSTING_TOP).alias("_keep")]
     # r14 (guide §2.3 "shuffle fewer bytes" / §1.2 per-task work):
     # term_score depends only on (w, doc) — never on the query — so it
     # is computed ONCE PER POSTING (|postings| rows) before the query
@@ -1823,105 +1882,11 @@ def _bm25_topk_impl(spark: SparkSession, sf_dir: str, posting_top: int,
     postings_scored = (
         postings.join(dl, "doc_id").join(idf, "w")
         .select("w", F.col("doc_id").alias("did"),
-                term_score.alias("term_score"))
+                term_score.alias("term_score"), *keep)
     )
-    scored = (
-        postings_scored.join(F.broadcast(q), "w")
-        .where(F.col("did") != F.col("qid"))
-        .groupBy("qid", "did")
-        .agg(F.sum("term_score").cast("bigint").alias("score_micro"))
-    )
-    w = W.partitionBy("qid").orderBy(F.col("score_micro").desc(), "did")
-    return (
-        scored.select("qid", "did", "score_micro",
-                      F.row_number().over(w).cast("int").alias("rnk"))
-        .where(F.col("rnk") <= BM25_TOP_K)
-    )
-
-
-def _bm25_topk_pair(spark: SparkSession, sf_dir: str, posting_top: int,
-                    tf: DataFrame) -> DataFrame:
-    """Exact AND pruned top-k ranks from ONE candidate pass (r15,
-    guide §2.3/§1.2): retrieval_pruning_recall previously ran
-    `_bm25_topk_impl` twice — two 4.5 M-row candidate joins and two
-    (qid, did) aggregations that differ ONLY in which postings
-    participate. The truncation verdict for a posting is a pure
-    function of the posting table (impact rank over (w) by tf desc,
-    doc_id — the identical window the pruned variant runs), so one
-    pass computes both sums: score_micro = Σ term_score over all
-    matched postings (the exact leg, bit-identical — the flag column
-    is just carried along) and score_p = Σ over flagged postings with
-    has_p marking pairs that matched ≥1 pruned posting (exactly the
-    pruned variant's candidate set and integer sum, since integer
-    sums are order-independent). Returns one row per exact candidate
-    with rnk_e (exact rank), rnk_p (rank among pruned candidates —
-    valid only where _in_p) and _in_p (pair is in the pruned top-k):
-    because every pruned candidate IS an exact candidate (it matched
-    ≥1 posting), the caller's exact∩pruned overlap stats reduce to a
-    single aggregation over this frame — no self-join, no
-    checkpoint."""
-    from pyspark.sql import Window as W
-
-    docs = load_table(spark, sf_dir, "documents")
-    dl = tf.groupBy("doc_id").agg(F.sum("tf").cast("bigint").alias("dl"))
-    stats = (
-        docs.agg(F.count("*").cast("bigint").alias("n_docs"))
-        .crossJoin(dl.agg(F.coalesce(F.sum("dl"), F.lit(0)).cast("double")
-                          .alias("_total")))
-        .select("n_docs",
-                (F.col("_total")
-                 / F.nullif(F.col("n_docs"), F.lit(0)).cast("double"))
-                .alias("avgdl"))
-    )
-    dfreq = tf.groupBy("w").agg(F.count("*").cast("bigint").alias("df"))
-    idf = (
-        dfreq.crossJoin(F.broadcast(stats))
-        .select(
-            "w", "avgdl",
-            F.round(F.log((F.col("n_docs").cast("double") - F.col("df") + 0.5)
-                          / (F.col("df") + 0.5) + 1.0) * BM25_GRID)
-            .cast("bigint").alias("idf_micro"))
-    )
-    qids = (docs.where(F.col("doc_id") % BM25_QUERY_MOD == 0)
-            .orderBy("doc_id").limit(BM25_N_QUERIES).select("doc_id"))
-    q = (tf.join(F.broadcast(qids), "doc_id")
-         .select(F.col("doc_id").alias("qid"), "w"))
-    wp = W.partitionBy("w").orderBy(F.col("tf").desc(), "doc_id")
-    term_score = F.round(
-        F.col("idf_micro")
-        * ((F.col("tf") * (BM25_K1 + 1.0))
-           / (F.col("tf") + BM25_K1 * ((1.0 - BM25_B)
-              + BM25_B * (F.col("dl") / F.col("avgdl")))))).cast("bigint")
-    postings_scored = (
-        tf.withColumn("_r", F.row_number().over(wp))
-        .join(dl, "doc_id").join(idf, "w")
-        .select("w", F.col("doc_id").alias("did"),
-                term_score.alias("term_score"),
-                (F.col("_r") <= posting_top).alias("_inp"))
-    )
-    scored = (
-        postings_scored.join(F.broadcast(q), "w")
-        .where(F.col("did") != F.col("qid"))
-        .groupBy("qid", "did")
-        .agg(F.sum("term_score").cast("bigint").alias("score_micro"),
-             F.sum(F.when(F.col("_inp"), F.col("term_score")))
-             .cast("bigint").alias("_score_p"),
-             F.max(F.col("_inp")).alias("_has_p"))
-        .localCheckpoint(eager=False)
-    )
-    we = W.partitionBy("qid").orderBy(F.col("score_micro").desc(), "did")
-    # pruned rows sort first on _has_p DESC, so row_number over the
-    # full partition equals the rank within the pruned candidate set
-    wpn = W.partitionBy("qid").orderBy(F.col("_has_p").desc(),
-                                       F.col("_score_p").desc(), "did")
-    # both ranks ride ONE qid exchange on ONE frame — the caller's
-    # overlap stats then need no self-join and no checkpoint
-    return scored.select(
-        "qid", "did",
-        F.row_number().over(we).cast("int").alias("rnk_e"),
-        (F.col("_has_p")
-         & (F.row_number().over(wpn) <= BM25_TOP_K)).alias("_in_p"),
-        F.row_number().over(wpn).cast("int").alias("rnk_p"))
+    scored = _sparse_dot(postings_scored, q, "w", ["did"],
+                         F.col("term_score"), "score_micro")
+    return _top_k(scored, "score_micro", ["did"], BM25_TOP_K, audit)
 
 
 # --- hybrid retrieval: reciprocal-rank fusion of the two legs ---------------
@@ -1976,8 +1941,6 @@ def hybrid_rrf_retrieval(spark: SparkSession, sf_dir: str) -> DataFrame:
     feature-hash vectors are derived from the same checkpointed tf the
     bm25 postings use (tf·sgn(w) per word — identical values), so the
     corpus is tokenized once per audit run, not once per leg."""
-    from pyspark.sql import Window as W
-
     # r14 (guide §1.2): the two legs' construction (analysis +
     # lazy-checkpoint planning) overlaps as two parallel legs — same
     # frames, same single fused action (see retrieval_pruning_recall).
@@ -1986,7 +1949,7 @@ def hybrid_rrf_retrieval(spark: SparkSession, sf_dir: str) -> DataFrame:
     tf = _doc_tf(spark, sf_dir)
     rrf = lambda rnk: F.expr(f"{RRF_GRID} div ({RRF_K} + {rnk})")  # noqa: E731
     bm, kn = parallel_legs(
-        lambda: _bm25_topk_impl(spark, sf_dir, 0, tf=tf)
+        lambda: _bm25_ranked(spark, sf_dir, tf, audit=False)
         .select("qid", "did", rrf("rnk").alias("rrf")),
         lambda: _hashed_knn_impl(spark, sf_dir, tf=tf)
         .select("qid", F.col("cid").alias("did"),
@@ -1997,12 +1960,7 @@ def hybrid_rrf_retrieval(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(F.sum("rrf").cast("bigint").alias("rrf_micro"),
              F.count("*").cast("bigint").alias("n_legs"))
     )
-    w = W.partitionBy("qid").orderBy(F.col("rrf_micro").desc(), "did")
-    return (
-        fused.select("qid", "did", "rrf_micro", "n_legs",
-                     F.row_number().over(w).cast("int").alias("rnk"))
-        .where(F.col("rnk") <= RRF_TOP_K)
-    )
+    return _top_k(fused, "rrf_micro", ["did"], RRF_TOP_K)
 
 
 # --- cross-language quantile normalization ---------------------------------

@@ -451,12 +451,12 @@ def test_round6_shuffle_budgets(spark, sf_dir, name, budget):
     ("hybrid_rrf_retrieval", 10),   # both legs' certified plans (7 + 2)
                                     # + the one (qid, did) fusion agg
                                     # over ≤ 2·|Q|·top_k rows
-    ("retrieval_pruning_recall", 60),  # compositional like
-                                    # ann_recall_report: FOUR full
-                                    # retrieval pipelines (exact +
-                                    # pruned, both legs) + overlap
-                                    # joins — generous headroom, the
-                                    # lock is against runaway growth
+    ("retrieval_pruning_recall", 2),  # one audit scoring pass per
+                                    # leg, each checkpointed before its
+                                    # ranks, so only the two qid window
+                                    # exchanges (exact + pruned ranks
+                                    # share one) show; the per-qid
+                                    # overlap agg reuses them
     ("dedup_containment", 5),       # df agg + vocab-sized word-id
                                     # window (r8: dense int IDs make
                                     # the arrays/joins int-typed, 15x

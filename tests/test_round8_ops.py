@@ -243,6 +243,45 @@ def test_pruning_recall_ndcg_invariants(spark, sf_dir):
             assert r.dcg_micro < r.idcg_micro
 
 
+def test_audit_ranks_match_exact_and_pruned_oracles(spark, sf_dir,
+                                                    monkeypatch):
+    """Each retrieval leg's audit pass, row for row: its exact top-k
+    (rnk_e <= k) equals the exact-index oracle, and its pruned top-k
+    (_in_p, ranked by rnk_p) equals the pruned-index oracle. The
+    pruning depths are shrunk until they bind at sf0.001, so the two
+    row sets differ and a drift in either mode of the shared scoring
+    core shows."""
+    from pyspark.sql import functions as F
+
+    from mit_mapreduce_spark.operators import curation, textstats
+
+    monkeypatch.setattr(textstats, "BM25_POSTING_TOP", 3)
+    monkeypatch.setattr(curation, "RAG_POSTING_TOP", 3)
+    monkeypatch.setattr(curation, "RAG_Q_TOP_DIMS", 4)
+    tf = textstats._doc_tf(spark, sf_dir)
+    legs = [
+        (textstats._bm25_ranked(spark, sf_dir, tf, audit=True), ["did"],
+         textstats.BM25_TOP_K, textstats._sql_bm25(posting_top=0),
+         textstats._sql_bm25(posting_top=3)),
+        (curation._rag_ranked(spark, sf_dir, audit=True),
+         ["cdoc", "chunk_id"], curation.RAG_TOP_K,
+         curation._sql_rag(posting_top=0, q_top_dims=0),
+         curation._sql_rag(posting_top=3, q_top_dims=4)),
+    ]
+    for ranked, ids, k, exact_sql, pruned_sql in legs:
+        keys = ", ".join(["qid", *ids])
+        exact = ranked.where(F.col("rnk_e") <= k).select(
+            "qid", *ids, F.col("rnk_e").alias("rnk"))
+        pruned = ranked.where(F.col("_in_p")).select(
+            "qid", *ids, F.col("rnk_p").alias("rnk"))
+        for df, sql in ((exact, exact_sql), (pruned, pruned_sql)):
+            ok, msg = compare(df, f"SELECT {keys}, rnk FROM ({sql})", sf_dir)
+            assert ok, (ids, msg)
+        hits = [{tuple(r)[:-1] for r in df.collect()}
+                for df in (exact, pruned)]
+        assert hits[0] != hits[1], f"pruning does not bind for {ids}"
+
+
 def test_skyline_crafted_and_random_vs_bruteforce(spark):
     """Skyline semantics pinned two ways: a crafted set exercising
     same-price, same-size, and band-boundary ties, then a seeded

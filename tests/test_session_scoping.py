@@ -239,3 +239,21 @@ def test_cached_schema_rejects_a_parquet_directory(spark, sf_dir, tmp_path):
     # a table stored as a directory still loads, inferring its schema
     assert load_table(spark, str(tmp_path), "nation").count() == \
         load_table(spark, sf_dir, "nation").count()
+
+
+def test_schema_cache_holds_one_entry_per_rewritten_file(spark, tmp_path):
+    """A parquet file rewritten with a new schema replaces its cache
+    entry instead of adding one, and the newest schema is served."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from mit_mapreduce_spark.catalog import _SCHEMA_CACHE, _cached_schema
+
+    path = str(tmp_path / "t.parquet")
+    for i, name in enumerate(["a", "bb", "ccc"]):
+        pq.write_table(pa.table({name: pa.array(range(i + 1), pa.int64())}),
+                       path)
+        os.utime(path, ns=(10**18 + i, 10**18 + i))  # distinct mtimes
+        assert _cached_schema(spark, path).fieldNames() == [name]
+    assert [k for k in _SCHEMA_CACHE if path in str(k)] == [path]
+    assert _cached_schema(spark, path).fieldNames() == ["ccc"]
