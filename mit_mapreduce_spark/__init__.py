@@ -11,14 +11,27 @@ reference leaves to its users.
 
 Layout:
     session      SparkSession factory tuned for local[32] + cluster scale
+    pyworker     the sessions' Python worker daemon (pyspark.daemon
+                 without Spark's archives on sys.path)
     catalog      fixture-table loader / temp-view registration
     operators/   query operators (text, relational, dedup, similarity, ...)
     mapreduce/   faithful `run_job(map_fn, reduce_fn)` compatibility facade
     functions/   reusable column expression builders
     streaming/   Structured Streaming variants of the event operators
     plans/       plan-inspection helpers (pushdown/broadcast assertions)
+
+Importing the package imports no pyspark: ``get_spark`` loads
+``session`` on first use (PEP 562), so the worker daemon
+``mit_mapreduce_spark.pyworker`` can choose which pyspark its workers
+load before any is imported.
 """
 
 __version__ = "0.1.0"
 
-from mit_mapreduce_spark.session import get_spark  # noqa: F401
+
+def __getattr__(name: str):
+    if name == "get_spark":
+        from mit_mapreduce_spark.session import get_spark
+
+        return get_spark
+    raise AttributeError(f"module {__name__!r} has no attribute {name!r}")

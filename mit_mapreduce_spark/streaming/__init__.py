@@ -14,6 +14,7 @@ from __future__ import annotations
 import hashlib
 import os
 import shutil
+import threading
 import uuid
 
 from pyspark.sql import DataFrame, SparkSession
@@ -152,6 +153,11 @@ def _register_scratch_cleanup(path: str) -> None:
 _CLEANUP_REGISTERED: set = set()
 
 
+# Sink dirs of the drain_via_batch calls running now.
+_DRAINING: set = set()
+_DRAINING_LOCK = threading.Lock()
+
+
 def drain_via_batch(stream_df: DataFrame, frame_fn, name: str,
                     sf_dir: str) -> DataFrame:
     """Drain a stream through foreachBatch, applying the certified
@@ -190,10 +196,12 @@ def drain_via_batch(stream_df: DataFrame, frame_fn, name: str,
     at interpreter exit. The returned frame is read in the caller's
     session (see run_stream_to_table) and is lazy over that dir: it
     stays valid until the next drain with the same (name, sf_dir) in
-    this application, or interpreter exit. A seed subdirectory carries
-    the output schema so a zero-row stream (hostile fuzz corpora)
-    still drains to a readable empty table. Every invocation
-    recomputes from the stream — nothing is reused across
+    this application, or interpreter exit. Two drains of one (``name``,
+    ``sf_dir``) may not overlap in one application: the second raises
+    ``RuntimeError`` instead of wiping the first one's sink. A seed
+    subdirectory carries the output schema so a zero-row stream
+    (hostile fuzz corpora) still drains to a readable empty table.
+    Every invocation recomputes from the stream — nothing is reused across
     invocations. Production swaps the partition-overwrite sink
     (run_stream_foreach_batch) or Kafka with the identical per-batch
     plan."""
@@ -201,18 +209,29 @@ def drain_via_batch(stream_df: DataFrame, frame_fn, name: str,
     out = os.path.join(
         _SCRATCH,
         f"drain_{name}_{sf_key(sf_dir)}_{spark.sparkContext.applicationId}")
-    shutil.rmtree(out, ignore_errors=True)
-    _register_scratch_cleanup(out)
-    seed = frame_fn(spark.createDataFrame([], stream_df.schema))
-    seed.write.mode("overwrite").parquet(os.path.join(out, "seed"))
+    with _DRAINING_LOCK:
+        if out in _DRAINING:
+            raise RuntimeError(
+                f"drain_via_batch: a drain named {name!r} of {sf_dir!r} is "
+                "already running in this application; concurrent drains "
+                "need distinct names")
+        _DRAINING.add(out)
+    try:
+        shutil.rmtree(out, ignore_errors=True)
+        _register_scratch_cleanup(out)
+        seed = frame_fn(spark.createDataFrame([], stream_df.schema))
+        seed.write.mode("overwrite").parquet(os.path.join(out, "seed"))
 
-    def _apply(batch_df: DataFrame, batch_id: int) -> None:
-        frame_fn(batch_df).write.mode("overwrite").parquet(
-            os.path.join(out, f"b{batch_id}"))
+        def _apply(batch_df: DataFrame, batch_id: int) -> None:
+            frame_fn(batch_df).write.mode("overwrite").parquet(
+                os.path.join(out, f"b{batch_id}"))
 
-    q = (stream_df.writeStream.foreachBatch(_apply)
-         .trigger(availableNow=True).start())
-    q.awaitTermination()
+        q = (stream_df.writeStream.foreachBatch(_apply)
+             .trigger(availableNow=True).start())
+        q.awaitTermination()
+    finally:
+        with _DRAINING_LOCK:
+            _DRAINING.discard(out)
     return (_caller_session(spark).read
             .option("recursiveFileLookup", "true")
             .schema(seed.schema).parquet(out))

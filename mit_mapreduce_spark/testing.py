@@ -17,9 +17,11 @@ import duckdb
 from mit_mapreduce_spark.catalog import TABLES
 
 
-def run_oracle(sql: str, sf_dir: str):
-    """Run oracle SQL with the fixture tables registered as views."""
-    con = duckdb.connect()
+def run_oracle(sql: str, sf_dir: str, temp_dir: str | None = None):
+    """Run oracle SQL with the fixture tables registered as views.
+    DuckDB spills to ``temp_dir`` (default: ``.tmp`` in the working
+    directory) when the query outgrows memory."""
+    con = duckdb.connect(config={"temp_directory": temp_dir} if temp_dir else {})
     for t in TABLES:
         con.execute(
             f"CREATE VIEW {t} AS SELECT * FROM "
@@ -66,13 +68,15 @@ def _rows_to_key(cols, rows):
     return sorted(normed, key=lambda row: tuple(_type_tag(v) for v in row))
 
 
-def compare(spark_df, oracle_sql: str, sf_dir: str, max_diff_show: int = 5):
+def compare(spark_df, oracle_sql: str, sf_dir: str, max_diff_show: int = 5,
+            temp_dir: str | None = None):
     """Return (ok, message). Exact value comparison — the driver hashes
-    values, so 'close enough' floats are NOT good enough."""
+    values, so 'close enough' floats are NOT good enough. ``temp_dir``
+    is the oracle's spill directory (see :func:`run_oracle`)."""
     s_cols = [c.lower() for c in spark_df.columns]
     s_rows = [tuple(r) for r in spark_df.collect()]
 
-    cur = run_oracle(oracle_sql, sf_dir)
+    cur = run_oracle(oracle_sql, sf_dir, temp_dir)
     o_cols = [d[0].lower() for d in cur.description]
     o_rows = cur.fetchall()
 

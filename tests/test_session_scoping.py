@@ -215,6 +215,56 @@ def test_drain_sinks_of_same_basename_dirs_do_not_collide(spark, sf_dir,
     assert ids(first) == want_a
 
 
+def test_concurrent_drains_of_one_name_are_refused(spark, sf_dir):
+    """While one drain of a (name, sf_dir) runs, every other drain of it
+    must raise instead of wiping the first one's sink (eight threads on
+    a shortened switch interval race for the name); once the first has
+    finished, the name is free again."""
+    import sys
+
+    from mit_mapreduce_spark.catalog import load_table
+    from mit_mapreduce_spark.streaming import docs_stream, drain_via_batch
+
+    release = threading.Event()
+
+    def held(batch):
+        assert release.wait(120)
+        return batch.select("doc_id")
+
+    drained, refused = [], []
+
+    def drain(stream):
+        try:
+            drained.append(drain_via_batch(stream, held, "twice", sf_dir))
+        except RuntimeError as e:
+            refused.append(str(e))
+
+    threads = [threading.Thread(target=drain, args=(docs_stream(spark, sf_dir),))
+               for _ in range(8)]
+    switch = sys.getswitchinterval()
+    sys.setswitchinterval(1e-6)
+    try:
+        for t in threads:
+            t.start()
+        deadline = time.time() + 120
+        while len(refused) < 7 and time.time() < deadline:
+            time.sleep(0.05)
+    finally:
+        sys.setswitchinterval(switch)
+        release.set()
+        for t in threads:
+            t.join(300)
+    assert not any(t.is_alive() for t in threads)
+    assert len(refused) == 7 and all("already running" in e for e in refused)
+    want = {r.doc_id for r in load_table(spark, sf_dir, "documents")
+            .select("doc_id").collect()}
+    assert len(drained) == 1
+    assert {r.doc_id for r in drained[0].collect()} == want
+    again = drain_via_batch(docs_stream(spark, sf_dir),
+                            lambda b: b.select("doc_id"), "twice", sf_dir)
+    assert {r.doc_id for r in again.collect()} == want
+
+
 def test_tune_fast_path_retunes_after_time_zone_flip(spark, sf_dir):
     from mit_mapreduce_spark.catalog import load_table
 

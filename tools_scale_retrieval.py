@@ -9,9 +9,13 @@ duplication inflation), then
   3. measure RAG posting-join candidate volume at sf0.1 for
      RAG_DIM=64 (the round-6 setting) vs 4096 (round-7).
 
-Run: python tools_scale_retrieval.py   (writes /tmp/scale_retrieval.json)
+Run: python tools_scale_retrieval.py   (writes .scratch/scale_retrieval.json)
+
+The 10× corpus and the DuckDB oracle's spill directory live under the
+checkout's ``.scratch/`` and are removed at exit.
 """
 
+import atexit
 import json
 import os
 import shutil
@@ -38,10 +42,13 @@ _TENX_COPY = ("SELECT doc_id * 10 + {k} AS doc_id,"
               " text || ' uniq{k}tok' || CAST(doc_id AS VARCHAR) AS text,"
               " source, lang"
               " FROM '{src}/documents.parquet'")
+SCRATCH = os.path.join(os.path.dirname(os.path.abspath(__file__)), ".scratch")
 # The staged dir is KEYED ON the generator SQL (ADVICE r8 #3): an
 # edited generator can never silently re-certify against a stale
-# /tmp corpus built by an older version of this script.
-TENX = keyed_stage_dir("/tmp/scale10x_docs", _TENX_SQL + _TENX_COPY)
+# corpus built by an older version of this script.
+TENX = keyed_stage_dir(os.path.join(SCRATCH, "scale10x_docs"),
+                       _TENX_SQL + _TENX_COPY)
+ORACLE_TMP = os.path.join(SCRATCH, "scale_retrieval_duckdb_tmp")
 OPS = ["bm25_topk", "rag_chunk_retrieval", "hashed_knn_search",
        "hybrid_rrf_retrieval", "retrieval_pruning_recall"]
 
@@ -105,6 +112,8 @@ def rag_candidates(spark, sf_dir, dim, prune=True):
 
 
 def main():
+    for d in (TENX, ORACLE_TMP):
+        atexit.register(shutil.rmtree, d, ignore_errors=True)
     build_tenx()
     spark = get_spark()
     spark.sparkContext.setLogLevel("ERROR")
@@ -119,7 +128,7 @@ def main():
 
     for op in OPS:
         ok, msg = compare(operators.QUERIES[op](spark, TENX),
-                          operators.ORACLES[op], TENX)
+                          operators.ORACLES[op], TENX, temp_dir=ORACLE_TMP)
         out["oracle_10x"][op] = bool(ok)
         print("oracle10x", op, ok, (msg or "")[:200], flush=True)
 
@@ -129,7 +138,7 @@ def main():
         print("rag_candidates dim", dim,
               out["rag_candidates_sf01"][str(dim)], flush=True)
 
-    with open("/tmp/scale_retrieval.json", "w") as f:
+    with open(os.path.join(SCRATCH, "scale_retrieval.json"), "w") as f:
         json.dump(out, f, indent=1)
     print(json.dumps(out))
 
