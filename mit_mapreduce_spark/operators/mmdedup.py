@@ -52,7 +52,6 @@ band); the CC loop runs over the pair graph's vertex set only.
 
 from __future__ import annotations
 
-import threading
 from collections.abc import Iterator
 from functools import partial
 
@@ -727,23 +726,37 @@ def _sql_manifest() -> str:
     """
 
 
-_MANIFEST_MEMO: dict = {}
-_MANIFEST_LOCK = threading.Lock()
+@query("pipeline_multimodal_manifest", oracle=_sql_manifest())
+def pipeline_multimodal_manifest(spark: SparkSession,
+                                 sf_dir: str) -> DataFrame:
+    """The CROSS-MODALITY per-doc training manifest (VERDICT r9 ask
+    #5; MODALITY-SPARSE since r11 per VERDICT r10 ask #1; media
+    QUALITY folded in later in r11 when the mmquality screens
+    landed): one row per document with the five pillar keep
+    decisions — text near-dup keeper (MinHash CC canonical member),
+    three-stage quality funnel pass (Gopher -> repetition -> LM
+    novelty), and per owned image/audio/video asset BOTH the
+    perceptual-near-dup keeper bit AND the modality's quality-screen
+    pass (silent/clipped/DC audio, black/frozen video, flat/dark
+    images — quality_*_screen) — plus `ready`, the single bit a
+    training run consumes: keep the doc iff its text survived dedup
+    AND quality AND every asset the doc OWNS survived its modality's
+    dedup AND quality screens. Docs own assets per the deterministic
+    presence predicates (doc_id % 5 == 3: no image, % 7 == 0: no
+    audio, % 6 == 4: no video); an absent modality is keep-PASS — a
+    text-only document can be ready, which the r10 inner-join form
+    silently forbade. An owned asset with no quality row
+    (undecodable) is a FAIL, never a silent pass.
 
-
-def _manifest_frame(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The per-doc manifest as a DataFrame — shared by the registered
-    manifest query and its per-(lang, source) accounting rollup,
-    built once per (session, sf_dir) (r12, the admission-memo
-    pattern: the eager legs are checkpointed RDDs valid for the
-    session's lifetime, so the rollup reuses them; r13, the
-    lock/eviction discipline — see _admission_frame)."""
-    return _memoized_frame(_MANIFEST_MEMO, _MANIFEST_LOCK,
-                           _manifest_build, spark, sf_dir)
-
-
-def _manifest_build(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """_manifest_frame's body — invoked once per (session, sf_dir)."""
+    One plan, no re-decode: every input is an (id, label/flag) table
+    the pillar operators already produce (cluster tables are two
+    longs per doc; quality verdicts are flags from single-scan
+    array expressions), joined on doc_id — media cluster tables
+    cover only the present docs and join LEFT. The CC fixpoint loops
+    run over their pair graphs' vertex sets with checkpoint-truncated
+    lineage, so composing four of them stacks checkpointed leaves,
+    not plan trees. The oracle composes the SAME SQL builders the
+    pillar queries gate on, presence-filtered identically."""
     from mit_mapreduce_spark.operators.curation import (
         FUNNEL_MAX_NOVELTY, gopher_quality_rules, quality_repetition,
     )
@@ -850,40 +863,6 @@ def _manifest_build(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@query("pipeline_multimodal_manifest", oracle=_sql_manifest())
-def pipeline_multimodal_manifest(spark: SparkSession,
-                                 sf_dir: str) -> DataFrame:
-    """The CROSS-MODALITY per-doc training manifest (VERDICT r9 ask
-    #5; MODALITY-SPARSE since r11 per VERDICT r10 ask #1; media
-    QUALITY folded in later in r11 when the mmquality screens
-    landed): one row per document with the five pillar keep
-    decisions — text near-dup keeper (MinHash CC canonical member),
-    three-stage quality funnel pass (Gopher -> repetition -> LM
-    novelty), and per owned image/audio/video asset BOTH the
-    perceptual-near-dup keeper bit AND the modality's quality-screen
-    pass (silent/clipped/DC audio, black/frozen video, flat/dark
-    images — quality_*_screen) — plus `ready`, the single bit a
-    training run consumes: keep the doc iff its text survived dedup
-    AND quality AND every asset the doc OWNS survived its modality's
-    dedup AND quality screens. Docs own assets per the deterministic
-    presence predicates (doc_id % 5 == 3: no image, % 7 == 0: no
-    audio, % 6 == 4: no video); an absent modality is keep-PASS — a
-    text-only document can be ready, which the r10 inner-join form
-    silently forbade. An owned asset with no quality row
-    (undecodable) is a FAIL, never a silent pass.
-
-    One plan, no re-decode: every input is an (id, label/flag) table
-    the pillar operators already produce (cluster tables are two
-    longs per doc; quality verdicts are flags from single-scan
-    array expressions), joined on doc_id — media cluster tables
-    cover only the present docs and join LEFT. The CC fixpoint loops
-    run over their pair graphs' vertex sets with checkpoint-truncated
-    lineage, so composing four of them stacks checkpointed leaves,
-    not plan trees. The oracle composes the SAME SQL builders the
-    pillar queries gate on, presence-filtered identically."""
-    return _manifest_frame(spark, sf_dir)
-
-
 @query(
     "pipeline_multimodal_ready",
     oracle=f"""
@@ -910,7 +889,7 @@ def pipeline_multimodal_ready(spark: SparkSession,
     pipeline_multimodal_manifest; the keep_* sums count absent
     modalities as kept (pass-through), matching the manifest's
     sparse semantics."""
-    m = _manifest_frame(spark, sf_dir)
+    m = pipeline_multimodal_manifest(spark, sf_dir)
     return (
         m.groupBy("lang", "source")
         .agg(F.count("*").cast("bigint").alias("n_docs"),
@@ -1326,17 +1305,11 @@ def pipeline_ingest_admission(spark: SparkSession,
     contamination probe is a broadcast gram join (benchmark suites
     are tiny next to the corpus) — the retained corpus is never
     re-decoded. The nine eager legs overlap as parallel legs like the
-    manifest's, and the composed frame is memoized per session so the
-    report rollup reuses it. Oracle: one composition of the funnel
-    CTEs, IN-subqueries for the text/clean gates, and seven
+    manifest's; every call builds them afresh, so no checkpointed leg
+    outlives its query. Oracle: one composition of the funnel CTEs,
+    IN-subqueries for the text/clean gates, and seven
     presence-filtered WITH-subqueries (screens + quality +
     embedding)."""
-    return _admission_frame(spark, sf_dir)
-
-
-def _admission_build(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """pipeline_ingest_admission's body — invoked once per
-    (session, sf_dir) via _admission_frame's memo."""
     from mit_mapreduce_spark.operators.curation import (
         _letter_tokens, _ngram_arr, CONTAM_NGRAM, EMAIL_RE, EVAL_MOD,
         gopher_quality_rules, ID_RE, IP_RE,
@@ -1526,74 +1499,18 @@ def _admission_verdicts(m: DataFrame) -> DataFrame:
     )
 
 
-# The admission's eager legs are built at DataFrame-construction
-# time, so the rollup below used to re-run all of them (ADVICE r11):
-# memoize the composed frame per (application, sf_dir) — the legs are
-# localCheckpoint'd RDDs that stay valid for the session's lifetime,
-# and the key includes the applicationId so a new session never sees
-# a stale frame.
+# Never filled: bench.py still pops these before each timed run.
 _ADMISSION_MEMO: dict = {}
-_ADMISSION_LOCK = threading.Lock()
-
-
-def _admission_frame(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The admission table as a frame — shared by the registered
-    query and its per-(lang, source) accounting rollup, built once
-    per (session, sf_dir). The build runs under a lock (ADVICE r12:
-    the bare get-then-set let two concurrent callers both
-    double-materialize the ~10 eager legs and leak one set for the
-    session), and entries keyed by dead applicationIds are evicted
-    on the way in so a bounced session can't pin stale checkpointed
-    frames for the process lifetime."""
-    return _memoized_frame(_ADMISSION_MEMO, _ADMISSION_LOCK,
-                           _admission_build, spark, sf_dir)
-
-
-# Per-(memo, key) build locks (ADVICE r13): the global lock used to
-# be held for the ENTIRE build, so a concurrent caller for a
-# DIFFERENT sf_dir (selfcheck at sf0.01 while sf0.1 materializes its
-# ~10 eager legs) blocked for the whole build. The global lock now
-# only guards the dicts; the build itself runs under its key's lock.
-_MEMO_KEY_LOCKS: dict = {}
-
-
-def _memoized_frame(memo: dict, lock, build, spark: SparkSession,
-                    sf_dir: str):
-    """Shared memo body for the admission/manifest frames and the
-    streaming ctx (returns a DataFrame or a dict of sides — whatever
-    ``build`` produces): one build per (applicationId, sf_dir),
-    concurrent callers for the SAME key wait for its builder,
-    callers for a different key proceed, stale-session keys
-    evicted."""
-    app_id = spark.sparkContext.applicationId
-    key = (app_id, sf_dir)
-    with lock:
-        for k in [k for k in memo if k[0] != app_id]:
-            memo.pop(k, None)
-            _MEMO_KEY_LOCKS.pop((id(memo), k), None)
-        if key in memo:
-            return memo[key]
-        klock = _MEMO_KEY_LOCKS.setdefault((id(memo), key),
-                                           threading.Lock())
-    with klock:
-        with lock:
-            frame = memo.get(key)
-        if frame is None:
-            frame = build(spark, sf_dir)
-            with lock:
-                memo[key] = frame
-    return frame
+_MANIFEST_MEMO: dict = {}
+_ADMISSION_CTX_MEMO: dict = {}
 
 
 # --- streaming admission twin (r13, VERDICT r12 ask #2) --------------------
 
-_ADMISSION_CTX_MEMO: dict = {}
-_ADMISSION_CTX_LOCK = threading.Lock()
-
 
 def admission_static_ctx(spark: SparkSession, sf_dir: str) -> dict:
-    """The admission gates' STATIC sides, built once per (session,
-    sf_dir) and shared across every streaming micro-batch: the corpus
+    """The admission gates' STATIC sides, built once per call and
+    shared across that stream's micro-batches: the corpus
     fingerprint set, the corpus MinHash band index + shingle table +
     set sizes, the embedding bucket index, the three media signature
     indexes, the per-doc text-quality verdict tables (corpus-wide
@@ -1603,11 +1520,6 @@ def admission_static_ctx(spark: SparkSession, sf_dir: str) -> dict:
     production each is a persisted table a streaming maintenance leg
     keeps current (stream_text_fingerprints, stream_minhash_bands,
     stream_embedding_index, stream_*_fingerprints)."""
-    return _memoized_frame(_ADMISSION_CTX_MEMO, _ADMISSION_CTX_LOCK,
-                           _admission_ctx_build, spark, sf_dir)
-
-
-def _admission_ctx_build(spark: SparkSession, sf_dir: str) -> dict:
     from mit_mapreduce_spark.operators.curation import (
         _letter_tokens, _ngram_arr, CONTAM_NGRAM, EVAL_MOD,
         gopher_quality_rules, quality_repetition,
@@ -1707,7 +1619,7 @@ def _admission_ctx_build(spark: SparkSession, sf_dir: str) -> dict:
         "corpus_bands": corpus_bands,
         "emb_bk": emb_bk,
         # the exact-cosine verification table, checkpointed once
-        # per session (r14): per-batch candidate verification
+        # per stream (r14): per-batch candidate verification
         # reads persisted blocks instead of re-joining
         # embeddings x norms
         "emb_sides": emb_sides,
@@ -1732,7 +1644,7 @@ def admission_batch_frame(spark: SparkSession, sf_dir: str,
     cost scales with the batch, the corpus is never re-read beyond
     the checkpointed index tables. The verdict tail is
     _admission_verdicts, the identical spelling the batch admission
-    composes, and every leg mirrors _admission_build's with the
+    composes, and every leg mirrors pipeline_ingest_admission's with the
     shard side swapped for the batch:
 
     - keep_text: batch fps left-semi the corpus fingerprint set +
@@ -1768,9 +1680,9 @@ def admission_batch_frame(spark: SparkSession, sf_dir: str,
       hashes in ONE per-row select — no explode+groupBy-MIN shuffle
       and a fraction of the plan ops.
 
-    The batch tier's _admission_build keeps eager checkpoints: its
-    legs materialize corpus-sized intermediates the session reuses —
-    a trade that only pays when the inputs are corpus-sized."""
+    The batch pipeline_ingest_admission keeps eager checkpoints: its
+    legs materialize corpus-sized intermediates the composed query
+    reuses — a trade that only pays when the inputs are corpus-sized."""
     from mit_mapreduce_spark.operators.curation import (
         EMAIL_RE, EVAL_MOD, ID_RE, IP_RE, PHONE_RE, pii_payload_col,
     )
@@ -1902,11 +1814,10 @@ def pipeline_ingest_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     shard from source Y in language X: N docs arrived, M admitted
     after the text, semantic, quality, clean, and media screens"),
     the at-the-door twin of pipeline_multimodal_ready. One
-    aggregation over pipeline_ingest_admission (memoized per session,
-    so the rollup reuses the table's checkpointed legs instead of
-    re-running them); the keep_* sums count absent modalities as
-    passes, matching the admission's sparse semantics."""
-    m = _admission_frame(spark, sf_dir)
+    aggregation over pipeline_ingest_admission, built afresh; the
+    keep_* sums count absent modalities as passes, matching the
+    admission's sparse semantics."""
+    m = pipeline_ingest_admission(spark, sf_dir)
     return (
         m.groupBy("lang", "source")
         .agg(F.count("*").cast("bigint").alias("n_docs"),

@@ -917,13 +917,15 @@ def stream_ingest_admission(spark: SparkSession, sf_dir: str) -> DataFrame:
     it); oracle = the batch admission SQL verbatim. 100 TB posture:
     per-batch cost scales with the batch (its fingerprints, its
     shingles, its decoded assets), the static sides are checkpointed
-    once per session and re-read never re-decoded/re-shingled, and
+    once per drain and re-read never re-decoded/re-shingled, and
     every join is the screen-shaped bounded-key equi-join of the
     batch tier."""
     from mit_mapreduce_spark.operators.mmdedup import (
         admission_batch_frame, admission_static_ctx, inc_shard_col,
     )
-    from mit_mapreduce_spark.streaming import _SCRATCH, docs_stream, sf_key
+    from mit_mapreduce_spark.streaming import (
+        _SCRATCH, _register_scratch_cleanup, docs_stream, sf_key,
+    )
 
     tune(spark)
     ctx = admission_static_ctx(spark, sf_dir)
@@ -940,11 +942,13 @@ def stream_ingest_admission(spark: SparkSession, sf_dir: str) -> DataFrame:
     # one checkout, and the full-path key two corpora sharing a
     # basename, from interleaving the overwrite/append/read cycle;
     # serial reruns in one session still reuse (and so bound) the
-    # scratch dir. Seeding it with the (empty) verdict schema also
+    # scratch dir, which goes at interpreter exit. Seeding it with
+    # the (empty) verdict schema also
     # makes a zero-row shard drain to a readable table.
     out = os.path.join(
         _SCRATCH,
         f"admit_{sf_key(sf_dir)}_{spark.sparkContext.applicationId}")
+    _register_scratch_cleanup(out)
     spark.createDataFrame(
         [], "doc_id bigint, lang string, source string, keep_text int,"
             " keep_semantic int, keep_quality int, keep_clean int,"
@@ -1385,11 +1389,14 @@ def stream_lm_bigram_counts(spark: SparkSession,
     own bigrams; the partial table grows ~|new vocabulary| per batch
     (Heaps-sublinear) and compacts by re-summing; no corpus rescan
     ever."""
-    from mit_mapreduce_spark.streaming import _SCRATCH, docs_stream, sf_key
+    from mit_mapreduce_spark.streaming import (
+        _SCRATCH, _register_scratch_cleanup, docs_stream, sf_key,
+    )
 
     tune(spark)
     out = os.path.join(
         _SCRATCH,
         f"lmcnt_{sf_key(sf_dir)}_{spark.sparkContext.applicationId}")
+    _register_scratch_cleanup(out)
     parts = lm_bigram_counts_drain(spark, docs_stream(spark, sf_dir), out)
     return parts.groupBy("bg").agg(F.sum("cnt").cast("bigint").alias("df"))

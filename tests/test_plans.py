@@ -614,15 +614,7 @@ def test_round11_quality_shuffle_budgets(spark, sf_dir, name, budget):
 def test_round11_admission_shuffle_budgets(spark, sf_dir, name, budget):
     """The admission pair composes checkpointed screen legs over
     doc_id equi-joins — a budget breach means a leg started
-    re-shuffling inside the composition; no cartesian anywhere.
-    Audits a FRESH build: the admission frame is memoized per
-    session (r12), and explaining an already-EXECUTED AQE frame
-    (test_parity runs every query first in a full-suite run) shows
-    the final adaptive plan, not the static shape this pins."""
-    from mit_mapreduce_spark.operators import mmdedup
-
-    mmdedup._ADMISSION_MEMO.pop(
-        (spark.sparkContext.applicationId, sf_dir), None)
+    re-shuffling inside the composition; no cartesian anywhere."""
     df = QUERIES[name](spark, sf_dir)
     n = plans.shuffle_count(df)
     assert n <= budget, f"{name}: {n} exchanges (budget {budget})"

@@ -380,19 +380,11 @@ def test_multimodal_manifest_shuffle_budget(spark, sf_dir):
     doc_id partitioning); the rollup adds exactly one more. A budget
     breach means a pillar started re-shuffling inside the
     composition."""
-    from mit_mapreduce_spark.operators import mmdedup
-
     budgets = {"pipeline_multimodal_manifest": 14,
                "pipeline_multimodal_ready": 15,
                "audio_fingerprint_search": 2,
                "dedup_audio_clusters": 2,
                "dedup_video_clusters": 2}
-    # audit a FRESH build: the manifest frame is memoized per
-    # session (r12), and explaining an already-EXECUTED AQE frame
-    # (test_parity runs every query first in a full-suite run) shows
-    # the final adaptive plan, not the static shape this test pins
-    mmdedup._MANIFEST_MEMO.pop(
-        (spark.sparkContext.applicationId, sf_dir), None)
     for name, budget in budgets.items():
         df = operators.QUERIES[name](spark, sf_dir)
         n = plans.shuffle_count(df)

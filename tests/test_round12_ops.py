@@ -291,17 +291,6 @@ def test_admission_clean_gate_composes_pii_and_contamination(
                for r in rows)
 
 
-def test_admission_memo_reuses_the_frame(spark, sf_dir):
-    """The registered admission query and the report rollup must
-    share one composed frame per (session, sf_dir) — the rollup never
-    re-runs the eager legs (ADVICE r11)."""
-    a = operators.QUERIES["pipeline_ingest_admission"](spark, sf_dir)
-    b = operators.QUERIES["pipeline_ingest_admission"](spark, sf_dir)
-    assert a is b
-    key = (spark.sparkContext.applicationId, sf_dir)
-    assert key in mmdedup._ADMISSION_MEMO
-
-
 def test_lying_manifest_row_quarantines_not_misgates(spark):
     """A manifest row that CLAIMS an asset which never produced a
     quality verdict (undecodable payload, or the payload never

@@ -299,44 +299,3 @@ def test_admission_runs_from_drained_index_tables(spark, sf_dir, tmp_path):
     assert as_map(via_tables.collect()) == as_map(
         operators.QUERIES["pipeline_ingest_admission"](
             spark, sf_dir).collect())
-
-
-def test_memoized_frame_single_build_and_stale_eviction(spark):
-    """The ADVICE r12 memo fix, pinned: concurrent callers of a
-    memoized frame must trigger exactly ONE build (the bare
-    get-then-set raced and double-materialized the admission's eager
-    legs), and entries keyed by a dead applicationId are evicted on
-    the next access instead of pinning stale DataFrames for the
-    process lifetime."""
-    import threading
-    import time as _time
-
-    from mit_mapreduce_spark.operators import mmdedup
-
-    memo: dict = {}
-    lock = threading.Lock()
-    builds = []
-
-    def build(spark, sf_dir):
-        builds.append(sf_dir)
-        _time.sleep(0.2)   # widen the race window
-        return object()
-
-    results = []
-
-    def call():
-        results.append(mmdedup._memoized_frame(
-            memo, lock, build, spark, "/some/sf"))
-
-    # a stale entry from a previous (stopped) session
-    memo[("app-dead", "/some/sf")] = object()
-    threads = [threading.Thread(target=call) for _ in range(6)]
-    for t in threads:
-        t.start()
-    for t in threads:
-        t.join()
-    assert len(builds) == 1, "concurrent callers must share one build"
-    assert len({id(r) for r in results}) == 1
-    app = spark.sparkContext.applicationId
-    assert set(memo) == {(app, "/some/sf")}, \
-        "the dead session's key must be evicted"

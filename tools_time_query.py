@@ -1,9 +1,8 @@
 """Standalone per-query timer + plan capture (r14 instrument).
 
 Usage: python tools_time_query.py QUERY [QUERY...] [--sf SF_DIR] [--plan OUT]
-Times each named query cold (memos popped like bench.py) as
-build + noop write, prints seconds; optionally writes
-.explain(formatted) to plans/r14/<name>_<tag>.txt.
+Times each named query as build + noop write, prints seconds;
+optionally writes .explain(formatted) to plans/r14/<name>_<tag>.txt.
 """
 import argparse
 import io
@@ -38,13 +37,8 @@ def main():
         .mapInPandas(lambda it: it, "id long") \
         .write.format("noop").mode("overwrite").save()
 
-    from mit_mapreduce_spark.operators import mmdedup
     for name in args.names:
         for rep in range(args.reps):
-            memo_key = (spark.sparkContext.applicationId, args.sf)
-            mmdedup._ADMISSION_MEMO.pop(memo_key, None)
-            mmdedup._MANIFEST_MEMO.pop(memo_key, None)
-            mmdedup._ADMISSION_CTX_MEMO.pop(memo_key, None)
             t0 = time.monotonic()
             df = operators.QUERIES[name](spark, args.sf)
             t1 = time.monotonic()
