@@ -26,8 +26,6 @@ is asserted in pytest instead.
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -905,9 +903,11 @@ def stream_ingest_admission(spark: SparkSession, sf_dir: str) -> DataFrame:
     verdict tables, eval gram table, asset manifest; each one a
     table the streaming maintenance legs keep current), then the
     shared verdict tail emits (doc_id, lang, source, keep_*, admit)
-    in append mode via foreachBatch — Spark's sanctioned shape for a
-    composed per-batch gate whose legs need batch-only operators
-    (the exact-Jaccard and screen aggregations).
+    through drain_via_batch — foreachBatch, Spark's sanctioned shape
+    for a composed per-batch gate whose legs need batch-only
+    operators (the exact-Jaccard and screen aggregations); each
+    micro-batch overwrites its own sink dir, so a replayed batch
+    cannot admit its docs twice.
 
     Every gate is a pure per-doc function of (the doc's own payload,
     the static tables) — no verdict reads another shard doc — so the
@@ -923,9 +923,7 @@ def stream_ingest_admission(spark: SparkSession, sf_dir: str) -> DataFrame:
     from mit_mapreduce_spark.operators.mmdedup import (
         admission_batch_frame, admission_static_ctx, inc_shard_col,
     )
-    from mit_mapreduce_spark.streaming import (
-        _SCRATCH, _register_scratch_cleanup, docs_stream, sf_key,
-    )
+    from mit_mapreduce_spark.streaming import docs_stream, drain_via_batch
 
     tune(spark)
     ctx = admission_static_ctx(spark, sf_dir)
@@ -937,32 +935,9 @@ def stream_ingest_admission(spark: SparkSession, sf_dir: str) -> DataFrame:
     # that child, so the verdict frame is built on the batch's session
     inc = (docs_stream(stream_session(spark, 2), sf_dir)
            .where(inc_shard_col("doc_id")))
-    # per-(session, SF) sink, overwritten per invocation — the
-    # applicationId in the path (ADVICE r13) keeps two sessions on
-    # one checkout, and the full-path key two corpora sharing a
-    # basename, from interleaving the overwrite/append/read cycle;
-    # serial reruns in one session still reuse (and so bound) the
-    # scratch dir, which goes at interpreter exit. Seeding it with
-    # the (empty) verdict schema also
-    # makes a zero-row shard drain to a readable table.
-    out = os.path.join(
-        _SCRATCH,
-        f"admit_{sf_key(sf_dir)}_{spark.sparkContext.applicationId}")
-    _register_scratch_cleanup(out)
-    spark.createDataFrame(
-        [], "doc_id bigint, lang string, source string, keep_text int,"
-            " keep_semantic int, keep_quality int, keep_clean int,"
-            " keep_image int, keep_audio int, keep_video int, admit int"
-    ).write.mode("overwrite").parquet(out)
-
-    def _admit(batch_df: DataFrame, batch_id: int) -> None:
-        admission_batch_frame(batch_df.sparkSession, sf_dir, batch_df,
-                              ctx).write.mode("append").parquet(out)
-
-    q = (inc.writeStream.foreachBatch(_admit)
-         .trigger(availableNow=True).start())
-    q.awaitTermination()
-    return spark.read.parquet(out)
+    return drain_via_batch(
+        inc, lambda b: admission_batch_frame(b.sparkSession, sf_dir, b, ctx),
+        name="admit", sf_dir=sf_dir)
 
 
 def _sql_minhash_bands() -> str:
@@ -1288,31 +1263,17 @@ def _sql_lm_counts() -> str:
     return _SQL_LM_COUNTS
 
 
-def lm_bigram_counts_drain(spark: SparkSession, stream_docs: DataFrame,
-                           out: str) -> DataFrame:
-    """Drain a document stream's PER-BATCH bigram partial counts to
-    ``out`` and return the drained (bg, cnt) partials: each
-    micro-batch maps its own docs to distinct-per-doc bigrams and
-    appends one (bg, cnt) row per bigram it saw — a MERGEABLE
+def lm_bigram_partials(batch_docs: DataFrame) -> DataFrame:
+    """One micro-batch's bigram PARTIAL counts: (bg, cnt) with one row
+    per distinct-per-doc bigram the batch's docs contain — a MERGEABLE
     statistic (counts of disjoint doc sets add), so the corpus df
     table is SUM(cnt) over the drained partials regardless of how
-    ingest sliced the corpus. foreachBatch because the per-batch
-    count is a batch-only aggregation (the composed-gate shape
-    stream_ingest_admission pins)."""
+    ingest sliced the corpus. A batch-only aggregation, so it drains
+    through foreachBatch (drain_via_batch)."""
     from mit_mapreduce_spark.operators.textstats import doc_bigrams_from
 
-    spark.createDataFrame([], "bg string, cnt bigint") \
-        .write.mode("overwrite").parquet(out)
-
-    def _counts(batch_df: DataFrame, batch_id: int) -> None:
-        (doc_bigrams_from(batch_df)
-         .groupBy("bg").agg(F.count("*").cast("bigint").alias("cnt"))
-         .write.mode("append").parquet(out))
-
-    q = (stream_docs.writeStream.foreachBatch(_counts)
-         .trigger(availableNow=True).start())
-    q.awaitTermination()
-    return spark.read.parquet(out)
+    return (doc_bigrams_from(batch_docs)
+            .groupBy("bg").agg(F.count("*").cast("bigint").alias("cnt")))
 
 
 def _sql_eval_grams() -> str:
@@ -1372,8 +1333,9 @@ def stream_lm_bigram_counts(spark: SparkSession,
     VERDICT r13 ask #3 — the last admission static side to gain a
     maintenance path): the bigram LM's corpus df table needs
     corpus-WIDE counts, so unlike the per-doc drains it cannot be a
-    stateless projection — instead each micro-batch appends its
-    (bigram, count) PARTIALS and the df table is rebuilt by summing
+    stateless projection — instead each micro-batch writes its
+    (bigram, count) PARTIALS (lm_bigram_partials) to its own
+    drain_via_batch sink dir and the df table is rebuilt by summing
     the partial table: the standard mergeable-sketch move
     (sketch_hll_mergeable demonstrates it for distinct counts)
     applied to the one corpus-wide gate statistic. The registered
@@ -1389,14 +1351,9 @@ def stream_lm_bigram_counts(spark: SparkSession,
     own bigrams; the partial table grows ~|new vocabulary| per batch
     (Heaps-sublinear) and compacts by re-summing; no corpus rescan
     ever."""
-    from mit_mapreduce_spark.streaming import (
-        _SCRATCH, _register_scratch_cleanup, docs_stream, sf_key,
-    )
+    from mit_mapreduce_spark.streaming import docs_stream, drain_via_batch
 
     tune(spark)
-    out = os.path.join(
-        _SCRATCH,
-        f"lmcnt_{sf_key(sf_dir)}_{spark.sparkContext.applicationId}")
-    _register_scratch_cleanup(out)
-    parts = lm_bigram_counts_drain(spark, docs_stream(spark, sf_dir), out)
+    parts = drain_via_batch(docs_stream(spark, sf_dir), lm_bigram_partials,
+                            name="lmcnt", sf_dir=sf_dir)
     return parts.groupBy("bg").agg(F.sum("cnt").cast("bigint").alias("df"))

@@ -198,10 +198,13 @@ def drain_via_batch(stream_df: DataFrame, frame_fn, name: str,
     stays valid until the next drain with the same (name, sf_dir) in
     this application, or interpreter exit. Two drains of one (``name``,
     ``sf_dir``) may not overlap in one application: the second raises
-    ``RuntimeError`` instead of wiping the first one's sink. A seed
-    subdirectory carries the output schema so a zero-row stream
-    (hostile fuzz corpora) still drains to a readable empty table.
-    Every invocation recomputes from the stream — nothing is reused across
+    ``RuntimeError`` instead of wiping the first one's sink. The sink
+    dir exists before the stream starts, and the drained table is read
+    with the schema of the frame the micro-batches wrote; only when no
+    micro-batch ran (a source dir with no files) does the schema come
+    from ``frame_fn`` over an empty frame, which is analyzed but runs
+    no job, and the empty dir then reads as 0 rows. Every invocation
+    recomputes from the stream — nothing is reused across
     invocations. Production swaps the partition-overwrite sink
     (run_stream_foreach_batch) or Kafka with the identical per-batch
     plan."""
@@ -218,12 +221,15 @@ def drain_via_batch(stream_df: DataFrame, frame_fn, name: str,
         _DRAINING.add(out)
     try:
         shutil.rmtree(out, ignore_errors=True)
+        os.makedirs(out)
         _register_scratch_cleanup(out)
-        seed = frame_fn(spark.createDataFrame([], stream_df.schema))
-        seed.write.mode("overwrite").parquet(os.path.join(out, "seed"))
+        schema = None
 
         def _apply(batch_df: DataFrame, batch_id: int) -> None:
-            frame_fn(batch_df).write.mode("overwrite").parquet(
+            nonlocal schema
+            frame = frame_fn(batch_df)
+            schema = frame.schema
+            frame.write.mode("overwrite").parquet(
                 os.path.join(out, f"b{batch_id}"))
 
         q = (stream_df.writeStream.foreachBatch(_apply)
@@ -232,9 +238,11 @@ def drain_via_batch(stream_df: DataFrame, frame_fn, name: str,
     finally:
         with _DRAINING_LOCK:
             _DRAINING.discard(out)
+    if schema is None:
+        schema = frame_fn(spark.createDataFrame([], stream_df.schema)).schema
     return (_caller_session(spark).read
             .option("recursiveFileLookup", "true")
-            .schema(seed.schema).parquet(out))
+            .schema(schema).parquet(out))
 
 
 def run_stream_foreach_batch(stream_df: DataFrame, out_dir: str,

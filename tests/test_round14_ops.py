@@ -42,8 +42,9 @@ def test_lm_count_partials_merge_across_batches(spark, sf_dir, tmp_path):
     Also asserts the drain really ran multiple batches (some bigram
     appears in more than one partial row — the merge did work)."""
     from mit_mapreduce_spark.operators.streaming_queries import (
-        lm_bigram_counts_drain, tune,
+        lm_bigram_partials, tune,
     )
+    from mit_mapreduce_spark.streaming import drain_via_batch
 
     tune(spark)
     docs = load_table(spark, sf_dir, "documents")
@@ -61,8 +62,7 @@ def test_lm_count_partials_merge_across_batches(spark, sf_dir, tmp_path):
     schema = spark.read.parquet(stage).schema
     stream = (spark.readStream.schema(schema)
               .option("maxFilesPerTrigger", 1).parquet(stage))
-    parts = lm_bigram_counts_drain(spark, stream,
-                                   str(tmp_path / "lm_parts"))
+    parts = drain_via_batch(stream, lm_bigram_partials, "lm_parts", stage)
     summed = {r.bg: r.df for r in
               parts.groupBy("bg").agg(F.sum("cnt").alias("df")).collect()}
     batch_df = {r.bg: r.df for r in

@@ -21,19 +21,35 @@ WATCHED = ("spark.sql.shuffle.partitions",
            "spark.sql.sources.partitionOverwriteMode")
 
 
-def test_only_session_module_sets_conf_or_starts_pools():
-    pattern = re.compile(r"\.conf\.set\(|ThreadPoolExecutor")
+def _package_hits(pattern: str, allowed: str) -> list[str]:
+    """``module:line`` of every package line matching ``pattern``,
+    outside the one module ``allowed`` (a path relative to the
+    package)."""
+    regex = re.compile(pattern)
     hits = []
     for root, _, files in os.walk(PKG):
         for f in files:
             path = os.path.join(root, f)
-            if not f.endswith(".py") or path == os.path.join(PKG, "session.py"):
+            if not f.endswith(".py") or path == os.path.join(PKG, allowed):
                 continue
             with open(path, encoding="utf-8") as fh:
                 hits += [f"{os.path.relpath(path, PKG)}:{i}"
                          for i, line in enumerate(fh, 1)
-                         if pattern.search(line)]
-    assert hits == []
+                         if regex.search(line)]
+    return hits
+
+
+def test_only_session_module_sets_conf_or_starts_pools():
+    assert _package_hits(r"\.conf\.set\(|ThreadPoolExecutor",
+                         "session.py") == []
+
+
+def test_only_the_drain_calls_foreach_batch():
+    """Every foreachBatch sink is streaming.drain_via_batch: one
+    batch_id-keyed overwrite per micro-batch, so a replayed batch never
+    appends its rows twice."""
+    assert _package_hits(r"\.foreachBatch\(",
+                         os.path.join("streaming", "__init__.py")) == []
 
 
 def test_parallel_legs_orders_results_and_waits_before_raising():
@@ -220,6 +236,32 @@ def test_drain_sinks_of_same_basename_dirs_do_not_collide(spark, sf_dir,
     assert ids(first) == want_a
 
 
+def test_drain_with_no_micro_batch_reads_frame_fn_schema(spark, tmp_path):
+    """A file stream over a source dir with no files runs no micro-batch;
+    the drain still returns a readable 0-row table whose schema is
+    frame_fn's."""
+    from pyspark.sql import functions as F
+
+    from mit_mapreduce_spark.streaming import drain_via_batch
+
+    src = tmp_path / "corpus" / "documents"
+    src.mkdir(parents=True)
+    stream = (spark.readStream.schema("doc_id bigint, text string")
+              .parquet(str(src)))
+    calls = []
+
+    def frame_fn(batch):
+        calls.append(batch.isStreaming)
+        return batch.select("doc_id", F.length("text").alias("n"))
+
+    drained = drain_via_batch(stream, frame_fn, "empty",
+                              str(tmp_path / "corpus"))
+    assert calls == [False]  # the schema call only: no micro-batch ran
+    assert drained.count() == 0
+    assert [(f.name, f.dataType.simpleString())
+            for f in drained.schema] == [("doc_id", "bigint"), ("n", "int")]
+
+
 def test_concurrent_drains_of_one_name_are_refused(spark, sf_dir):
     """While one drain of a (name, sf_dir) runs, every other drain of it
     must raise instead of wiping the first one's sink (eight threads on
@@ -359,8 +401,9 @@ def test_no_module_holds_a_frame_after_the_composites_build(spark, sf_dir):
 
 
 def test_admission_and_lm_count_sinks_are_removed_at_exit(spark, sf_dir):
-    """The two per-application foreachBatch sinks in .scratch are
-    registered for removal at interpreter exit, like drain_via_batch's."""
+    """The admission and LM-count drains sink into drain_via_batch's
+    per-application dirs in .scratch, registered for removal at
+    interpreter exit."""
     from mit_mapreduce_spark import operators
     from mit_mapreduce_spark.streaming import (
         _CLEANUP_REGISTERED, _SCRATCH, sf_key,
@@ -371,6 +414,7 @@ def test_admission_and_lm_count_sinks_are_removed_at_exit(spark, sf_dir):
     for name, prefix in (("stream_ingest_admission", "admit"),
                          ("stream_lm_bigram_counts", "lmcnt")):
         assert operators.QUERIES[name](spark, sf_dir).count()
-        sink = os.path.join(_SCRATCH, f"{prefix}_{sf_key(sf_dir)}_{app}")
+        sink = os.path.join(_SCRATCH,
+                            f"drain_{prefix}_{sf_key(sf_dir)}_{app}")
         assert os.path.isdir(sink)
         assert sink in _CLEANUP_REGISTERED
