@@ -761,9 +761,11 @@ def _screen_buckets(emb: DataFrame,
          for p, row in enumerate(band) for d, w in enumerate(row)],
         "band_idx int, p int, d int, w double")
     nsq = _dot_scaled(F.col("embedding"), F.col("embedding"))
-    ex = emb.select(
-        "vec_id", nsq.alias("nsq"),
-        F.posexplode("embedding").alias("_d0", "_x"))
+    # The norm gets its own select below the explode: sharing the
+    # explode's select puts it in the Project above the Generate,
+    # where the interpreted lambdas run once per dimension (DIM x).
+    ex = emb.select("vec_id", "embedding", nsq.alias("nsq")).select(
+        "vec_id", "nsq", F.posexplode("embedding").alias("_d0", "_x"))
     pdots = (
         ex.join(F.broadcast(pl), ex._d0 + 1 == pl.d)
         .groupBy("vec_id", "nsq", "band_idx", "p")

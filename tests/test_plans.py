@@ -666,3 +666,27 @@ def test_mapreduce_facade_is_one_catalyst_plan(spark, sf_dir):
     assert len(re.findall(r"\(\d+\) Exchange", plan)) == 1, plan
     assert len(re.findall(r"\(\d+\) MapInArrow", plan)) == 2, plan
     assert "Scan ExistingRDD" not in plan, plan
+
+
+def test_screen_norm_is_computed_below_the_explode(spark, sf_dir):
+    """The embed screen's squared norm (interpreted ``zip_with`` /
+    ``aggregate`` lambdas) runs once per vector. Had it shared the
+    ``posexplode`` select, Catalyst would evaluate it in the Project
+    above the Generate: once per exploded dimension, 64x per vector."""
+    from mit_mapreduce_spark.catalog import load_table
+    from mit_mapreduce_spark.operators.similarity import _screen_buckets
+
+    df = _screen_buckets(load_table(spark, sf_dir, "embeddings"))
+    lines = df._jdf.queryExecution().optimizedPlan().toString().split("\n")
+
+    def col(line: str) -> int:  # where a tree line's node name starts
+        return len(line) - len(line.lstrip(" :+-"))
+
+    gens = [i for i, line in enumerate(lines)
+            if "Generate posexplode(embedding" in line]
+    assert gens, "\n".join(lines)
+    for i in gens:
+        parent = next(line for line in reversed(lines[:i])
+                      if col(line) < col(lines[i]))
+        assert not ("Project" in parent and "zip_with" in parent), parent
+    assert "zip_with" in "\n".join(lines[gens[0]:]), "\n".join(lines)

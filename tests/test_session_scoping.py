@@ -418,3 +418,44 @@ def test_admission_and_lm_count_sinks_are_removed_at_exit(spark, sf_dir):
                             f"drain_{prefix}_{sf_key(sf_dir)}_{app}")
         assert os.path.isdir(sink)
         assert sink in _CLEANUP_REGISTERED
+
+
+# Registered queries that compile the most generated classes per
+# second at sf0.001 (census in SCALE.md): one cold pass over them
+# compiles ~190, a warm one ~8. stream_ingest_admission compiles more
+# (~270) but recompiles 20-46 on every warm pass.
+CODEGEN_SET = ("dedup_containment", "pipeline_pack_ready",
+               "dedup_ngram_jaccard", "fk_integrity_audit")
+
+
+def _invalidate_codegen_cache(spark) -> None:
+    """Empty Spark's JVM-wide generated-class cache, so the pass that
+    follows is cold whatever earlier tests in this session compiled."""
+    jvm = spark._jvm
+    field = jvm.java.lang.Class.forName(
+        "org.apache.spark.sql.catalyst.expressions.codegen.CodeGenerator$"
+    ).getDeclaredField("cache")
+    field.setAccessible(True)
+    field.get(None).invalidateAll()
+
+
+def test_a_warm_pass_reuses_generated_classes(spark, sf_dir):
+    """get_spark sizes the codegen cache above the registry's working
+    set: a second pass over the same queries compiles almost nothing.
+    At Spark's default of 100 entries the LRU evicted every class of a
+    pass before its reuse, and each pass compiled them all again."""
+    from mit_mapreduce_spark import operators
+
+    operators.load_all()
+    counter = (spark._jvm.org.apache.spark.metrics.source.CodegenMetrics
+               .METRIC_COMPILATION_TIME())
+    _invalidate_codegen_cache(spark)
+    compiles = []
+    for _ in range(2):
+        before = counter.getCount()
+        for name in CODEGEN_SET:
+            operators.QUERIES[name](spark, sf_dir) \
+                .write.format("noop").mode("overwrite").save()
+        compiles.append(counter.getCount() - before)
+    assert compiles[0] > 150, compiles
+    assert compiles[1] < 0.1 * compiles[0], compiles
