@@ -1645,102 +1645,49 @@ def minhash_screen_frame(spark: SparkSession, sf_dir: str,
                          inc_pred,
                          bands: DataFrame | None = None) -> DataFrame:
     """dedup_minhash_incremental's body over an arbitrary incoming-
-    shard predicate Column — shared by the registered screen and the
-    ingest-admission composition (which uses the media screens'
-    doc_id % 40 < 6 split). ``bands`` overrides the band-hash table
-    (doc_id, band_idx, band_hash) — the persisted-index round-trip
-    pytest passes the table the streaming maintenance leg drained to
-    parquet, proving the candidate generator is a pure function of
-    the maintained index (exact-Jaccard verification still reads the
-    candidates' shingle sets, the corpus-side table a production
-    deployment persists alongside)."""
-    from pyspark.sql import Window as W
-
+    shard predicate Column: the corpus is shingled and signed once,
+    split into incoming and retained sides by ``inc_pred``, and
+    screened by the explicit-sides verdict tail
+    minhash_screen_expr_over also runs. ``bands`` overrides the
+    band-hash table (doc_id, band_idx, band_hash) — the
+    persisted-index round-trip pytest passes the table the streaming
+    maintenance leg drained to parquet, proving the candidate
+    generator is a pure function of the maintained index
+    (exact-Jaccard verification still reads the candidates' shingle
+    sets, the corpus-side table a production deployment persists
+    alongside)."""
     docs = load_table(spark, sf_dir, "documents")
     sh = shingles_df(docs).localCheckpoint(eager=False)
     sigs = _minhash_sigs(sh).localCheckpoint(eager=False)
     if bands is None:
         bands = _band_hashes(sigs)
-
-    ib = bands.where(inc_pred).select(
-        F.col("doc_id").alias("iid"), "band_idx", "band_hash")
-    xb = bands.where(~inc_pred).select(
-        F.col("doc_id").alias("cid"), "band_idx", "band_hash")
-    cand = (ib.join(xb, ["band_idx", "band_hash"])
-            .select("iid", "cid").distinct())
-
     sizes = sigs.select("doc_id", "n")
-    sa = sh.alias("sa")
-    sb = sh.alias("sb")
-    inter = (
-        cand.join(sa, F.col("sa.doc_id") == F.col("iid"))
-        .join(sb, (F.col("sb.doc_id") == F.col("cid"))
-              & (F.col("sb.shingle") == F.col("sa.shingle")))
-        .groupBy("iid", "cid")
-        .agg(F.count("*").alias("n_inter"))
-    )
-    za = sizes.alias("za")
-    zb = sizes.alias("zb")
-    jac = (F.col("n_inter").cast("double")
-           / (F.col("za.n") + F.col("zb.n") - F.col("n_inter")))
-    inrad = (
-        inter.join(za, F.col("za.doc_id") == F.col("iid"))
-        .join(zb, F.col("zb.doc_id") == F.col("cid"))
-        .select("iid", "cid", jac.alias("jaccard"))
-        .where(F.col("jaccard") >= JACCARD_MIN)
-    )
-    w = W.partitionBy("iid").orderBy(F.col("jaccard").desc(), "cid")
-    best = (inrad.withColumn("rn", F.row_number().over(w))
-            .where(F.col("rn") == 1).drop("rn"))
-    return (
-        docs.select("doc_id").where(inc_pred)
-        .join(best, F.col("iid") == F.col("doc_id"), "left")
-        .select("doc_id",
-                F.col("cid").cast("bigint").alias("matched_id"),
-                "jaccard",
-                F.col("cid").isNotNull().alias("is_neardup"))
-    )
-
-
-def minhash_screen_over(inc_docs: DataFrame, corpus_sh: DataFrame,
-                        corpus_sizes: DataFrame,
-                        corpus_bands: DataFrame) -> DataFrame:
-    """The incremental MinHash screen with EXPLICIT sides (r13): the
-    incoming docs frame (doc_id, text — e.g. one streaming admission
-    micro-batch) is shingled/signed/banded on the spot; candidates
-    come from its band hashes equi-joined against the PERSISTED
-    corpus band index; exact-Jaccard verification reads the incoming
-    shingles and the corpus shingle table (both maintainable at
-    ingest — the corpus text is never re-shingled). Returns one row
-    per incoming doc (doc_id, matched_id, jaccard, is_neardup) —
-    minhash_screen_frame's verdict contract, pytest-pinned equal on
-    matching splits."""
-    sh_i = shingles_df(inc_docs).localCheckpoint(eager=False)
-    sigs_i = _minhash_sigs(sh_i).localCheckpoint(eager=False)
-    ib = _band_hashes(sigs_i).select(
-        F.col("doc_id").alias("iid"), "band_idx", "band_hash")
-    return _screen_verdict_tail(
-        inc_docs, ib, sh_i, sigs_i.select("doc_id", "n"),
-        corpus_sh, corpus_sizes, corpus_bands)
+    return _screen_verdict_tail(docs.where(inc_pred), bands.where(inc_pred),
+                                sh, sizes, sh, sizes, bands.where(~inc_pred))
 
 
 def minhash_screen_expr_over(inc_docs: DataFrame, corpus_sh: DataFrame,
                              corpus_sizes: DataFrame,
                              corpus_bands: DataFrame) -> DataFrame:
-    """minhash_screen_over with the incoming side computed by the
-    stateless EXPRESSION family (r14): the batch's shingle sets,
-    set sizes, and band hashes all come from ONE per-row select
-    (_expr_shingle_frame + the shared seed-min/band builders — the
-    exact spellings stream_minhash_bands drains), so a micro-batch
-    pays zero shuffles and a fraction of the plan-construction cost
-    before the candidate equi-join. Same verdict tail, pinned equal
-    to minhash_screen_over by the admission oracle and the expr/batch
-    band-parity pytest."""
+    """The incremental MinHash screen with EXPLICIT sides (r13), the
+    streaming admission's text near-dup leg: the incoming docs frame
+    (doc_id, text — e.g. one admission micro-batch) is shingled,
+    signed and banded on the spot by the stateless EXPRESSION family
+    (r14): shingle sets, set sizes and band hashes all come from ONE
+    per-row select (_expr_shingle_frame + the shared seed-min/band
+    builders — the exact spellings stream_minhash_bands drains), so a
+    micro-batch pays zero shuffles before the candidate equi-join
+    against the PERSISTED corpus band index; exact-Jaccard
+    verification reads the incoming shingles and the corpus shingle
+    table (both maintainable at ingest — the corpus text is never
+    re-shingled). Returns minhash_screen_frame's verdict contract
+    (doc_id, matched_id, jaccard, is_neardup), pinned equal by the
+    admission oracle and the expr/batch band-parity pytest."""
     staged = (_expr_shingle_frame(inc_docs)
               .select("doc_id", "_sh", *_expr_seed_mins())
               .localCheckpoint(eager=False))
     ib = staged.select(
-        F.col("doc_id").alias("iid"),
+        "doc_id",
         F.posexplode(_expr_band_array()).alias("band_idx", "band_hash"))
     sh_i = staged.select("doc_id", F.explode("_sh").alias("shingle"))
     sizes_i = staged.select(
@@ -1749,15 +1696,18 @@ def minhash_screen_expr_over(inc_docs: DataFrame, corpus_sh: DataFrame,
                                 corpus_sh, corpus_sizes, corpus_bands)
 
 
-def _screen_verdict_tail(inc_docs: DataFrame, ib: DataFrame,
+def _screen_verdict_tail(inc_docs: DataFrame, inc_bands: DataFrame,
                          sh_i: DataFrame, sizes_i: DataFrame,
                          corpus_sh: DataFrame, corpus_sizes: DataFrame,
                          corpus_bands: DataFrame) -> DataFrame:
-    """Shared verdict tail of the explicit-sides MinHash screens:
-    band-hash candidate equi-join, exact-Jaccard verification over
-    the two shingle tables, best-match window, left-join verdict."""
+    """The ONE MinHash screen verdict tail (batch and per-micro-batch
+    forms): band-hash candidate equi-join of the two (doc_id,
+    band_idx, band_hash) sides, exact-Jaccard verification over the
+    two shingle tables, best-match window, left-join verdict."""
     from pyspark.sql import Window as W
 
+    ib = inc_bands.select(
+        F.col("doc_id").alias("iid"), "band_idx", "band_hash")
     xb = corpus_bands.select(
         F.col("doc_id").alias("cid"), "band_idx", "band_hash")
     cand = (ib.join(xb, ["band_idx", "band_hash"])

@@ -1293,171 +1293,33 @@ def pipeline_ingest_admission(spark: SparkSession,
     seven-way AND a production gate enforces before the asset ever
     reaches storage.
 
-    100 TB posture: every leg is the screen-shaped op it composes —
-    the text gate is one broadcast-size fingerprint semi-join (the
-    shard's fingerprints vs the corpus fingerprint set, never the
-    corpus rows), the semantic gate is a one-sided (band, bucket)
-    equi-join against the persisted 4-ints/vector LSH index with
-    exact cosine verification on candidates only, the media screens
-    are one-sided band equi-joins against the 16-byte/asset signature
-    index the streaming legs maintain, the quality screens decode the
-    SHARD only, the PII count is a pure projection, and the
-    contamination probe is a broadcast gram join (benchmark suites
-    are tiny next to the corpus) — the retained corpus is never
-    re-decoded. The nine eager legs overlap as parallel legs like the
-    manifest's; every call builds them afresh, so no checkpointed leg
+    ONE composition: the whole incoming shard is a single
+    micro-batch of the streaming twin — admission_batch_frame over
+    admission_static_ctx, the same legs stream_ingest_admission runs
+    per batch — so the batch table and the drain cannot drift (the
+    reference's mrsequential/mr split: one Map/Reduce pair under two
+    drivers). 100 TB posture: every leg is the screen-shaped op it
+    composes — the text gate is one fingerprint semi-join against the
+    corpus fingerprint set, the near-dup and semantic gates are
+    one-sided band/bucket equi-joins against the corpus indexes with
+    exact verification on candidates only, the media screens decode
+    the SHARD only against the 16-byte/asset signature indexes, the
+    PII count is a pure projection and the contamination probe a
+    broadcast gram join — the retained corpus is never re-decoded.
+    Every call builds the static sides afresh, so no checkpointed leg
     outlives its query. Oracle: one composition of the funnel CTEs,
     IN-subqueries for the text/clean gates, and seven
     presence-filtered WITH-subqueries (screens + quality +
     embedding)."""
-    from mit_mapreduce_spark.operators.curation import (
-        _letter_tokens, _ngram_arr, CONTAM_NGRAM, EMAIL_RE, EVAL_MOD,
-        gopher_quality_rules, ID_RE, IP_RE,
-        PHONE_RE, pii_payload_col, quality_repetition,
-    )
-    from mit_mapreduce_spark.operators.mmquality import (
-        _audio_screen_from, _image_screen_from, _video_screen_from,
-    )
-    from mit_mapreduce_spark.operators.multimodal import (
-        _phash_batch, _phash_image_assets_from,
-    )
-    from mit_mapreduce_spark.operators.similarity import embed_screen_frame
-    from mit_mapreduce_spark.operators.textstats import quality_lm_bigram
-
     docs = load_table(spark, sf_dir, "documents")
-    inc_pred = inc_shard_col("doc_id")
-    norm_fp = norm_fp_col()
-    pii_mod, pii_rem = PII_SEED
-    # the PII count is a pure projection (regex expressions over the
-    # door doc's text, PII seeded into the fixture subset) — computed
-    # inline on the shard frame, no leg, no join; a NULL text carries
-    # no PII (COALESCE on BOTH engines — without it Spark's CAST
-    # keeps the NULL while DuckDB's CASE folds it to 0, a fuzz find).
-    # r13: the four-pattern battery (email, IPv4, phone, ID class).
-    payload = F.when(F.col("doc_id") % pii_mod == pii_rem,
-                     pii_payload_col()).otherwise(F.col("text"))
-    n_pii = F.coalesce(
-        (F.size(F.regexp_extract_all(payload, F.lit(EMAIL_RE), F.lit(0)))
-         + F.size(F.regexp_extract_all(payload, F.lit(IP_RE), F.lit(0)))
-         + F.size(F.regexp_extract_all(payload, F.lit(PHONE_RE),
-                                       F.lit(0)))
-         + F.size(F.regexp_extract_all(payload, F.lit(ID_RE), F.lit(0)))
-         ).cast("bigint"),
-        F.lit(0).cast("bigint"))
-    inc_docs = docs.where(inc_pred).select(
-        "doc_id", "lang", "source", n_pii.alias("_npii"),
-        *[am_media_flag(a) for a in AM_MEDIA_FLAGS.values()])
-    def _text_dup_leg():
-        corpus_fps = (docs.where(~inc_pred)
-                      .where(F.col("text").isNotNull())
-                      .select(norm_fp.alias("_fp")).distinct())
-        return (docs.where(inc_pred)
-                .where(F.col("text").isNotNull())
-                .select("doc_id", norm_fp.alias("_fp"))
-                .join(corpus_fps, "_fp", "left_semi")
-                .select("doc_id", F.lit(True).alias("_tdup")))
-
-    def _text_neardup_leg():
-        # the MinHash screen on the admission's shard split — exact
-        # catches reposts, this catches light edits (the text twin of
-        # the media fingerprint gates)
-        from mit_mapreduce_spark.operators.dedup import (
-            minhash_screen_frame,
-        )
-
-        return minhash_screen_frame(spark, sf_dir,
-                                    inc_shard_col("doc_id")) \
-            .select("doc_id", F.col("is_neardup").alias("_mhnd")) \
-            .localCheckpoint(eager=True)
-
-    def _screen_leg(col, fixture_from, kernel, absent, geom):
-        owners = _present_docs(spark, sf_dir, absent)
-        sigs = (fixture_from(owners)
-                .mapInPandas(kernel, _PHASH_SCHEMA)
-                .localCheckpoint(eager=False))
-        inc_assets = owners.select(F.col("doc_id").alias("asset_id")) \
-            .where(inc_shard_col())
-        return incremental_screen(
-            inc_assets, sigs.where(inc_shard_col()),
-            sigs.where(~inc_shard_col()), *geom) \
-            .select(F.col("asset_id").alias("doc_id"),
-                    F.col("is_neardup").alias(col)) \
-            .localCheckpoint(eager=True)
-
-    def _quality_leg(col, screen_from, absent):
-        shard_owned = (
-            asset_manifest_media(spark, sf_dir)
-            .where(inc_pred & F.col(_ABSENT_TO_FLAG[absent]))
-            .select("doc_id"))
-        return screen_from(shard_owned) \
-            .select(F.col("asset_id").alias("doc_id"),
-                    F.col("passes").alias(col)) \
-            .localCheckpoint(eager=True)
-
-    def _semantic_leg():
-        # the embedding screen on the same shard split over vec_id —
-        # the gate that catches a paraphrased repost (r12); vectors
-        # are owned per the embeddings table itself, so absence is
-        # data-driven
-        return embed_screen_frame(spark, sf_dir, inc_col("vec_id")) \
-            .select(F.col("vec_id").alias("doc_id"),
-                    F.col("is_neardup").alias("_snd")) \
-            .localCheckpoint(eager=True)
-
-    def _contam_leg():
-        # distinct shared CONTAM_NGRAM-grams between each shard doc
-        # and the (broadcast) eval-set gram table — the
-        # contamination_ngrams probe, shard-sided
-        grams = (docs.select("doc_id", _letter_tokens().alias("_toks"))
-                 .select("doc_id",
-                         F.explode(F.array_distinct(
-                             _ngram_arr(CONTAM_NGRAM))).alias("gram")))
-        eval_g = (grams.where(F.col("doc_id") % EVAL_MOD == 0)
-                  .select("gram").distinct())
-        return (grams.where(inc_pred & (F.col("doc_id") % EVAL_MOD != 0))
-                .join(F.broadcast(eval_g), "gram")
-                .groupBy("doc_id")
-                .agg(F.countDistinct("gram").alias("_nsh"))
-                .localCheckpoint(eager=True))
-
-    # the three per-doc quality frames build as legs too (r14): their
-    # construction is driver-side analysis work that overlaps with the
-    # heavy legs' planning like everything else
-    g, r, lm, td, mh, sem, ct, *legs = parallel_legs(
-        lambda: gopher_quality_rules(spark, sf_dir)
-        .select("doc_id", F.col("passes").alias("_g")),
-        lambda: quality_repetition(spark, sf_dir)
-        .select("doc_id", F.col("passes").alias("_r")),
-        lambda: quality_lm_bigram(spark, sf_dir)
-        .select("doc_id", "novelty"),
-        _text_dup_leg, _text_neardup_leg, _semantic_leg, _contam_leg,
-        *(partial(_screen_leg, col, fixture_from, kernel, absent, geom)
-          for col, fixture_from, kernel, absent, geom in (
-              ("_ind", _phash_image_assets_from, _phash_batch,
-               MM_IMAGE_ABSENT, (PH_BANDS, PH_BAND_BITS, PH_HAM_MAX)),
-              ("_and", _fingerprint_audio_assets_from, _afp_batch,
-               MM_AUDIO_ABSENT, (FP_BANDS, FP_BAND_BITS, FP_HAM_MAX)),
-              ("_vnd", _fingerprint_video_assets_from, _vfp_batch,
-               MM_VIDEO_ABSENT, (FP_BANDS, FP_BAND_BITS, FP_HAM_MAX)))),
-        *(partial(_quality_leg, col, screen_from, absent)
-          for col, screen_from, absent in (
-              ("_iqp", _image_screen_from, MM_IMAGE_ABSENT),
-              ("_aqp", _audio_screen_from, MM_AUDIO_ABSENT),
-              ("_vqp", _video_screen_from, MM_VIDEO_ABSENT))))
-
-    m = (inc_docs.join(td, "doc_id", "left").join(mh, "doc_id", "left")
-         .join(sem, "doc_id", "left").join(ct, "doc_id", "left")
-         .join(g, "doc_id").join(r, "doc_id").join(lm, "doc_id", "left"))
-    for leg in legs:
-        m = m.join(leg, "doc_id", "left")
-    return _admission_verdicts(m)
+    return admission_batch_frame(spark, sf_dir,
+                                 docs.where(inc_shard_col("doc_id")),
+                                 admission_static_ctx(spark, sf_dir))
 
 
 def _admission_verdicts(m: DataFrame) -> DataFrame:
-    """The seven keep bits + admit over the joined leg frame — ONE
-    spelling shared by the batch composition and the streaming
-    twin's per-micro-batch frames (r13), so the gate semantics
-    cannot drift between the two surfaces."""
+    """The seven keep bits + admit over admission_batch_frame's
+    joined leg frame."""
     from mit_mapreduce_spark.operators.curation import (
         EVAL_MOD, FUNNEL_MAX_NOVELTY,
     )
@@ -1509,17 +1371,20 @@ _ADMISSION_CTX_MEMO: dict = {}
 
 
 def admission_static_ctx(spark: SparkSession, sf_dir: str) -> dict:
-    """The admission gates' STATIC sides, built once per call and
-    shared across that stream's micro-batches: the corpus
-    fingerprint set, the corpus MinHash band index + shingle table +
-    set sizes, the embedding bucket index, the three media signature
-    indexes, the per-doc text-quality verdict tables (corpus-wide
-    statistics by definition — the bigram LM is trained on the whole
-    table), the eval-set gram table, and the asset manifest. Every
-    entry is the SAME construction the batch admission composes; in
-    production each is a persisted table a streaming maintenance leg
-    keeps current (stream_text_fingerprints, stream_minhash_bands,
-    stream_embedding_index, stream_*_fingerprints)."""
+    """The admission gates' STATIC sides, built once per call: the
+    corpus fingerprint set, the corpus MinHash band index + shingle
+    table + set sizes, the embedding bucket index, the three media
+    signature indexes, the per-doc text-quality verdict tables, the
+    eval-set gram table, and the asset manifest. The verdict tables
+    hold the incoming shard's rows only: every admitted doc, batch or
+    stream, is a shard doc, and a checkpoint stops Catalyst from
+    pushing that filter into the per-doc rules itself (the bigram LM
+    is still trained on the whole table). The batch admission uses it for its one whole-shard
+    frame, the streaming twin shares it across its micro-batches; in
+    production each entry is a persisted table a streaming
+    maintenance leg keeps current (stream_text_fingerprints,
+    stream_minhash_bands, stream_embedding_index,
+    stream_*_fingerprints)."""
     from mit_mapreduce_spark.operators.curation import (
         _letter_tokens, _ngram_arr, CONTAM_NGRAM, EVAL_MOD,
         gopher_quality_rules, quality_repetition,
@@ -1548,9 +1413,9 @@ def admission_static_ctx(spark: SparkSession, sf_dir: str) -> dict:
     # the toRdd PHYSICAL planning at construction — measured 8.9 s of
     # pure driver-side work when the ~15 legs built serially (no job
     # runs; the box sat idle on one core of py4j/analyzer work). The
-    # independent legs now build as parallel legs like the batch
-    # admission's — py4j releases the GIL on JVM calls, so the
-    # analyzer/planner work overlaps (measured 8.9 -> ~3 s). Legs
+    # independent legs now build as parallel legs — py4j releases
+    # the GIL on JVM calls, so the analyzer/planner work overlaps
+    # (measured 8.9 -> ~3 s). Legs
     # with real dependencies chain INSIDE one leg (sh -> sigs ->
     # bands; bk -> sides) so nothing waits on an unrelated leg.
     def _text_legs():
@@ -1588,13 +1453,13 @@ def admission_static_ctx(spark: SparkSession, sf_dir: str) -> dict:
                 _ngram_arr(CONTAM_NGRAM))).alias("gram"))
             .distinct()),
         lambda: lazy(
-            gopher_quality_rules(spark, sf_dir)
+            gopher_quality_rules(spark, sf_dir).where(inc_pred)
             .select("doc_id", F.col("passes").alias("_g"))),
         lambda: lazy(
-            quality_repetition(spark, sf_dir)
+            quality_repetition(spark, sf_dir).where(inc_pred)
             .select("doc_id", F.col("passes").alias("_r"))),
         lambda: lazy(
-            quality_lm_bigram(spark, sf_dir)
+            quality_lm_bigram(spark, sf_dir).where(inc_pred)
             .select("doc_id", "novelty")),
         lambda: lazy(asset_manifest_media(spark, sf_dir)),
         *(partial(_media_leg, nd, qp, absent, fixture_from, kernel, geom,
@@ -1637,28 +1502,31 @@ def admission_static_ctx(spark: SparkSession, sf_dir: str) -> dict:
 
 def admission_batch_frame(spark: SparkSession, sf_dir: str,
                           batch_docs: DataFrame, ctx: dict) -> DataFrame:
-    """ONE micro-batch's admission verdicts (r13): the arriving docs
-    frame (doc_id, text, lang, source — the stream's own rows) is
-    fingerprinted / shingled / bucketed / decoded ON THE SPOT and
-    joined against the persisted static sides in ``ctx`` — per-batch
-    cost scales with the batch, the corpus is never re-read beyond
-    the checkpointed index tables. The verdict tail is
-    _admission_verdicts, the identical spelling the batch admission
-    composes, and every leg mirrors pipeline_ingest_admission's with the
-    shard side swapped for the batch:
+    """The admission verdicts of one frame of arriving docs (r13): a
+    streaming micro-batch, or the whole incoming shard for the batch
+    pipeline_ingest_admission. The docs frame (doc_id, text, lang,
+    source) is fingerprinted / shingled / bucketed / decoded ON THE
+    SPOT and joined against the persisted static sides in ``ctx`` —
+    per-batch cost scales with the batch, the corpus is never re-read
+    beyond the checkpointed index tables. The verdict tail is
+    _admission_verdicts:
 
     - keep_text: batch fps left-semi the corpus fingerprint set +
-      minhash_screen_over (batch shingles vs the corpus band index)
+      minhash_screen_expr_over (batch shingles vs the corpus band
+      index)
     - keep_semantic: embed_screen_frame over the shared bucket index,
       incoming side restricted to the batch's vec_ids
-    - keep_quality: the corpus-wide verdict tables joined by doc_id
-      (per-doc rules are pure projections; the LM novelty is a
-      corpus statistic, read from the maintained table)
+    - keep_quality: the shard's verdict tables joined by doc_id
+      (per-doc rules are pure projections; the LM novelty scores the
+      doc against corpus statistics, read from the maintained table)
     - keep_clean: PII regexes on the batch's own text + batch grams
       vs the broadcast eval gram table
-    - keep_{image,audio,video}: the batch's owned assets decoded and
-      screened against the persisted signature indexes + per-asset
-      quality screens, ownership read from the manifest columns.
+    - keep_{image,audio,video}: the batch's owned assets (the
+      manifest columns) decoded and screened against the persisted
+      signature indexes + per-asset quality screens; the keep bit's
+      presence flags are the manifest generator's own projection
+      (am_media_flag) on the batch rows — a join against the manifest
+      would cost one more Exchange for the same columns.
 
     Per-batch cost surgery (r14, VERDICT r13 ask #2). Measured
     decomposition of the old ~8.6 s/batch fixture-volume floor
@@ -1680,9 +1548,8 @@ def admission_batch_frame(spark: SparkSession, sf_dir: str,
       hashes in ONE per-row select — no explode+groupBy-MIN shuffle
       and a fraction of the plan ops.
 
-    The batch pipeline_ingest_admission keeps eager checkpoints: its
-    legs materialize corpus-sized intermediates the composed query
-    reuses — a trade that only pays when the inputs are corpus-sized."""
+    The batch pipeline_ingest_admission is this frame over the whole
+    shard; it has no eager legs of its own."""
     from mit_mapreduce_spark.operators.curation import (
         EMAIL_RE, EVAL_MOD, ID_RE, IP_RE, PHONE_RE, pii_payload_col,
     )
@@ -1697,6 +1564,11 @@ def admission_batch_frame(spark: SparkSession, sf_dir: str,
     # job submission per micro-batch
     batch_docs = batch_docs.localCheckpoint(eager=False)
     ids = batch_docs.select("doc_id")
+    # the PII count is a pure projection (regex expressions over the
+    # door doc's text, PII seeded into the fixture subset); a NULL text
+    # carries no PII (COALESCE on BOTH engines — without it Spark's
+    # CAST keeps the NULL while DuckDB's CASE folds it to 0, a fuzz
+    # find). r13: the four-pattern battery (email, IPv4, phone, ID).
     pii_mod, pii_rem = PII_SEED
     payload = F.when(F.col("doc_id") % pii_mod == pii_rem,
                      pii_payload_col()).otherwise(F.col("text"))
@@ -1708,10 +1580,9 @@ def admission_batch_frame(spark: SparkSession, sf_dir: str,
          + F.size(F.regexp_extract_all(payload, F.lit(ID_RE), F.lit(0)))
          ).cast("bigint"),
         F.lit(0).cast("bigint"))
-    inc_docs = (batch_docs
-                .select("doc_id", "lang", "source",
-                        n_pii.alias("_npii"))
-                .join(ctx["manifest"], "doc_id"))
+    inc_docs = batch_docs.select(
+        "doc_id", "lang", "source", n_pii.alias("_npii"),
+        *[am_media_flag(a) for a in AM_MEDIA_FLAGS.values()])
 
     def leaf(df: DataFrame) -> DataFrame:
         # lazy checkpoint = leaf plan; nothing executes until the

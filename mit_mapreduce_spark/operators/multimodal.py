@@ -123,11 +123,10 @@ _ASSET_MIME = {"ppm": "image/x-portable-pixmap",
 
 def asset_format(asset_id: int) -> str:
     """Container-format routing shared by the encode kernel and the
-    tests: every 4th asset is JPEG (the lossy leg — by default a
-    deterministic pseudo-JPEG whose real SOF0 header carries true
-    dimensions while its missing scan data exercises the pixel
-    kernels' quarantine dispatch; real PIL encode only behind
-    SPARK_GRAFT_REAL_JPEG=1, see _encode_jpeg); the rest keep the
+    tests: every 4th asset is JPEG (the lossy leg — a deterministic
+    pseudo-JPEG whose real SOF0 header carries true dimensions while
+    its missing scan data exercises the pixel kernels' quarantine
+    dispatch, see _encode_jpeg); the rest keep the
     round-5 ``% 3`` PPM/BMP/PNG lossless routing."""
     if asset_id % _JPEG_MOD == 3:
         return "jpeg"
@@ -135,9 +134,9 @@ def asset_format(asset_id: int) -> str:
 
 
 def _encode_jpeg(w: int, h: int, rgb: bytes) -> bytes:
-    """JPEG leg. DEFAULT (every box): a deterministic pseudo-JPEG —
-    SOI + APP0 JFIF + COM (md5 of the pixels) + a REAL SOF0 frame
-    header carrying the true dimensions (r8, VERDICT r7 #5) + EOI.
+    """JPEG leg: a deterministic pseudo-JPEG — SOI + APP0 JFIF + COM
+    (md5 of the pixels) + a REAL SOF0 frame header carrying the true
+    dimensions (r8, VERDICT r7 #5) + EOI.
     The SOF0 means header-only tooling (`imagecodec.jpeg_dimensions`,
     the `multimodal_image_meta` query) parses honest width/height with
     zero codec dependency; there is still no entropy-coded scan, so
@@ -145,26 +144,10 @@ def _encode_jpeg(w: int, h: int, rgb: bytes) -> bytes:
     resize md5 stand-in — the corrupt-input path of a 100 TB image
     pipeline, hit by registered queries instead of only unit tests).
 
-    PIL's real encoder runs ONLY behind SPARK_GRAFT_REAL_JPEG=1
-    (ADVICE r7 #4: PIL presence AND PIL/libjpeg versions change
-    payload bytes, so an implicit PIL path made ~25% of image_assets
-    environment-dependent; with the flag unset the corpus is
-    bit-identical on every machine, and payload-derived values stay
-    safely rows-only — they must never enter a hash-gated oracle)."""
-    import os
-
-    if os.environ.get("SPARK_GRAFT_REAL_JPEG") == "1":
-        try:
-            import io
-
-            from PIL import Image
-
-            img = Image.frombytes("RGB", (w, h), rgb)
-            buf = io.BytesIO()
-            img.save(buf, format="JPEG", quality=90)
-            return buf.getvalue()
-        except ImportError:
-            pass  # flagged but no PIL: deterministic form below
+    No real encoder (ADVICE r7 #4): PIL presence AND PIL/libjpeg
+    versions change payload bytes, so a PIL path made ~25% of
+    image_assets environment-dependent; this form keeps the corpus
+    bit-identical on every machine."""
     import struct as _struct
 
     app0 = b"JFIF\x00\x01\x02\x00\x00\x01\x00\x01\x00\x00"
@@ -395,11 +378,11 @@ def multimodal_image_meta(spark: SparkSession, sf_dir: str) -> DataFrame:
     dimensions independently from doc_id (`asset_format`'s routing and
     image_assets' size formulas), so the check proves the parsers read
     back exactly what the encoders wrote — including real JPEG
-    dimensions on PIL-less boxes, since the default pseudo-JPEG
-    carries a true SOF0 frame header. Safe under the gate because NO
-    payload-derived bytes appear in the output (ADVICE r7 #4: payload
-    bytes are env-dependent only behind SPARK_GRAFT_REAL_JPEG=1, and
-    a real JPEG's SOF0 holds the same true dimensions anyway)."""
+    dimensions, since the pseudo-JPEG carries a true SOF0 frame
+    header. Safe under the gate because NO
+    payload-derived bytes appear in the output (ADVICE r7 #4: a real
+    encoder's payload bytes would be env-dependent, while its SOF0
+    would hold the same true dimensions anyway)."""
     assets = image_assets(spark, sf_dir)
     return (
         assets.select("asset_id", "payload")

@@ -58,9 +58,7 @@ def _tuning() -> dict[str, str]:
         # shuffle volumes partitions are >= 64 MB (advisory size), so a
         # 64 KB floor never binds and plans are unchanged at scale — it
         # only stops the degenerate tiny-shuffle collapse on any cluster.
-        # Parameterised for ops override.
-        "spark.sql.adaptive.coalescePartitions.minPartitionSize":
-            os.environ.get("SPARK_GRAFT_AQE_MIN_PARTITION", "64k"),
+        "spark.sql.adaptive.coalescePartitions.minPartitionSize": "64k",
         # Arrow batches for pandas UDF / mapInPandas / toPandas paths.
         "spark.sql.execution.arrow.pyspark.enabled": "true",
         # Split scans at 32 MB so a single-file fixture table still fans

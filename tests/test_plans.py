@@ -603,17 +603,19 @@ def test_round11_quality_shuffle_budgets(spark, sf_dir, name, budget):
 
 
 @pytest.mark.parametrize("name,budget", [
-    ("pipeline_ingest_admission", 16),   # 10 doc_id joins over
-                                         # checkpointed screen legs
-                                         # (incl. the r12 semantic +
-                                         # contamination legs, which
+    ("pipeline_ingest_admission", 11),   # admission_batch_frame over
+                                         # the whole shard: doc_id joins
+                                         # over lazily checkpointed
+                                         # legs (the semantic,
+                                         # contamination and shard-
+                                         # sized verdict legs
                                          # broadcast) + the text-gate
                                          # semi-join and funnel aggs
-    ("pipeline_ingest_report", 17),      # + the rollup's agg exchange
+    ("pipeline_ingest_report", 12),      # + the rollup's agg exchange
 ])
 def test_round11_admission_shuffle_budgets(spark, sf_dir, name, budget):
-    """The admission pair composes checkpointed screen legs over
-    doc_id equi-joins — a budget breach means a leg started
+    """The admission pair composes lazily checkpointed screen legs
+    over doc_id equi-joins — a budget breach means a leg started
     re-shuffling inside the composition; no cartesian anywhere."""
     df = QUERIES[name](spark, sf_dir)
     n = plans.shuffle_count(df)
@@ -635,15 +637,14 @@ def test_minhash_bands_expr_frame_is_shuffle_free(spark, sf_dir):
     assert "CartesianProduct" not in plans.formatted_plan(df)
 
 
-def test_minhash_screen_over_no_cartesian(spark, sf_dir):
-    """The per-micro-batch MinHash screen (r13, the streaming
-    admission's text near-dup leg): candidates come from a
-    (band_idx, band_hash) equi-join against the persisted corpus
-    band index — never an all-pairs product, whatever frames are
-    passed for the two sides."""
+def test_minhash_screen_expr_over_no_cartesian(spark, sf_dir):
+    """The per-micro-batch MinHash screen (r13, the admission's text
+    near-dup leg): candidates come from a (band_idx, band_hash)
+    equi-join against the persisted corpus band index — never an
+    all-pairs product, whatever frames are passed for the two sides."""
     from mit_mapreduce_spark.catalog import load_table
     from mit_mapreduce_spark.operators.dedup import (
-        _band_hashes, _minhash_sigs, minhash_screen_over, shingles_df,
+        _band_hashes, _minhash_sigs, minhash_screen_expr_over, shingles_df,
     )
 
     docs = load_table(spark, sf_dir, "documents")
@@ -651,8 +652,8 @@ def test_minhash_screen_over_no_cartesian(spark, sf_dir):
     corpus = docs.where(~(F.col("doc_id") % 40 < 6))
     sh_c = shingles_df(corpus)
     sigs_c = _minhash_sigs(sh_c)
-    df = minhash_screen_over(inc, sh_c, sigs_c.select("doc_id", "n"),
-                             _band_hashes(sigs_c))
+    df = minhash_screen_expr_over(inc, sh_c, sigs_c.select("doc_id", "n"),
+                                  _band_hashes(sigs_c))
     assert "CartesianProduct" not in plans.formatted_plan(df)
 
 
