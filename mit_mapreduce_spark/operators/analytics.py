@@ -28,6 +28,7 @@ from pyspark.sql import functions as F
 from mit_mapreduce_spark.catalog import load_table
 from mit_mapreduce_spark.functions.numeric import davg, dsum, sql_davg, sql_dsum
 from mit_mapreduce_spark.operators.registry import query
+from mit_mapreduce_spark.session import materialize
 
 
 # --- Q4-shaped: EXISTS decorrelated to a left-semi join -------------------
@@ -341,10 +342,10 @@ def pagerank_trade(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(F.count("*").alias("w"))
     )
     outw = edges.groupBy("src").agg(F.sum("w").cast("bigint").alias("ow"))
-    share = (
+    # cut the fact-join lineage before iterating
+    share = materialize(
         edges.join(outw, "src")
         .select("src", "dst", F.expr(f"(w * {PR_SHARE}) div ow").alias("p"))
-        .localCheckpoint(eager=False)  # cut the fact-join lineage before iterating
     )
     nodes = n.select(F.col("n_nationkey").alias("v"))
     cnt = F.broadcast(n.agg(F.count("*").alias("nn")))
@@ -731,8 +732,7 @@ _SQL_OLS_TREND = f"""
 """
 
 
-def _ols_monthly_fit(spark: SparkSession, sf_dir: str,
-                     stage: bool = False):
+def _ols_monthly_fit(spark: SparkSession, sf_dir: str):
     """Shared stage-1/stage-2 frames for the OLS pair: (monthly, fit).
     monthly = exact BIGINT revenue units per (nation, month), NULL-x
     (NULL o_orderdate) and NULL-sum months excluded (both coordinates
@@ -741,11 +741,10 @@ def _ols_monthly_fit(spark: SparkSession, sf_dir: str,
     f_nationkey so callers can join it back against monthly without
     ambiguity).
 
-    ``stage=True`` localCheckpoints monthly before deriving fit —
-    callers that consume BOTH frames (ols_residual_outliers joins
-    monthly against fit) otherwise execute the orders⋈customer
-    aggregate twice (VERDICT r8 ask #5, the retrieval-leg staging
-    discipline). The trend op consumes only fit and skips the stage.
+    A caller that reads BOTH frames (ols_residual_outliers joins
+    monthly against fit) plans the orders⋈customer aggregate twice;
+    that measured faster than a checkpoint of monthly (SCALE.md, "One
+    materialization call").
     """
     o = load_table(spark, sf_dir, "orders")
     c = load_table(spark, sf_dir, "customer")
@@ -757,8 +756,6 @@ def _ols_monthly_fit(spark: SparkSession, sf_dir: str,
               * 10000).cast("bigint").alias("y"))
         .where(F.col("x").isNotNull() & F.col("y").isNotNull())
     )
-    if stage:
-        monthly = monthly.localCheckpoint(eager=False)
     fit = monthly.groupBy("nationkey").agg(
         F.count("*").cast("bigint").alias("n"),
         F.sum("x").cast("bigint").alias("sx"),
@@ -861,10 +858,7 @@ def ols_residual_outliers(spark: SparkSession, sf_dir: str) -> DataFrame:
     |residual| ties on the month index. Nations with a degenerate fit
     (single month, den = 0) are excluded rather than emitting an
     artifact. The monthly/fit stages are the same helper the trend op
-    uses — one definition, two registered views of it — with monthly
-    localCheckpoint-staged here because this op consumes BOTH frames
-    (without staging the orders⋈customer aggregate ran twice —
-    VERDICT r8 ask #5).
+    uses — one definition, two registered views of it.
 
     100 TB posture: identical to the trend op — one row-scale
     (nation, month) aggregate, then windows over |nations|·|months|
@@ -872,7 +866,7 @@ def ols_residual_outliers(spark: SparkSession, sf_dir: str) -> DataFrame:
     nat = load_table(spark, sf_dir, "nation")
     from pyspark.sql import Window as W
 
-    monthly, fit = _ols_monthly_fit(spark, sf_dir, stage=True)
+    monthly, fit = _ols_monthly_fit(spark, sf_dir)
     num, den = _ols_num_den()
     b = num.cast("double") / den.cast("double")
     a = (F.col("sy").cast("double") - b * F.col("sx").cast("double")) \

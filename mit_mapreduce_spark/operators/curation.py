@@ -35,6 +35,7 @@ from pyspark.sql import functions as F
 
 from mit_mapreduce_spark.catalog import load_table
 from mit_mapreduce_spark.operators.registry import query
+from mit_mapreduce_spark.session import materialize, parallel_legs
 
 # whitespace tokens (chunker/PII operate on raw whitespace words;
 # the repetition signals use reference-semantics letter runs like
@@ -581,10 +582,10 @@ def pipeline_pack_ready(spark: SparkSession, sf_dir: str) -> DataFrame:
     # than the same expressions in a codegen projection (10.2s vs
     # 0.4s for this gate at sf0.1). Compute the two scalars in a
     # projection, checkpoint, filter on plain columns.
-    metrics = staged.select(
+    metrics = materialize(staged.select(
         "doc_id", "source", "lang", "n_chars", "text", "n_tokens",
         dup_bi.alias("_dup_bi"), ttr.alias("_ttr"),
-    ).localCheckpoint(eager=False)
+    ))
     q = (metrics.where((F.col("_dup_bi") <= MAX_DUP_BIGRAM_FRAC)
                        & (F.col("_ttr") >= MIN_TTR))
          .drop("_dup_bi", "_ttr"))
@@ -666,7 +667,7 @@ def sample_temperature_mix(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents")
     counts = docs.groupBy("source").agg(F.count("*").alias("n"))
     n_min = counts.agg(F.min("n").alias("n_min"))
-    thr = (
+    thr = materialize(
         counts.crossJoin(F.broadcast(n_min))
         .select(
             "source", "n",
@@ -675,7 +676,6 @@ def sample_temperature_mix(spark: SparkSession, sf_dir: str) -> DataFrame:
                     * TEMP_GRID).cast("bigint").alias("sample_threshold"))
         # |sources| rows feeding the filter pass AND the final audit
         # join — checkpoint so the counts pass runs once, not thrice.
-        .localCheckpoint(eager=False)
     )
     from mit_mapreduce_spark.operators.dedup import hash60
     kept = (
@@ -764,7 +764,7 @@ def importance_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents")
     toks = F.filter(F.split("text", r"[^\p{L}]+"), lambda x: x != "")
     from mit_mapreduce_spark.catalog import fan_out
-    feats = (
+    feats = materialize(
         fan_out(docs.select("doc_id", "source", "text"))
         .select("doc_id", "source", F.explode(toks).alias("w"))
         .select("doc_id", "source",
@@ -772,7 +772,6 @@ def importance_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
                 .alias("bucket"))
         # one token scan feeds corpus histogram, target histogram, and
         # the final per-doc scoring pass
-        .localCheckpoint(eager=False)
     )
     corpus = feats.groupBy("bucket").agg(F.count("*").alias("sc"))
     target = (feats.where(F.col("source") == _DSIR_TARGET)
@@ -1468,16 +1467,14 @@ def _rag_corpus(spark: SparkSession, sf_dir: str
     idf_expr = (F.round(F.log((F.col("n_chunks").cast("double") + 1.0)
                               / (F.col("df") + 1.0)) * RAG_IDF_GRID)
                 .cast("bigint") + 1)
-    cidf = (cdf.crossJoin(F.broadcast(nch))
-            .select("w", idf_expr.alias("idf_i"))
-            .localCheckpoint(eager=False))
-    csparse = (
+    cidf = materialize(cdf.crossJoin(F.broadcast(nch))
+                       .select("w", idf_expr.alias("idf_i")))
+    csparse = materialize(
         ctoks.join(cidf, "w")
         .select("cdoc", "chunk_id", bucket(F.col("w")).alias("dim"),
                 F.col("idf_i").alias("s"))
         .groupBy("cdoc", "chunk_id", "dim")
         .agg(F.sum("s").cast("bigint").alias("val"))
-        .localCheckpoint(eager=False)
     )
     cnorm = (csparse.groupBy("cdoc", "chunk_id")
              .agg(F.sum(F.col("val") * F.col("val")).cast("bigint")
@@ -1663,7 +1660,6 @@ def retrieval_pruning_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     fraction of a corpus scan."""
     from mit_mapreduce_spark.operators.textstats import (
         BM25_TOP_K, _bm25_ranked, _doc_tf)
-    from mit_mapreduce_spark.session import parallel_legs
 
     w = _ndcg_weights(max(BM25_TOP_K, RAG_TOP_K))
     cum = [sum(w[:i + 1]) for i in range(len(w))]

@@ -32,6 +32,7 @@ from mit_mapreduce_spark.functions.numeric import (
     davg, dsum, sql_davg, sql_dsum,
 )
 from mit_mapreduce_spark.operators.registry import query
+from mit_mapreduce_spark.session import materialize
 
 
 # --- Q6-shaped: pure scan-aggregate revenue forecast ----------------------
@@ -554,10 +555,9 @@ def market_basket_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     # exchanged on (okey, part), then BOTH self-join legs re-exchanged
     # on okey — 3 row-scale shuffles where 1 suffices; same rows at
     # any scale, the repartition just picks the reusable key).
-    items = (li.select(F.col("l_orderkey").alias("okey"),
-                       F.col("l_partkey").alias("part"))
-             .repartition("okey").distinct()
-             .localCheckpoint(eager=False))
+    items = materialize(li.select(F.col("l_orderkey").alias("okey"),
+                                  F.col("l_partkey").alias("part"))
+                        .repartition("okey").distinct())
     n_orders = items.agg(
         F.countDistinct("okey").cast("bigint").alias("n_orders"))
     item_n = items.groupBy("part").agg(

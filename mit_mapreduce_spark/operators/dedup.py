@@ -31,6 +31,7 @@ from pyspark.sql import functions as F
 
 from mit_mapreduce_spark.catalog import fan_out, load_table
 from mit_mapreduce_spark.operators.registry import query
+from mit_mapreduce_spark.session import materialize
 
 N_SEEDS = 12          # minhash permutations
 BAND_ROWS = 3         # rows per LSH band
@@ -231,8 +232,8 @@ def dedup_minhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     # six times per run (measured 2× end-to-end on dedup_clusters at
     # sf0.1). At cluster scale the same role is played by
     # persist(MEMORY_AND_DISK) with recompute lineage.
-    sh = shingles_df(docs).localCheckpoint(eager=False)
-    sigs = _minhash_sigs(sh).localCheckpoint(eager=False)
+    sh = materialize(shingles_df(docs))
+    sigs = materialize(_minhash_sigs(sh))
     bands = _band_hashes(sigs)
 
     a = bands.alias("a")
@@ -381,8 +382,8 @@ def dedup_simhash_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     # Checkpoint: the signature build (tokenize + distinct + 60 partial
     # sums) feeds BOTH legs of the band self-join; without reuse it
     # executes twice.
-    sigs = (_simhash_sigs(load_table(spark, sf_dir, "documents"))
-            .localCheckpoint(eager=False))
+    sigs = materialize(
+        _simhash_sigs(load_table(spark, sf_dir, "documents")))
     mask = (1 << SH_BAND_BITS) - 1
     bands = sigs.select(
         "doc_id", "simhash",
@@ -420,7 +421,7 @@ def min_label_components(pairs: DataFrame, a: str, b: str,
                          max_iters: int = MAX_CC_ITERS) -> DataFrame:
     """(vertex, cluster_id) for every vertex of the undirected pair
     graph — min-label propagation to a fixpoint: a driver loop over
-    DataFrame joins with localCheckpoint() per round to truncate
+    DataFrame joins with a materialize() per round to truncate
     lineage. Extracted from dedup_clusters (r9) so the image
     perceptual-hash tier composes the SAME loop instead of a third
     hand-synced copy. The loop runs ONLY over the edge graph's vertex
@@ -428,10 +429,9 @@ def min_label_components(pairs: DataFrame, a: str, b: str,
     vertices to singleton clusters. Raises if the graph's diameter
     exceeds max_iters rather than returning silently-partial labels
     (the oracles compute full transitive closures)."""
-    edges = (
+    edges = materialize(
         pairs.select(F.col(a).alias("src"), F.col(b).alias("dst"))
         .union(pairs.select(F.col(b).alias("src"), F.col(a).alias("dst")))
-        .localCheckpoint(eager=False)
     )
     # r15 (guide §2.2 "fewer, larger reduce partitions"): right-size
     # the LOOP's shuffles to the edge volume. Each round shuffles only
@@ -473,11 +473,10 @@ def _min_label_loop(edges: DataFrame, n_loop: int,
     """
     by_dst = edges.repartition(n_loop, "dst").distinct()
     # symmetrized edges ⇒ every component member appears as src
-    labels = (
+    labels = materialize(
         edges.select(F.col("src").alias("vertex"))
         .repartition(n_loop, "vertex").distinct()
         .select("vertex", F.col("vertex").alias("cluster_id"))
-        .localCheckpoint(eager=False)
     )
     changed = -1
     for _ in range(max_iters):
@@ -492,14 +491,14 @@ def _min_label_loop(edges: DataFrame, n_loop: int,
         # new label — the convergence check then reads the checkpointed
         # result instead of re-joining new labels against old (which
         # cost one extra shuffle join per round).
-        stepped = joined.select(
+        stepped = materialize(joined.select(
             "vertex",
             F.least(F.col("cluster_id"),
                     F.coalesce("_nbr_min", "cluster_id")).alias("new_cluster"),
             (F.least(F.col("cluster_id"),
                      F.coalesce("_nbr_min", "cluster_id"))
              != F.col("cluster_id")).cast("int").alias("_chg"),
-        ).localCheckpoint(eager=False)
+        ))
         changed = stepped.agg(F.sum("_chg")).collect()[0][0] or 0
         labels = stepped.select(
             "vertex", F.col("new_cluster").alias("cluster_id"))
@@ -544,7 +543,7 @@ def dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     near-dup are their own cluster).
 
     The iterative-algorithm surface: min-label propagation to a
-    fixpoint, driver loop over DataFrame joins with localCheckpoint()
+    fixpoint, driver loop over DataFrame joins with a materialize()
     per round to truncate lineage. The loop runs ONLY over the edge
     graph's vertex set — every doc outside it is provably its own
     singleton cluster and joins the result once at the end. At 100 TB
@@ -644,7 +643,7 @@ def dedup_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     dfreq = toks.groupBy("word").agg(F.count("*").alias("df"))
 
-    ordered = (
+    ordered = materialize(
         toks.join(F.broadcast(dfreq), "word")
         .groupBy("doc_id")
         .agg(F.sort_array(F.collect_list(F.struct("df", "word"))).alias("o"),
@@ -653,7 +652,6 @@ def dedup_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
         # Checkpoint: the per-doc ordered-token build feeds the prefix
         # explode (self-joined, 2 legs) AND both verification legs —
         # five executions without reuse.
-        .localCheckpoint(eager=False)
     )
     prefix = ordered.select(
         "doc_id", "n",
@@ -799,10 +797,9 @@ def graph_triangles(spark: SparkSession, sf_dir: str) -> DataFrame:
     localCheckpointed once so the LSH pipeline is not re-derived per
     join leg; at 100 TB the orientation step (by degree, not id) is
     the wedge-explosion guard and changes nothing else."""
-    edges = (
+    edges = materialize(
         dedup_minhash(spark, sf_dir)
         .select("doc_a", "doc_b")
-        .localCheckpoint(eager=False)
     )
     p1 = edges.alias("p1")
     p2 = edges.alias("p2")
@@ -919,11 +916,10 @@ def cleaned_token_arrays(spark: SparkSession, sf_dir: str) -> DataFrame:
     in more than one document)."""
     docs = load_table(spark, sf_dir, "documents")
     toks = F.filter(F.split("text", r"[^\p{L}]+"), lambda x: x != "")
-    toksarr = (
+    toksarr = materialize(
         fan_out(docs.select("doc_id", "text"))
         .select("doc_id", toks.alias("arr"))
         # consumed by the window build AND reconstruction
-        .localCheckpoint(eager=False)
     )
     winarr = F.expr(
         f"""CASE WHEN size(arr) < {P_LEN} THEN array()
@@ -1095,7 +1091,7 @@ def ngram_novelty(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents")
     toks = F.filter(F.split("text", r"[^\p{L}]+"), lambda x: x != "")
     staged = fan_out(docs).select("doc_id", toks.alias("arr"))
-    wins = (
+    wins = materialize(
         staged.select(
             "doc_id",
             F.explode(F.expr(f"""
@@ -1105,7 +1101,6 @@ def ngram_novelty(spark: SparkSession, sf_dir: str) -> DataFrame:
                 END""")).alias("w"))
         .select("doc_id", hash60(F.col("w")).alias("whash"))
         .distinct()
-        .localCheckpoint(eager=False)
     )
     df_tab = wins.groupBy("whash").agg(F.count("*").alias("n_docs"))
     per_doc = (
@@ -1203,8 +1198,8 @@ def minhash_search_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     give (r={BAND_ROWS}, b={N_BANDS}) — the standard LSH trade, tuned
     by re-banding, never by widening the join."""
     docs = load_table(spark, sf_dir, "documents")
-    sh = shingles_df(fan_out(docs)).localCheckpoint(eager=False)
-    bands = _band_hashes(_minhash_sigs(sh)).localCheckpoint(eager=False)
+    sh = materialize(shingles_df(fan_out(docs)))
+    bands = materialize(_band_hashes(_minhash_sigs(sh)))
     qb = (bands.where(F.col("doc_id") % SEARCH_MOD == 0)
           .select(F.col("doc_id").alias("qid"), "band_idx", "band_hash"))
     cb = (bands.select(F.col("doc_id").alias("cid"), "band_idx", "band_hash"))
@@ -1426,11 +1421,10 @@ def _containment_impl(spark: SparkSession, sf_dir: str, mod: int,
     wid_tab = dfreq.select(
         "word", F.row_number().over(W.orderBy("df", "word")).alias("wid"))
     itoks = toks_all.join(F.broadcast(wid_tab), "word").select("doc_id", "wid")
-    ordered_b = (
+    ordered_b = materialize(
         itoks.groupBy("doc_id")
         .agg(F.sort_array(F.collect_list("wid")).alias("wids"),
              F.count("*").cast("bigint").alias("n"))
-        .localCheckpoint(eager=False)
     )
     ordered_a = (ordered_b if mod == 1
                  else ordered_b.where(F.col("doc_id") % mod == residue))
@@ -1657,8 +1651,8 @@ def minhash_screen_frame(spark: SparkSession, sf_dir: str,
     sets, the corpus-side table a production deployment persists
     alongside)."""
     docs = load_table(spark, sf_dir, "documents")
-    sh = shingles_df(docs).localCheckpoint(eager=False)
-    sigs = _minhash_sigs(sh).localCheckpoint(eager=False)
+    sh = materialize(shingles_df(docs))
+    sigs = materialize(_minhash_sigs(sh))
     if bands is None:
         bands = _band_hashes(sigs)
     sizes = sigs.select("doc_id", "n")
@@ -1683,9 +1677,8 @@ def minhash_screen_expr_over(inc_docs: DataFrame, corpus_sh: DataFrame,
     re-shingled). Returns minhash_screen_frame's verdict contract
     (doc_id, matched_id, jaccard, is_neardup), pinned equal by the
     admission oracle and the expr/batch band-parity pytest."""
-    staged = (_expr_shingle_frame(inc_docs)
-              .select("doc_id", "_sh", *_expr_seed_mins())
-              .localCheckpoint(eager=False))
+    staged = materialize(_expr_shingle_frame(inc_docs)
+                         .select("doc_id", "_sh", *_expr_seed_mins()))
     ib = staged.select(
         "doc_id",
         F.posexplode(_expr_band_array()).alias("band_idx", "band_hash"))

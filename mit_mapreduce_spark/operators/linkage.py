@@ -33,7 +33,9 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from mit_mapreduce_spark.catalog import load_table
+from mit_mapreduce_spark.operators.dedup import min_label_components
 from mit_mapreduce_spark.operators.registry import query
+from mit_mapreduce_spark.session import materialize
 
 # Match predicate shared by both engines: candidates must share the
 # final token (the "noun" block), differ as strings, and sit within
@@ -124,11 +126,6 @@ def fuzzy_blocked_match(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # --- entity resolution: components of the match graph ---------------------
 
-# 20, matching dedup_clusters' MAX_CC_ITERS (r8 review #7): min-label
-# propagation needs ~diameter rounds, and a 1-edit mutation chain can
-# legitimately exceed 12 hops in a dense vocabulary.
-MAX_ER_ITERS = 20
-
 _SQL_ER = f"""
     WITH RECURSIVE names AS ({_SQL_NAMES}),
     pairs AS (SELECT name_a, name_b FROM ({_SQL_PAIRS})),
@@ -166,51 +163,18 @@ def entity_resolution(spark: SparkSession, sf_dir: str) -> DataFrame:
     graph; entity_id = lexicographic min name in the component), with
     per-entity name and row counts.
 
-    The fixpoint loop is min-label propagation over the match graph's
-    VERTEX set (names that matched something — vocabulary-bounded, «
-    corpus), one edge⋈label shuffle per round, rounds ≈ component
-    diameter, lineage truncated per round with localCheckpoint —
-    exactly the ``dedup_clusters`` discipline. Names with no fuzzy
-    neighbor join the result once at the end as singleton entities.
+    The fixpoint loop is ``dedup.min_label_components`` over the match
+    graph (the ``dedup_clusters`` loop; its vertex set is the names that
+    matched something — vocabulary-bounded, « corpus). Names with no
+    fuzzy neighbor join the result once at the end as singleton
+    entities.
     The oracle is a DuckDB recursive-CTE transitive closure, so the
     iterative computation is checked against declarative reachability.
     """
-    names = _names_df(spark, sf_dir).localCheckpoint(eager=False)
-    pairs = _pairs_df(names).select("name_a", "name_b")
-    edges = pairs.union(
-        pairs.select(F.col("name_b").alias("name_a"),
-                     F.col("name_a").alias("name_b"))
-    ).withColumnsRenamed({"name_a": "src", "name_b": "dst"}
-                         ).localCheckpoint(eager=False)
-
-    labels = (
-        edges.select(F.col("src").alias("name")).distinct()
-        .select("name", F.col("name").alias("entity_id"))
-        .localCheckpoint(eager=False)
-    )
-    changed = -1
-    for _ in range(MAX_ER_ITERS):
-        nbr_min = (
-            edges.join(labels, edges.dst == labels.name)
-            .groupBy("src").agg(F.min("entity_id").alias("_nbr_min"))
-        )
-        joined = labels.join(nbr_min, labels.name == nbr_min.src, "left")
-        stepped = joined.select(
-            "name",
-            F.least(F.col("entity_id"),
-                    F.coalesce("_nbr_min", "entity_id")).alias("new_id"),
-            (F.least(F.col("entity_id"),
-                     F.coalesce("_nbr_min", "entity_id"))
-             != F.col("entity_id")).cast("int").alias("_chg"),
-        ).localCheckpoint(eager=False)
-        changed = stepped.agg(F.sum("_chg")).collect()[0][0] or 0
-        labels = stepped.select("name", F.col("new_id").alias("entity_id"))
-        if changed == 0:
-            break
-    if changed != 0:
-        raise RuntimeError(
-            f"entity_resolution: label propagation did not converge in "
-            f"{MAX_ER_ITERS} rounds ({changed} still changing)")
+    names = materialize(_names_df(spark, sf_dir))
+    labels = min_label_components(
+        _pairs_df(names), "name_a", "name_b"
+    ).withColumnsRenamed({"vertex": "name", "cluster_id": "entity_id"})
 
     resolved = (
         names.join(labels, "name", "left")

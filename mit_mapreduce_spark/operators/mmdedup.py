@@ -59,7 +59,6 @@ import pandas as pd
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
 
 from mit_mapreduce_spark.catalog import fan_out, load_table
 from mit_mapreduce_spark.operators.banding import (
@@ -75,7 +74,7 @@ from mit_mapreduce_spark.operators.multimodal import (
     PH_BAND_BITS, PH_BANDS, PH_GROUP, PH_HAM_MAX, _PHASH_SCHEMA,
 )
 from mit_mapreduce_spark.operators.registry import query
-from mit_mapreduce_spark.session import parallel_legs
+from mit_mapreduce_spark.session import materialize, parallel_legs
 
 # --- shared fingerprint geometry (identical to the image tier's) ----------
 FP_BANDS = PH_BANDS                 # 8 bands...
@@ -250,10 +249,9 @@ def dedup_audio_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
     entirely in SQL; a crafted pytest checks the banded result
     against a quadratic brute force and a negative control runs the
     kernel over the real mixed-format audio_assets corpus."""
-    sigs = (
+    sigs = materialize(
         fingerprint_audio_assets(spark, sf_dir)
         .mapInPandas(_afp_batch, _PHASH_SCHEMA)
-        .localCheckpoint(eager=False)
     )
     return banded_hamming_pairs2(sigs, FP_BANDS, FP_BAND_BITS, FP_HAM_MAX)
 
@@ -448,10 +446,9 @@ def dedup_video_phash(spark: SparkSession, sf_dir: str) -> DataFrame:
     Oracle rebuilds the frames from the sha256 chain and recomputes
     profile, bits, banding, and Hamming in SQL; brute-force pytest +
     real-corpus negative control as in the image tier."""
-    sigs = (
+    sigs = materialize(
         fingerprint_video_assets(spark, sf_dir)
         .mapInPandas(_vfp_batch, _PHASH_SCHEMA)
-        .localCheckpoint(eager=False)
     )
     return banded_hamming_pairs2(sigs, FP_BANDS, FP_BAND_BITS, FP_HAM_MAX)
 
@@ -660,9 +657,8 @@ def _sparse_clusters(spark: SparkSession, sf_dir: str,
     parameter so the image leg stays pinned to PH_* (aliases of the
     FP_* defaults today, free to diverge)."""
     docs = _present_docs(spark, sf_dir, absent)
-    sigs = (
+    sigs = materialize(
         fixture_from(docs).mapInPandas(kernel, _PHASH_SCHEMA)
-        .localCheckpoint(eager=False)
     )
     pairs = banded_hamming_pairs2(sigs, n_bands, band_bits, ham_max) \
         .select("asset_a", "asset_b")
@@ -793,14 +789,15 @@ def pipeline_multimodal_manifest(spark: SparkSession,
                     F.col("cluster_id").alias(col))
 
     def _quality_leg(col, screen_from, absent):
-        # eager checkpoint: truncates the deep Arrow-pipeline lineage
+        # checkpoint: truncates the deep Arrow-pipeline lineage
         # before the 10-join composition (a measured 14 s of
-        # driver-side ANALYSIS on the un-truncated plan) and lets the
-        # pool overlap the screen's decode jobs with the CC loops
-        return screen_from(_present_docs(spark, sf_dir, absent)) \
+        # driver-side ANALYSIS on the un-truncated plan). Eager, lazy
+        # and none read within 7% of each other at sf0.1 (SCALE.md,
+        # "One materialization call").
+        return materialize(
+            screen_from(_present_docs(spark, sf_dir, absent))
             .select(F.col("asset_id").alias("doc_id"),
-                    F.col("passes").alias(col)) \
-            .localCheckpoint(eager=True)
+                    F.col("passes").alias(col)))
 
     # r14: the three per-doc quality frames build as legs too —
     # construction is driver-side analysis/planning that overlaps
@@ -935,10 +932,9 @@ def audio_fingerprint_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     ranks — recall pinned by pytest. Same scale posture as the pair
     op: one fingerprint pass, band equi-join bounded by bucket sizes,
     then a per-query window over candidates only."""
-    sigs = (
+    sigs = materialize(
         fingerprint_audio_assets(spark, sf_dir)
         .mapInPandas(_afp_batch, _PHASH_SCHEMA)
-        .localCheckpoint(eager=False)
     )
     return fingerprint_search_topk(sigs, FP_BANDS, FP_BAND_BITS,
                                    FPS_MOD, FPS_K)
@@ -959,10 +955,9 @@ def image_phash_search(spark: SparkSession, sf_dir: str) -> DataFrame:
         _phash_batch, phash_image_assets,
     )
 
-    sigs = (
+    sigs = materialize(
         phash_image_assets(spark, sf_dir)
         .mapInPandas(_phash_batch, _PHASH_SCHEMA)
-        .localCheckpoint(eager=False)
     )
     return fingerprint_search_topk(sigs, FP_BANDS, FP_BAND_BITS,
                                    FPS_MOD, FPS_K)
@@ -974,10 +969,9 @@ def video_phash_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Asset similarity SEARCH on the video frame-sequence index
     ("find me videos that look like this one") — the query-centric
     twin of dedup_video_phash on the shared search body."""
-    sigs = (
+    sigs = materialize(
         fingerprint_video_assets(spark, sf_dir)
         .mapInPandas(_vfp_batch, _PHASH_SCHEMA)
-        .localCheckpoint(eager=False)
     )
     return fingerprint_search_topk(sigs, FP_BANDS, FP_BAND_BITS,
                                    FPS_MOD, FPS_K)
@@ -1028,9 +1022,8 @@ def _incremental(spark: SparkSession, sf_dir: str, fixture_from,
     free to diverge)."""
     docs = load_table(spark, sf_dir, "documents").select("doc_id")
     inc_pred = inc_shard_col()
-    sigs = (
+    sigs = materialize(
         fixture_from(docs).mapInPandas(kernel, _PHASH_SCHEMA)
-        .localCheckpoint(eager=False)
     )
     inc_assets = docs.select(F.col("doc_id").alias("asset_id")) \
         .where(inc_pred)
@@ -1401,16 +1394,13 @@ def admission_static_ctx(spark: SparkSession, sf_dir: str) -> dict:
     from mit_mapreduce_spark.operators.similarity import _screen_buckets
     from mit_mapreduce_spark.operators.textstats import quality_lm_bigram
 
-    def lazy(df: DataFrame) -> DataFrame:
-        return df.localCheckpoint(eager=False)
-
     docs = load_table(spark, sf_dir, "documents")
     inc_pred = inc_shard_col("doc_id")
     corpus = docs.where(~inc_pred)
     grams_src = docs.where(F.col("doc_id") % EVAL_MOD == 0)
 
-    # r14 (guide §1.2): each lazy() leaf forces Catalyst analysis plus
-    # the toRdd PHYSICAL planning at construction — measured 8.9 s of
+    # r14 (guide §1.2): each materialize() leaf forces Catalyst analysis
+    # plus the toRdd PHYSICAL planning at construction — measured 8.9 s of
     # pure driver-side work when the ~15 legs built serially (no job
     # runs; the box sat idle on one core of py4j/analyzer work). The
     # independent legs now build as parallel legs — py4j releases
@@ -1419,21 +1409,22 @@ def admission_static_ctx(spark: SparkSession, sf_dir: str) -> dict:
     # with real dependencies chain INSIDE one leg (sh -> sigs ->
     # bands; bk -> sides) so nothing waits on an unrelated leg.
     def _text_legs():
-        sh = lazy(shingles_df(corpus))
-        sigs = lazy(_minhash_sigs(sh))
-        return sh, sigs.select("doc_id", "n"), lazy(_band_hashes(sigs))
+        sh = materialize(shingles_df(corpus))
+        sigs = materialize(_minhash_sigs(sh))
+        return (sh, sigs.select("doc_id", "n"),
+                materialize(_band_hashes(sigs)))
 
     def _emb_legs():
         emb = fan_out(load_table(spark, sf_dir, "embeddings"))
-        bk = lazy(_screen_buckets(emb))
-        sides = lazy(
+        bk = materialize(_screen_buckets(emb))
+        sides = materialize(
             emb.select("vec_id", "embedding")
             .join(bk.select("vec_id", "nsq").distinct(), "vec_id"))
         return bk, sides
 
     def _media_leg(nd, qp, absent, fixture_from, kernel, geom,
                    screen_from):
-        idx_sigs = lazy(
+        idx_sigs = materialize(
             fixture_from(_present_docs(spark, sf_dir, absent)
                          .where(~inc_pred))
             .mapInPandas(kernel, _PHASH_SCHEMA))
@@ -1444,24 +1435,24 @@ def admission_static_ctx(spark: SparkSession, sf_dir: str) -> dict:
      corpus_fps, eval_grams, g, r, lm, manifest, *media) = parallel_legs(
         _text_legs,
         _emb_legs,
-        lambda: lazy(
+        lambda: materialize(
             corpus.where(F.col("text").isNotNull())
             .select(norm_fp_col().alias("_fp")).distinct()),
-        lambda: lazy(
+        lambda: materialize(
             grams_src.select("doc_id", _letter_tokens().alias("_toks"))
             .select(F.explode(F.array_distinct(
                 _ngram_arr(CONTAM_NGRAM))).alias("gram"))
             .distinct()),
-        lambda: lazy(
+        lambda: materialize(
             gopher_quality_rules(spark, sf_dir).where(inc_pred)
             .select("doc_id", F.col("passes").alias("_g"))),
-        lambda: lazy(
+        lambda: materialize(
             quality_repetition(spark, sf_dir).where(inc_pred)
             .select("doc_id", F.col("passes").alias("_r"))),
-        lambda: lazy(
+        lambda: materialize(
             quality_lm_bigram(spark, sf_dir).where(inc_pred)
             .select("doc_id", "novelty")),
-        lambda: lazy(asset_manifest_media(spark, sf_dir)),
+        lambda: materialize(asset_manifest_media(spark, sf_dir)),
         *(partial(_media_leg, nd, qp, absent, fixture_from, kernel, geom,
                   screen_from)
           for nd, qp, absent, fixture_from, kernel, geom, screen_from
@@ -1536,7 +1527,7 @@ def admission_batch_frame(spark: SparkSession, sf_dir: str,
     op — and only ~4 s was execution; job-submission overhead (the
     r13 hypothesis) was noise. Three changes attack the real costs:
 
-    - legs end in localCheckpoint(eager=False): the returned frame is
+    - heavy legs end in materialize(): the returned frame is
       a LEAF (LogicalRDD), so the verdict tail's joins analyze flat
       trees and the single write action executes shallow adaptive
       plans (~4.3 s -> ~1.7 s execution, measured);
@@ -1562,7 +1553,7 @@ def admission_batch_frame(spark: SparkSession, sf_dir: str,
     # lazy pin (r14): the batch scan materializes once, inside the
     # verdict write action itself — an eager pin would cost one extra
     # job submission per micro-batch
-    batch_docs = batch_docs.localCheckpoint(eager=False)
+    batch_docs = materialize(batch_docs)
     ids = batch_docs.select("doc_id")
     # the PII count is a pure projection (regex expressions over the
     # door doc's text, PII seeded into the fixture subset); a NULL text
@@ -1584,14 +1575,9 @@ def admission_batch_frame(spark: SparkSession, sf_dir: str,
         "doc_id", "lang", "source", n_pii.alias("_npii"),
         *[am_media_flag(a) for a in AM_MEDIA_FLAGS.values()])
 
-    def leaf(df: DataFrame) -> DataFrame:
-        # lazy checkpoint = leaf plan; nothing executes until the
-        # verdict write, but downstream analysis sees a flat tree.
-        # Only the HEAVY legs (band screens, the semantic screen)
-        # earn one: a leaf costs a toRdd physical planning at build,
-        # which the cheap projection legs don't amortize.
-        return df.localCheckpoint(eager=False)
-
+    # Only the HEAVY legs (band screens, the semantic screen) end in
+    # materialize(): a leaf costs a toRdd physical planning at build,
+    # which the cheap projection legs don't amortize.
     def _td():
         return (batch_docs.where(F.col("text").isNotNull())
                 .select("doc_id", norm_fp_col().alias("_fp"))
@@ -1599,13 +1585,13 @@ def admission_batch_frame(spark: SparkSession, sf_dir: str,
                 .select("doc_id", F.lit(True).alias("_tdup")))
 
     def _mh():
-        return leaf(minhash_screen_expr_over(
+        return materialize(minhash_screen_expr_over(
             batch_docs, ctx["corpus_sh"], ctx["corpus_sizes"],
             ctx["corpus_bands"])
             .select("doc_id", F.col("is_neardup").alias("_mhnd")))
 
     def _sem():
-        return leaf(embed_screen_frame(
+        return materialize(embed_screen_frame(
             spark, sf_dir, inc_col("vec_id"), bk=ctx["emb_bk"],
             inc_ids=ids.select(F.col("doc_id").alias("vec_id")),
             sides=ctx.get("emb_sides"))
@@ -1630,7 +1616,7 @@ def admission_batch_frame(spark: SparkSession, sf_dir: str,
     def _scr(nd, flag, fixture_from, kernel, geom, idx_sigs):
         owned = _owned(flag)
         inc_sigs = fixture_from(owned).mapInPandas(kernel, _PHASH_SCHEMA)
-        return leaf(incremental_screen(
+        return materialize(incremental_screen(
             owned.select(F.col("doc_id").alias("asset_id")),
             inc_sigs, idx_sigs, *geom)
             .select(F.col("asset_id").alias("doc_id"),

@@ -65,10 +65,9 @@ from mit_mapreduce_spark.operators.banding import (
     planted_base, planted_chain_expr, sql_band_tail, sql_byte_at,
     sql_cc_over, sql_keep_report_over, sql_planted_hex,
 )
-from mit_mapreduce_spark.functions.imagecodec import (
-    decode_image, resize_nearest,
-)
+from mit_mapreduce_spark.functions.imagecodec import decode_image
 from mit_mapreduce_spark.operators.registry import query
+from mit_mapreduce_spark.session import materialize
 
 N_FEATURES = 8
 
@@ -1733,10 +1732,9 @@ def dedup_image_phash(spark: SparkSession, sf_dir: str) -> DataFrame:
     AQE skew machinery. The oracle recomputes decode, hash, banding,
     and Hamming from the sha256 chain entirely in SQL, and a crafted
     pytest checks the banded result against a quadratic brute force."""
-    sigs = (
+    sigs = materialize(
         phash_image_assets(spark, sf_dir)
         .mapInPandas(_phash_batch, _PHASH_SCHEMA)
-        .localCheckpoint(eager=False)
     )
     return banded_hamming_pairs2(sigs, PH_BANDS, PH_BAND_BITS, PH_HAM_MAX)
 

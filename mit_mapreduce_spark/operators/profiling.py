@@ -21,6 +21,7 @@ from mit_mapreduce_spark.catalog import fan_out, load_table
 from mit_mapreduce_spark.functions.numeric import dsum, sql_dsum
 from mit_mapreduce_spark.operators.dedup import hash60, _sql_hash60
 from mit_mapreduce_spark.operators.registry import query
+from mit_mapreduce_spark.session import materialize
 
 # (column, kind) pairs for the orders profile. Numeric/timestamp stats
 # land in min_num/max_num (timestamps as epoch-µs — engine-neutral,
@@ -232,9 +233,9 @@ def pipeline_training_mix(spark: SparkSession, sf_dir: str) -> DataFrame:
     # pushdown would inline the size(filter(split)) HOF into the
     # Filter, which runs interpreted (see SCALE.md, round-4 find);
     # fan_out parallelizes the single-row-group fixture scan.
-    metrics = fan_out(docs).select(
+    metrics = materialize(fan_out(docs).select(
         "*", n_toks.alias("n_toks"), punct_ratio.alias("_punct"),
-    ).localCheckpoint(eager=False)
+    ))
     q = (metrics.where((F.col("n_toks") >= _MIN_TOKENS)
                        & (F.col("_punct") <= _MAX_PUNCT))
          .drop("_punct"))

@@ -29,6 +29,7 @@ from pyspark.sql import functions as F
 from mit_mapreduce_spark.catalog import fan_out, load_table
 from mit_mapreduce_spark.operators.banding import INC_PRED, inc_col
 from mit_mapreduce_spark.operators.registry import query
+from mit_mapreduce_spark.session import materialize, parallel_legs
 
 DIM = 64
 N_QUERIES = 8     # vec_id < 8 are the query vectors
@@ -244,9 +245,9 @@ def ann_lsh_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     # interpreted (N_PLANES × DIM per row), and the self-join would
     # recompute them for BOTH sides. One row per vector — at any scale
     # this is the vector table itself, the natural thing to persist.
-    vecs = emb.select(
+    vecs = materialize(emb.select(
         F.col("vec_id"), F.col("embedding"), bucket.alias("bucket"),
-        nsq.alias("nsq")).where(F.col("nsq") > 0).localCheckpoint(eager=False)
+        nsq.alias("nsq")).where(F.col("nsq") > 0))
     a = vecs.alias("a")
     b = vecs.alias("b")
     dot = _dot_scaled(F.col("a.embedding"), F.col("b.embedding"))
@@ -416,12 +417,11 @@ def train_centroids(spark: SparkSession, sf_dir: str,
             .select("cent_id",
                     F.expr("transform(_pm, p -> p.m)").alias("new_ce"))
         )
-        cents = (
+        cents = materialize(
             cents.join(means, "cent_id", "left")
             .select("cent_id",
                     F.coalesce("new_ce", F.col("ce").cast("array<double>"))
                     .alias("ce"))
-            .localCheckpoint(eager=False)
         )
     return cents
 
@@ -809,7 +809,7 @@ def embed_screen_frame(spark: SparkSession, sf_dir: str, inc_pred,
     emb = fan_out(load_table(spark, sf_dir, "embeddings"))
     # materialize the bucketed index once: both join sides read it
     if bk is None:
-        bk = _screen_buckets(emb, n_planes).localCheckpoint(eager=False)
+        bk = materialize(_screen_buckets(emb, n_planes))
     ib = bk.where(inc_pred & (F.col("nsq") > 0)).select(
         F.col("vec_id").alias("iid"), "band_idx", "bucket")
     if inc_ids is not None:
@@ -1541,7 +1541,7 @@ def pq_adc_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     # One dists computation feeds both the corpus argmin (codes) and
     # the query-side lookup tables — checkpointed so the M·K-per-vector
     # pass runs once.
-    dists = _pq_dists(emb).localCheckpoint(eager=False)
+    dists = materialize(_pq_dists(emb))
     chosen = _pq_chosen(dists)
     qtab = (
         dists.where(F.col("vec_id") < N_QUERIES)
@@ -1609,8 +1609,6 @@ def ann_recall_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     # r14 (guide §1.2): the three component searches' construction
     # (analysis + planning) overlaps as parallel legs — same frames,
     # same single fused action.
-    from mit_mapreduce_spark.session import parallel_legs
-
     exact, ivf, pq = parallel_legs(
         lambda: ann_bruteforce_topk(spark, sf_dir).select("qid", "cid"),
         lambda: ann_ivf_topk(spark, sf_dir).select("qid", "cid"),
@@ -1721,17 +1719,15 @@ def semantic_topics(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     assign = _assignments(emb, cents)
     docs = load_table(spark, sf_dir, "documents")
-    toks = (
+    toks = materialize(
         fan_out(docs)
         .select(F.col("doc_id"),
                 F.explode(F.filter(F.split("text", r"[^\p{L}]+"),
                                    lambda x: x != "")).alias("term"))
-        .localCheckpoint(eager=False)
     )
-    cellterm = (
+    cellterm = materialize(
         toks.join(assign.withColumnRenamed("vec_id", "doc_id"), "doc_id")
         .groupBy("cent_id", "term").agg(F.count("*").alias("cell_cnt"))
-        .localCheckpoint(eager=False)
     )
     celltot = cellterm.groupBy("cent_id").agg(
         F.sum("cell_cnt").alias("cell_total"))

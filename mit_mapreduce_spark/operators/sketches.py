@@ -29,6 +29,7 @@ from pyspark.sql import functions as F
 from mit_mapreduce_spark.catalog import load_table
 from mit_mapreduce_spark.operators.dedup import hash60, _sql_hash60
 from mit_mapreduce_spark.operators.registry import query
+from mit_mapreduce_spark.session import materialize
 
 CMS_DEPTH = 4    # hash rows (seeds)
 CMS_WIDTH = 32   # buckets per row — below vocab size, so collisions
@@ -86,8 +87,9 @@ def sketch_heavy_hitters(spark: SparkSession, sf_dir: str) -> DataFrame:
         return hash60(F.concat(seed_col.cast("string"), F.lit(":"), word_col)) \
             % CMS_WIDTH
 
-    exact = (toks.groupBy("word").agg(F.count("*").alias("exact_n"))
-             .localCheckpoint(eager=False))  # one explode pass feeds all
+    # one explode pass feeds all
+    exact = materialize(
+        toks.groupBy("word").agg(F.count("*").alias("exact_n")))
     # Cell counts derived from the per-word counts: Σ exact_n over the
     # words hashing into a cell ≡ counting token instances directly
     # (what a streaming CMS does), but hashes |vocab|×D keys instead of

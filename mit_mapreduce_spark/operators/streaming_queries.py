@@ -46,7 +46,7 @@ from mit_mapreduce_spark.operators import multimodal as _multimodal_batch  # noq
 from mit_mapreduce_spark.operators import sketches as _sketches_batch  # noqa: F401
 from mit_mapreduce_spark.operators.events import SESSION_GAP_US
 from mit_mapreduce_spark.operators.registry import ORACLES, query
-from mit_mapreduce_spark.session import stream_session, tune
+from mit_mapreduce_spark.session import materialize, stream_session, tune
 from mit_mapreduce_spark.streaming import events_stream, run_stream_to_table
 
 SESSION_GAP = "4 hours"   # matches operators.events.SESSION_GAP_US
@@ -834,10 +834,9 @@ def _alert_drain(spark: SparkSession, sf_dir: str, fixture_from, kernel,
     tune(spark)
     inc_pred = inc_shard_col("doc_id")
     owners = _present_docs(spark, sf_dir, absent)
-    idx_sigs = (
+    idx_sigs = materialize(
         fixture_from(owners.where(~inc_pred))
         .mapInPandas(kernel, _PHASH_SCHEMA)
-        .localCheckpoint(eager=False)
     )
     inc_sigs = (
         fixture_from(docs_stream(spark, sf_dir).where(inc_pred)

@@ -20,6 +20,7 @@ from pyspark.sql import functions as F
 from mit_mapreduce_spark.catalog import fan_out, load_table
 from mit_mapreduce_spark.functions.numeric import dsum, sql_dsum
 from mit_mapreduce_spark.operators.registry import query
+from mit_mapreduce_spark.session import materialize, parallel_legs
 
 _TOKS = "list_filter(regexp_split_to_array(text, '[^\\p{L}]+'), x -> x <> '')"
 
@@ -495,13 +496,14 @@ def collocations_lift(spark: SparkSession, sf_dir: str) -> DataFrame:
                                i -> struct(arr[i-1] AS w1, arr[i] AS w2))
            END""")).alias("bg")).select("bg.w1", "bg.w2")
     unigrams = toked.select(F.explode("arr").alias("w"))
-    bigc = (bigrams.groupBy("w1", "w2").agg(F.count("*").alias("c12"))
-            .localCheckpoint(eager=False))
-    unic = (unigrams.groupBy("w").agg(F.count("*").alias("c"))
-            .localCheckpoint(eager=False))
+    bigc = materialize(
+        bigrams.groupBy("w1", "w2").agg(F.count("*").alias("c12")))
+    # Not checkpointed: its three readers measured faster recomputing
+    # it (SCALE.md, "One materialization call").
+    unic = unigrams.groupBy("w").agg(F.count("*").alias("c"))
     # Corpus totals = sums of the grouped counts — re-aggregating the
     # tiny count tables instead of re-exploding the corpus (this and
-    # the checkpoints above cut the tokenize passes from 4 to 2).
+    # the bigram checkpoint cut the tokenize passes from 4 to 2).
     tot = F.broadcast(
         bigc.agg(F.sum("c12").cast("bigint").alias("nb"))
         .crossJoin(unic.agg(F.sum("c").cast("bigint").alias("nu"))))
@@ -628,10 +630,11 @@ def source_overlap_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
     from mit_mapreduce_spark.operators.dedup import shingles_df
 
     docs = load_table(spark, sf_dir, "documents")
-    sh = (shingles_df(docs.select(F.col("source").alias("doc_id"), "text"))
-          .withColumnRenamed("doc_id", "source")
-          .distinct()
-          .localCheckpoint(eager=False))  # feeds sizes + both join legs
+    # feeds sizes + both join legs
+    sh = materialize(
+        shingles_df(docs.select(F.col("source").alias("doc_id"), "text"))
+        .withColumnRenamed("doc_id", "source")
+        .distinct())
     sizes = sh.groupBy("source").agg(F.count("*").cast("bigint").alias("n"))
     a, b = sh.alias("a"), sh.alias("b")
     inter = (
@@ -758,11 +761,10 @@ def quality_lm_bigram(spark: SparkSession, sf_dir: str) -> DataFrame:
     the corpus), one final doc_id agg. Docs with < 2 tokens have no
     bigrams and are absent, matching the SQL inner join."""
     docs = load_table(spark, sf_dir, "documents")
-    bg = (
+    bg = materialize(
         doc_bigrams_from(fan_out(docs.select("doc_id", "text")))
         # consumed by the df aggregation AND the scoring join —
         # checkpoint so tokenization runs once, not twice.
-        .localCheckpoint(eager=False)
     )
     dfreq = bg.groupBy("bg").agg(F.count("*").alias("df"))
     return lm_from_counts(bg, dfreq)
@@ -942,10 +944,9 @@ def winnow_overlap_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     {WIN_K + WIN_W - 1}-token runs is 1, unlike probabilistic LSH).
     The fingerprint relation is built once and checkpointed for its
     three consumers (pair join legs + sizes)."""
-    fps = (
+    fps = materialize(
         winnow_fingerprints(spark, sf_dir)
         .select("doc_id", "fp").distinct()
-        .localCheckpoint(eager=False)
     )
     sizes = fps.groupBy("doc_id").agg(F.count("*").alias("n"))
     a, b = fps.alias("a"), fps.alias("b")
@@ -1021,11 +1022,10 @@ def vocab_oov_rate(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import Window as W
 
     docs = load_table(spark, sf_dir, "documents")
-    inst = (
+    inst = materialize(
         fan_out(docs)
         .select("source", F.explode(_spark_tokens()).alias("w"))
         .select("source", F.lower("w").alias("w"))
-        .localCheckpoint(eager=False)
     )
     counts = inst.groupBy("w").agg(F.count("*").alias("c"))
     vocab = (
@@ -1233,8 +1233,7 @@ def _bpe_learn(
                 F.concat(F.slice(acc, F.lit(1), F.size(acc) - 1),
                          F.array(F.lit(merged))))
             .otherwise(F.concat(acc, F.array(x))))
-        seq = (seq.select("word", "cnt", new_syms.alias("syms"))
-               .localCheckpoint(eager=False))
+        seq = materialize(seq.select("word", "cnt", new_syms.alias("syms")))
     return merges, seq
 
 
@@ -1321,9 +1320,8 @@ def _doc_tf(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents")
     toks = (fan_out(docs)
             .select("doc_id", F.explode(_spark_tokens()).alias("w")))
-    return (toks.groupBy("doc_id", "w")
-            .agg(F.count("*").cast("bigint").alias("tf"))
-            .localCheckpoint(eager=False))
+    return materialize(toks.groupBy("doc_id", "w")
+                       .agg(F.count("*").cast("bigint").alias("tf")))
 
 
 def _fh_vectors(spark: SparkSession, sf_dir: str,
@@ -1460,7 +1458,7 @@ def _top_k(scored: DataFrame, score: str, ids: list[str], k: int,
         return (scored.select("*", F.row_number().over(we).cast("int")
                               .alias("rnk"))
                 .where(F.col("rnk") <= k))
-    scored = scored.localCheckpoint(eager=False)
+    scored = materialize(scored)
     rnk_p = F.row_number().over(
         W.partitionBy("qid").orderBy(F.col("_has_p").desc(),
                                      F.col(f"{score}_p").desc(), *ids))
@@ -1532,7 +1530,7 @@ def _hashed_knn_impl(spark: SparkSession, sf_dir: str,
                      tf: DataFrame | None = None) -> DataFrame:
     """hashed_knn_search body; ``tf``: optional staged term-frequency
     frame forwarded to ``_fh_vectors`` (VERDICT r7 #3 leg staging)."""
-    fh = _fh_vectors(spark, sf_dir, tf=tf).localCheckpoint(eager=False)
+    fh = materialize(_fh_vectors(spark, sf_dir, tf=tf))
     q = (fh.where((F.col("doc_id") % FH_QUERY_MOD == 0)
                   & (F.col("norm_sq") > 0))
          .orderBy("doc_id").limit(FH_N_QUERIES)
@@ -1944,7 +1942,6 @@ def hybrid_rrf_retrieval(spark: SparkSession, sf_dir: str) -> DataFrame:
     # r14 (guide §1.2): the two legs' construction (analysis +
     # lazy-checkpoint planning) overlaps as two parallel legs — same
     # frames, same single fused action (see retrieval_pruning_recall).
-    from mit_mapreduce_spark.session import parallel_legs
 
     tf = _doc_tf(spark, sf_dir)
     rrf = lambda rnk: F.expr(f"{RRF_GRID} div ({RRF_K} + {rnk})")  # noqa: E731

@@ -7,11 +7,13 @@ shuffle partitions sized to the parallelism, Arrow for every
 Python<->JVM boundary, and UTC session time so results are
 cluster-timezone-independent (and comparable to the DuckDB oracle).
 
-This module is also the ONE place the package scopes a config or runs
-legs concurrently: :func:`stream_session` hands out the child session
-a stream is built in (its own shuffle sizing, never the caller's), and
-:func:`parallel_legs` builds independent legs on threads. Nothing else
-in the package sets a session conf.
+This module is also the ONE place the package scopes a config, runs
+legs concurrently or materializes an intermediate:
+:func:`stream_session` hands out the child session a stream is built
+in (its own shuffle sizing, never the caller's), :func:`parallel_legs`
+builds independent legs on threads, and :func:`materialize` checkpoints
+a frame. Nothing else in the package sets a session conf or calls
+``localCheckpoint``.
 """
 
 from __future__ import annotations
@@ -21,7 +23,7 @@ import threading
 from concurrent.futures import ThreadPoolExecutor
 from typing import Callable
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
 
 
 def _cpus() -> int:
@@ -31,41 +33,39 @@ def _cpus() -> int:
         return 32
 
 
-def _tuning() -> dict[str, str]:
-    """The runtime-settable confs :func:`tune` applies (built per call:
-    one value is an environment override)."""
-    return {
-        # Deterministic, oracle-comparable timestamps.
-        "spark.sql.session.timeZone": "UTC",
-        # events.parquet stores TIMESTAMP(NANOS), which the vectorized
-        # reader rejects; read as long and convert in catalog.load_table.
-        "spark.sql.legacy.parquet.nanosAsLong": "true",
-        # Newer fixtures store TIMESTAMP(MICROS) without the UTC-adjusted
-        # flag; read as TIMESTAMP (LTZ, session tz = UTC) rather than NTZ
-        # so event-time ops (watermarks require TIMESTAMP) work unchanged.
-        "spark.sql.parquet.inferTimestampNTZ.enabled": "false",
-        # Runtime re-planning: partition coalescing, skew-join splitting.
-        "spark.sql.adaptive.enabled": "true",
-        "spark.sql.adaptive.coalescePartitions.enabled": "true",
-        "spark.sql.adaptive.skewJoin.enabled": "true",
-        # r14 (guide §2.2/§2.5): AQE's coalescing floor. With the default
-        # 1 MB floor, every post-shuffle stage over a small intermediate
-        # (a few MB compressed — e.g. the checkpointed term-frequency
-        # table) coalesces to ONE partition, so every downstream join/
-        # aggregate/window runs on one core — measured 52.2 s -> 32.8 s
-        # over a 20-query slice at sf0.1 just from lowering the floor.
-        # This is a SIZE floor, not a parallelism override: at production
-        # shuffle volumes partitions are >= 64 MB (advisory size), so a
-        # 64 KB floor never binds and plans are unchanged at scale — it
-        # only stops the degenerate tiny-shuffle collapse on any cluster.
-        "spark.sql.adaptive.coalescePartitions.minPartitionSize": "64k",
-        # Arrow batches for pandas UDF / mapInPandas / toPandas paths.
-        "spark.sql.execution.arrow.pyspark.enabled": "true",
-        # Split scans at 32 MB so a single-file fixture table still fans
-        # out across all cores; on a real cluster the same bound keeps
-        # scan tasks uniform and AQE coalesces any excess afterwards.
-        "spark.sql.files.maxPartitionBytes": str(32 * 1024 * 1024),
-    }
+# The runtime-settable confs :func:`tune` applies.
+_TUNING = {
+    # Deterministic, oracle-comparable timestamps.
+    "spark.sql.session.timeZone": "UTC",
+    # events.parquet stores TIMESTAMP(NANOS), which the vectorized
+    # reader rejects; read as long and convert in catalog.load_table.
+    "spark.sql.legacy.parquet.nanosAsLong": "true",
+    # Newer fixtures store TIMESTAMP(MICROS) without the UTC-adjusted
+    # flag; read as TIMESTAMP (LTZ, session tz = UTC) rather than NTZ
+    # so event-time ops (watermarks require TIMESTAMP) work unchanged.
+    "spark.sql.parquet.inferTimestampNTZ.enabled": "false",
+    # Runtime re-planning: partition coalescing, skew-join splitting.
+    "spark.sql.adaptive.enabled": "true",
+    "spark.sql.adaptive.coalescePartitions.enabled": "true",
+    "spark.sql.adaptive.skewJoin.enabled": "true",
+    # r14 (guide §2.2/§2.5): AQE's coalescing floor. With the default
+    # 1 MB floor, every post-shuffle stage over a small intermediate
+    # (a few MB compressed — e.g. the checkpointed term-frequency
+    # table) coalesces to ONE partition, so every downstream join/
+    # aggregate/window runs on one core — measured 52.2 s -> 32.8 s
+    # over a 20-query slice at sf0.1 just from lowering the floor.
+    # This is a SIZE floor, not a parallelism override: at production
+    # shuffle volumes partitions are >= 64 MB (advisory size), so a
+    # 64 KB floor never binds and plans are unchanged at scale — it
+    # only stops the degenerate tiny-shuffle collapse on any cluster.
+    "spark.sql.adaptive.coalescePartitions.minPartitionSize": "64k",
+    # Arrow batches for pandas UDF / mapInPandas / toPandas paths.
+    "spark.sql.execution.arrow.pyspark.enabled": "true",
+    # Split scans at 32 MB so a single-file fixture table still fans
+    # out across all cores; on a real cluster the same bound keeps
+    # scan tasks uniform and AQE coalesces any excess afterwards.
+    "spark.sql.files.maxPartitionBytes": str(32 * 1024 * 1024),
+}
 
 
 def tune(spark: SparkSession) -> SparkSession:
@@ -88,7 +88,7 @@ def tune(spark: SparkSession) -> SparkSession:
     if (getattr(spark, "_mit_tuned", False)
             and spark.conf.get("spark.sql.session.timeZone") == "UTC"):
         return spark
-    for key, value in _tuning().items():
+    for key, value in _TUNING.items():
         spark.conf.set(key, value)
     spark._mit_tuned = True
     return spark
@@ -204,7 +204,7 @@ def _follow_conf(child: SparkSession, parent: SparkSession) -> None:
         if (key != _SIZING and have.get(key) != value
                 and child.conf.isModifiable(key)):
             child.conf.set(key, value)
-    for key in have.keys() - want.keys() - _tuning().keys() - {_SIZING}:
+    for key in have.keys() - want.keys() - _TUNING.keys() - {_SIZING}:
         child.conf.unset(key)
     child._mit_followed = now
 
@@ -223,3 +223,13 @@ def parallel_legs(*fns: Callable[[], object]) -> list:
     with ThreadPoolExecutor(max_workers=min(len(fns), _MAX_LEGS)) as pool:
         futures = [pool.submit(fn) for fn in fns]
     return [f.result() for f in futures]
+
+
+def materialize(df: DataFrame) -> DataFrame:
+    """``df`` as a leaf: a lazy local checkpoint. Nothing runs until
+    the first action over it, which computes ``df`` once into executor
+    blocks; every consumer (and every later analysis) then starts from
+    that leaf instead of ``df``'s lineage. The one place the package
+    decides where an intermediate lands, the way the paper's framework
+    alone writes map output."""
+    return df.localCheckpoint(eager=False)

@@ -1,10 +1,9 @@
 """A deterministic streaming source on the Spark 4 Python Data Source
 API (``SimpleDataSourceStreamReader``).
 
-The batch half of the API is exercised by ``wholefile_source``; this
-is the streaming half: a replayable counter source that emits rows
-``(n, batch_id)`` in fixed-size chunks per micro-batch, with offsets
-tracked as ``{"n": <next value>}``. Replayability — ``readBetweenOffsets``
+A replayable counter source that emits rows ``(n, batch_id)`` in
+fixed-size chunks per micro-batch, with offsets tracked as
+``{"n": <next value>}``. Replayability — ``readBetweenOffsets``
 must reproduce any (start, end) range exactly — is what makes a source
 usable under Structured Streaming's recovery contract: after a crash,
 the engine re-asks for committed ranges and the answer has to match.

@@ -33,7 +33,7 @@ from pyspark.sql import functions as F
 
 from mit_mapreduce_spark.functions.numeric import dsum
 from mit_mapreduce_spark.session import (
-    get_spark, parallel_legs, stream_session, tune,
+    get_spark, materialize, parallel_legs, stream_session, tune,
 )
 from mit_mapreduce_spark.streaming import (
     _SCRATCH, STATE_PARTITIONS, drain_via_batch, sf_key,
@@ -212,11 +212,10 @@ def main(sf_dir: str) -> dict:
              (PH_BANDS, PH_BAND_BITS, PH_HAM_MAX)),
             ("video_alerts", _fingerprint_video_assets_from, _vfp_batch,
              (FP_BANDS, FP_BAND_BITS, FP_HAM_MAX))):
-        idx_sigs = (
+        idx_sigs = materialize(
             fixture_from(
                 spark.read.parquet(dstage).select("doc_id").where(~inc_pred))
             .mapInPandas(kernel, _PHASH_SCHEMA)
-            .localCheckpoint(eager=False)
         )
         al_source = (ss.readStream.schema(dschema)
                      .option("maxFilesPerTrigger", 1).parquet(dstage))

@@ -186,8 +186,8 @@ def drain_via_batch(stream_df: DataFrame, frame_fn, name: str,
     batch_id-keyed subdirectory, so a replayed batch — Spark's
     at-least-once foreachBatch contract after a failure — replaces
     its previous output instead of appending duplicate rows (the
-    run_stream_foreach_batch idempotence pattern, keyed on batch_id
-    instead of partition values). The sink path is deterministic per
+    overwrite is keyed on batch_id, not on the partition values a
+    batch holds). The sink path is deterministic per
     (``name``, :func:`sf_key` of ``sf_dir``, applicationId) — the
     full-path hash keeps two corpora that share a basename apart, the
     applicationId keeps two sessions on one checkout from interleaving
@@ -205,9 +205,8 @@ def drain_via_batch(stream_df: DataFrame, frame_fn, name: str,
     from ``frame_fn`` over an empty frame, which is analyzed but runs
     no job, and the empty dir then reads as 0 rows. Every invocation
     recomputes from the stream — nothing is reused across
-    invocations. Production swaps the partition-overwrite sink
-    (run_stream_foreach_batch) or Kafka with the identical per-batch
-    plan."""
+    invocations. Production swaps the sink for a table format or Kafka
+    with the identical per-batch plan."""
     spark = stream_df.sparkSession
     out = os.path.join(
         _SCRATCH,
@@ -244,26 +243,3 @@ def drain_via_batch(stream_df: DataFrame, frame_fn, name: str,
             .option("recursiveFileLookup", "true")
             .schema(schema).parquet(out))
 
-
-def run_stream_foreach_batch(stream_df: DataFrame, out_dir: str,
-                             partition_col: str) -> None:
-    """Drain a stream through foreachBatch into partitioned parquet
-    with dynamic partition overwrite — the idempotent file-lake sink.
-
-    foreachBatch hands each micro-batch to arbitrary batch code; with
-    dynamic overwrite keyed on (partition values present in the batch)
-    a REPLAYED batch — Spark's at-least-once sink contract after a
-    failure — overwrites its own previous output instead of appending
-    duplicates. This is how exactly-once lands on plain parquet
-    without a transaction log."""
-    def _write_batch(batch_df: DataFrame, batch_id: int) -> None:
-        (batch_df.write.mode("overwrite")
-         .option("partitionOverwriteMode", "dynamic")
-         .partitionBy(partition_col).parquet(out_dir))
-
-    q = (
-        stream_df.writeStream.foreachBatch(_write_batch)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()

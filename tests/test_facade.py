@@ -265,23 +265,3 @@ def test_xml_round_trip(spark, sf_dir, tmp_path):
     assert sorted(map(tuple, back.collect())) == sorted(map(tuple, n.collect()))
 
 
-def test_wholefile_python_datasource_matches_rdd_source(spark, tmp_path):
-    """F1's whole-file contract on the Spark 4 Python Data Source API:
-    same rows as the RDD wholeTextFiles wrapper, one partition per
-    file (the reference's one-map-task-per-file granularity)."""
-    from mit_mapreduce_spark.sources import whole_text_files
-    from mit_mapreduce_spark.sources.wholefile_source import (
-        WholeFileDataSource,
-    )
-
-    for i in range(3):
-        (tmp_path / f"pg-{i}.txt").write_text(f"doc {i} words here\n")
-
-    spark.dataSource.register(WholeFileDataSource)
-    via_ds = spark.read.format("wholefile").load(str(tmp_path))
-    assert via_ds.rdd.getNumPartitions() == 3  # one task per file
-    got = sorted((r.path, r.content) for r in via_ds.collect())
-    want = sorted(
-        (r.path.replace("file:", ""), r.content)
-        for r in whole_text_files(spark, str(tmp_path) + "/*.txt").collect())
-    assert got == want

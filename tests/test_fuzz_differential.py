@@ -426,13 +426,9 @@ def test_merge_upsert_null_keys_and_empty_compaction(spark, tmp_path):
 
 
 def test_wholefile_sources_empty_and_unicode_names(spark, tmp_path):
-    """Both whole-file paths (facade helper and the Spark 4 Python
-    Data Source) list and read empty files and unicode/space
-    filenames identically."""
+    """The facade's whole-file reader lists and reads empty files and
+    unicode/space filenames."""
     from mit_mapreduce_spark import sources
-    from mit_mapreduce_spark.sources.wholefile_source import (
-        WholeFileDataSource,
-    )
 
     td = str(tmp_path / "files")
     os.makedirs(td)
@@ -448,11 +444,6 @@ def test_wholefile_sources_empty_and_unicode_names(spark, tmp_path):
     got = sorted((os.path.basename(r[0]), len(r[1]))
                  for r in df.collect())
     assert got == want
-    spark.dataSource.register(WholeFileDataSource)
-    df2 = spark.read.format("wholefile").load(os.path.join(td, "*.txt"))
-    got2 = sorted((os.path.basename(r[0]), len(r[1]))
-                  for r in df2.collect())
-    assert got2 == want
 
 
 def test_semistructured_malformed_props(spark, tmp_path):

@@ -1,4 +1,5 @@
-"""One way to scope a config, one way to build legs in parallel.
+"""One way to scope a config, one way to build legs in parallel, one
+way to materialize an intermediate.
 
 Queries share one session (bench.py runs all of them on one, and the
 composites build legs concurrently on it), so no query may change
@@ -48,8 +49,16 @@ def test_only_the_drain_calls_foreach_batch():
     """Every foreachBatch sink is streaming.drain_via_batch: one
     batch_id-keyed overwrite per micro-batch, so a replayed batch never
     appends its rows twice."""
-    assert _package_hits(r"\.foreachBatch\(",
-                         os.path.join("streaming", "__init__.py")) == []
+    drain = os.path.join("streaming", "__init__.py")
+    assert _package_hits(r"\.foreachBatch\(", drain) == []
+    with open(os.path.join(PKG, drain), encoding="utf-8") as fh:
+        assert len(re.findall(r"\.foreachBatch\(", fh.read())) == 1
+
+
+def test_only_session_module_materializes():
+    """Every checkpoint goes through session.materialize: where an
+    intermediate lands is decided in one place."""
+    assert _package_hits(r"\.localCheckpoint\(", "session.py") == []
 
 
 def test_parallel_legs_orders_results_and_waits_before_raising():

@@ -174,25 +174,6 @@ def test_stream_sliding_equals_batch_window(spark, sf_dir):
     assert per_window_sum == 4 * n_events_total
 
 
-def test_foreach_batch_sink_is_idempotent(spark, sf_dir, tmp_path):
-    """Replaying the drain (same input, fresh run) must not duplicate
-    rows: dynamic partition overwrite makes the sink idempotent."""
-    from mit_mapreduce_spark.catalog import load_table
-    from mit_mapreduce_spark.streaming import (events_stream,
-                                               run_stream_foreach_batch)
-
-    out = str(tmp_path / "lake")
-    ev = events_stream(spark, sf_dir).withColumn(
-        "day", F.to_date("ts")).select("event_id", "user_id", "value", "day")
-    run_stream_foreach_batch(ev, out, "day")
-    n_expected = load_table(spark, sf_dir, "events").count()
-    assert spark.read.parquet(out).count() == n_expected
-
-    # replay: a second availableNow drain of the same source
-    run_stream_foreach_batch(ev, out, "day")
-    assert spark.read.parquet(out).count() == n_expected
-
-
 def test_stream_static_enrich_equals_batch_join(spark, sf_dir):
     """Stream-static join + rollup must equal the same batch join."""
     from pyspark.sql import functions as F
