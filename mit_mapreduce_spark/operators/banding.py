@@ -60,8 +60,7 @@ def sql_byte_at(byte_expr: str) -> str:
 # the corpus into "today's incoming shard" and "the retained index":
 # id % 40 < 6. It lives here (r12) because both the media tiers
 # (mmdedup) and the embedding tier (similarity) consume it, and
-# similarity must not import mmdedup; mmdedup re-exports the FP_*
-# aliases its r11 call sites were built on.
+# similarity must not import mmdedup.
 
 INC_MOD, INC_LT = 40, 6
 INC_PRED = f"{{d}} % {INC_MOD} < {INC_LT}"

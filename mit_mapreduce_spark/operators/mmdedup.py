@@ -1,8 +1,9 @@
-"""Audio and video perceptual near-dup dedup (round 10).
+"""Media near-dup dedup: one table of modalities, every family built once.
 
-Completes the multimodal dedup story (VERDICT r9 asks #3/#4): the
-text tier has MinHash/SimHash, the image tier has dHash
-(multimodal.dedup_image_phash) — this module adds
+The text tier has MinHash/SimHash; the media tiers are the three rows
+of the ``Media`` table below. A row holds only a modality's plugin
+parts — the image dHash plugins live in multimodal.py — and this
+module adds the audio and video ones:
 
 - AUDIO: a per-asset energy-sign fingerprint over real decoded PCM —
   the time-windowed analogue of the Haitsma–Kalker "sign of energy
@@ -22,12 +23,15 @@ text tier has MinHash/SimHash, the image tier has dHash
   near-dup videos that differ in a few frames still agree on the
   untouched frames' bands, so the banded join surfaces them.
 
-Both tiers then ride the SAME machinery as the image tier —
-operators/banding.py: banded_hamming_pairs2 (16-bit-band equi-join,
-pigeonhole-lossless at radius 7, Hamming as two popcounts over
-packed words), label_with_singletons (min-label CC + singleton
-fill), fingerprint_search_topk, keep_report_frame, and the oracle
-text builders — one implementation for image/audio/video.
+The pair, cluster, keep-report, search and incremental-screen
+families, the streaming fingerprint and alert legs
+(streaming_queries.py), the manifest and the admission are each built
+once over the rows, on the shared machinery of operators/banding.py:
+banded_hamming_pairs2 (16-bit-band equi-join, pigeonhole-lossless at
+radius 7, Hamming as two popcounts over packed words),
+label_with_singletons (min-label CC + singleton fill),
+fingerprint_search_topk, keep_report_frame, and the oracle text
+builders.
 
 Like the image tier, near-dup structure must be PLANTED: hashing
 text destroys similarity, so the fixtures build variant groups of 4
@@ -38,12 +42,11 @@ by construction, all inside band 0, while cross-group signatures are
 independent 128-bit coins. The DuckDB oracles rebuild the payload
 bytes from the chain and recompute windowing/energies/luma rows,
 bit packing, banding, candidates, and Hamming entirely in SQL — the
-same chain-reconstruction discipline as the image tier
-(multimodal._sql_image_phash is the template; reference parity note:
-the reference repo, mr/*.go, has no media operators — this is
-north-star surface for a 100 TB multimodal pipeline).
+same chain-reconstruction discipline as the image tier (reference
+parity note: the reference repo, mr/*.go, has no media operators —
+this is north-star surface for a 100 TB multimodal pipeline).
 
-100 TB posture (shared with the image tier): one decode+fingerprint
+100 TB posture (all three tiers): one decode+fingerprint
 Arrow pass per corpus — payload bytes never shuffle, only a 16-byte
 signature per asset reaches the join; candidates come from
 equi-joins on 16-bit band values (~n²/65536 random collisions per
@@ -52,8 +55,10 @@ band); the CC loop runs over the pair graph's vertex set only.
 
 from __future__ import annotations
 
-from collections.abc import Iterator
-from functools import partial
+import operator
+from collections.abc import Callable, Iterator
+from dataclasses import dataclass
+from functools import partial, reduce, update_wrapper
 
 import pandas as pd
 
@@ -61,13 +66,13 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from mit_mapreduce_spark.catalog import fan_out, load_table
+from mit_mapreduce_spark.operators import mmquality, multimodal
 from mit_mapreduce_spark.operators.banding import (
-    INC_LT, INC_MOD, INC_PRED, banded_hamming_pairs2,
-    fingerprint_search_topk, inc_col, incremental_screen,
-    keep_report_frame, label_with_singletons, planted_base,
-    planted_chain_expr, sql_band_tail, sql_byte_at, sql_cc_over,
-    sql_incremental_tail, sql_keep_report_over, sql_planted_hex,
-    sql_search_tail, sql_sigs_over,
+    INC_PRED, banded_hamming_pairs2, fingerprint_search_topk, inc_col,
+    incremental_screen, keep_report_frame, label_with_singletons,
+    planted_base, planted_chain_expr, sql_band_tail, sql_byte_at,
+    sql_cc_over, sql_incremental_tail, sql_keep_report_over,
+    sql_planted_hex, sql_search_tail,
 )
 from mit_mapreduce_spark.operators.multimodal import (
     _AUDIO_SCHEMA, _VIDEO_SCHEMA, _encode_audio_batch, _encode_video_batch,
@@ -76,7 +81,9 @@ from mit_mapreduce_spark.operators.multimodal import (
 from mit_mapreduce_spark.operators.registry import query
 from mit_mapreduce_spark.session import materialize, parallel_legs
 
-# --- shared fingerprint geometry (identical to the image tier's) ----------
+# --- fingerprint geometry: ONE set for all three tiers ----------------------
+# Aliases of the image tier's PH_* constants, free to diverge; every
+# media builder below reads these.
 FP_BANDS = PH_BANDS                 # 8 bands...
 FP_BAND_BITS = PH_BAND_BITS         # ...of 16 bits = 128-bit signatures
 FP_HAM_MAX = PH_HAM_MAX             # radius 7: pigeonhole-lossless
@@ -188,19 +195,6 @@ def _afp_batch(
             "sig1": pd.Series(out["sig1"], dtype="int64")})
 
 
-def _sql_audio_fingerprint(where: str | None = None) -> str:
-    """DuckDB twin: rebuild the PCM hex from the chain + prefix,
-    decode little-endian int16 samples INSIDE the list lambda (the
-    audio-features oracle pattern — never index a per-row list from
-    another lambda, that is quadratic), window energies by integer
-    division, then the shared banded tail. ``where`` restricts the
-    asset set (the r11 sparse-modality manifest)."""
-    return f"""
-    WITH {_sql_audio_bits(where)},
-    {sql_band_tail(FP_HAM_MAX)}
-    """
-
-
 def _sql_audio_bits(where: str | None = None) -> str:
     """DuckDB CTE chain through `bits` (doc_id, band, bv) for the
     audio fingerprint — shared by the pair oracle and the search
@@ -229,57 +223,6 @@ def _sql_audio_bits(where: str | None = None) -> str:
       FROM e a JOIN e b ON b.doc_id = a.doc_id AND b.w = a.w + 1
       WHERE a.w % {FP_BAND_BITS + 1} < {FP_BAND_BITS}
       GROUP BY a.doc_id, a.w // {FP_BAND_BITS + 1})"""
-
-
-@query("dedup_audio_fingerprint", oracle=_sql_audio_fingerprint())
-def dedup_audio_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """AUDIO near-duplicate pairs by energy-sign fingerprint (VERDICT
-    r9 ask #3): decode every WAV with the real stdlib codec, compute
-    the 128-bit time-windowed energy-sign fingerprint (the
-    Haitsma–Kalker shape over integer window energies), and find
-    pairs within Hamming 7 via the SAME pigeonhole-lossless 16-bit
-    banded equi-join as the image/text tiers — never all-pairs.
-
-    100 TB posture: identical to dedup_image_phash — one decode+
-    fingerprint Arrow pass (payload bytes never shuffle, only the
-    16-byte signature per asset does), banded candidate equi-join,
-    packed-signature Hamming filter pushed into the join output
-    stream. The oracle rebuilds the PCM from the sha256 chain and
-    recomputes windowing, energies, sign bits, banding, and Hamming
-    entirely in SQL; a crafted pytest checks the banded result
-    against a quadratic brute force and a negative control runs the
-    kernel over the real mixed-format audio_assets corpus."""
-    sigs = materialize(
-        fingerprint_audio_assets(spark, sf_dir)
-        .mapInPandas(_afp_batch, _PHASH_SCHEMA)
-    )
-    return banded_hamming_pairs2(sigs, FP_BANDS, FP_BAND_BITS, FP_HAM_MAX)
-
-
-@query("dedup_audio_clusters",
-       oracle=sql_cc_over(_sql_audio_fingerprint()))
-def dedup_audio_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """AUDIO near-duplicate CLUSTERS: connected components of the
-    fingerprint pair graph (cluster_id = min asset_id; pair-free
-    assets are singletons) — the same min-label loop + singleton
-    fill as the image tier, checked against a DuckDB recursive
-    transitive closure."""
-    docs = load_table(spark, sf_dir, "documents") \
-        .select(F.col("doc_id").alias("asset_id"))
-    pairs = dedup_audio_fingerprint(spark, sf_dir) \
-        .select("asset_a", "asset_b")
-    return label_with_singletons(docs, "asset_id", pairs,
-                                 "asset_a", "asset_b")
-
-
-@query("dedup_audio_keep_report",
-       oracle=sql_keep_report_over(sql_cc_over(_sql_audio_fingerprint())))
-def dedup_audio_keep_report(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The audio-dedup DECISION: keep the canonical (min-id) asset of
-    every fingerprint cluster, drop the rest, report per language —
-    the multimodal pillar's sign-off number for audio, composing
-    dedup_audio_clusters with one manifest join + rollup."""
-    return keep_report_frame(spark, sf_dir, dedup_audio_clusters(spark, sf_dir))
 
 
 # --- VIDEO frame-sequence dHash tier ---------------------------------------
@@ -392,20 +335,6 @@ def _vfp_batch(
             "sig1": pd.Series(out["sig1"], dtype="int64")})
 
 
-def _sql_video_phash(where: str | None = None) -> str:
-    """DuckDB twin: rebuild the YUV hex from the chain + prefix, read
-    the Y byte of frame j//17, pixel j%17 (byte offset (j//17)·51 +
-    j%17 — the fixture's frames are one 17-pixel Y row, so frame =
-    band and the nearest-neighbor sampling is the identity), then
-    the image-oracle bit/band construction and the shared tail.
-    ``where`` restricts the asset set (the sparse-modality
-    manifest)."""
-    return f"""
-    WITH {_sql_video_bits(where)},
-    {sql_band_tail(FP_HAM_MAX)}
-    """
-
-
 def _sql_video_bits(where: str | None = None) -> str:
     """DuckDB CTE chain through `bits` (doc_id, band, bv) for the
     video frame-sequence dHash — shared by the pair oracle and the
@@ -430,96 +359,177 @@ def _sql_video_bits(where: str | None = None) -> str:
       GROUP BY a.doc_id, a.j // {wpf})"""
 
 
-@query("dedup_video_phash", oracle=_sql_video_phash())
-def dedup_video_phash(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """VIDEO near-duplicate pairs by frame-sequence perceptual hash
-    (VERDICT r9 ask #4): parse every Y4M stream with the real stdlib
-    codec, sample 8 frames, dHash each frame's Y-plane profile into
-    one 16-bit band (frame = band: videos that differ in a few
-    frames still agree on the untouched frames' bands), and find
-    pairs within Hamming 7 via the shared pigeonhole-lossless banded
-    equi-join — never all-pairs.
-
-    100 TB posture: identical to dedup_image_phash — one parse+
-    fingerprint Arrow pass, only 16 signature bytes per asset reach
-    the join, banded candidates, pushable packed-popcount filter.
-    Oracle rebuilds the frames from the sha256 chain and recomputes
-    profile, bits, banding, and Hamming in SQL; brute-force pytest +
-    real-corpus negative control as in the image tier."""
-    sigs = materialize(
-        fingerprint_video_assets(spark, sf_dir)
-        .mapInPandas(_vfp_batch, _PHASH_SCHEMA)
-    )
-    return banded_hamming_pairs2(sigs, FP_BANDS, FP_BAND_BITS, FP_HAM_MAX)
-
-
-@query("dedup_video_clusters", oracle=sql_cc_over(_sql_video_phash()))
-def dedup_video_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """VIDEO near-duplicate CLUSTERS: connected components of the
-    frame-sequence phash pair graph with singleton fill — the shared
-    min-label loop, checked against the recursive-closure oracle."""
-    docs = load_table(spark, sf_dir, "documents") \
-        .select(F.col("doc_id").alias("asset_id"))
-    pairs = dedup_video_phash(spark, sf_dir).select("asset_a", "asset_b")
-    return label_with_singletons(docs, "asset_id", pairs,
-                                 "asset_a", "asset_b")
-
-
-@query("dedup_video_keep_report",
-       oracle=sql_keep_report_over(sql_cc_over(_sql_video_phash())))
-def dedup_video_keep_report(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The video-dedup DECISION: keep the canonical (min-id) asset of
-    every cluster, drop the rest, report per language — composing
-    dedup_video_clusters with one manifest join + rollup."""
-    return keep_report_frame(spark, sf_dir, dedup_video_clusters(spark, sf_dir))
-
-
-# --- cross-modality keep manifest -------------------------------------------
+# --- the MEDIA table: one row per modality ----------------------------------
+#
+# A modality is only its plugin parts — fixture builder, fingerprint
+# kernel, DuckDB bits chain, quality screen, presence flag — the way a
+# MapReduce app is only its Map and Reduce. Everything else (the seven
+# family queries below, the manifest and admission legs, their
+# oracles, the streaming legs) is built once over MEDIA.
 #
 # A real corpus is MODALITY-SPARSE: most documents own no audio or
-# video asset, many own no image. Presence is supplied by the ASSET
-# MANIFEST table (r12: asset_manifest below — consumers read the
-# has_* columns; the generation predicates are spelled once, in the
-# manifest builders). Each modality's fingerprint/CC leg runs over
-# the PRESENT subset only, the cluster tables LEFT-join, and an
-# absent modality is keep-pass — a text-only document can be
-# `ready` (VERDICT r10 ask #1; the r10 manifest INNER-joined dense
-# cluster tables, which silently required every doc to own all three
-# assets). doc_id ≡ 28 (mod 210) satisfies all three absences at
+# video asset, many own no image. Presence is DATA, read from the
+# ASSET MANIFEST's has_* columns (asset_manifest below); the flags are
+# GENERATED from the absent pairs (the fixture generator's role, so
+# the DuckDB oracles can recompute them) and every consumer reads the
+# named column. doc_id ≡ 28 (mod 210) satisfies all three absences at
 # once, so the fixture always contains genuinely text-only docs.
-# The dense pair/cluster/search ops above keep their full fixtures
-# (maximal planted structure per row); sparsity is a property of
-# which documents OWN assets, which is exactly the manifest's join.
 
 MM_IMAGE_ABSENT = (5, 3)   # doc_id % 5 == 3  -> doc has no image
 MM_AUDIO_ABSENT = (7, 0)   # doc_id % 7 == 0  -> doc has no audio
 MM_VIDEO_ABSENT = (6, 4)   # doc_id % 6 == 4  -> doc has no video
 
-# The manifest COLUMNS (r12, VERDICT r11 ask #2): presence is DATA —
-# an asset_manifest table (doc_id, has_image, has_audio, has_video,
-# has_embedding) — not join-key arithmetic at the use sites. The
-# media flags are GENERATED from the absent-tuples above (the fixture
-# generator's role, so the DuckDB oracles can recompute them), but
-# every consumer — _present_docs, the keep bits, the presence SQL —
-# reads the named column; the predicate arithmetic is spelled exactly
-# once, in the generator below. has_embedding is genuinely
-# data-driven on the fixture too: a doc owns a vector iff the
-# embeddings table has its vec_id (at sf0.1 only 2000 of 5000 docs
-# do).
-AM_MEDIA_FLAGS = {
-    "has_image": MM_IMAGE_ABSENT,
-    "has_audio": MM_AUDIO_ABSENT,
-    "has_video": MM_VIDEO_ABSENT,
-}
+
+@dataclass(frozen=True)
+class Media:
+    """What differs between image, audio and video — nothing more."""
+
+    flag: str                     # asset-manifest column, has_<name>
+    absent: tuple[int, int]       # doc_id % mod == rem: no asset
+    letter: str                   # leg columns _{l}cl/_{l}qp/_{l}nd
+    fixture_from: Callable[[DataFrame], DataFrame]  # docs -> payloads
+    kernel: Callable              # mapInPandas fingerprint kernel
+    sql_bits: Callable[..., str]  # DuckDB chain through `bits`
+    screen_from: Callable[[DataFrame], DataFrame]   # quality screen
+    sql_screen: Callable[..., str]  # its DuckDB twin
+    pairs_name: str               # the three names with no pattern
+    search_name: str
+    alerts_name: str
+
+    @property
+    def name(self) -> str:
+        return self.flag.removeprefix("has_")
+
+    @property
+    def present_sql(self) -> str:
+        """Presence predicate over a plain ``doc_id`` column."""
+        return _present_sql_t(self.flag).format(d="doc_id")
+
+    def sigs(self, docs: DataFrame) -> DataFrame:
+        """(asset_id, sig0, sig1) of the docs' assets: the fixture
+        builder, then the fingerprint kernel."""
+        return self.fixture_from(docs).mapInPandas(self.kernel,
+                                                   _PHASH_SCHEMA)
+
+
+IMAGE = Media(
+    "has_image", MM_IMAGE_ABSENT, "i",
+    multimodal._phash_image_assets_from, multimodal._phash_batch,
+    multimodal._sql_image_bits,
+    mmquality._image_screen_from, mmquality._sql_image_screen,
+    "dedup_image_phash", "image_phash_search", "stream_image_alerts",
+)
+AUDIO = Media(
+    "has_audio", MM_AUDIO_ABSENT, "a",
+    _fingerprint_audio_assets_from, _afp_batch, _sql_audio_bits,
+    mmquality._audio_screen_from, mmquality._sql_audio_screen,
+    "dedup_audio_fingerprint", "audio_fingerprint_search",
+    "stream_fingerprint_alerts",
+)
+VIDEO = Media(
+    "has_video", MM_VIDEO_ABSENT, "v",
+    _fingerprint_video_assets_from, _vfp_batch, _sql_video_bits,
+    mmquality._video_screen_from, mmquality._sql_video_screen,
+    "dedup_video_phash", "video_phash_search", "stream_video_alerts",
+)
+MEDIA = (IMAGE, AUDIO, VIDEO)
+
+AM_MEDIA_FLAGS = {m.flag: m.absent for m in MEDIA}
 _ABSENT_TO_FLAG = {v: k for k, v in AM_MEDIA_FLAGS.items()}
 
 
-def am_media_flag(absent: tuple[int, int]) -> F.Column:
+def media_queries(name: str, oracle: Callable[[Media], str]):
+    """Register the decorated family builder ``build(spark, sf_dir, m)``
+    once per MEDIA row as query ``name.format(m=row)``, gated on
+    ``oracle(row)``; each registered callable carries the builder's
+    docstring with ``{name}`` filled in by the row's modality."""
+    def deco(build):
+        for m in MEDIA:
+            fn = update_wrapper(partial(build, m=m), build)
+            fn.__name__ = fn.__qualname__ = name.format(m=m)
+            fn.__doc__ = build.__doc__.format(name=m.name)
+            query(fn.__name__, oracle(m))(fn)
+        return build
+    return deco
+
+
+# --- the batch families: pairs, clusters, keep report --------------------
+#
+# All three tiers ride the SAME banding machinery (operators/banding.py):
+# 16-bit-band equi-joins, pigeonhole-lossless at radius 7, Hamming as
+# two popcounts over packed words. The dense families run the full
+# fixture (maximal planted structure per row); sparsity is a property
+# of which documents OWN assets, i.e. of the manifest's join.
+
+def _sql_pairs(m: Media, where: str | None = None) -> str:
+    """DuckDB twin of the pair family: the row's bits chain (``where``
+    restricts the asset set — the sparse manifest) + the shared banded
+    candidate/Hamming tail."""
+    return f"""
+    WITH {m.sql_bits(where)},
+    {sql_band_tail(FP_HAM_MAX)}
+    """
+
+
+@media_queries("{m.pairs_name}", _sql_pairs)
+def _pairs(spark: SparkSession, sf_dir: str, m: Media) -> DataFrame:
+    """Near-duplicate {name} pairs by perceptual fingerprint: decode
+    every asset with the real stdlib codec, compute its 128-bit
+    signature with the row's kernel, and find the pairs within Hamming
+    7 via the pigeonhole-lossless 16-bit banded equi-join (<= 7 flipped
+    bits cannot touch all 8 bands) — never all-pairs.
+
+    100 TB posture: one decode+fingerprint Arrow pass (payload bytes
+    never shuffle, only the 16-byte signature per asset does), an
+    equi-join bounded by band-bucket sizes (~n²/65536 random
+    collisions per band), and a packed two-popcount Hamming filter
+    Catalyst pushes into the join output (a 16-column popcount forest
+    spun constraint inference for minutes — SCALE.md r9). No
+    CartesianProduct (plan-pinned). The oracle rebuilds each payload
+    from its sha256 chain and recomputes decode, signature, banding
+    and Hamming in SQL; pytests check the banded result against a
+    quadratic brute force, with a negative control over the real
+    mixed-format corpus."""
+    sigs = materialize(m.sigs(load_table(spark, sf_dir, "documents")))
+    return banded_hamming_pairs2(sigs, FP_BANDS, FP_BAND_BITS, FP_HAM_MAX)
+
+
+@media_queries("dedup_{m.name}_clusters",
+               lambda m: sql_cc_over(_sql_pairs(m)))
+def _clusters(spark: SparkSession, sf_dir: str, m: Media) -> DataFrame:
+    """Near-duplicate {name} CLUSTERS: connected components of the
+    fingerprint pair graph (cluster_id = min asset_id; pair-free
+    assets are singletons). The min-label loop
+    (dedup.min_label_components) runs over the pair graph's vertex set
+    only, one edge-label shuffle per round with checkpoint-truncated
+    lineage; every other asset joins once as a singleton. Oracle: a
+    DuckDB recursive transitive closure — declarative reachability
+    checks the iterative loop."""
+    docs = load_table(spark, sf_dir, "documents") \
+        .select(F.col("doc_id").alias("asset_id"))
+    pairs = _pairs(spark, sf_dir, m).select("asset_a", "asset_b")
+    return label_with_singletons(docs, "asset_id", pairs,
+                                 "asset_a", "asset_b")
+
+
+@media_queries("dedup_{m.name}_keep_report",
+               lambda m: sql_keep_report_over(sql_cc_over(_sql_pairs(m))))
+def _keep_report(spark: SparkSession, sf_dir: str, m: Media) -> DataFrame:
+    """The {name}-dedup DECISION: keep the canonical (min-id) asset of
+    every fingerprint cluster, drop the rest, and report per language
+    what survives — one manifest join + rollup over the cluster table
+    (two longs per asset; nothing is decoded twice)."""
+    return keep_report_frame(spark, sf_dir, _clusters(spark, sf_dir, m))
+
+
+# --- the asset manifest ------------------------------------------------------
+
+def am_media_flag(m: Media) -> F.Column:
     """The ONE Spark spelling of a media presence flag — consumers
-    attach this aliased to its manifest column name and read the
-    column from then on."""
-    mod, rem = absent
-    return (F.col("doc_id") % mod != rem).alias(_ABSENT_TO_FLAG[absent])
+    attach it under its manifest column name and read the column from
+    then on."""
+    mod, rem = m.absent
+    return (F.col("doc_id") % mod != rem).alias(m.flag)
 
 
 def _am_media_sql() -> str:
@@ -539,30 +549,6 @@ def _present_sql_t(flag: str) -> str:
     return f"{{d}} IN (SELECT am_id FROM ({_am_media_sql()}) WHERE {flag})"
 
 
-def _present_sql(absent: tuple[int, int]) -> str:
-    """Formatted presence predicate over a plain ``doc_id`` column."""
-    return _present_sql_t(_ABSENT_TO_FLAG[absent]).format(d="doc_id")
-
-
-def _keep_media_sql(alias: str, q_alias: str,
-                    absent: tuple[int, int]) -> str:
-    """SQL keep bit for one media modality: absent (by the MANIFEST
-    column — r12) OR the doc's asset is both its near-dup cluster's
-    canonical member AND a quality-screen pass (r11 second half:
-    the mmquality screens fold into the manifest — an owned asset
-    must survive dedup AND quality; COALESCE treats a missing
-    quality row, i.e. an undecodable asset, as fail)."""
-    flag = _ABSENT_TO_FLAG[absent]
-    return (f"(NOT am.{flag}"
-            f" OR ({alias}.cluster_id = d.doc_id"
-            f" AND COALESCE({q_alias}.passes, FALSE)))")
-
-
-IMG_PRESENT_SQL = _present_sql(MM_IMAGE_ABSENT)
-AUD_PRESENT_SQL = _present_sql(MM_AUDIO_ABSENT)
-VID_PRESENT_SQL = _present_sql(MM_VIDEO_ABSENT)
-
-
 def asset_manifest_media(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(doc_id, has_image, has_audio, has_video) — the media half of
     the asset manifest, one projection over documents (no join, so
@@ -576,7 +562,7 @@ def asset_manifest_media_from(docs: DataFrame) -> DataFrame:
     """The media-flag projection over any (doc_id, ...) frame — batch
     (above) or a document stream (stream_asset_manifest, r14)."""
     return docs.select(
-        "doc_id", *[am_media_flag(a) for a in AM_MEDIA_FLAGS.values()])
+        "doc_id", *[am_media_flag(m) for m in MEDIA])
 
 
 def asset_manifest_from(media: DataFrame, emb: DataFrame) -> DataFrame:
@@ -588,7 +574,7 @@ def asset_manifest_from(media: DataFrame, emb: DataFrame) -> DataFrame:
         media
         .join(emb.select(F.col("vec_id").alias("doc_id")).distinct()
               .withColumn("_e", F.lit(True)), "doc_id", "left")
-        .select("doc_id", "has_image", "has_audio", "has_video",
+        .select("doc_id", *AM_MEDIA_FLAGS,
                 F.coalesce("_e", F.lit(False)).alias("has_embedding"))
     )
 
@@ -646,22 +632,18 @@ def keep_media_gate(flag: str, ok, qp: str):
 
 
 def _sparse_clusters(spark: SparkSession, sf_dir: str,
-                     fixture_from, kernel, absent: tuple[int, int],
-                     n_bands: int = FP_BANDS,
-                     band_bits: int = FP_BAND_BITS,
-                     ham_max: int = FP_HAM_MAX) -> DataFrame:
+                     fixture_from, kernel,
+                     absent: tuple[int, int]) -> DataFrame:
     """(asset_id, cluster_id) over the PRESENT subset of one modality:
-    the same fixture builder + fingerprint kernel + banded pair join +
-    min-label CC the dense tier runs, restricted to the docs that own
-    an asset — the manifest's sparse media legs. Geometry is a
-    parameter so the image leg stays pinned to PH_* (aliases of the
-    FP_* defaults today, free to diverge)."""
+    the pair and cluster families' fingerprint + banded join +
+    min-label CC, restricted to the docs that own an asset — the
+    manifest's sparse media legs."""
     docs = _present_docs(spark, sf_dir, absent)
     sigs = materialize(
         fixture_from(docs).mapInPandas(kernel, _PHASH_SCHEMA)
     )
-    pairs = banded_hamming_pairs2(sigs, n_bands, band_bits, ham_max) \
-        .select("asset_a", "asset_b")
+    pairs = banded_hamming_pairs2(sigs, FP_BANDS, FP_BAND_BITS,
+                                  FP_HAM_MAX).select("asset_a", "asset_b")
     return label_with_singletons(
         docs.select(F.col("doc_id").alias("asset_id")), "asset_id",
         pairs, "asset_a", "asset_b")
@@ -669,57 +651,48 @@ def _sparse_clusters(spark: SparkSession, sf_dir: str,
 
 def _sql_manifest() -> str:
     """DuckDB twin of the per-doc training manifest: the text-CC,
-    sparse image/audio/video-CC, and three-stage quality verdicts
-    composed from the SAME oracle builders the pillar queries gate on
-    (dedup._sql_cc, multimodal._sql_image_phash, this module's bits
-    builders, curation._sql_funnel_verdicts) — so the manifest oracle
-    is a composition, not a re-derivation. Media cluster tables cover
-    only the PRESENT docs (the same presence predicates the Spark
-    side filters on) and are LEFT-joined; an absent modality is
-    keep-pass by the explicit predicate, never by accident of an
-    inner join."""
+    sparse media-CC, and three-stage quality verdicts composed from
+    the SAME oracle builders the pillar queries gate on (dedup._sql_cc,
+    the pair family's _sql_pairs over each row's bits chain, the rows'
+    quality screens, curation._sql_funnel_verdicts) — a composition,
+    not a re-derivation. Media cluster tables cover only the PRESENT
+    docs (the presence predicates the Spark side filters on) and are
+    LEFT-joined; an absent modality is keep-pass by the explicit
+    predicate, never by accident of an inner join."""
     from mit_mapreduce_spark.operators.curation import _sql_funnel_verdicts
     from mit_mapreduce_spark.operators.dedup import _sql_cc
-    from mit_mapreduce_spark.operators.mmquality import (
-        _sql_audio_screen, _sql_image_screen, _sql_video_screen,
-    )
-    from mit_mapreduce_spark.operators.multimodal import _sql_image_phash
 
     kt = "tc.cluster_id = d.doc_id"
     kq = "fd.g AND fd.r AND fd.l"
-    ki = _keep_media_sql("ic", "iq", MM_IMAGE_ABSENT)
-    ka = _keep_media_sql("ac", "aq", MM_AUDIO_ABSENT)
-    kv = _keep_media_sql("vc", "vq", MM_VIDEO_ABSENT)
+    # an owned asset must be its cluster's canonical member AND a
+    # quality pass (COALESCE: a missing quality row, i.e. an
+    # undecodable asset, fails); absence read from the manifest column
+    km = [f"(NOT am.{m.flag} OR ({m.letter}c.cluster_id = d.doc_id"
+          f" AND COALESCE({m.letter}q.passes, FALSE)))" for m in MEDIA]
+    keep_cols = "".join(
+        f"           CAST(CASE WHEN {k} THEN 1 ELSE 0 END AS INT)"
+        f" AS keep_{m.name},\n" for m, k in zip(MEDIA, km))
+    ready = " AND ".join([kt, kq, *km])
+    joins = "".join(
+        f"    LEFT JOIN ({cc}) {m.letter}c\n"
+        f"      ON {m.letter}c.asset_id = d.doc_id\n"
+        for m, cc in ((m, sql_cc_over(_sql_pairs(m, m.present_sql),
+                                      m.present_sql)) for m in MEDIA))
+    joins += "".join(
+        f"    LEFT JOIN ({m.sql_screen(m.present_sql)}) {m.letter}q\n"
+        f"      ON {m.letter}q.asset_id = d.doc_id\n" for m in MEDIA)
     return f"""
     WITH {_sql_funnel_verdicts()}
     SELECT d.doc_id, d.lang, d.source,
            CAST(CASE WHEN {kt} THEN 1 ELSE 0 END AS INT) AS keep_text,
            CAST(CASE WHEN {kq} THEN 1 ELSE 0 END AS INT) AS keep_quality,
-           CAST(CASE WHEN {ki} THEN 1 ELSE 0 END AS INT) AS keep_image,
-           CAST(CASE WHEN {ka} THEN 1 ELSE 0 END AS INT) AS keep_audio,
-           CAST(CASE WHEN {kv} THEN 1 ELSE 0 END AS INT) AS keep_video,
-           CAST(CASE WHEN {kt} AND {kq} AND {ki} AND {ka} AND {kv}
+{keep_cols}           CAST(CASE WHEN {ready}
                 THEN 1 ELSE 0 END AS INT) AS ready
     FROM documents d
     JOIN ({_am_media_sql()}) am ON am.am_id = d.doc_id
     JOIN fdoc fd ON fd.doc_id = d.doc_id
     JOIN ({_sql_cc()}) tc ON tc.doc_id = d.doc_id
-    LEFT JOIN ({sql_cc_over(_sql_image_phash(IMG_PRESENT_SQL),
-                            IMG_PRESENT_SQL)}) ic
-      ON ic.asset_id = d.doc_id
-    LEFT JOIN ({sql_cc_over(_sql_audio_fingerprint(AUD_PRESENT_SQL),
-                            AUD_PRESENT_SQL)}) ac
-      ON ac.asset_id = d.doc_id
-    LEFT JOIN ({sql_cc_over(_sql_video_phash(VID_PRESENT_SQL),
-                            VID_PRESENT_SQL)}) vc
-      ON vc.asset_id = d.doc_id
-    LEFT JOIN ({_sql_image_screen(IMG_PRESENT_SQL)}) iq
-      ON iq.asset_id = d.doc_id
-    LEFT JOIN ({_sql_audio_screen(AUD_PRESENT_SQL)}) aq
-      ON aq.asset_id = d.doc_id
-    LEFT JOIN ({_sql_video_screen(VID_PRESENT_SQL)}) vq
-      ON vq.asset_id = d.doc_id
-    """
+{joins}    """
 
 
 @query("pipeline_multimodal_manifest", oracle=_sql_manifest())
@@ -757,51 +730,42 @@ def pipeline_multimodal_manifest(spark: SparkSession,
         FUNNEL_MAX_NOVELTY, gopher_quality_rules, quality_repetition,
     )
     from mit_mapreduce_spark.operators.dedup import dedup_clusters
-    from mit_mapreduce_spark.operators.mmquality import (
-        _audio_screen_from, _image_screen_from, _video_screen_from,
-    )
-    from mit_mapreduce_spark.operators.multimodal import (
-        _phash_batch, _phash_image_assets_from,
-    )
     from mit_mapreduce_spark.operators.textstats import quality_lm_bigram
 
     docs = load_table(spark, sf_dir, "documents").select(
-        "doc_id", "lang", "source",
-        *[am_media_flag(a) for a in AM_MEDIA_FLAGS.values()])
+        "doc_id", "lang", "source", *[am_media_flag(m) for m in MEDIA])
     # The EAGER legs — the text CC loop, the three media
     # fingerprint+CC loops (each runs Spark jobs at construction
-    # time), and the three quality screens (eager-checkpointed here)
-    # — each underutilize the executor pool (sub-second Arrow jobs
-    # over small signature/stat tables), so they are submitted
-    # CONCURRENTLY as parallel_legs: seven drivers' worth of small
-    # jobs overlap instead of serializing, cutting the composed
-    # query's wall time without touching any leg's plan. Spark job
+    # time), and the three quality screens — each underutilize the
+    # executor pool (sub-second Arrow jobs over small signature/stat
+    # tables), so they are submitted CONCURRENTLY as parallel_legs:
+    # seven drivers' worth of small jobs overlap instead of
+    # serializing, without touching any leg's plan. Spark job
     # submission is thread-safe; each leg lands in its own
-    # checkpointed RDD exactly as before.
+    # checkpointed RDD. r14: the three per-doc quality frames build
+    # as legs too — construction is driver-side analysis/planning
+    # that overlaps with the CC loops' jobs.
     def _tc_leg():
         return dedup_clusters(spark, sf_dir) \
             .select("doc_id", F.col("cluster_id").alias("_tcl"))
 
-    def _cluster_leg(col, fixture_from, kernel, absent, geom):
-        return _sparse_clusters(spark, sf_dir, fixture_from, kernel,
-                                absent, *geom) \
+    def _cluster_leg(m: Media):
+        return _sparse_clusters(spark, sf_dir, m.fixture_from, m.kernel,
+                                m.absent) \
             .select(F.col("asset_id").alias("doc_id"),
-                    F.col("cluster_id").alias(col))
+                    F.col("cluster_id").alias(f"_{m.letter}cl"))
 
-    def _quality_leg(col, screen_from, absent):
+    def _quality_leg(m: Media):
         # checkpoint: truncates the deep Arrow-pipeline lineage
         # before the 10-join composition (a measured 14 s of
         # driver-side ANALYSIS on the un-truncated plan). Eager, lazy
         # and none read within 7% of each other at sf0.1 (SCALE.md,
         # "One materialization call").
         return materialize(
-            screen_from(_present_docs(spark, sf_dir, absent))
+            m.screen_from(_present_docs(spark, sf_dir, m.absent))
             .select(F.col("asset_id").alias("doc_id"),
-                    F.col("passes").alias(col)))
+                    F.col("passes").alias(f"_{m.letter}qp")))
 
-    # r14: the three per-doc quality frames build as legs too —
-    # construction is driver-side analysis/planning that overlaps
-    # with the CC loops' jobs and the screens' planning
     g, r, lm, tc, *media = parallel_legs(
         lambda: gopher_quality_rules(spark, sf_dir)
         .select("doc_id", F.col("passes").alias("_g")),
@@ -810,52 +774,31 @@ def pipeline_multimodal_manifest(spark: SparkSession,
         lambda: quality_lm_bigram(spark, sf_dir)
         .select("doc_id", "novelty"),
         _tc_leg,
-        *(partial(_cluster_leg, col, fixture_from, kernel, absent, geom)
-          for col, fixture_from, kernel, absent, geom in (
-              ("_icl", _phash_image_assets_from, _phash_batch,
-               MM_IMAGE_ABSENT, (PH_BANDS, PH_BAND_BITS, PH_HAM_MAX)),
-              ("_acl", _fingerprint_audio_assets_from, _afp_batch,
-               MM_AUDIO_ABSENT, (FP_BANDS, FP_BAND_BITS, FP_HAM_MAX)),
-              ("_vcl", _fingerprint_video_assets_from, _vfp_batch,
-               MM_VIDEO_ABSENT, (FP_BANDS, FP_BAND_BITS, FP_HAM_MAX)))),
-        *(partial(_quality_leg, col, screen_from, absent)
-          for col, screen_from, absent in (
-              ("_iqp", _image_screen_from, MM_IMAGE_ABSENT),
-              ("_aqp", _audio_screen_from, MM_AUDIO_ABSENT),
-              ("_vqp", _video_screen_from, MM_VIDEO_ABSENT))))
-    m = (docs.join(tc, "doc_id").join(g, "doc_id").join(r, "doc_id")
-         .join(lm, "doc_id", "left"))
+        *(partial(_cluster_leg, m) for m in MEDIA),
+        *(partial(_quality_leg, m) for m in MEDIA))
+    out = (docs.join(tc, "doc_id").join(g, "doc_id").join(r, "doc_id")
+           .join(lm, "doc_id", "left"))
     for leg in media:
-        m = m.join(leg, "doc_id", "left")
+        out = out.join(leg, "doc_id", "left")
     keep_text = F.col("_tcl") == F.col("doc_id")
     keep_quality = (F.col("_g") & F.col("_r")
                     & F.col("novelty").isNotNull()
                     & (F.col("novelty") <= FUNNEL_MAX_NOVELTY))
-
-    def keep_media(cl: str, qp: str, absent: tuple[int, int]):
-        # absent modality = keep-pass, by the EXPLICIT manifest
-        # column (r12: presence is data, read from has_*; not by
-        # null-ness of the left join, so a bug that dropped a present
-        # doc's cluster row would surface as a keep=false mismatch,
-        # not silently pass); an OWNED asset must be its cluster's
-        # canonical member AND a quality-screen pass (a missing
-        # quality row = undecodable asset = fail: the quarantine
-        # path a lying manifest row lands in — keep_media_gate)
-        return keep_media_gate(_ABSENT_TO_FLAG[absent],
-                               F.col(cl) == F.col("doc_id"), qp)
-
-    keep_image = keep_media("_icl", "_iqp", MM_IMAGE_ABSENT)
-    keep_audio = keep_media("_acl", "_aqp", MM_AUDIO_ABSENT)
-    keep_video = keep_media("_vcl", "_vqp", MM_VIDEO_ABSENT)
-    ready = (keep_text & keep_quality & keep_image & keep_audio
-             & keep_video)
-    return m.select(
+    # absent modality = keep-pass, by the EXPLICIT manifest column
+    # (presence is data; not by null-ness of the left join, so a bug
+    # that dropped a present doc's cluster row would surface as a
+    # keep=false mismatch, not silently pass); an OWNED asset must be
+    # its cluster's canonical member AND a quality-screen pass
+    keeps = [keep_media_gate(m.flag, F.col(f"_{m.letter}cl")
+                             == F.col("doc_id"), f"_{m.letter}qp")
+             for m in MEDIA]
+    ready = reduce(operator.and_, [keep_text, keep_quality, *keeps])
+    return out.select(
         "doc_id", "lang", "source",
         keep_text.cast("int").alias("keep_text"),
         keep_quality.cast("int").alias("keep_quality"),
-        keep_image.cast("int").alias("keep_image"),
-        keep_audio.cast("int").alias("keep_audio"),
-        keep_video.cast("int").alias("keep_video"),
+        *[k.cast("int").alias(f"keep_{m.name}")
+          for m, k in zip(MEDIA, keeps)],
         ready.cast("int").alias("ready"),
     )
 
@@ -905,189 +848,64 @@ def pipeline_multimodal_ready(spark: SparkSession,
     )
 
 
-# --- fingerprint near-dup SEARCH (query-centric) -----------------------------
+# --- the batch families: search, incremental screen ----------------------
 
-FPS_MOD = 50     # asset_id % MOD == 0 plays the query set
-FPS_K = 3        # results per query
-
-
-def _sql_audio_sigs() -> str:
-    return sql_sigs_over(_sql_audio_bits())
+FPS_MOD = 50     # search: asset_id % MOD == 0 plays the query set
+FPS_K = 3        # search: results per query
 
 
-@query("audio_fingerprint_search",
-       oracle=f"WITH {_sql_audio_bits()}, {sql_search_tail(FPS_MOD, FPS_K)}")
-def audio_fingerprint_search(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Asset similarity SEARCH on the audio fingerprint index: for
-    each query asset (every 50th), the top-3 nearest assets by full
-    128-bit Hamming among its band candidates — the retrieval twin of
-    dedup_audio_fingerprint (same index, query-centric instead of
-    pair-centric: "find me assets that sound like this one"), and
-    the media analogue of minhash_search_topk.
-
-    No radius filter: candidates are whatever shares a band with the
-    query (per-bucket volume, never |Q|x|C|), re-scored exactly and
-    top-k'd per query with deterministic tie order (hamming, cid).
-    On the planted fixture every query's group-mates occupy the top
-    ranks — recall pinned by pytest. Same scale posture as the pair
-    op: one fingerprint pass, band equi-join bounded by bucket sizes,
-    then a per-query window over candidates only."""
-    sigs = materialize(
-        fingerprint_audio_assets(spark, sf_dir)
-        .mapInPandas(_afp_batch, _PHASH_SCHEMA)
-    )
+@media_queries("{m.search_name}",
+               lambda m: f"WITH {m.sql_bits()},"
+                         f" {sql_search_tail(FPS_MOD, FPS_K)}")
+def _search(spark: SparkSession, sf_dir: str, m: Media) -> DataFrame:
+    """Similarity SEARCH on the {name} fingerprint index ("find me
+    assets like this one"): for each query asset (every 50th) the
+    top-3 nearest assets by full 128-bit Hamming among its band
+    candidates — the query-centric twin of the pair family and the
+    media analogue of minhash_search_topk. No radius filter: the
+    candidates are whatever shares a band with the query (bucket
+    volume, never |Q|x|C|), re-scored exactly and ranked with a
+    deterministic tie order (hamming, cid); on the planted fixture
+    every query's group-mates take the top ranks (pytest-pinned)."""
+    sigs = materialize(m.sigs(load_table(spark, sf_dir, "documents")))
     return fingerprint_search_topk(sigs, FP_BANDS, FP_BAND_BITS,
                                    FPS_MOD, FPS_K)
 
 
-def _sql_image_search() -> str:
-    from mit_mapreduce_spark.operators.multimodal import _sql_image_bits
-    return f"WITH {_sql_image_bits()}, {sql_search_tail(FPS_MOD, FPS_K)}"
+# The incremental screens split the corpus into today's incoming shard
+# (banding.INC_PRED: doc_id % 40 < 6) and the retained index, chosen
+# so the planted groups of 4 exercise BOTH verdicts: a 40-aligned
+# group's first four members are all incoming (no in-radius match,
+# NULL verdict), while members 4-5 of the next group arrive with mates
+# 6-7 already indexed (a guaranteed match).
 
+@media_queries("dedup_{m.name}_incremental",
+               lambda m: f"WITH {m.sql_bits()},"
+                         f" {sql_incremental_tail(INC_PRED, FP_HAM_MAX)}")
+def _incremental(spark: SparkSession, sf_dir: str, m: Media) -> DataFrame:
+    """Incremental {name} dedup: screen an incoming shard against the
+    retained corpus's fingerprint index — per incoming asset the best
+    (min hamming, tie min id) index match within radius 7, or NULLs
+    when the asset is genuinely new: is_neardup says "we already have
+    this", matched_id which retained asset it duplicates (the media
+    twin of dedup_incremental_bloom).
 
-@query("image_phash_search", oracle=_sql_image_search())
-def image_phash_search(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Asset similarity SEARCH on the image dHash index ("find me
-    images that look like this one") — the query-centric twin of
-    dedup_image_phash, riding the shared fingerprint_search_topk
-    body and the image tier's own bits oracle."""
-    from mit_mapreduce_spark.operators.multimodal import (
-        _phash_batch, phash_image_assets,
-    )
-
-    sigs = materialize(
-        phash_image_assets(spark, sf_dir)
-        .mapInPandas(_phash_batch, _PHASH_SCHEMA)
-    )
-    return fingerprint_search_topk(sigs, FP_BANDS, FP_BAND_BITS,
-                                   FPS_MOD, FPS_K)
-
-
-@query("video_phash_search",
-       oracle=f"WITH {_sql_video_bits()}, {sql_search_tail(FPS_MOD, FPS_K)}")
-def video_phash_search(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Asset similarity SEARCH on the video frame-sequence index
-    ("find me videos that look like this one") — the query-centric
-    twin of dedup_video_phash on the shared search body."""
-    sigs = materialize(
-        fingerprint_video_assets(spark, sf_dir)
-        .mapInPandas(_vfp_batch, _PHASH_SCHEMA)
-    )
-    return fingerprint_search_topk(sigs, FP_BANDS, FP_BAND_BITS,
-                                   FPS_MOD, FPS_K)
-
-# --- incremental media dedup: screen an incoming shard against the index ----
-#
-# dedup_incremental_bloom (dedup.py) screens an incoming TEXT shard
-# against the retained corpus; these are the media twins (VERDICT r10
-# ask #2): screen an incoming asset shard's FINGERPRINTS against the
-# persisted signature index via the shared band equi-join, one-sided.
-# The incoming shard is doc_id % 40 < 6 — chosen so the planted
-# groups of 4 exercise BOTH verdicts: a 40-aligned group's first four
-# members are all incoming (nothing of their group is in the index ->
-# no in-radius match, NULL verdict), while members 4-5 of the next
-# group arrive with mates 6-7 already indexed (guaranteed in-radius
-# match). At 100 TB the index side is the signature table the
-# continuous ingest legs (stream_*_fingerprints) already maintain —
-# 16 bytes per retained asset, no re-decode of the corpus — and only
-# the (band, value) buckets the incoming shard actually touches are
-# joined.
-
-# The incoming-shard split, single-sourced (review find: the Column
-# form was re-spelled in streaming_queries and streambench): both the
-# SQL template and the Spark predicate derive from the same pair —
-# which since r12 lives in banding.py (the embedding screen shares
-# it, and similarity.py must not import this module); these are the
-# aliases the r10/r11 call sites were built on.
-FP_INC_MOD, FP_INC_LT = INC_MOD, INC_LT
-FP_INC_PRED = INC_PRED
-
-
-def inc_shard_col(name: str = "asset_id"):
-    """Spark twin of FP_INC_PRED over the given id column — TRUE for
-    rows in the incoming shard."""
-    return inc_col(name)
-
-
-def _incremental(spark: SparkSession, sf_dir: str, fixture_from,
-                 kernel, n_bands: int = FP_BANDS,
-                 band_bits: int = FP_BAND_BITS,
-                 ham_max: int = FP_HAM_MAX) -> DataFrame:
-    """Shared body of the three media incremental screens: ONE
-    fingerprint pass over the corpus (the signature table both sides
-    live in), split into incoming shard and index, then the
-    banded one-sided screen. Geometry is a parameter so each modality
-    stays pinned to its own constants (image passes PH_*; the FP_*
-    defaults are the audio/video geometry, aliases of PH_* today but
-    free to diverge)."""
+    100 TB posture: the index side is the persisted signature table
+    (16 bytes/asset, kept current by the stream_*_fingerprints legs),
+    never re-decoded per shard; the incoming side is one fingerprint
+    pass over the shard; candidates come from the one-sided band
+    equi-join restricted to the buckets the shard touches, with the
+    pair family's pushable radius filter. The oracle recomputes both
+    sides and the screen in SQL; a pytest checks the screen against a
+    quadratic brute force."""
     docs = load_table(spark, sf_dir, "documents").select("doc_id")
-    inc_pred = inc_shard_col()
-    sigs = materialize(
-        fixture_from(docs).mapInPandas(kernel, _PHASH_SCHEMA)
-    )
+    inc_pred = inc_col("asset_id")
+    sigs = materialize(m.sigs(docs))
     inc_assets = docs.select(F.col("doc_id").alias("asset_id")) \
         .where(inc_pred)
     return incremental_screen(
         inc_assets, sigs.where(inc_pred), sigs.where(~inc_pred),
-        n_bands, band_bits, ham_max)
-
-
-@query("dedup_audio_incremental",
-       oracle=f"WITH {_sql_audio_bits()},"
-              f" {sql_incremental_tail(FP_INC_PRED, FP_HAM_MAX)}")
-def dedup_audio_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Incremental AUDIO dedup: screen an incoming shard of audio
-    assets against the retained corpus's fingerprint index — per
-    incoming asset, the best (min hamming, tie min id) index match
-    within radius 7, or NULLs when the shard asset is genuinely new.
-    The daily-ingest decision dedup_incremental_bloom makes for text,
-    made for audio: is_neardup says "drop/quarantine, we already have
-    this recording", matched_id says which retained asset it
-    duplicates.
-
-    100 TB posture: the index side is the persisted signature table
-    (16 bytes/asset, maintained by stream_audio_fingerprints) — the
-    corpus is never re-decoded per shard; the incoming side is one
-    decode+fingerprint Arrow pass over the shard only; candidates
-    come from the shared band equi-join restricted to the buckets
-    the shard touches, and the radius filter is the same pushable
-    two-popcount expression as the pair op. The oracle rebuilds both
-    sides' fingerprints from the sha256 chain and recomputes the
-    screen in SQL; a pytest checks the screen against a quadratic
-    brute force on crafted signatures."""
-    return _incremental(spark, sf_dir, _fingerprint_audio_assets_from,
-                        _afp_batch)
-
-
-def _sql_image_inc() -> str:
-    from mit_mapreduce_spark.operators.multimodal import _sql_image_bits
-    return (f"WITH {_sql_image_bits()},"
-            f" {sql_incremental_tail(FP_INC_PRED, PH_HAM_MAX)}")
-
-
-@query("dedup_image_incremental", oracle=_sql_image_inc())
-def dedup_image_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Incremental IMAGE dedup: the incoming-shard screen on the
-    image dHash index (see dedup_audio_incremental — one shared
-    body, one-sided band join, per-asset best-match verdict)."""
-    from mit_mapreduce_spark.operators.multimodal import (
-        _phash_batch, _phash_image_assets_from,
-    )
-
-    return _incremental(spark, sf_dir, _phash_image_assets_from,
-                        _phash_batch, PH_BANDS, PH_BAND_BITS, PH_HAM_MAX)
-
-
-@query("dedup_video_incremental",
-       oracle=f"WITH {_sql_video_bits()},"
-              f" {sql_incremental_tail(FP_INC_PRED, FP_HAM_MAX)}")
-def dedup_video_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Incremental VIDEO dedup: the incoming-shard screen on the
-    video frame-sequence index (see dedup_audio_incremental — one
-    shared body, one-sided band join, per-asset best-match
-    verdict)."""
-    return _incremental(spark, sf_dir, _fingerprint_video_assets_from,
-                        _vfp_batch)
+        FP_BANDS, FP_BAND_BITS, FP_HAM_MAX)
 
 
 # --- daily-ingest ADMISSION: the at-the-door twin of the manifest -----------
@@ -1143,48 +961,36 @@ def _sql_admission() -> str:
         CONTAM_NGRAM, EMAIL_RE, EVAL_MOD, ID_RE, IP_RE, PHONE_RE,
     )
     from mit_mapreduce_spark.operators.dedup import _sql_minhash_incremental
-    from mit_mapreduce_spark.operators.mmquality import (
-        _sql_audio_screen, _sql_image_screen, _sql_video_screen,
-    )
-    from mit_mapreduce_spark.operators.multimodal import _sql_image_bits
     from mit_mapreduce_spark.operators.similarity import _sql_embed_screen
 
-    inc_d = FP_INC_PRED.format(d="d.doc_id")
-
-    def inc_and(flag: str) -> str:
-        # predicate template over {d}: in the shard AND owns the
-        # asset (the manifest column, via the presence template —
-        # r12: never re-spelled arithmetic)
-        return f"({FP_INC_PRED}) AND ({_present_sql_t(flag)})"
-
-    def screen_sub(bits_sql: str, flag: str, ham: int) -> str:
-        return (f"(WITH {bits_sql},"
-                f" {sql_incremental_tail(inc_and(flag), ham)})")
-
-    ii = screen_sub(_sql_image_bits(IMG_PRESENT_SQL), "has_image",
-                    PH_HAM_MAX)
-    ai = screen_sub(_sql_audio_bits(AUD_PRESENT_SQL), "has_audio",
-                    FP_HAM_MAX)
-    vi = screen_sub(_sql_video_bits(VID_PRESENT_SQL), "has_video",
-                    FP_HAM_MAX)
-
-    def q_where(present_sql: str) -> str:
-        return f"({FP_INC_PRED.format(d='doc_id')}) AND ({present_sql})"
-
-    def keep_media(absent: tuple[int, int], scr: str, q: str) -> str:
-        flag = _ABSENT_TO_FLAG[absent]
-        return (f"(NOT am.{flag}"
-                f" OR (COALESCE(NOT {scr}.is_neardup, FALSE)"
-                f" AND COALESCE({q}.passes, FALSE)))")
+    inc_d = INC_PRED.format(d="d.doc_id")
+    inc_doc = f"({INC_PRED.format(d='doc_id')})"
+    # per modality: the incremental screen over the shard's owned assets
+    # (a predicate template over {d}: in the shard AND owns the asset,
+    # by the manifest column) and the quality screen over the same set
+    media_joins = ""
+    for m in MEDIA:
+        owned_inc = f"({INC_PRED}) AND ({_present_sql_t(m.flag)})"
+        media_joins += (
+            f"    LEFT JOIN (WITH {m.sql_bits(m.present_sql)},"
+            f" {sql_incremental_tail(owned_inc, FP_HAM_MAX)})"
+            f" {m.letter}i ON {m.letter}i.asset_id = d.doc_id\n")
+    media_joins += "".join(
+        f"    LEFT JOIN ({m.sql_screen(f'{inc_doc} AND ({m.present_sql})')})"
+        f" {m.letter}q\n      ON {m.letter}q.asset_id = d.doc_id\n"
+        for m in MEDIA)
+    km = [f"(NOT am.{m.flag}"
+          f" OR (COALESCE(NOT {m.letter}i.is_neardup, FALSE)"
+          f" AND COALESCE({m.letter}q.passes, FALSE)))" for m in MEDIA]
+    keep_cols = "".join(
+        f"           CAST(CASE WHEN {k} THEN 1 ELSE 0 END AS INT)"
+        f" AS keep_{m.name},\n" for m, k in zip(MEDIA, km))
 
     fp = _NORM_FP_SQL
     pii_mod, pii_rem = PII_SEED
     kt = ("td.doc_id IS NULL"
           " AND COALESCE(NOT mh.is_neardup, TRUE)")
     kq = "fd.g AND fd.r AND fd.l"
-    ki = keep_media(MM_IMAGE_ABSENT, "ii", "iq")
-    ka = keep_media(MM_AUDIO_ABSENT, "ai", "aq")
-    kv = keep_media(MM_VIDEO_ABSENT, "vi", "vq")
     # semantic: absence (no vector in the embeddings table — data-
     # driven presence) is pass; an owned vector must not be an
     # in-threshold LSH-bucket neighbor of a retained vector
@@ -1193,21 +999,24 @@ def _sql_admission() -> str:
     # n-gram contamination threshold
     kc = (f"(d.doc_id % {EVAL_MOD} <> 0 AND cp.n_pii = 0"
           f" AND COALESCE(cs.n_shared, 0) < {CONTAM_MAX_SHARED})")
+    gates = [kt, ks, kq, kc, *km]
+    admit = (" AND ".join(gates[:5]) + "\n                      AND "
+             + " AND ".join(gates[5:]))
     return f"""
     WITH {_sql_funnel_verdicts()},
     tdup AS (
       SELECT i.doc_id FROM documents i
-      WHERE ({FP_INC_PRED.format(d='i.doc_id')}) AND i.text IS NOT NULL
+      WHERE ({INC_PRED.format(d='i.doc_id')}) AND i.text IS NOT NULL
         AND {fp.format(t='i.text')} IN (
           SELECT {fp.format(t='c.text')} FROM documents c
-          WHERE NOT ({FP_INC_PRED.format(d='c.doc_id')})
+          WHERE NOT ({INC_PRED.format(d='c.doc_id')})
             AND c.text IS NOT NULL)),
     cpay AS (
       SELECT doc_id,
              CASE WHEN doc_id % {pii_mod} = {pii_rem}
                   THEN {_SQL_PAYLOAD} ELSE text END AS payload
       FROM documents
-      WHERE ({FP_INC_PRED.format(d='doc_id')})),
+      WHERE {inc_doc}),
     cpii AS (
       SELECT doc_id,
              CAST(COALESCE(len(regexp_extract_all(payload, '{EMAIL_RE}'))
@@ -1225,7 +1034,7 @@ def _sql_admission() -> str:
       FROM cgrams g
       JOIN (SELECT DISTINCT gram FROM cgrams
             WHERE doc_id % {EVAL_MOD} = 0) e ON e.gram = g.gram
-      WHERE ({FP_INC_PRED.format(d='g.doc_id')})
+      WHERE ({INC_PRED.format(d='g.doc_id')})
         AND g.doc_id % {EVAL_MOD} <> 0
       GROUP BY g.doc_id)
     SELECT d.doc_id, d.lang, d.source,
@@ -1233,11 +1042,7 @@ def _sql_admission() -> str:
            CAST(CASE WHEN {ks} THEN 1 ELSE 0 END AS INT) AS keep_semantic,
            CAST(CASE WHEN {kq} THEN 1 ELSE 0 END AS INT) AS keep_quality,
            CAST(CASE WHEN {kc} THEN 1 ELSE 0 END AS INT) AS keep_clean,
-           CAST(CASE WHEN {ki} THEN 1 ELSE 0 END AS INT) AS keep_image,
-           CAST(CASE WHEN {ka} THEN 1 ELSE 0 END AS INT) AS keep_audio,
-           CAST(CASE WHEN {kv} THEN 1 ELSE 0 END AS INT) AS keep_video,
-           CAST(CASE WHEN {kt} AND {ks} AND {kq} AND {kc} AND {ki}
-                      AND {ka} AND {kv}
+{keep_cols}           CAST(CASE WHEN {admit}
                 THEN 1 ELSE 0 END AS INT) AS admit
     FROM documents d
     JOIN ({_am_media_sql()}) am ON am.am_id = d.doc_id
@@ -1245,20 +1050,11 @@ def _sql_admission() -> str:
     JOIN cpii cp ON cp.doc_id = d.doc_id
     LEFT JOIN cshared cs ON cs.doc_id = d.doc_id
     LEFT JOIN tdup td ON td.doc_id = d.doc_id
-    LEFT JOIN ({_sql_minhash_incremental(FP_INC_PRED)}) mh
+    LEFT JOIN ({_sql_minhash_incremental(INC_PRED)}) mh
       ON mh.doc_id = d.doc_id
-    LEFT JOIN ({_sql_embed_screen(FP_INC_PRED)}) es
+    LEFT JOIN ({_sql_embed_screen(INC_PRED)}) es
       ON es.vec_id = d.doc_id
-    LEFT JOIN {ii} ii ON ii.asset_id = d.doc_id
-    LEFT JOIN {ai} ai ON ai.asset_id = d.doc_id
-    LEFT JOIN {vi} vi ON vi.asset_id = d.doc_id
-    LEFT JOIN ({_sql_image_screen(q_where(IMG_PRESENT_SQL))}) iq
-      ON iq.asset_id = d.doc_id
-    LEFT JOIN ({_sql_audio_screen(q_where(AUD_PRESENT_SQL))}) aq
-      ON aq.asset_id = d.doc_id
-    LEFT JOIN ({_sql_video_screen(q_where(VID_PRESENT_SQL))}) vq
-      ON vq.asset_id = d.doc_id
-    WHERE {inc_d}
+{media_joins}    WHERE {inc_d}
     """
 
 
@@ -1306,11 +1102,11 @@ def pipeline_ingest_admission(spark: SparkSession,
     embedding)."""
     docs = load_table(spark, sf_dir, "documents")
     return admission_batch_frame(spark, sf_dir,
-                                 docs.where(inc_shard_col("doc_id")),
+                                 docs.where(inc_col("doc_id")),
                                  admission_static_ctx(spark, sf_dir))
 
 
-def _admission_verdicts(m: DataFrame) -> DataFrame:
+def _admission_verdicts(legs: DataFrame) -> DataFrame:
     """The seven keep bits + admit over admission_batch_frame's
     joined leg frame."""
     from mit_mapreduce_spark.operators.curation import (
@@ -1329,27 +1125,21 @@ def _admission_verdicts(m: DataFrame) -> DataFrame:
                   & (F.col("_npii") == 0)
                   & (F.coalesce(F.col("_nsh"), F.lit(0))
                      < CONTAM_MAX_SHARED))
-
-    def keep_media(nd: str, qp: str, absent: tuple[int, int]):
-        # presence read from the manifest COLUMN (r12); the gate body
-        # is keep_media_gate (missing quality row = quarantine)
-        return keep_media_gate(_ABSENT_TO_FLAG[absent],
-                               F.coalesce(~F.col(nd), F.lit(False)), qp)
-
-    keep_image = keep_media("_ind", "_iqp", MM_IMAGE_ABSENT)
-    keep_audio = keep_media("_and", "_aqp", MM_AUDIO_ABSENT)
-    keep_video = keep_media("_vnd", "_vqp", MM_VIDEO_ABSENT)
-    admit = (keep_text & keep_semantic & keep_quality & keep_clean
-             & keep_image & keep_audio & keep_video)
-    return m.select(
+    # presence read from the manifest column; the gate body is
+    # keep_media_gate (a missing quality row = quarantine)
+    keeps = [keep_media_gate(m.flag, F.coalesce(~F.col(f"_{m.letter}nd"),
+                                                F.lit(False)),
+                             f"_{m.letter}qp") for m in MEDIA]
+    admit = reduce(operator.and_, [keep_text, keep_semantic, keep_quality,
+                                   keep_clean, *keeps])
+    return legs.select(
         "doc_id", "lang", "source",
         keep_text.cast("int").alias("keep_text"),
         keep_semantic.cast("int").alias("keep_semantic"),
         keep_quality.cast("int").alias("keep_quality"),
         keep_clean.cast("int").alias("keep_clean"),
-        keep_image.cast("int").alias("keep_image"),
-        keep_audio.cast("int").alias("keep_audio"),
-        keep_video.cast("int").alias("keep_video"),
+        *[k.cast("int").alias(f"keep_{m.name}")
+          for m, k in zip(MEDIA, keeps)],
         admit.cast("int").alias("admit"),
     )
 
@@ -1385,17 +1175,11 @@ def admission_static_ctx(spark: SparkSession, sf_dir: str) -> dict:
     from mit_mapreduce_spark.operators.dedup import (
         _band_hashes, _minhash_sigs, shingles_df,
     )
-    from mit_mapreduce_spark.operators.mmquality import (
-        _audio_screen_from, _image_screen_from, _video_screen_from,
-    )
-    from mit_mapreduce_spark.operators.multimodal import (
-        _phash_batch, _phash_image_assets_from,
-    )
     from mit_mapreduce_spark.operators.similarity import _screen_buckets
     from mit_mapreduce_spark.operators.textstats import quality_lm_bigram
 
     docs = load_table(spark, sf_dir, "documents")
-    inc_pred = inc_shard_col("doc_id")
+    inc_pred = inc_col("doc_id")
     corpus = docs.where(~inc_pred)
     grams_src = docs.where(F.col("doc_id") % EVAL_MOD == 0)
 
@@ -1422,14 +1206,9 @@ def admission_static_ctx(spark: SparkSession, sf_dir: str) -> dict:
             .join(bk.select("vec_id", "nsq").distinct(), "vec_id"))
         return bk, sides
 
-    def _media_leg(nd, qp, absent, fixture_from, kernel, geom,
-                   screen_from):
-        idx_sigs = materialize(
-            fixture_from(_present_docs(spark, sf_dir, absent)
-                         .where(~inc_pred))
-            .mapInPandas(kernel, _PHASH_SCHEMA))
-        return (nd, qp, _ABSENT_TO_FLAG[absent], fixture_from, kernel,
-                geom, screen_from, idx_sigs)
+    def _media_leg(m: Media):
+        return materialize(m.sigs(
+            _present_docs(spark, sf_dir, m.absent).where(~inc_pred)))
 
     ((corpus_sh, corpus_sizes, corpus_bands), (emb_bk, emb_sides),
      corpus_fps, eval_grams, g, r, lm, manifest, *media) = parallel_legs(
@@ -1453,21 +1232,7 @@ def admission_static_ctx(spark: SparkSession, sf_dir: str) -> dict:
             quality_lm_bigram(spark, sf_dir).where(inc_pred)
             .select("doc_id", "novelty")),
         lambda: materialize(asset_manifest_media(spark, sf_dir)),
-        *(partial(_media_leg, nd, qp, absent, fixture_from, kernel, geom,
-                  screen_from)
-          for nd, qp, absent, fixture_from, kernel, geom, screen_from
-          in (("_ind", "_iqp", MM_IMAGE_ABSENT,
-               _phash_image_assets_from, _phash_batch,
-               (PH_BANDS, PH_BAND_BITS, PH_HAM_MAX),
-               _image_screen_from),
-              ("_and", "_aqp", MM_AUDIO_ABSENT,
-               _fingerprint_audio_assets_from, _afp_batch,
-               (FP_BANDS, FP_BAND_BITS, FP_HAM_MAX),
-               _audio_screen_from),
-              ("_vnd", "_vqp", MM_VIDEO_ABSENT,
-               _fingerprint_video_assets_from, _vfp_batch,
-               (FP_BANDS, FP_BAND_BITS, FP_HAM_MAX),
-               _video_screen_from))))
+        *(partial(_media_leg, m) for m in MEDIA))
     return {
         "corpus_fps": corpus_fps,
         "corpus_sh": corpus_sh,
@@ -1484,10 +1249,8 @@ def admission_static_ctx(spark: SparkSession, sf_dir: str) -> dict:
         "r": r,
         "lm": lm,
         "manifest": manifest,
-        # per-modality: (nd col, q col, manifest flag, fixture
-        # builder, fingerprint kernel, geometry, quality screen,
-        # corpus signature index)
-        "media": media,
+        # per MEDIA row: the owners' corpus signature index
+        "media": dict(zip(MEDIA, media)),
     }
 
 
@@ -1573,7 +1336,7 @@ def admission_batch_frame(spark: SparkSession, sf_dir: str,
         F.lit(0).cast("bigint"))
     inc_docs = batch_docs.select(
         "doc_id", "lang", "source", n_pii.alias("_npii"),
-        *[am_media_flag(a) for a in AM_MEDIA_FLAGS.values()])
+        *[am_media_flag(m) for m in MEDIA])
 
     # Only the HEAVY legs (band screens, the semantic screen) end in
     # materialize(): a leaf costs a toRdd physical planning at build,
@@ -1613,37 +1376,32 @@ def admission_batch_frame(spark: SparkSession, sf_dir: str,
                 .join(ctx["manifest"].where(F.col(flag))
                       .select("doc_id"), "doc_id", "left_semi"))
 
-    def _scr(nd, flag, fixture_from, kernel, geom, idx_sigs):
-        owned = _owned(flag)
-        inc_sigs = fixture_from(owned).mapInPandas(kernel, _PHASH_SCHEMA)
+    def _scr(m: Media, idx_sigs: DataFrame):
+        owned = _owned(m.flag)
         return materialize(incremental_screen(
             owned.select(F.col("doc_id").alias("asset_id")),
-            inc_sigs, idx_sigs, *geom)
+            m.sigs(owned), idx_sigs, FP_BANDS, FP_BAND_BITS, FP_HAM_MAX)
             .select(F.col("asset_id").alias("doc_id"),
-                    F.col("is_neardup").alias(nd)))
+                    F.col("is_neardup").alias(f"_{m.letter}nd")))
 
-    def _q(qp, flag, screen_from):
-        return (screen_from(_owned(flag))
+    def _q(m: Media):
+        return (m.screen_from(_owned(m.flag))
                 .select(F.col("asset_id").alias("doc_id"),
-                        F.col("passes").alias(qp)))
+                        F.col("passes").alias(f"_{m.letter}qp")))
 
     td, mh, sem, ct, *media_legs = parallel_legs(
         _td, _mh, _sem, _ct,
-        *(partial(_scr, nd, flag, fixture_from, kernel, geom, idx_sigs)
-          for nd, _, flag, fixture_from, kernel, geom, _, idx_sigs
-          in ctx["media"]),
-        *(partial(_q, qp, flag, screen_from)
-          for _, qp, flag, _, _, _, screen_from, _ in ctx["media"]))
+        *(partial(_scr, m, idx) for m, idx in ctx["media"].items()),
+        *(partial(_q, m) for m in ctx["media"]))
     n_media = len(ctx["media"])
-    media = list(zip(media_legs[:n_media], media_legs[n_media:]))
 
-    m = (inc_docs.join(td, "doc_id", "left").join(mh, "doc_id", "left")
-         .join(sem, "doc_id", "left").join(ct, "doc_id", "left")
-         .join(ctx["g"], "doc_id").join(ctx["r"], "doc_id")
-         .join(ctx["lm"], "doc_id", "left"))
-    for scr, q in media:
-        m = m.join(scr, "doc_id", "left").join(q, "doc_id", "left")
-    return _admission_verdicts(m)
+    legs = (inc_docs.join(td, "doc_id", "left").join(mh, "doc_id", "left")
+            .join(sem, "doc_id", "left").join(ct, "doc_id", "left")
+            .join(ctx["g"], "doc_id").join(ctx["r"], "doc_id")
+            .join(ctx["lm"], "doc_id", "left"))
+    for scr, q in zip(media_legs[:n_media], media_legs[n_media:]):
+        legs = legs.join(scr, "doc_id", "left").join(q, "doc_id", "left")
+    return _admission_verdicts(legs)
 
 
 @query(

@@ -61,13 +61,10 @@ from pyspark.sql import types as T
 
 from mit_mapreduce_spark.catalog import fan_out, load_table
 from mit_mapreduce_spark.operators.banding import (
-    banded_hamming_pairs2, keep_report_frame, label_with_singletons,
-    planted_base, planted_chain_expr, sql_band_tail, sql_byte_at,
-    sql_cc_over, sql_keep_report_over, sql_planted_hex,
+    planted_base, planted_chain_expr, sql_byte_at, sql_planted_hex,
 )
 from mit_mapreduce_spark.functions.imagecodec import decode_image
 from mit_mapreduce_spark.operators.registry import query
-from mit_mapreduce_spark.session import materialize
 
 N_FEATURES = 8
 
@@ -1540,7 +1537,7 @@ def multimodal_framesample(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# --- image near-dup dedup: perceptual hash + banded Hamming join ------------
+# --- image fingerprint tier (the IMAGE row of mmdedup.MEDIA) ----------------
 
 # dHash (difference hash — the standard perceptual-hash family next to
 # aHash/pHash, e.g. Krawetz's public writeups): one bit per adjacent
@@ -1659,25 +1656,10 @@ def _phash_batch(
             "sig1": pd.Series(out["sig1"], dtype="int64")})
 
 
-def _sql_image_phash(where: str | None = None) -> str:
-    """DuckDB twin: rebuild each asset's pixel hex from the group
-    chain + variant prefix, recompute the luma grid and the dHash
-    16-bit band values (band = grid row), then the SAME banded
-    candidate generation (pigeonhole-lossless for radius 7, exactly
-    as dedup_simhash_pairs argues) and per-pair Hamming via summed
-    band popcounts. Fully parameterized by the grid constants — the
-    r10 widening to 17x8/128-bit changed no SQL structure. ``where``
-    restricts the asset set (the r11 sparse-modality manifest)."""
-    return f"""
-    WITH {_sql_image_bits(where)},
-    {sql_band_tail(PH_HAM_MAX)}
-    """
-
-
 def _sql_image_bits(where: str | None = None) -> str:
     """DuckDB CTE chain through `bits` (doc_id, band, bv) for the
-    image dHash — shared by the pair oracle above and the image
-    search oracle (mmdedup.image_phash_search)."""
+    image dHash — the IMAGE row's chain under every media family
+    oracle (mmdedup.MEDIA)."""
     luma = (f"(299 * {sql_byte_at('3*j')} + 587 * {sql_byte_at('3*j + 1')}"
             f" + 114 * {sql_byte_at('3*j + 2')}) // 1000")
     # jmax from sql_planted_hex is the BYTE bound (3 bytes per pixel);
@@ -1697,101 +1679,3 @@ def _sql_image_bits(where: str | None = None) -> str:
       FROM g a JOIN g b ON b.doc_id = a.doc_id AND b.j = a.j + 1
       WHERE a.j % {PH_GRID_W} < {PH_GRID_W - 1}
       GROUP BY a.doc_id, a.j // {PH_GRID_W})"""
-
-
-@query("dedup_image_phash", oracle=_sql_image_phash())
-def dedup_image_phash(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """IMAGE near-duplicate pairs by perceptual hash (VERDICT r8 ask
-    #2; banding widened r9->r10 per VERDICT r9 ask #2): decode every
-    image with the real stdlib codec, compute a 128-bit dHash over
-    the integer luma grid (17x8 -> 16 comparisons x 8 rows, packed
-    into two int64s), and find pairs within Hamming 7 (PH_HAM_MAX)
-    WITHOUT any all-pairs comparison — the signature is cut into 8
-    sixteen-bit bands (one per grid row) and candidates come from an
-    equi-self-join on (band, band_value), the same pigeonhole-lossless
-    banding as dedup_simhash_pairs (<= 7 flipped bits cannot touch all
-    8 bands). Sixteen-bit bands put random candidate collisions at
-    ~n²/65536 per band — 256x fewer than the r9 8-bit form and on par
-    with the text simhash tier. This composes the two existing
-    primitives — functions/imagecodec.py's pixel decode and the dedup
-    tier's banded Hamming join — into the image half of the
-    multimodal dedup story an LLM pipeline needs.
-
-    100 TB posture: one decode+hash pass (Arrow-batched, payloads
-    never shuffle — only one 16-byte signature per asset does), then a
-    key-equi-join bounded by band-bucket sizes, then a per-candidate
-    popcount filter that Catalyst PUSHES below the distinct into the
-    join output stream (an earlier draft checkpointed the candidates
-    before the filter to dodge a constraint-inference spin on the
-    16-column form — that barrier blocked the pushdown, materialized
-    every random band collision, and OOM'd the 10× cert; the packed
-    single-sig form keeps the filter tree tiny AND pushable — see
-    SCALE.md r9). No CartesianProduct (plan-pinned); a pathological
-    corpus of identical images degenerates to the bucket of one band
-    value — the same skew story as text simhash, handled by the same
-    AQE skew machinery. The oracle recomputes decode, hash, banding,
-    and Hamming from the sha256 chain entirely in SQL, and a crafted
-    pytest checks the banded result against a quadratic brute force."""
-    sigs = materialize(
-        phash_image_assets(spark, sf_dir)
-        .mapInPandas(_phash_batch, _PHASH_SCHEMA)
-    )
-    return banded_hamming_pairs2(sigs, PH_BANDS, PH_BAND_BITS, PH_HAM_MAX)
-
-
-def _sql_image_cc() -> str:
-    """DuckDB twin of the image cluster op: recursive-CTE transitive
-    closure over the banded phash pair graph (the shared
-    banding.sql_cc_over builder — declarative reachability checks the
-    iterative min-label loop)."""
-    return sql_cc_over(_sql_image_phash())
-
-
-@query("dedup_image_clusters", oracle=_sql_image_cc())
-def dedup_image_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """IMAGE near-duplicate CLUSTERS: connected components of the
-    perceptual-hash pair graph — the keep/drop decision step of the
-    image dedup story (cluster_id = min asset_id of the component;
-    assets with no near-dup are their own cluster), composing
-    dedup_image_phash with the shared min-label propagation loop
-    (dedup.min_label_components, the dedup_clusters machinery).
-
-    100 TB posture: identical to dedup_clusters — the fixpoint loop
-    runs only over the pair graph's vertex set (near-dup vertices «
-    corpus), each round one edge⋈label shuffle with localCheckpoint
-    lineage truncation; every other asset joins the result once as a
-    singleton. The oracle is a DuckDB recursive transitive closure, so
-    the iterative loop is checked against declarative reachability.
-
-    The composed loop plans stay tractable because dedup_image_phash's
-    Hamming filter compares ONE packed signature per side (the
-    dedup_simhash_pairs shape) — the 16-column popcount-forest form
-    spun Catalyst constraint inference for minutes when embedded in
-    the loop's iteration plans (r9 find, SCALE.md)."""
-    docs = load_table(spark, sf_dir, "documents") \
-        .select(F.col("doc_id").alias("asset_id"))
-    pairs = dedup_image_phash(spark, sf_dir).select("asset_a", "asset_b")
-    return label_with_singletons(docs, "asset_id", pairs,
-                                 "asset_a", "asset_b")
-
-
-@query(
-    "dedup_image_keep_report",
-    oracle=sql_keep_report_over(_sql_image_cc()),
-)
-def dedup_image_keep_report(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The image-dedup DECISION made material (the dedup_keep_report
-    shape for the multimodal pillar): keep the canonical (min-id)
-    asset of every perceptual-hash cluster, drop the rest, and report
-    per language what survives — the sign-off number before a
-    multimodal training run ("image near-dup removes X% of language
-    Y's assets").
-
-    Composes dedup_image_clusters (CC over the banded phash graph)
-    with one join back to the manifest and a per-language rollup; the
-    cluster table is (asset_id, cluster_id) longs, tiny next to the
-    payloads it describes, and the keep predicate cluster_id =
-    asset_id needs no second decode of anything. One extra shuffle
-    over dedup_image_clusters at any scale."""
-    return keep_report_frame(spark, sf_dir,
-                             dedup_image_clusters(spark, sf_dir))

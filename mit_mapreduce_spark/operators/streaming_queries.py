@@ -38,16 +38,22 @@ from mit_mapreduce_spark.functions.numeric import dsum, sql_dsum
 # stateful steppers, and a missing registration is a worker-side
 # KeyError that kills streaming tasks (r9 find with multimodal).
 from mit_mapreduce_spark.operators import events as _events_batch  # noqa: F401
-from mit_mapreduce_spark.operators import banding as _banding  # noqa: F401
 from mit_mapreduce_spark.operators import curation as _curation_batch  # noqa: F401,E501
-from mit_mapreduce_spark.operators import mmdedup as _mmdedup_batch  # noqa: F401
 from mit_mapreduce_spark.operators import mmquality as _mmquality_batch  # noqa: F401
 from mit_mapreduce_spark.operators import multimodal as _multimodal_batch  # noqa: F401
 from mit_mapreduce_spark.operators import sketches as _sketches_batch  # noqa: F401
+from mit_mapreduce_spark.operators.banding import (
+    INC_PRED, banded_match_scores, inc_col, sql_alert_tail, sql_sigs_over,
+)
 from mit_mapreduce_spark.operators.events import SESSION_GAP_US
+from mit_mapreduce_spark.operators.mmdedup import (
+    FP_BAND_BITS, FP_BANDS, FP_HAM_MAX, Media, _present_docs, media_queries,
+)
 from mit_mapreduce_spark.operators.registry import ORACLES, query
 from mit_mapreduce_spark.session import materialize, stream_session, tune
-from mit_mapreduce_spark.streaming import events_stream, run_stream_to_table
+from mit_mapreduce_spark.streaming import (
+    docs_stream, events_stream, run_stream_to_table,
+)
 
 SESSION_GAP = "4 hours"   # matches operators.events.SESSION_GAP_US
 
@@ -674,179 +680,81 @@ def stream_multimodal_quarantine(spark: SparkSession,
     return run_stream_to_table(agg, "complete")
 
 
-@query("stream_audio_fingerprints",
-       oracle=_mmdedup_batch._sql_audio_sigs())
-def stream_audio_fingerprints(spark: SparkSession,
-                              sf_dir: str) -> DataFrame:
-    """STREAMING fingerprint-at-ingest (r10): the documents manifest
-    arrives as a file stream; each micro-batch builds the WAV
-    payloads and runs the REAL decode + energy-sign fingerprint
-    kernel (the identical stateless stages batch
-    dedup_audio_fingerprint starts from), and the per-asset
-    (sig0, sig1) signature rows drain in append mode — the signature
-    table a production pipeline would maintain continuously so the
-    banded dedup join runs over an always-current index instead of
-    re-decoding the corpus per run.
+@media_queries("stream_{m.name}_fingerprints",
+               lambda m: sql_sigs_over(m.sql_bits()))
+def _fingerprint_drain(spark: SparkSession, sf_dir: str,
+                       m: Media) -> DataFrame:
+    """STREAMING {name} fingerprint-at-ingest: the documents manifest
+    arrives as a file stream; each micro-batch builds the payloads and
+    runs the REAL decode + fingerprint kernel (the row's stateless
+    stages, the ones the batch pair family starts from), and the
+    per-asset (sig0, sig1) rows drain in append mode — the signature
+    table a production pipeline maintains continuously, so the banded
+    dedup join and the incremental screens run over an always-current
+    index instead of re-decoding the corpus per run.
 
-    Oracle = the signature-table SQL (_sql_audio_sigs): every stage
-    is stateless and append-mode emits each input row's output
-    exactly once, so the drain equals the batch signature table
-    row-for-row regardless of micro-batch boundaries. This also
-    gates the kernel's int64 PACKING directly (HUGEINT repack +
-    two's-complement wrap in SQL). 100 TB posture: zero streaming
-    state — the op is a pure per-batch map, so throughput scales
-    with executors and the only cross-batch artifact is the sink
-    table."""
-    from mit_mapreduce_spark.operators.mmdedup import (
-        _afp_batch, _fingerprint_audio_assets_from,
-    )
-    from mit_mapreduce_spark.operators.multimodal import _PHASH_SCHEMA
-    from mit_mapreduce_spark.streaming import docs_stream
-
+    Oracle = the signature-table SQL (banding.sql_sigs_over over the
+    row's bits chain): every stage is stateless and append mode emits
+    each input row's output exactly once, so the drain equals the
+    batch signature table row-for-row regardless of micro-batch
+    boundaries. It also gates the kernel's int64 PACKING directly
+    (HUGEINT repack + two's-complement wrap in SQL). 100 TB posture:
+    zero streaming state — a pure per-batch map, throughput scales
+    with executors, the only cross-batch artifact is the sink."""
     tune(spark)
-    sigs = (
-        _fingerprint_audio_assets_from(docs_stream(spark, sf_dir))
-        .mapInPandas(_afp_batch, _PHASH_SCHEMA)
-    )
-    return run_stream_to_table(sigs, "append")
+    return run_stream_to_table(m.sigs(docs_stream(spark, sf_dir)), "append")
 
 
-def _sql_image_sigs() -> str:
-    from mit_mapreduce_spark.operators.banding import sql_sigs_over
-    from mit_mapreduce_spark.operators.multimodal import _sql_image_bits
-    return sql_sigs_over(_sql_image_bits())
-
-
-@query("stream_image_fingerprints", oracle=_sql_image_sigs())
-def stream_image_fingerprints(spark: SparkSession,
-                              sf_dir: str) -> DataFrame:
-    """STREAMING image fingerprint-at-ingest: per micro-batch PPM
-    build + real stdlib pixel decode + 128-bit dHash, append-mode
-    signature drain — the image leg of the continuously-maintained
-    dedup index (see stream_audio_fingerprints for the argument:
-    stateless stages + append mode = batch-equal drain; the oracle
-    additionally gates the int64 packing)."""
-    from mit_mapreduce_spark.operators.multimodal import (
-        _PHASH_SCHEMA, _phash_batch, _phash_image_assets_from,
-    )
-    from mit_mapreduce_spark.streaming import docs_stream
-
-    tune(spark)
-    sigs = (_phash_image_assets_from(docs_stream(spark, sf_dir))
-            .mapInPandas(_phash_batch, _PHASH_SCHEMA))
-    return run_stream_to_table(sigs, "append")
-
-
-@query("stream_video_fingerprints",
-       oracle=_banding.sql_sigs_over(_mmdedup_batch._sql_video_bits()))
-def stream_video_fingerprints(spark: SparkSession,
-                              sf_dir: str) -> DataFrame:
-    """STREAMING video fingerprint-at-ingest: per micro-batch Y4M
-    build + real frame extraction + per-frame block-sum dHash,
-    append-mode signature drain — the video leg of the
-    continuously-maintained dedup index (same stateless/append
-    argument and packing-gated oracle as the audio/image legs)."""
-    from mit_mapreduce_spark.operators.mmdedup import (
-        _fingerprint_video_assets_from, _vfp_batch,
-    )
-    from mit_mapreduce_spark.operators.multimodal import _PHASH_SCHEMA
-    from mit_mapreduce_spark.streaming import docs_stream
-
-    tune(spark)
-    sigs = (_fingerprint_video_assets_from(docs_stream(spark, sf_dir))
-            .mapInPandas(_vfp_batch, _PHASH_SCHEMA))
-    return run_stream_to_table(sigs, "append")
-
-
-@query("stream_fingerprint_alerts",
-       oracle=f"WITH {_mmdedup_batch._sql_audio_bits(_mmdedup_batch.AUD_PRESENT_SQL)},"
-              f" {_banding.sql_alert_tail(_mmdedup_batch.FP_INC_PRED, _mmdedup_batch.FP_HAM_MAX)}")
-def stream_fingerprint_alerts(spark: SparkSession,
-                              sf_dir: str) -> DataFrame:
-    """STREAMING near-dup ALERT at ingest (VERDICT r10 ask #3): the
-    incoming asset shard (doc_id % 40 < 6, the same split as the
-    batch incremental screens) arrives as a manifest stream; each
-    micro-batch builds the WAV payloads and fingerprints them (the
-    stateless stages stream_audio_fingerprints runs), then a
-    STREAM-STATIC band equi-join against the retained corpus's
-    signature index flags every incoming asset within Hamming 7 of
-    an indexed asset — "this upload duplicates retained asset X",
-    emitted at the door instead of waiting for the nightly dedup
-    pass. Output rows are (asset_id, matched_id, hamming) pairs,
-    dropDuplicates'd on the pair key (a pair sharing k unchanged
-    bands surfaces from k band buckets with identical hamming; the
-    streaming dedup state holds one row per ALERT, which scales
-    with duplicates found, not with the corpus).
-
-    Oracle = the batch screen's pair SQL (banding.sql_alert_tail
-    over the audio bits chain): fingerprinting and the band join are
-    stateless per-batch stages, append mode emits each first pair
-    occurrence exactly once, so the drain equals the batch pair set
-    regardless of micro-batch boundaries. 100 TB posture: the static
-    side is the persisted 16-byte/asset signature index — re-read,
-    never re-decoded, per micro-batch; the join is the same pushable
-    two-popcount candidate filter as the batch tier; a production
-    deployment adds a watermark TTL on the dedup state if alert keys
-    must expire (the bounded-state drain and the expiry demonstration
-    are pytest-pinned — test_round11_ops / test_round13_ops).
-
-    r13 (ADVICE r12): both sides read OWNERSHIP from the asset
-    manifest — alerts only fire for docs whose manifest row claims an
-    audio asset; oracle filtered through the shared presence
-    template."""
-    from mit_mapreduce_spark.operators.mmdedup import (
-        _afp_batch, _fingerprint_audio_assets_from, MM_AUDIO_ABSENT,
-    )
-
-    return _alert_drain(spark, sf_dir, _fingerprint_audio_assets_from,
-                        _afp_batch, MM_AUDIO_ABSENT)
-
-
-def _alert_drain(spark: SparkSession, sf_dir: str, fixture_from, kernel,
-                 absent: tuple[int, int],
-                 n_bands: int | None = None, band_bits: int | None = None,
-                 ham_max: int | None = None) -> DataFrame:
-    """The modality-generic near-dup alert body (r12: factored out of
-    the audio leg so the image/video registrations are one call, not
-    a third copy): fingerprint the static retained corpus once
-    (batch), fingerprint the incoming shard per micro-batch with the
-    SAME stateless stages, stream-static band equi-join, radius
-    filter, per-pair dedup, append drain. Geometry defaults to the
-    shared FP_* constants; the image leg passes PH_* (aliases
-    today, free to diverge).
-
-    Presence is DATA (r13, ADVICE r12): both sides are the manifest-
-    flagged OWNER set — the static index holds only retained docs
-    whose manifest row claims the modality, and the incoming stream
-    is semi-joined against the same flagged set (a stream-static
-    left-semi join), so an alert can never fire for an asset the
-    manifest says the doc does not own — the invariant the
-    admission's screen legs already enforce."""
-    from mit_mapreduce_spark.operators.mmdedup import (
-        _present_docs, FP_BAND_BITS, FP_BANDS, FP_HAM_MAX, inc_shard_col,
-    )
-    from mit_mapreduce_spark.operators.multimodal import _PHASH_SCHEMA
-    from mit_mapreduce_spark.streaming import docs_stream
-
-    n_bands = FP_BANDS if n_bands is None else n_bands
-    band_bits = FP_BAND_BITS if band_bits is None else band_bits
-    ham_max = FP_HAM_MAX if ham_max is None else ham_max
-    tune(spark)
-    inc_pred = inc_shard_col("doc_id")
-    owners = _present_docs(spark, sf_dir, absent)
-    idx_sigs = materialize(
-        fixture_from(owners.where(~inc_pred))
-        .mapInPandas(kernel, _PHASH_SCHEMA)
-    )
-    inc_sigs = (
-        fixture_from(docs_stream(spark, sf_dir).where(inc_pred)
-                     .join(owners, "doc_id", "left_semi"))
-        .mapInPandas(kernel, _PHASH_SCHEMA)
-    )
-    alerts = _banding.banded_match_scores(
-        inc_sigs, idx_sigs, n_bands, band_bits, ham_max
+def alert_stream(spark: SparkSession, sf_dir: str, m: Media,
+                 docs: DataFrame) -> DataFrame:
+    """The near-dup alert frame of an incoming documents stream: the
+    shard's OWNED assets (a stream-static left-semi join against the
+    manifest-flagged owner set) fingerprinted per micro-batch with the
+    row's stateless stages, band-joined against the static index of
+    the retained owners' signatures (fingerprinted once, batch),
+    radius-filtered and de-duplicated per pair — unsinked, so the
+    registered drain and streambench's per-file source share it."""
+    owners = _present_docs(spark, sf_dir, m.absent)
+    inc_pred = inc_col("doc_id")
+    idx_sigs = materialize(m.sigs(owners.where(~inc_pred)))
+    inc_sigs = m.sigs(docs.where(inc_pred)
+                      .join(owners, "doc_id", "left_semi"))
+    return banded_match_scores(
+        inc_sigs, idx_sigs, FP_BANDS, FP_BAND_BITS, FP_HAM_MAX,
     ).dropDuplicates(["asset_id", "matched_id"])
-    return run_stream_to_table(alerts, "append")
+
+
+@media_queries("{m.alerts_name}",
+               lambda m: f"WITH {m.sql_bits(m.present_sql)},"
+                         f" {sql_alert_tail(INC_PRED, FP_HAM_MAX)}")
+def _alert_drain(spark: SparkSession, sf_dir: str, m: Media) -> DataFrame:
+    """STREAMING near-dup ALERT at {name} ingest: the incoming asset
+    shard (doc_id % 40 < 6, the batch incremental screens' split)
+    arrives as a manifest stream; each micro-batch fingerprints the
+    shard's owned assets, then a STREAM-STATIC band equi-join against
+    the retained corpus's signature index flags every incoming asset
+    within Hamming 7 of an indexed one — "this upload duplicates
+    retained asset X", emitted at the door instead of waiting for the
+    nightly dedup pass. Rows are (asset_id, matched_id, hamming),
+    dropDuplicates'd on the pair key (a pair sharing k unchanged bands
+    surfaces from k buckets with identical hamming; the dedup state
+    holds one row per ALERT, which scales with duplicates found, not
+    with the corpus).
+
+    Both sides read OWNERSHIP from the asset manifest (r13): alerts
+    fire only for docs whose manifest row claims the asset. Oracle =
+    the row's presence-filtered bits chain + banding.sql_alert_tail:
+    fingerprinting and the band join are stateless per-batch stages
+    and append mode emits each first pair occurrence exactly once, so
+    the drain equals the batch pair set regardless of micro-batch
+    boundaries. 100 TB posture: the static side is the persisted
+    16-byte/asset signature index — re-read, never re-decoded, per
+    micro-batch; a deployment adds a watermark TTL on the dedup state
+    if alert keys must expire (pytest-pinned in test_round11_ops /
+    test_round13_ops)."""
+    tune(spark)
+    return run_stream_to_table(
+        alert_stream(spark, sf_dir, m, docs_stream(spark, sf_dir)), "append")
 
 
 def _sql_text_fps() -> str:
@@ -920,7 +828,7 @@ def stream_ingest_admission(spark: SparkSession, sf_dir: str) -> DataFrame:
     every join is the screen-shaped bounded-key equi-join of the
     batch tier."""
     from mit_mapreduce_spark.operators.mmdedup import (
-        admission_batch_frame, admission_static_ctx, inc_shard_col,
+        admission_batch_frame, admission_static_ctx,
     )
     from mit_mapreduce_spark.streaming import docs_stream, drain_via_batch
 
@@ -933,7 +841,7 @@ def stream_ingest_admission(spark: SparkSession, sf_dir: str) -> DataFrame:
     # partitions over ~60-row batches); each batch runs in a clone of
     # that child, so the verdict frame is built on the batch's session
     inc = (docs_stream(stream_session(spark, 2), sf_dir)
-           .where(inc_shard_col("doc_id")))
+           .where(inc_col("doc_id")))
     return drain_via_batch(
         inc, lambda b: admission_batch_frame(b.sparkSession, sf_dir, b, ctx),
         name="admit", sf_dir=sf_dir)
@@ -1081,64 +989,6 @@ def stream_embedding_index(spark: SparkSession, sf_dir: str) -> DataFrame:
         lambda b: _screen_buckets(fan_out(b)).select(
             "vec_id", "band_idx", "bucket", "nsq"),
         name="embidx", sf_dir=sf_dir)
-
-
-def _sql_image_alerts() -> str:
-    from mit_mapreduce_spark.operators.mmdedup import IMG_PRESENT_SQL
-    from mit_mapreduce_spark.operators.multimodal import (
-        PH_HAM_MAX, _sql_image_bits,
-    )
-    return (f"WITH {_sql_image_bits(IMG_PRESENT_SQL)},"
-            f" {_banding.sql_alert_tail(_banding.INC_PRED, PH_HAM_MAX)}")
-
-
-@query("stream_image_alerts", oracle=_sql_image_alerts())
-def stream_image_alerts(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """STREAMING near-dup alert at IMAGE ingest (VERDICT r11 ask #3):
-    the incoming shard's images are dHash-fingerprinted per
-    micro-batch and band-joined against the static image signature
-    index — every upload within Hamming 7 of a retained image is
-    flagged (asset_id, matched_id, hamming) at the door. One call
-    into the modality-generic alert body (the r11 pytest that proved
-    genericity, promoted to a registered, oracle-gated leg); oracle =
-    the image bits chain (presence-filtered, r13) + the shared alert
-    tail. Same 100 TB posture as the audio leg: static side re-read
-    never re-decoded, dedup state one row per ALERT. r13: ownership
-    read from the asset manifest on both sides — no alert for an
-    image the manifest says the doc does not own."""
-    from mit_mapreduce_spark.operators.mmdedup import MM_IMAGE_ABSENT
-    from mit_mapreduce_spark.operators.multimodal import (
-        PH_BAND_BITS, PH_BANDS, PH_HAM_MAX, _phash_batch,
-        _phash_image_assets_from,
-    )
-
-    return _alert_drain(spark, sf_dir, _phash_image_assets_from,
-                        _phash_batch, MM_IMAGE_ABSENT,
-                        PH_BANDS, PH_BAND_BITS, PH_HAM_MAX)
-
-
-def _sql_video_alerts() -> str:
-    from mit_mapreduce_spark.operators.mmdedup import (
-        FP_HAM_MAX, VID_PRESENT_SQL, _sql_video_bits,
-    )
-    return (f"WITH {_sql_video_bits(VID_PRESENT_SQL)},"
-            f" {_banding.sql_alert_tail(_banding.INC_PRED, FP_HAM_MAX)}")
-
-
-@query("stream_video_alerts", oracle=_sql_video_alerts())
-def stream_video_alerts(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """STREAMING near-dup alert at VIDEO ingest: the incoming shard's
-    Y4M streams are frame-sequence-fingerprinted per micro-batch and
-    band-joined against the static video signature index (see
-    stream_image_alerts — one generic body, per-modality fixture +
-    kernel + oracle chain; r13: manifest-ownership filtering on both
-    sides)."""
-    from mit_mapreduce_spark.operators.mmdedup import (
-        _fingerprint_video_assets_from, _vfp_batch, MM_VIDEO_ABSENT,
-    )
-
-    return _alert_drain(spark, sf_dir, _fingerprint_video_assets_from,
-                        _vfp_batch, MM_VIDEO_ABSENT)
 
 
 @query("stream_audio_quality",

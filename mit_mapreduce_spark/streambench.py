@@ -33,7 +33,7 @@ from pyspark.sql import functions as F
 
 from mit_mapreduce_spark.functions.numeric import dsum
 from mit_mapreduce_spark.session import (
-    get_spark, materialize, parallel_legs, stream_session, tune,
+    get_spark, parallel_legs, stream_session, tune,
 )
 from mit_mapreduce_spark.streaming import (
     _SCRATCH, STATE_PARTITIONS, drain_via_batch, sf_key,
@@ -154,9 +154,11 @@ def main(sf_dir: str) -> dict:
 
     dstage = _staged_table_splits(spark, sf_dir, "documents")
     dschema = spark.read.parquet(dstage).schema
-    doc_source = (ss.readStream.schema(dschema)
-                  .option("maxFilesPerTrigger", 1).parquet(dstage))
-    mm = quarantine_report_agg(quarantine_probes(doc_source))
+    def doc_source():
+        return (ss.readStream.schema(dschema)
+                .option("maxFilesPerTrigger", 1).parquet(dstage))
+
+    mm = quarantine_report_agg(quarantine_probes(doc_source()))
     results["multimodal_ingest"] = {
         # the 3x convention travels IN the record (ADVICE r9 #2):
         # rows_per_sec counts assets (3 modality sources per doc),
@@ -167,64 +169,31 @@ def main(sf_dir: str) -> dict:
 
     # fingerprint-at-ingest (r10): per micro-batch WAV build + real
     # decode + energy-sign fingerprint, append-mode signature drain
-    # (stream_audio_fingerprints' pipeline); rows_per_sec = docs/sec
-    # through the full build -> decode -> fingerprint path.
-    from mit_mapreduce_spark.operators.mmdedup import (
-        _afp_batch, _fingerprint_audio_assets_from,
-    )
-    from mit_mapreduce_spark.operators.multimodal import _PHASH_SCHEMA
+    # (the AUDIO row's stream_audio_fingerprints pipeline); rows_per_sec
+    # = docs/sec through the full build -> decode -> fingerprint path.
+    from mit_mapreduce_spark.operators.banding import inc_col
+    from mit_mapreduce_spark.operators.mmdedup import AUDIO, MEDIA
+    from mit_mapreduce_spark.operators.streaming_queries import alert_stream
 
-    fp_source = (ss.readStream.schema(dschema)
-                 .option("maxFilesPerTrigger", 1).parquet(dstage))
-    sigs = (_fingerprint_audio_assets_from(fp_source)
-            .mapInPandas(_afp_batch, _PHASH_SCHEMA))
-    results["audio_fingerprints"] = _drive(sigs, "append", "sb_audio_fp")
+    results["audio_fingerprints"] = _drive(
+        AUDIO.sigs(doc_source()), "append", "sb_audio_fp")
 
-    # near-dup alert at ingest (r11): the stream_fingerprint_alerts
-    # pipeline — per micro-batch fingerprint of the incoming shard,
-    # stream-static band join against the batch-computed corpus
-    # signature index, radius filter, per-pair dedup state. NOTE on
-    # units (review find): numInputRows counts every staged manifest
-    # doc READ (the shard filter runs after the file source), so
-    # rows_per_sec is manifest-docs/s; the record carries shard_docs
-    # so consumers can derive the per-SHARD-doc rate.
-    from mit_mapreduce_spark.operators.banding import banded_match_scores
-    from mit_mapreduce_spark.operators.mmdedup import (
-        FP_BAND_BITS, FP_BANDS, FP_HAM_MAX, inc_shard_col,
-    )
-
-    from mit_mapreduce_spark.operators.mmdedup import (
-        _fingerprint_video_assets_from, _vfp_batch,
-    )
-    from mit_mapreduce_spark.operators.multimodal import (
-        PH_BAND_BITS, PH_BANDS, PH_HAM_MAX, _phash_batch,
-        _phash_image_assets_from,
-    )
-
-    inc_pred = inc_shard_col("doc_id")
+    # near-dup alert at ingest (r11; one leg per MEDIA row since r12):
+    # the registered alert legs' own frame (streaming_queries.
+    # alert_stream) over this per-file source — per micro-batch
+    # fingerprint of the shard's manifest-owned assets, stream-static
+    # band join against the owners' corpus signature index, radius
+    # filter, per-pair dedup state. NOTE on units (review find):
+    # numInputRows counts every staged manifest doc READ (the shard
+    # filter runs after the file source), so rows_per_sec is
+    # manifest-docs/s; the record carries shard_docs so consumers can
+    # derive the per-SHARD-doc rate.
+    inc_pred = inc_col("doc_id")
     shard_docs = spark.read.parquet(dstage).where(inc_pred).count()
-    for leg, fixture_from, kernel, geom in (
-            ("fingerprint_alerts", _fingerprint_audio_assets_from,
-             _afp_batch, (FP_BANDS, FP_BAND_BITS, FP_HAM_MAX)),
-            # r12: the image/video alert legs, registered as
-            # stream_image_alerts / stream_video_alerts
-            ("image_alerts", _phash_image_assets_from, _phash_batch,
-             (PH_BANDS, PH_BAND_BITS, PH_HAM_MAX)),
-            ("video_alerts", _fingerprint_video_assets_from, _vfp_batch,
-             (FP_BANDS, FP_BAND_BITS, FP_HAM_MAX))):
-        idx_sigs = materialize(
-            fixture_from(
-                spark.read.parquet(dstage).select("doc_id").where(~inc_pred))
-            .mapInPandas(kernel, _PHASH_SCHEMA)
-        )
-        al_source = (ss.readStream.schema(dschema)
-                     .option("maxFilesPerTrigger", 1).parquet(dstage))
-        inc_sigs = (fixture_from(al_source.where(inc_pred))
-                    .mapInPandas(kernel, _PHASH_SCHEMA))
-        alerts = banded_match_scores(
-            inc_sigs, idx_sigs, *geom
-        ).dropDuplicates(["asset_id", "matched_id"])
-        fig = _drive(alerts, "append", f"sb_{leg}")
+    for m in MEDIA:
+        leg = m.alerts_name.removeprefix("stream_")
+        fig = _drive(alert_stream(spark, sf_dir, m, doc_source()),
+                     "append", f"sb_{leg}")
         results[leg] = {
             **fig,
             "shard_docs": shard_docs,
@@ -256,10 +225,8 @@ def main(sf_dir: str) -> dict:
     # through the full build -> decode -> screen path.
     from mit_mapreduce_spark.operators.mmquality import _audio_screen_from
 
-    q_source = (ss.readStream.schema(dschema)
-                .option("maxFilesPerTrigger", 1).parquet(dstage))
     results["audio_quality"] = _drive(
-        _audio_screen_from(q_source), "append", "sb_audio_q")
+        _audio_screen_from(doc_source()), "append", "sb_audio_q")
 
     # streaming admission twin (r13): the composed seven-way gate per
     # micro-batch through stream_ingest_admission's drain — the number
@@ -271,20 +238,20 @@ def main(sf_dir: str) -> dict:
     # file source), so the record carries shard_docs like the alert
     # legs.
     from mit_mapreduce_spark.operators.mmdedup import (
-        admission_batch_frame, admission_static_ctx, inc_shard_col,
+        admission_batch_frame, admission_static_ctx,
     )
 
     from pyspark.sql import DataFrame as _DF
 
     ctx = admission_static_ctx(spark, sf_dir)
     frames = [v for v in ctx.values() if isinstance(v, _DF)]
-    frames += [m[-1] for m in ctx["media"]]
+    frames += ctx["media"].values()
     parallel_legs(*(f.count for f in frames))
     # match the registered twin's per-batch sizing (r14 surgery): the
     # batches run in clones of a 2-partition child session
     a_source = (stream_session(spark, 2).readStream.schema(dschema)
                 .option("maxFilesPerTrigger", 1).parquet(dstage)
-                .where(inc_shard_col("doc_id")))
+                .where(inc_pred))
     batches = 0
 
     def _admit(batch_df):
@@ -295,7 +262,7 @@ def main(sf_dir: str) -> dict:
 
     staged = spark.read.parquet(dstage)
     rows = staged.count()
-    shard_docs = staged.where(inc_shard_col("doc_id")).count()
+    shard_docs = staged.where(inc_pred).count()
     t0 = time.monotonic()
     admitted = drain_via_batch(a_source, _admit, "sb_admit", sf_dir)
     wall = time.monotonic() - t0

@@ -66,7 +66,7 @@ spark.sparkContext.setLogLevel("ERROR")
 
 from mit_mapreduce_spark.catalog import load_table
 from mit_mapreduce_spark.operators import mmdedup
-from mit_mapreduce_spark.operators.banding import incremental_screen
+from mit_mapreduce_spark.operators.banding import inc_col, incremental_screen
 from mit_mapreduce_spark.operators.multimodal import _PHASH_SCHEMA
 
 
@@ -81,7 +81,7 @@ def flaky(batches):
 
 sf = os.environ.get("SPARK_GRAFT_TEST_SF_DIR", "/root/testdata/sf0.001")
 docs = load_table(spark, sf, "documents").select("doc_id")
-inc_pred = mmdedup.inc_shard_col()
+inc_pred = inc_col("asset_id")
 
 
 def screen(kernel):

@@ -12,7 +12,7 @@ operators.load_all()
 
 from mit_mapreduce_spark.operators import mmdedup  # noqa: E402
 from mit_mapreduce_spark.operators.banding import (  # noqa: E402
-    banded_match_scores, incremental_screen,
+    banded_match_scores, inc_col, incremental_screen,
 )
 from mit_mapreduce_spark.operators.multimodal import (  # noqa: E402
     _PHASH_SCHEMA, _phash_batch, _phash_image_assets_from,
@@ -101,25 +101,22 @@ def _bruteforce_screen(sig: dict, ham_max: int):
     return out
 
 
-@pytest.mark.parametrize("opname, fixture_from, kernel", [
-    ("dedup_audio_incremental", mmdedup._fingerprint_audio_assets_from,
-     mmdedup._afp_batch),
-    ("dedup_image_incremental", _phash_image_assets_from, _phash_batch),
-    ("dedup_video_incremental", mmdedup._fingerprint_video_assets_from,
-     mmdedup._vfp_batch),
-])
-def test_incremental_vs_python_bruteforce(spark, sf_dir, opname,
-                                          fixture_from, kernel):
+@pytest.mark.parametrize(
+    "m", mmdedup.MEDIA,
+    ids=lambda m: (f"dedup_{m.name}_incremental-{m.fixture_from.__name__}"
+                   f"-{m.kernel.__name__}"))
+def test_incremental_vs_python_bruteforce(spark, sf_dir, m):
     """The one-sided banded screen must equal a quadratic brute force
     over the same fingerprints (banding losslessness, one-sided), for
     all three modalities."""
     from mit_mapreduce_spark.catalog import load_table
 
     docs = load_table(spark, sf_dir, "documents").select("doc_id")
-    sig = _collect_sigs(fixture_from(docs), kernel)
+    sig = _collect_sigs(m.fixture_from(docs), m.kernel)
     want = _bruteforce_screen(sig, mmdedup.FP_HAM_MAX)
     got = {r.asset_id: r for r in
-           operators.QUERIES[opname](spark, sf_dir).collect()}
+           operators.QUERIES[f"dedup_{m.name}_incremental"](
+               spark, sf_dir).collect()}
     assert set(got) == set(want)
     for a, best in want.items():
         r = got[a]
@@ -310,7 +307,7 @@ def test_streamed_signature_index_feeds_the_screen(spark, sf_dir, tmp_path):
     from mit_mapreduce_spark.streaming import docs_stream
 
     tune(spark)
-    inc_pred = mmdedup.inc_shard_col("doc_id")
+    inc_pred = inc_col("doc_id")
     dst, ckpt = str(tmp_path / "sigidx"), str(tmp_path / "ckpt")
     idx_leg = (
         mmdedup._fingerprint_audio_assets_from(
@@ -398,7 +395,7 @@ def test_alert_body_is_modality_generic(spark, sf_dir):
     from mit_mapreduce_spark.streaming import docs_stream, run_stream_to_table
 
     tune(spark)
-    inc_pred = mmdedup.inc_shard_col("doc_id")
+    inc_pred = inc_col("doc_id")
     idx_sigs = (
         _phash_image_assets_from(
             load_table(spark, sf_dir, "documents")
@@ -475,13 +472,13 @@ def test_admission_audio_gate_matches_component_legs(spark, sf_dir):
     sigs = (mmdedup._fingerprint_audio_assets_from(owners)
             .mapInPandas(mmdedup._afp_batch, _PHASH_SCHEMA)
             .localCheckpoint(eager=False))
-    inc = mmdedup.inc_shard_col()
+    inc = inc_col("asset_id")
     nd = {r.asset_id: r.is_neardup for r in incremental_screen(
         owners.select(F.col("doc_id").alias("asset_id")).where(inc),
         sigs.where(inc), sigs.where(~inc), mmdedup.FP_BANDS,
         mmdedup.FP_BAND_BITS, mmdedup.FP_HAM_MAX).collect()}
     qp = {r.asset_id: r.passes for r in _audio_screen_from(
-        owners.where(mmdedup.inc_shard_col("doc_id"))).collect()}
+        owners.where(inc_col("doc_id"))).collect()}
     mod, rem = mmdedup.MM_AUDIO_ABSENT
     rows = operators.QUERIES["pipeline_ingest_admission"](
         spark, sf_dir).collect()

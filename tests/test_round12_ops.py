@@ -8,6 +8,7 @@ import pytest
 from mit_mapreduce_spark import operators
 from mit_mapreduce_spark.catalog import load_table
 from mit_mapreduce_spark.operators import mmdedup
+from mit_mapreduce_spark.operators.banding import inc_col
 
 operators.load_all()
 
@@ -114,53 +115,36 @@ def test_embed_screen_matches_bruteforce(spark, sf_dir):
 
 # --- image/video streaming alerts ------------------------------------------
 
-def _owner_screen(spark, sf_dir, fixture_from, kernel, absent, geom):
+def _owner_screen(spark, sf_dir, m):
     """The admission screen-leg composition (incremental_screen over
     the manifest-flagged owner set) — the batch twin of the
     presence-filtered alert legs (r13)."""
     from mit_mapreduce_spark.operators.banding import incremental_screen
     from mit_mapreduce_spark.operators.multimodal import _PHASH_SCHEMA
 
-    owners = mmdedup._present_docs(spark, sf_dir, absent)
-    sigs = (fixture_from(owners)
-            .mapInPandas(kernel, _PHASH_SCHEMA)
+    owners = mmdedup._present_docs(spark, sf_dir, m.absent)
+    sigs = (m.fixture_from(owners)
+            .mapInPandas(m.kernel, _PHASH_SCHEMA)
             .localCheckpoint(eager=False))
-    inc = mmdedup.inc_shard_col()
+    inc = inc_col("asset_id")
     return incremental_screen(
         owners.select(F.col("doc_id").alias("asset_id"))
-        .where(mmdedup.inc_shard_col("asset_id")),
-        sigs.where(inc), sigs.where(~inc), *geom)
+        .where(inc_col("asset_id")),
+        sigs.where(inc), sigs.where(~inc), mmdedup.FP_BANDS,
+        mmdedup.FP_BAND_BITS, mmdedup.FP_HAM_MAX)
 
 
-def _modality_cases():
-    from mit_mapreduce_spark.operators.multimodal import (
-        PH_BAND_BITS, PH_BANDS, PH_HAM_MAX, _phash_batch,
-        _phash_image_assets_from,
-    )
-
-    return [
-        ("stream_image_alerts", _phash_image_assets_from, _phash_batch,
-         mmdedup.MM_IMAGE_ABSENT, (PH_BANDS, PH_BAND_BITS, PH_HAM_MAX)),
-        ("stream_video_alerts", mmdedup._fingerprint_video_assets_from,
-         mmdedup._vfp_batch, mmdedup.MM_VIDEO_ABSENT,
-         (mmdedup.FP_BANDS, mmdedup.FP_BAND_BITS, mmdedup.FP_HAM_MAX)),
-    ]
-
-
-@pytest.mark.parametrize("case_idx", [0, 1],
+@pytest.mark.parametrize("m", [mmdedup.IMAGE, mmdedup.VIDEO],
                          ids=["image", "video"])
-def test_alert_legs_consistent_with_incremental_screens(
-        spark, sf_dir, case_idx):
+def test_alert_legs_consistent_with_incremental_screens(spark, sf_dir, m):
     """An incoming OWNED asset raises an alert iff the owner-
     restricted batch screen (the admission's screen-leg composition —
     r13: the alert legs read ownership from the asset manifest, so
     their batch twin is presence-filtered too) flags it as a
     near-dup, and the alerted pair set contains the screen's best
     match."""
-    alert_q, fixture_from, kernel, absent, geom = _modality_cases()[case_idx]
-    alerts = operators.QUERIES[alert_q](spark, sf_dir).collect()
-    screen = _owner_screen(spark, sf_dir, fixture_from, kernel,
-                           absent, geom).collect()
+    alerts = operators.QUERIES[m.alerts_name](spark, sf_dir).collect()
+    screen = _owner_screen(spark, sf_dir, m).collect()
     alerted = {r.asset_id for r in alerts}
     flagged = {r.asset_id for r in screen if r.is_neardup}
     assert alerted == flagged and alerted

@@ -8,6 +8,7 @@ import pytest
 from mit_mapreduce_spark import operators
 from mit_mapreduce_spark.catalog import load_table
 from mit_mapreduce_spark.operators import dedup
+from mit_mapreduce_spark.operators.banding import inc_col
 
 operators.load_all()
 
@@ -158,7 +159,7 @@ def test_stream_admission_multibatch_equals_batch(spark, sf_dir, tmp_path):
 
     tune(spark)
     docs = load_table(spark, sf_dir, "documents")
-    inc = docs.where(mmdedup.inc_shard_col("doc_id"))
+    inc = docs.where(inc_col("doc_id"))
     stage = str(tmp_path / "shard_in")
     os.makedirs(stage)
     # three files of interleaved doc_ids -> three micro-batches
@@ -255,7 +256,7 @@ def test_admission_runs_from_drained_index_tables(spark, sf_dir, tmp_path):
         "has_video": persist("stream_video_fingerprints"),
     }
 
-    inc_pred = mmdedup.inc_shard_col("doc_id")
+    inc_pred = inc_col("doc_id")
     ctx = dict(mmdedup.admission_static_ctx(spark, sf_dir))
     ctx["corpus_fps"] = (fps.where(~inc_pred)
                          .select(F.col("fingerprint").alias("_fp"))
@@ -285,13 +286,11 @@ def test_admission_runs_from_drained_index_tables(spark, sf_dir, tmp_path):
         .where(F.col(flag)).select(F.col("doc_id").alias("asset_id"))
         for flag in media_sigs
     }
-    ctx["media"] = [
-        (nd, qp, flag, fixture_from, kernel, geom, screen_from,
-         media_sigs[flag].where(~inc_col("asset_id"))
-         .join(owners[flag], "asset_id", "left_semi"))
-        for nd, qp, flag, fixture_from, kernel, geom, screen_from, _
-        in ctx["media"]
-    ]
+    ctx["media"] = {
+        m: media_sigs[m.flag].where(~inc_col("asset_id"))
+        .join(owners[m.flag], "asset_id", "left_semi")
+        for m in ctx["media"]
+    }
 
     shard = load_table(spark, sf_dir, "documents").where(inc_pred)
     via_tables = mmdedup.admission_batch_frame(spark, sf_dir, shard, ctx)

@@ -61,6 +61,36 @@ def test_only_session_module_materializes():
     assert _package_hits(r"\.localCheckpoint\(", "session.py") == []
 
 
+def test_only_the_media_table_names_a_modality():
+    """A modality's fingerprint kernel and presence constants are named
+    in their definitions and in its row of mmdedup's Media table, and
+    nowhere else: every family query, composite and bench leg reads
+    them from the row."""
+    pattern = (r"_phash_batch|_afp_batch|_vfp_batch"
+               r"|MM_(IMAGE|AUDIO|VIDEO)_ABSENT|(IMG|AUD|VID)_PRESENT_SQL")
+    definition = re.compile(
+        r"^def _(phash|afp|vfp)_batch\(|^MM_(IMAGE|AUDIO|VIDEO)_ABSENT = ")
+    table = os.path.join("operators", "mmdedup.py")
+    with open(os.path.join(PKG, table), encoding="utf-8") as fh:
+        lines = fh.readlines()
+    rows, start = set(), None
+    for i, line in enumerate(lines, 1):
+        if re.match(r"(IMAGE|AUDIO|VIDEO) = Media\($", line):
+            start = i
+        elif start and line.startswith(")"):
+            rows.update(f"{table}:{n}" for n in range(start, i + 1))
+            start = None
+
+    def text(hit):
+        path, n = hit.rsplit(":", 1)
+        with open(os.path.join(PKG, path), encoding="utf-8") as fh:
+            return fh.readlines()[int(n) - 1]
+
+    assert [h for h in _package_hits(pattern, "")
+            if h not in rows and not definition.match(text(h))] == []
+    assert len(rows) > 3   # the three rows were found
+
+
 def test_parallel_legs_orders_results_and_waits_before_raising():
     from mit_mapreduce_spark.session import parallel_legs
 

@@ -19,6 +19,7 @@ Run: python tools_scale_incremental.py
 import json
 
 from mit_mapreduce_spark import operators
+from mit_mapreduce_spark.operators.mmdedup import MEDIA
 from mit_mapreduce_spark.session import get_spark
 from mit_mapreduce_spark.testing import compare
 from tools_scale_common import best2
@@ -26,8 +27,8 @@ from tools_scale_retrieval import SRC, TENX, build_tenx
 
 operators.load_all()
 
-OPS = ("dedup_audio_incremental", "dedup_image_incremental",
-       "dedup_video_incremental", "dedup_minhash_incremental")
+OPS = (*(f"dedup_{m.name}_incremental" for m in MEDIA),
+       "dedup_minhash_incremental")
 
 
 def main():

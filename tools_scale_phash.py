@@ -18,6 +18,7 @@ Run: python tools_scale_phash.py   (writes /tmp/scale_phash.json)
 import json
 
 from mit_mapreduce_spark import operators
+from mit_mapreduce_spark.operators.mmdedup import MEDIA
 from mit_mapreduce_spark.session import get_spark
 from mit_mapreduce_spark.testing import compare
 from tools_scale_common import best2
@@ -25,7 +26,7 @@ from tools_scale_retrieval import SRC, TENX, build_tenx
 
 operators.load_all()
 
-OPS = ("dedup_image_phash", "dedup_audio_fingerprint", "dedup_video_phash")
+OPS = tuple(m.pairs_name for m in MEDIA)
 
 
 def main():
