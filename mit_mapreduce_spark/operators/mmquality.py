@@ -76,18 +76,13 @@ AQ_CLIP_T = 32704     # |s| >= 32704: "at the rail" (64 values on the
 AQ_CLS = 8
 
 
-def quality_audio_assets(spark: SparkSession, sf_dir: str) -> DataFrame:
+def _quality_audio_assets_from(docs: DataFrame) -> DataFrame:
     """The planted-class audio fixture: every document owns one mono
     16 kHz WAV whose PCM is selected by doc_id % 8 from the
     degenerate classes above (all built with JVM expressions, wrapped
     by multimodal's real Arrow WAV-encode kernel — the screen kernel
     exercises the honest stdlib decode path; payloads never transit
     the driver)."""
-    return _quality_audio_assets_from(
-        load_table(spark, sf_dir, "documents"))
-
-
-def _quality_audio_assets_from(docs: DataFrame) -> DataFrame:
     from mit_mapreduce_spark.operators.multimodal import (
         _AUDIO_SCHEMA, _encode_audio_batch,
     )
@@ -303,16 +298,11 @@ VQ_NF = "4 + doc_id % 3"
 VQ_CLS = 8
 
 
-def quality_video_assets(spark: SparkSession, sf_dir: str) -> DataFrame:
+def _quality_video_assets_from(docs: DataFrame) -> DataFrame:
     """The planted-class video fixture: one 16x4 C444 Y4M stream per
     document, YUV bytes selected by doc_id % 8 from the degenerate
     classes above (JVM hex expressions, wrapped by multimodal's real
     Arrow Y4M-encode kernel)."""
-    return _quality_video_assets_from(
-        load_table(spark, sf_dir, "documents"))
-
-
-def _quality_video_assets_from(docs: DataFrame) -> DataFrame:
     from mit_mapreduce_spark.operators.multimodal import (
         _VIDEO_SCHEMA, _encode_video_batch,
     )
@@ -526,16 +516,11 @@ IQ_BYTES = 3 * IQ_W * IQ_H
 IQ_CLS = 8
 
 
-def quality_image_assets(spark: SparkSession, sf_dir: str) -> DataFrame:
+def _quality_image_assets_from(docs: DataFrame) -> DataFrame:
     """The planted-class image fixture: one 16x8 P6 PPM per document,
     RGB bytes selected by doc_id % 8 from the degenerate classes
     above — a real P6 header, so the screen kernel exercises the
     honest stdlib decode path."""
-    return _quality_image_assets_from(
-        load_table(spark, sf_dir, "documents"))
-
-
-def _quality_image_assets_from(docs: DataFrame) -> DataFrame:
     chainhex = F.expr(
         "substring(concat_ws('', transform("
         f"  sequence(0, cast(ceil({IQ_BYTES} / 32.0) as int) - 1),"

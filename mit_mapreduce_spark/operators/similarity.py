@@ -626,19 +626,13 @@ EMB_SCR_PLANES = 6     # ...of 6 hyperplanes = 64 buckets per band
 EMB_SCR_TAU = NEARDUP_TAU   # the embed_neardup_blocked threshold
 
 
-def _screen_planes(
-        n_planes: int = EMB_SCR_PLANES) -> list[list[list[float]]]:
+def _screen_planes() -> list[list[list[float]]]:
     """[band][plane][dim] deterministic hyperplanes, md5-derived like
-    _planes() but band-salted so the four bands are independent.
-    ``n_planes`` is the bucket-count knob (buckets = 2^n_planes per
-    band): the registered screen pins the default; the scale
-    certification measures a deeper setting to demonstrate that
-    bucket density — the superlinear term at fixed geometry — is a
-    configuration, not a plan property."""
+    _planes() but band-salted so the four bands are independent."""
     out = []
     for b in range(EMB_SCR_BANDS):
         band = []
-        for p in range(n_planes):
+        for p in range(EMB_SCR_PLANES):
             row = []
             for d in range(DIM):
                 h = int(hashlib.md5(
@@ -649,7 +643,7 @@ def _screen_planes(
     return out
 
 
-def _screen_bucket_expr(n_planes: int = EMB_SCR_PLANES):
+def _screen_bucket_expr():
     """The banded-bucket array as ONE stateless per-row expression
     (nested higher-order lambdas over literal plane arrays) — the
     STREAMING ingest leg's form: a micro-batch map needs no join or
@@ -658,7 +652,7 @@ def _screen_bucket_expr(n_planes: int = EMB_SCR_PLANES):
     batch screen uses _screen_buckets' explode+join codegen shape
     instead (~10x faster at corpus volume); both produce identical
     integers from the same plane constants and rounding."""
-    planes = _screen_planes(n_planes)
+    planes = _screen_planes()
     plane_cols = F.array(*[
         F.array(*[F.array(*[F.lit(w) for w in row]) for row in band])
         for band in planes])
@@ -740,8 +734,7 @@ def _sql_embed_index() -> str:
     """
 
 
-def _screen_buckets(emb: DataFrame,
-                    n_planes: int = EMB_SCR_PLANES) -> DataFrame:
+def _screen_buckets(emb: DataFrame) -> DataFrame:
     """(vec_id, band_idx, bucket, nsq): each vector's bucket in every
     band (MSB-first sign bits, the ann_lsh_pairs convention) plus its
     scaled-integer squared norm — the persisted index's schema, one
@@ -754,7 +747,7 @@ def _screen_buckets(emb: DataFrame,
     this shape keeps the whole stage in wholestage codegen with a
     map-side partial aggregate — same exact integers, ~10x faster."""
     spark = emb.sparkSession
-    planes = _screen_planes(n_planes)
+    planes = _screen_planes()
     pl = spark.createDataFrame(
         [(b, p, d + 1, w)
          for b, band in enumerate(planes)
@@ -776,21 +769,19 @@ def _screen_buckets(emb: DataFrame,
     return (
         pdots.select("vec_id", "nsq", "band_idx", "p", bit.alias("_bit"))
         .groupBy("vec_id", "nsq", "band_idx")
-        .agg(F.sum(F.expr(f"shiftleft(_bit, {n_planes - 1} - p)"))
+        .agg(F.sum(F.expr(f"shiftleft(_bit, {EMB_SCR_PLANES - 1} - p)"))
              .cast("int").alias("bucket"))
         .select("vec_id", "nsq", "band_idx", "bucket")
     )
 
 
 def embed_screen_frame(spark: SparkSession, sf_dir: str, inc_pred,
-                       n_planes: int = EMB_SCR_PLANES,
                        bk: DataFrame | None = None,
                        inc_ids: DataFrame | None = None,
                        sides: DataFrame | None = None) -> DataFrame:
     """embed_neardup_incremental's body over an arbitrary incoming-
     shard predicate Column on vec_id — shared by the registered
-    screen, the ingest-admission composition, and the scale
-    certification's bucket-depth variant. ``bk`` overrides the
+    screen and the ingest-admission composition. ``bk`` overrides the
     bucket table (vec_id, band_idx, bucket, nsq) — the
     persisted-index round-trip pytest passes the table the streaming
     ingest leg drained to parquet, proving the screen is a pure
@@ -809,7 +800,7 @@ def embed_screen_frame(spark: SparkSession, sf_dir: str, inc_pred,
     emb = fan_out(load_table(spark, sf_dir, "embeddings"))
     # materialize the bucketed index once: both join sides read it
     if bk is None:
-        bk = materialize(_screen_buckets(emb, n_planes))
+        bk = materialize(_screen_buckets(emb))
     ib = bk.where(inc_pred & (F.col("nsq") > 0)).select(
         F.col("vec_id").alias("iid"), "band_idx", "bucket")
     if inc_ids is not None:

@@ -45,11 +45,17 @@ from mit_mapreduce_spark.operators import sketches as _sketches_batch  # noqa: F
 from mit_mapreduce_spark.operators.banding import (
     INC_PRED, banded_match_scores, inc_col, sql_alert_tail, sql_sigs_over,
 )
+from mit_mapreduce_spark.operators.dedup import (
+    _SQL_SHINGLES, _sql_minhash_bands,
+)
 from mit_mapreduce_spark.operators.events import SESSION_GAP_US
 from mit_mapreduce_spark.operators.mmdedup import (
-    FP_BAND_BITS, FP_BANDS, FP_HAM_MAX, Media, _present_docs, media_queries,
+    FP_BAND_BITS, FP_BANDS, FP_HAM_MAX, Media, _present_docs, _sql_admission,
+    media_queries,
 )
 from mit_mapreduce_spark.operators.registry import ORACLES, query
+from mit_mapreduce_spark.operators.similarity import _sql_embed_index
+from mit_mapreduce_spark.operators.textstats import _SQL_LM_COUNTS
 from mit_mapreduce_spark.session import materialize, stream_session, tune
 from mit_mapreduce_spark.streaming import (
     docs_stream, events_stream, run_stream_to_table,
@@ -790,12 +796,7 @@ def stream_text_fingerprints(spark: SparkSession,
     return run_stream_to_table(fps, "append")
 
 
-def _sql_stream_admission() -> str:
-    from mit_mapreduce_spark.operators.mmdedup import _sql_admission
-    return _sql_admission()
-
-
-@query("stream_ingest_admission", oracle=_sql_stream_admission())
+@query("stream_ingest_admission", oracle=_sql_admission())
 def stream_ingest_admission(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The STREAMING ADMISSION TWIN (r13, VERDICT r12 ask #2 — the
     continuous-ingest capstone): the incoming shard arrives as a
@@ -847,11 +848,6 @@ def stream_ingest_admission(spark: SparkSession, sf_dir: str) -> DataFrame:
         name="admit", sf_dir=sf_dir)
 
 
-def _sql_minhash_bands() -> str:
-    from mit_mapreduce_spark.operators.dedup import _sql_minhash_bands
-    return _sql_minhash_bands()
-
-
 @query("stream_minhash_bands", oracle=_sql_minhash_bands())
 def stream_minhash_bands(spark: SparkSession, sf_dir: str) -> DataFrame:
     """STREAMING MinHash band-index maintenance (r13, VERDICT r12 ask
@@ -901,12 +897,7 @@ def stream_minhash_bands(spark: SparkSession, sf_dir: str) -> DataFrame:
         name="bands", sf_dir=sf_dir)
 
 
-def _sql_doc_shingles() -> str:
-    from mit_mapreduce_spark.operators.dedup import _SQL_SHINGLES
-    return _SQL_SHINGLES
-
-
-@query("stream_doc_shingles", oracle=_sql_doc_shingles())
+@query("stream_doc_shingles", oracle=_SQL_SHINGLES)
 def stream_doc_shingles(spark: SparkSession, sf_dir: str) -> DataFrame:
     """STREAMING shingle-table maintenance (r13, the companion of
     stream_minhash_bands): each arriving doc's distinct 3-word
@@ -940,11 +931,6 @@ def stream_doc_shingles(spark: SparkSession, sf_dir: str) -> DataFrame:
     tune(spark)
     return drain_via_batch(docs_stream(spark, sf_dir), shingles_df,
                            name="shingles", sf_dir=sf_dir)
-
-
-def _sql_embed_index() -> str:
-    from mit_mapreduce_spark.operators.similarity import _sql_embed_index
-    return _sql_embed_index()
 
 
 @query("stream_embedding_index", oracle=_sql_embed_index())
@@ -1107,11 +1093,6 @@ def stream_asset_manifest(spark: SparkSession, sf_dir: str) -> DataFrame:
     return run_stream_to_table(manifest, "append")
 
 
-def _sql_lm_counts() -> str:
-    from mit_mapreduce_spark.operators.textstats import _SQL_LM_COUNTS
-    return _SQL_LM_COUNTS
-
-
 def lm_bigram_partials(batch_docs: DataFrame) -> DataFrame:
     """One micro-batch's bigram PARTIAL counts: (bg, cnt) with one row
     per distinct-per-doc bigram the batch's docs contain — a MERGEABLE
@@ -1175,7 +1156,7 @@ def stream_eval_grams(spark: SparkSession, sf_dir: str) -> DataFrame:
     return run_stream_to_table(grams, "append")
 
 
-@query("stream_lm_bigram_counts", oracle=_sql_lm_counts())
+@query("stream_lm_bigram_counts", oracle=_SQL_LM_COUNTS)
 def stream_lm_bigram_counts(spark: SparkSession,
                             sf_dir: str) -> DataFrame:
     """STREAMING LM-statistic maintenance via MERGEABLE COUNTS (r14,
